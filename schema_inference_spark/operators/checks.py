@@ -29,6 +29,8 @@ from typing import Iterable, List, Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
+
 VIOLATION_COLS = [
     "snapshot_id", "partition_id", "check_id", "mgu_failure",
     "schema_1", "schema_2", "conv_id", "turn_idx", "payload",
@@ -56,15 +58,25 @@ def _shape(df: DataFrame, snapshot_id: str, check_id: str,
     )
 
 
+_ORDER_COLS = ("snapshot_id", "partition_id", "check_id", "conv_id",
+               "turn_idx", "payload")
+_ORDER_IX = tuple(VIOLATION_COLS.index(c) for c in _ORDER_COLS)
+
+
 def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_DDL)
+    return local_frame(spark, [], VIOLATION_DDL)
 
 
 def stable_order(v: DataFrame) -> DataFrame:
     """Canonical violation ordering for byte-for-byte comparability
     (FIXTURES.md F5; north_rule)."""
-    return v.orderBy("snapshot_id", "partition_id", "check_id",
-                     "conv_id", "turn_idx", "payload")
+    return v.orderBy(*_ORDER_COLS)
+
+
+def stable_key(row: tuple) -> tuple:
+    """``stable_order`` as a Python sort key over violation tuples:
+    ascending, nulls first."""
+    return tuple((row[i] is not None, row[i]) for i in _ORDER_IX)
 
 
 # ---------------------------------------------------------------------------
@@ -124,8 +136,8 @@ def check_referential(df: DataFrame, snapshot_id: str, column: str,
     The violation carries the reference's failure-object fields: schema_1
     is the offending singleton enum, schema_2 the vocabulary enum.
     """
-    spark = df.sparkSession
-    vocab_df = spark.createDataFrame([(v,) for v in vocab], f"{column} string")
+    vocab_df = local_frame(df.sparkSession, [(v,) for v in vocab],
+                           f"{column} string")
     base = df.select(partition_col, "conv_id", "turn_idx", column)
     if nullable:
         base = base.filter(F.col(column).isNotNull())
@@ -941,8 +953,8 @@ def check_rowlevel_fused(df: DataFrame, snapshot_id: str,
 def vocab_diff(df: DataFrame, column: str, vocab: List[str]) -> DataFrame:
     """Distinct out-of-vocab values (enum-subset check at the schema level,
     README.md:273-279) — exceptAll over pre-aggregated distincts."""
-    spark = df.sparkSession
-    vocab_df = spark.createDataFrame([(v,) for v in vocab], f"{column} string")
+    vocab_df = local_frame(df.sparkSession, [(v,) for v in vocab],
+                           f"{column} string")
     return (df.select(column).filter(F.col(column).isNotNull())
             .distinct().exceptAll(vocab_df))
 

@@ -12,10 +12,12 @@ order, evaluated vectorized per input split, with conversations spanning
 split boundaries stitched by per-segment boundary rows (a few hundred
 rows, not 10^12).
 
-Plan shape:
+Plan shape (3 Spark jobs per call):
 
-    manifest -> row-group-aligned splits (a tiny DataFrame of split rows)
-      -> mapInArrow: each task reads its parquet range NATIVELY with
+    manifest -> row-group-aligned splits, packed into at most
+                defaultParallelism tasks balanced by footer row counts
+                (an Arrow-built LocalRelation, one row per task)
+      -> mapInArrow: each task reads its parquet ranges NATIVELY with
          pyarrow (C++ decode — the JVM->Python Arrow feed was 14.5s for
          a trivial passthrough of 19.1M rows where a JVM-only count is
          0.31s; see _native_split_reader) and runs the vectorized lag
@@ -24,9 +26,14 @@ Plan shape:
                   unique-key candidates     (sparse: dup runs + edges)
                   one boundary row per contiguous segment
                   one extent row per (conv, segment)  (contiguity proof)
-      -> two-level stitch over boundary rows (cross-split pairs)
-      -> tiny agg over unique-key rows       (split-spanning dup runs)
-      -> conv-extent verification            (global layout proof)
+                  inference states / read errors (per task, partition)
+      -> localCheckpoint (job 1), released before returning
+      -> ONE collect (jobs 2-3): every row but the extent rows, plus a
+         groupBy(conv_id) returning the convs spanning >1 segment
+      -> driver, over split-sized rows: read-error filtering, the global
+         contiguity proof, the boundary stitch (consecutive segments in
+         (file, position) order), unique-key merge, state merge
+      -> violations as an Arrow LocalRelation (reading them: no job)
 
 The scan is embarrassingly parallel (file splits), so scaling follows the
 scan, not a sort; a hot conv_id is handled by the same mechanism that
@@ -51,7 +58,7 @@ from __future__ import annotations
 import json
 from typing import Iterator, List
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ROLE_NULL_SCHEMA = '{"type":"enum","values":[null]}'
@@ -63,8 +70,17 @@ _OUT_DDL = (
     "f_conv string, f_turn bigint, f_ts bigint, f_bucket int, "
     "l_conv string, l_turn bigint, l_ts bigint"
 )
+_OUT_COLS = [f.split() for f in _OUT_DDL.split(",")]
 
-_TS_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
+
+def _out_batch(rows: List[tuple]) -> "pa.RecordBatch":  # noqa: F821
+    """Row tuples in ``_OUT_DDL`` column order -> one Arrow batch."""
+    import pyarrow as pa
+    types = {"int": pa.int32(), "bigint": pa.int64(), "string": pa.string()}
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=types[t]) for c, (_, t) in zip(zip(*rows),
+                                                          _OUT_COLS)],
+        names=[name for name, _ in _OUT_COLS])
 
 
 def _vocab_json(vocab: List[str]) -> str:
@@ -158,16 +174,7 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
         def flush() -> Iterator["pa.RecordBatch"]:
             nonlocal out
             if out:
-                cols = list(zip(*out))
-                names = [f.strip().split(" ")[0] for f in _OUT_DDL.split(",")]
-                types = [pa.int32(), pa.int32(), pa.string(), pa.string(),
-                         pa.string(), pa.string(), pa.string(), pa.int64(),
-                         pa.string(), pa.int64(), pa.int32(), pa.int64(),
-                         pa.string(), pa.int64(), pa.int64(), pa.int32(),
-                         pa.string(), pa.int64(), pa.int64()]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, type=t) for c, t in zip(cols, types)],
-                    names=names)
+                yield _out_batch(out)
                 out = []
 
         for batch in batches:
@@ -361,7 +368,7 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
 def _plan_splits(catalog, snapshot_id: str, pending: List[int],
                  target_rows: int, spark=None) -> List[tuple]:
     """Manifest -> row-group-aligned scan splits:
-    [(split_id, fid, path, partition_id, rg_start, rg_end, pos0)].
+    [(split_id, fid, path, partition_id, rg_start, rg_end, pos0, n_rows)].
 
     Row groups are parquet's split granularity (Spark's byte-range
     splits align to row-group boundaries too); files bigger than
@@ -409,13 +416,43 @@ def _plan_splits(catalog, snapshot_id: str, pending: List[int],
         for i, n in enumerate(rg_rows):
             acc += n
             if acc >= target_rows and i + 1 < len(rg_rows):
-                splits.append((len(splits), fid, path, pid, rg0, i + 1, pos0))
+                splits.append((len(splits), fid, path, pid, rg0, i + 1, pos0,
+                               acc))
                 pos0 += acc
                 rg0, acc = i + 1, 0
         if acc > 0 or rg0 < len(rg_rows) or not rg_rows:
             splits.append((len(splits), fid, path, pid, rg0, len(rg_rows),
-                           pos0))
+                           pos0, acc))
     return splits
+
+
+def _pack_tasks(spark, splits: List[tuple]) -> DataFrame:
+    """Splits -> one row per scan task, each holding a list of splits.
+
+    At most ``defaultParallelism`` tasks, balanced by footer row counts
+    (largest split first onto the least-loaded task): a Python task per
+    split paid worker setup per split, and round robin lets one task
+    collect the big files. The table is Arrow-built, so Spark holds it as
+    a LocalRelation and gives each row its own scan partition; a Python
+    list would become an RDD that costs a deserialisation job per call."""
+    import heapq
+
+    import pyarrow as pa
+    split_t = pa.struct([
+        ("split_id", pa.int64()), ("fid", pa.int32()), ("path", pa.string()),
+        ("partition_id", pa.int32()), ("rg_start", pa.int32()),
+        ("rg_end", pa.int32()), ("pos0", pa.int64())])
+    n_tasks = max(1, min(len(splits), spark.sparkContext.defaultParallelism))
+    load = [(0, t) for t in range(n_tasks)]
+    tasks: List[list] = [[] for _ in range(n_tasks)]
+    for sp in sorted(splits, key=lambda sp: -sp[7]):
+        rows, t = heapq.heappop(load)
+        tasks[t].append(sp)
+        heapq.heappush(load, (rows + sp[7], t))
+    names = [f.name for f in split_t]
+    cells = [[dict(zip(names, sp)) for sp in sorted(t)] for t in tasks if t]
+    return spark.createDataFrame(
+        pa.table({"splits": pa.array(cells, pa.list_(split_t))}))
 
 
 _SCAN_COLS = ["conv_id", "turn_idx", "role", "tool", "ts"]
@@ -424,10 +461,10 @@ _SCAN_COLS = ["conv_id", "turn_idx", "role", "tool", "ts"]
 def _native_split_reader(checker, role_vocab: List[str],
                          tool_vocab: List[str], batch_rows: int,
                          state_cols: List[str] | None = None):
-    """mapInArrow over SPLIT rows: each task reads its parquet row-group
-    range natively with pyarrow (C++ decode, zero JVM row->Arrow
-    conversion) and streams checker-schema batches into
-    ``_segment_checker``.
+    """mapInArrow over packed task rows (``_pack_tasks``): each task
+    reads its splits' parquet row-group ranges natively with pyarrow
+    (C++ decode, zero JVM row->Arrow conversion) and streams
+    checker-schema batches into ``_segment_checker``.
 
     Why native: Spark's JVM->Python Arrow feed converts UnsafeRows
     column-by-column under a shared allocator lock — measured 14.5s for
@@ -446,7 +483,7 @@ def _native_split_reader(checker, role_vocab: List[str],
     min/max, observed type): the one extra read is the columns the checks
     prune (``text``), and it replaces the infer stage's ENTIRE second
     corpus scan. States ride the same output schema as kind=4 rows
-    (partition_id + state JSON in ``payload``), one row per (split,
+    (partition_id + state JSON in ``payload``), one row per (task,
     partition) — metadata-sized.
     """
     import numpy as np
@@ -537,7 +574,8 @@ def _native_split_reader(checker, role_vocab: List[str],
 
         def checker_batches():
             for sp in batches:
-                for row in sp.to_pylist():
+                for row in (r for task in sp.column(0).to_pylist()
+                            for r in task):
                     try:
                         yield from one_split(row)
                     except Exception as exc:  # noqa: BLE001 — by-value
@@ -554,36 +592,15 @@ def _native_split_reader(checker, role_vocab: List[str],
                             f"{type(exc).__name__}: {exc}")
 
         yield from checker(checker_batches())
-        if errors:
-            pids = sorted(errors)
-            yield pa.RecordBatch.from_arrays([
-                pa.array([5] * len(pids), pa.int32()),
-                pa.array(pids, pa.int32()),
-                *[pa.nulls(len(pids), pa.string()) for _ in range(5)],
-                pa.nulls(len(pids), pa.int64()),
-                pa.array([errors[p] for p in pids], pa.string()),
-                *[pa.nulls(len(pids), t) for t in
-                  (pa.int64(), pa.int32(), pa.int64(), pa.string(),
-                   pa.int64(), pa.int64(), pa.int32(), pa.string(),
-                   pa.int64(), pa.int64())],
-            ], names=[f.strip().split(" ")[0] for f in _OUT_DDL.split(",")])
-        if states:
-            # checker() fully drains checker_batches before returning, so
-            # the accumulator is complete here. One row per (split,
-            # partition): kind=4, pid, state JSON in payload.
-            pids = sorted(states)
-            yield pa.RecordBatch.from_arrays([
-                pa.array([4] * len(pids), pa.int32()),
-                pa.array(pids, pa.int32()),
-                *[pa.nulls(len(pids), pa.string()) for _ in range(5)],
-                pa.nulls(len(pids), pa.int64()),
-                pa.array([_json.dumps(states[p], default=_json_safe)
-                          for p in pids], pa.string()),
-                *[pa.nulls(len(pids), t) for t in
-                  (pa.int64(), pa.int32(), pa.int64(), pa.string(),
-                   pa.int64(), pa.int64(), pa.int32(), pa.string(),
-                   pa.int64(), pa.int64())],
-            ], names=[f.strip().split(" ")[0] for f in _OUT_DDL.split(",")])
+        # checker() fully drains checker_batches before returning, so the
+        # accumulators are complete here. One row per (task, partition):
+        # kind=5 read error / kind=4 state JSON, in payload.
+        meta = ([(5, p, errors[p]) for p in sorted(errors)]
+                + [(4, p, _json.dumps(states[p], default=_json_safe))
+                   for p in sorted(states)])
+        if meta:
+            yield _out_batch([(k, p) + (None,) * 6 + (m,) + (None,) * 10
+                              for k, p, m in meta])
 
     return fn
 
@@ -601,7 +618,10 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
 
     The corpus pass distributes manifest row-group splits and reads them
     natively in the workers (see ``_native_split_reader`` for why — the
-    JVM->Python Arrow feed was the whole cost of this stage).
+    JVM->Python Arrow feed was the whole cost of this stage). Everything
+    after it runs on the driver over split-sized rows from ONE collect;
+    the returned violations are a LocalRelation, so reading them runs no
+    Spark job.
 
     ``collect_states=True`` fuses the inference column-state pass into
     the SAME scan (every column, including the ones the checks prune) and
@@ -617,7 +637,10 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
     caller emits a verdict='error' for it (resume re-validates after
     repair). With the default ``with_errors=False`` a read error raises,
     preserving fail-fast semantics for direct callers."""
+    from ..functions.frames import local_frame
     from ..functions.prof import profile_marker
+    from .checks import VIOLATION_DDL
+    from .infer import merge_part_states
     _tmark = profile_marker("clustered")
 
     if split_target_rows is None:
@@ -649,281 +672,130 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
         import pyarrow.parquet as _pq
         state_cols = [c for c in _pq.ParquetFile(splits[0][2])
                       .schema_arrow.names if c != partition_col]
-    splits_df = spark.createDataFrame(
-        splits,
-        "split_id long, fid int, path string, partition_id int, "
-        "rg_start int, rg_end int, pos0 long")
-    if splits:
-        splits_df = splits_df.repartition(len(splits))
-    out = splits_df.mapInArrow(
+    out = _pack_tasks(spark, splits).mapInArrow(
         _native_split_reader(checker, role_vocab, tool_vocab, batch_rows,
                              state_cols),
-        _OUT_DDL)
-    # the five consumers below (direct violations, unique-key aggregate,
-    # three boundary-pair branches) would each re-execute the scan+UDF
-    # subtree — Spark reuses exchanges, not arbitrary subplans. The UDF
-    # output is violation-sized (sparse rows + one boundary row per
-    # segment), so materialize it ONCE: one pass over the corpus, every
-    # branch reads the stored result (same pattern as components.py).
-    # Eager also surfaces a layout-lie error at call time.
-    out = out.localCheckpoint(eager=True)
-    _tmark("scan (localCheckpoint out)")
+        _OUT_DDL).localCheckpoint(eager=False)
+    # The UDF output is violation-sized except for the kind=3 extent rows
+    # (one per conversation), and two branches read it below, so it is
+    # materialized once. The count is the eager checkpoint, run on the
+    # held RDD so the blocks can be released even when the scan raises a
+    # layout lie (which it surfaces here, at call time).
+    stored = out._jdf.queryExecution().analyzed().rdd()
+    try:
+        stored.count()
+        _tmark("scan (localCheckpoint out)")
+        # ONE driver collect: every row but the extent rows, plus the
+        # conversations whose extent rows span more than one segment —
+        # the only ones the global contiguity proof has to look at.
+        multi = (out.filter(F.col("kind") == 3)
+                 .groupBy("conv_id")
+                 .agg(F.collect_list(F.struct("fid", "pos", "cnt"))
+                      .alias("segs"))
+                 .filter(F.size("segs") > 1)
+                 .select(F.lit(3).alias("kind"), "conv_id", "segs"))
+        rows = (out.filter(F.col("kind") != 3)
+                .unionByName(multi, allowMissingColumns=True).collect())
+    finally:
+        stored.unpersist(True)
+    _tmark("collect")
 
-    # second-level checkpoint: the big store is dominated by the kind=3
-    # extent rows (one per conversation — they exist only for the global
-    # contiguity verification below, which reads them exactly once). The
-    # violation branches (direct/unique-key/three boundary pairs) would
-    # each rescan all of it; give them a violation-sized store instead —
-    # one filter pass here, ~#violations + #segments rows retained.
-    # kind=4 fused-state rows (split-count-sized) ride along so the
-    # state collection below reads this small store too — only the
-    # conversation-count-sized kind=3 extent rows stay behind
-    rowsrc = out.filter(F.col("kind") != 3).localCheckpoint(eager=True)
-    _tmark("rowsrc checkpoint")
+    by_kind: dict = {k: [] for k in range(6)}
+    for r in rows:
+        by_kind[r.kind].append(r)
+    read_errors = {r.partition_id: r.payload for r in by_kind[5]}
+    if read_errors and not with_errors:
+        raise RuntimeError(
+            "clustered scan read errors: "
+            + "; ".join(f"partition {p}: {m}"
+                        for p, m in sorted(read_errors.items())))
+    # the per-partition by-value :throw: every row of an errored partition
+    # — including rows good splits of it already produced — is dropped
+    # before any check reads it (an incomplete partition's extent rows
+    # could otherwise fabricate a lie; convs never span partitions, so
+    # dropping whole partitions cannot). Boundary and extent rows carry
+    # no partition_id but a file id, and a file is in one partition.
+    bad_fids = {s[1] for s in splits if s[3] in read_errors}
+    keep = {k: [r for r in by_kind[k] if r.partition_id not in read_errors]
+            for k in (0, 2, 4)}
 
-    def _verify_frames(out_f, rowsrc_f):
-        """Layout-verification frames over the given (possibly
-        error-filtered) stores: (bad_extent, bad_seam, boundary pairs).
+    # stitch: boundary rows in (file, position) order are global scan
+    # order, so each pair of consecutive segments is one seam
+    bnd = sorted((r for r in by_kind[1] if r.fid not in bad_fids),
+                 key=lambda r: (r.fid, r.pos))
+    seg_rank = {(r.fid, r.pos): i for i, r in enumerate(bnd)}
+    seams = [(p, f) for p, f in zip(bnd, bnd[1:]) if p.l_conv == f.f_conv]
 
-        part 2 — GLOBAL conv contiguity: the UDF verifies contiguity
-        within each split; the boundary stitch compares only ADJACENT
-        segments. A cross-split-only lie — a conv reappearing in a
-        non-adjacent segment — is invisible to both, so verify globally:
-        each conv must occupy exactly one maximal run of consecutive
-        segments, first-of-segment everywhere but its first segment and
-        last-of-segment everywhere but its last. Inputs are the
-        per-(conv, segment) extent rows (kind=3, ~one per conversation)
-        and a segment-rank table (#segments rows of two ints — the rank
-        window is a single tiny task, bounded by split count, not row
-        count).
-
-        stitch — cross-split pairs, TWO-LEVEL: boundary rows ordered by
-        manifest file order + in-file position reconstruct global scan
-        order. Level 1 pairs segments WITHIN each file (window per fid —
-        parallel across files, so 10^5-10^6 byte-range splits of a few
-        big files never funnel through one task). Level 2 pairs each
-        file's first segment with the previous present file's last
-        segment — the only driver-order pass, one row per FILE
-        (manifest-sized), broadcast to the join.
-
-        part 3 — cross-split sort order: a lie that exists ONLY across
-        a boundary (locally sorted splits, key regressing at the seam)
-        must also refuse (ADVICE r2); equal (turn, ts) at the seam is a
-        legitimate duplicate, not a lie."""
-        segr = (rowsrc_f.filter(F.col("kind") == 1).select("fid", "pos")
-                .withColumn("_seg_rank",
-                            F.row_number().over(Window.orderBy("fid",
-                                                               "pos"))))
-        c3 = out_f.filter(F.col("kind") == 3).select(
-            "conv_id", "fid", "pos", F.col("cnt").alias("_flags"))
-        ext = (c3.join(segr, ["fid", "pos"])
-               .groupBy("conv_id")
-               .agg(F.count(F.lit(1)).alias("_n"),
-                    F.min("_seg_rank").alias("_rmin"),
-                    F.max("_seg_rank").alias("_rmax"),
-                    # any non-first-of-segment occurrence above rmin, or
-                    # non-last-of-segment occurrence below rmax, is a lie
-                    F.max(F.when(F.col("_flags").bitwiseAND(F.lit(1)) == 0,
-                                 F.col("_seg_rank"))).alias("_bad_first"),
-                    F.min(F.when(F.col("_flags").bitwiseAND(F.lit(2)) == 0,
-                                 F.col("_seg_rank"))).alias("_bad_last")))
-        bad_extent = ext.filter(
-            (F.col("_n") != F.col("_rmax") - F.col("_rmin") + 1)
-            | (F.coalesce(F.col("_bad_first"), F.col("_rmin"))
-               != F.col("_rmin"))
-            | (F.coalesce(F.col("_bad_last"), F.col("_rmax"))
-               != F.col("_rmax"))
-        ).select("conv_id")
-
-        bnd = rowsrc_f.filter(F.col("kind") == 1).select(
-            "fid", "pos", "f_conv", "f_turn", "f_ts", "f_bucket",
-            "l_conv", "l_turn", "l_ts")
-        wf = Window.partitionBy("fid").orderBy("pos")
-        ranked = (bnd
-                  .withColumn("p_conv", F.lag("l_conv").over(wf))
-                  .withColumn("p_turn", F.lag("l_turn").over(wf))
-                  .withColumn("p_ts", F.lag("l_ts").over(wf))
-                  .withColumn("_rn", F.row_number().over(wf)))
-        pair_cols = ["fid", "pos", "f_conv", "f_turn", "f_ts", "f_bucket",
-                     "p_conv", "p_turn", "p_ts"]
-        intra = ranked.filter(F.col("_rn") > 1).select(*pair_cols)
-        wfd = Window.partitionBy("fid").orderBy(F.desc("pos"))
-        lasts = (bnd.withColumn("_rn", F.row_number().over(wfd))
-                 .filter(F.col("_rn") == 1)
-                 .select(F.col("fid").alias("_pf"),
-                         F.col("l_conv").alias("p_conv"),
-                         F.col("l_turn").alias("p_turn"),
-                         F.col("l_ts").alias("p_ts")))
-        lasts = (lasts
-                 .withColumn("_nf",
-                             F.lead("_pf").over(Window.orderBy("_pf")))
-                 .filter(F.col("_nf").isNotNull()))
-        firsts = (ranked.filter(F.col("_rn") == 1)
-                  .select("fid", "pos", "f_conv", "f_turn", "f_ts",
-                          "f_bucket"))
-        cross = (firsts.join(F.broadcast(lasts),
-                             firsts["fid"] == lasts["_nf"], "inner")
-                 .select(*pair_cols))
-        b = (intra.unionByName(cross)
-             .filter(F.col("p_conv") == F.col("f_conv")))
-        bad_seam = (b.filter((F.col("f_turn") < F.col("p_turn"))
-                             | ((F.col("f_turn") == F.col("p_turn"))
-                                & (F.col("f_ts") < F.col("p_ts"))))
-                    .select(F.col("f_conv").alias("conv_id")))
-        return bad_extent, bad_seam, b
-
-    def _probe(bad_extent, bad_seam):
-        return (bad_extent.select(F.lit("extent").alias("why"), "conv_id")
-                .limit(1)
-                .unionByName(bad_seam.select(F.lit("seam").alias("why"),
-                                             "conv_id").limit(1)))
-
-    # ONE driver action carries all three verifications (extent lie,
-    # seam lie, per-split read errors) — fixed per-snapshot cost is one
-    # small job. The error branch reads the SMALL checkpointed store
-    # (kind=5 is sparse by construction).
-    bad_extent, bad_seam, b = _verify_frames(out, rowsrc)
-    rows = (_probe(bad_extent, bad_seam)
-            .select("why", "conv_id",
-                    F.lit(None).cast("int").alias("partition_id"),
-                    F.lit(None).cast("string").alias("payload"))
-            .unionByName(rowsrc.filter(F.col("kind") == 5)
-                         .select(F.lit("read_error").alias("why"),
-                                 F.lit(None).cast("string").alias("conv_id"),
-                                 "partition_id", "payload"))
-            .collect())
-    read_errors = {r.partition_id: r.payload for r in rows
-                   if r.why == "read_error"}
-    probs = [r for r in rows if r.why != "read_error"]
-    if read_errors:
-        # the per-partition by-value :throw. Every row of an errored
-        # partition — including rows good splits of it already produced —
-        # is dropped before any check consumes it, and the layout
-        # verification RE-RUNS on the filtered stores (an incomplete
-        # partition's extent rows could otherwise fabricate a lie; convs
-        # never span partitions, so dropping whole partitions cannot).
-        # Rare path: costs one extra small job only when a read failed.
-        if not with_errors:
-            raise RuntimeError(
-                "clustered scan read errors: "
-                + "; ".join(f"partition {p}: {m}"
-                            for p, m in sorted(read_errors.items())))
-        bad = list(read_errors)
-        # kind=1 boundary and kind=3 extent rows carry NO partition_id
-        # (NULL), so a bare ~isin() predicate is NULL for them and Spark
-        # drops them ALL — which would silently disable every cross-split
-        # check and the layout verification for the HEALTHY partitions.
-        # They do carry fid, and a file belongs to exactly one partition,
-        # so scope them by the errored partitions' file ids instead.
-        bad_fids = sorted({s[1] for s in splits if s[3] in read_errors})
-        keep = (F.when(F.col("partition_id").isNotNull(),
-                       ~F.col("partition_id").isin(bad))
-                .otherwise(~F.col("fid").isin(bad_fids)))
-        out = out.filter(keep)
-        rowsrc = rowsrc.filter(keep)
-        bad_extent, bad_seam, b = _verify_frames(out, rowsrc)
-        probs = _probe(bad_extent, bad_seam).collect()
-    _tmark("extent+seam+error verify")
-    if probs:
-        why, cv = probs[0].why, probs[0].conv_id
-        if why == "extent":
+    # GLOBAL conv contiguity: the UDF verifies contiguity within each
+    # split and the stitch compares only ADJACENT segments, so a conv
+    # reappearing in a non-adjacent segment is invisible to both. Each
+    # conv must occupy consecutive segments (ranked among the segments
+    # present), first-of-segment everywhere but its first and
+    # last-of-segment everywhere but its last.
+    for r in by_kind[3]:
+        occ = sorted((seg_rank[(s.fid, s.pos)], s.cnt) for s in r.segs
+                     if (s.fid, s.pos) in seg_rank)
+        if len(occ) < 2:
+            continue
+        lo, hi = occ[0][0], occ[-1][0]
+        if (len(occ) != hi - lo + 1
+                or any(not fl & 1 for rk, fl in occ if rk != lo)
+                or any(not fl & 2 for rk, fl in occ if rk != hi)):
             raise ValueError(
                 "clustered checks: manifest declares clustering by "
-                f"conv_id but conv {cv!r} occupies non-adjacent segments "
-                "in scan order — shuffle path (check_rowlevel_fused) "
+                f"conv_id but conv {r.conv_id!r} occupies non-adjacent "
+                "segments in scan order — shuffle path "
+                "(check_rowlevel_fused) required")
+    # cross-split sort order: a lie that exists ONLY across a boundary
+    # (locally sorted splits, key regressing at the seam) must also
+    # refuse; equal (turn, ts) at the seam is a legitimate duplicate
+    for p, f in seams:
+        if (f.f_turn, f.f_ts) < (p.l_turn, p.l_ts):
+            raise ValueError(
+                "clustered checks: manifest declares sort order (conv_id, "
+                f"turn_idx, ts) but conv {f.f_conv!r} regresses across a "
+                "split boundary — shuffle path (check_rowlevel_fused) "
                 "required")
-        raise ValueError(
-            "clustered checks: manifest declares sort order (conv_id, "
-            f"turn_idx, ts) but conv {cv!r} regresses across a split "
-            "boundary — shuffle path (check_rowlevel_fused) required")
 
-    snap = F.lit(snapshot_id).alias("snapshot_id")
-    vcols = ["partition_id", "check_id", "mgu_failure", "schema_1",
-             "schema_2", "conv_id", "turn_idx", "payload"]
-    direct = rowsrc.filter(F.col("kind") == 0).select(snap, *vcols)
-
+    out_rows = [(snapshot_id, r.partition_id, r.check_id, r.mgu_failure,
+                 r.schema_1, r.schema_2, r.conv_id, r.turn_idx, r.payload)
+                for r in keep[0]]
     # split-spanning duplicate runs: per-key partial counts -> one row per
     # duplicated key (same (n_copies, min-bucket) row the fused window
-    # folds to). Input is candidates only — sparse by construction.
-    uk = (rowsrc.filter(F.col("kind") == 2)
-          .groupBy("conv_id", "turn_idx")
-          .agg(F.sum("cnt").alias("n"), F.min("partition_id").alias("pid"))
-          .filter(F.col("n") > 1)
-          .select(snap, F.col("pid").alias("partition_id"),
-                  F.lit("unique_key").alias("check_id"),
-                  F.lit(None).cast("string").alias("mgu_failure"),
-                  F.lit(None).cast("string").alias("schema_1"),
-                  F.lit(None).cast("string").alias("schema_2"),
-                  "conv_id", "turn_idx",
-                  F.to_json(F.struct(F.col("n").alias("n_copies")))
-                  .alias("payload")))
-
-    # the three boundary-pair checks share the whole stitch subtree; a
-    # union of three filtered branches would execute it three times
-    # (Spark reuses exchanges, not arbitrary subplans). One projection
-    # evaluates all three conditions per pair and explodes the matches —
-    # a pair failing several checks still emits one row per check, same
-    # rows as the former three-branch union.
-    def _hit(cond, check_id, payload):
-        return F.when(cond, F.struct(F.lit(check_id).alias("c"),
-                                     payload.alias("p")))
-
-    hits = F.array(
-        _hit(F.col("f_turn") > F.col("p_turn") + 1, "turn_gap",
-             F.to_json(F.struct(
-                 F.col("p_turn").cast("bigint").alias("prev_idx"),
-                 (F.col("f_turn") - F.col("p_turn") - 1)
-                 .cast("bigint").alias("missing")))),
-        _hit(F.col("f_turn") == F.col("p_turn"), "turn_dup",
-             F.to_json(F.struct(
-                 F.col("p_turn").cast("bigint").alias("prev_idx")))),
-        _hit(F.col("f_ts") < F.col("p_ts"), "ts_order",
-             F.to_json(F.struct(
-                 F.date_format(F.timestamp_micros("p_ts"), _TS_FMT)
-                 .alias("prev_ts"),
-                 F.date_format(F.timestamp_micros("f_ts"), _TS_FMT)
-                 .alias("ts")))),
-    )
-    pair_b = (b.select("f_bucket", "f_conv", "f_turn",
-                       F.explode(F.filter(hits, lambda h: h.isNotNull()))
-                       .alias("_h"))
-              .select(snap, F.col("f_bucket").alias("partition_id"),
-                      F.col("_h.c").alias("check_id"),
-                      F.lit(None).cast("string").alias("mgu_failure"),
-                      F.lit(None).cast("string").alias("schema_1"),
-                      F.lit(None).cast("string").alias("schema_2"),
-                      F.col("f_conv").alias("conv_id"),
-                      F.col("f_turn").alias("turn_idx"),
-                      F.col("_h.p").alias("payload")))
-
-    violations = direct.unionByName(uk).unionByName(pair_b)
+    # folds to)
+    uk: dict = {}
+    for r in keep[2]:
+        n, pid = uk.get((r.conv_id, r.turn_idx), (0, r.partition_id))
+        uk[(r.conv_id, r.turn_idx)] = (n + r.cnt, min(pid, r.partition_id))
+    out_rows += [(snapshot_id, pid, "unique_key", None, None, None, conv,
+                  turn, '{"n_copies":%d}' % n)
+                 for (conv, turn), (n, pid) in uk.items() if n > 1]
+    # the seam pairs' lag checks; payloads match the fused path's to_json
+    for p, f in seams:
+        hits = []
+        if f.f_turn > p.l_turn + 1:
+            hits.append(("turn_gap", '{"prev_idx":%d,"missing":%d}'
+                         % (p.l_turn, f.f_turn - p.l_turn - 1)))
+        if f.f_turn == p.l_turn:
+            hits.append(("turn_dup", '{"prev_idx":%d}' % p.l_turn))
+        if f.f_ts < p.l_ts:
+            hits.append(("ts_order", '{"prev_ts":"%s","ts":"%s"}'
+                         % (_ts_str(p.l_ts), _ts_str(f.f_ts))))
+        out_rows += [(snapshot_id, f.f_bucket, c, None, None, None,
+                      f.f_conv, f.f_turn, payload) for c, payload in hits]
+    violations = local_frame(spark, out_rows, VIOLATION_DDL)
     if not collect_states:
         return (violations, read_errors) if with_errors else violations
 
-    # fused states: one kind=4 row per (split, partition), merged with
-    # the same associative monoid the standalone engines use. Small
-    # manifests merge driver-side; above the tree_merge threshold the
-    # merge runs as a reduceByKey so the driver receives one
-    # already-merged row per PARTITION, not one per split — a 10^6
-    # byte-range-split manifest must not ship 10^6 state blobs through
-    # the driver.
-    from .infer import merge_part_states
-    k4 = rowsrc.filter(F.col("kind") == 4).select("partition_id", "payload")
-    if len(splits) <= 256:
-        by_pid: dict = {}
-        for r in k4.collect():
-            st = json.loads(r.payload)
-            by_pid[r.partition_id] = (
-                merge_part_states(by_pid[r.partition_id], st)
-                if r.partition_id in by_pid else st)
-        pstates = sorted(by_pid.items())
-        _tmark("state collect")
-    else:
-        pstates = sorted(
-            k4.rdd
-            .map(lambda r: (r[0], json.loads(r[1])))
-            .reduceByKey(merge_part_states)
-            .collect())
+    # fused states: one kind=4 row per (task, partition), merged with the
+    # same associative monoid the standalone engines use
+    by_pid: dict = {}
+    for r in keep[4]:
+        st = json.loads(r.payload)
+        by_pid[r.partition_id] = (
+            merge_part_states(by_pid[r.partition_id], st)
+            if r.partition_id in by_pid else st)
+    pstates = sorted(by_pid.items())
     return ((violations, pstates, read_errors) if with_errors
             else (violations, pstates))
 

@@ -27,6 +27,8 @@ from typing import Dict, List, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
+
 # columns eligible for KLL (numeric/timestamp cast to double)
 _NUMERIC_KINDS = {"int", "bigint", "smallint", "tinyint", "float",
                   "double", "decimal"}
@@ -161,7 +163,7 @@ def profile_snapshot(df: DataFrame, snapshot_id: str,
 
 def kll_quantiles(spark, kll_bytes: bytes, probs: List[float]) -> List[float]:
     """Quantile estimates from one merged KLL sketch (driver-side, tiny)."""
-    row = (spark.createDataFrame([(bytearray(kll_bytes),)], "kll binary")
+    row = (local_frame(spark, [(bytes(kll_bytes),)], "kll binary")
            .select(*[F.kll_sketch_get_quantile_double("kll", F.lit(p)).alias(f"q{i}")
                      for i, p in enumerate(probs)])
            .first())
@@ -170,7 +172,7 @@ def kll_quantiles(spark, kll_bytes: bytes, probs: List[float]) -> List[float]:
 
 def kll_cdf(spark, kll_bytes: bytes, edges: List[float]) -> List[float]:
     """CDF (rank) estimates at the given edges from one KLL sketch."""
-    row = (spark.createDataFrame([(bytearray(kll_bytes),)], "kll binary")
+    row = (local_frame(spark, [(bytes(kll_bytes),)], "kll binary")
            .select(*[F.kll_sketch_get_rank_double("kll", F.lit(float(e))).alias(f"r{i}")
                      for i, e in enumerate(edges)])
            .first())

@@ -17,11 +17,13 @@ from __future__ import annotations
 
 import json
 import time
+from collections import Counter
 from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.frames import local_frame
 from .functions.prof import profile_marker
 from .operators import checks as C
 from .operators import stats as S
@@ -142,10 +144,13 @@ def validate(
     Execution: a metadata census first selects the check path —
     ``clustered`` (one fused native Arrow scan, zero shuffle, taken
     when the manifest declares the Iceberg sort-order contract and the
-    snapshot is past the measured ~2M-row amortization point),
-    ``fused`` (one scan + one skew-blocked shuffle), or ``separate``;
-    all three are row-identical (tested) and the chosen path is
-    reported as ``ValidationResult.check_path``. ``resume=True`` skips
+    snapshot has at least ``spark.schema_inference.clustered.minRows``
+    pending rows), ``fused`` (one scan + one skew-blocked shuffle), or
+    ``separate``; all three are row-identical (tested) and the chosen
+    path is reported as ``ValidationResult.check_path``. Without opt-in
+    checks or persistence, a clustered call runs 3 Spark jobs (the scan
+    and one collect) and returns its violations and verdicts as Arrow
+    local frames, so reading them runs none. ``resume=True`` skips
     partitions already marked complete in the audit store;
     ``partitions=[...]`` restricts to an explicit subset (the conv-
     dedup checks still fold the full corpus but emit only pending
@@ -177,8 +182,8 @@ def validate(
             snapshot_id, [], {}, empty_v,
             catalog.read_audit(spark, snapshot_id),
             InferResult(snapshot_id, {}, {}, {}, {}, []),
-            stats_thunk=lambda: spark.createDataFrame(
-                [], "snapshot_id string, column string"),
+            stats_thunk=lambda: local_frame(
+                spark, [], "snapshot_id string, column string"),
             check_path="none")
 
     # -- census first (metadata-only): selects the check path ---------------
@@ -205,16 +210,15 @@ def validate(
     # else fused (one scan + one skew-blocked shuffle). clustered_checks
     # forces it either way. All three paths are row-identical (tested).
     #
-    # The row threshold is measured, not guessed (local[32], fresh data,
-    # warm JVM): the clustered path pays ~3-5s of fixed cost per
-    # validate() — the mapInArrow Python-worker fan-out plus the eager
-    # checkpoint + layout-verification actions — that the corpus scan
-    # must buy back from the shuffle path's sort. At 72k turns the
-    # shuffle path wins (3.2s vs 4.4s), at 1.0M it still wins (4.3s vs
-    # 6.3s), at 5.0M the sort spills and the clustered path wins 6x
-    # (5.6-7.7s vs 38-39s). Crossover sits between 1M and 5M rows;
-    # default 2M. On a real cluster the fixed cost is per-executor and
-    # already amortized, so a deployment would set this to 0.
+    # The row threshold was set when the clustered path paid ~3-5s of
+    # fixed cost per call (26 Spark jobs, a Python task per split); at
+    # local[32] the shuffle path then won up to 1M rows and lost 6x at
+    # 5M, so the default sits at 2M. The path now runs 3 jobs over packed
+    # tasks, and re-measured on 4 cores (warm JVM, median of 3 calls,
+    # clustered vs fused) it wins at every size tried: 1.7s vs 2.9s at
+    # 239k turns, 2.1s vs 2.8s at 1M, 2.9s vs 5.9s at 2.87M. The default
+    # is left at 2M until a cluster measurement backs a lower one; a
+    # deployment that wants the clustered path throughout sets 0.
     man_full = catalog.manifest(snapshot_id)
     min_rows = int(spark.conf.get(
         "spark.schema_inference.clustered.minRows", "2000000"))
@@ -237,6 +241,9 @@ def validate(
     inf = None
     violations = None
     path_used = "fused" if fused_checks else "separate"
+    opt_in = (role_protocol or baseline_transitions or rules or completeness
+              or stuck_loops or conv_dedup or conv_near_dedup is not None
+              or context_budget is not None)
     if not pending:
         # every pending partition errored at census: nothing left to
         # scan — emit only the error verdicts below
@@ -346,10 +353,7 @@ def validate(
                     for v in v_parts[1:]:
                         violations = violations.unionByName(v)
 
-            if role_protocol or baseline_transitions or rules \
-                    or completeness or stuck_loops or conv_dedup \
-                    or conv_near_dedup is not None \
-                    or context_budget is not None:
+            if opt_in:
                 # opt-in conversation-structure checks: the protocol
                 # matrix (checks.check_role_protocol) and/or the
                 # snapshot-vs-baseline transition drift. Both need the
@@ -491,13 +495,26 @@ def validate(
                                                  base)
                     if row:
                         driver_rows.append(row)
+            drv_rows = [tuple(r[c] for c in C.VIOLATION_COLS)
+                        for r in driver_rows]
+            persist = (write_violations if write_violations is not None
+                       else write_audit)
+            if path_used == "clustered" and not (opt_in or persist):
+                # the clustered violations are a LocalRelation of
+                # violation-sized rows: merge the driver rows, order and
+                # count them here, and return another LocalRelation — no
+                # Spark job, neither now nor when the caller reads them.
+                # Python str order is Spark's UTF-8 binary order.
+                rows = sorted([tuple(r) for r in violations.collect()]
+                              + drv_rows, key=C.stable_key)
+                counts = Counter(r[1] for r in rows)
+                violations = local_frame(spark, rows, C.VIOLATION_DDL)
+                _mark("order+count violations (driver)")
+                break
             out_violations = violations
-            if driver_rows:
-                drv = spark.createDataFrame(
-                    [tuple(r[c] for c in C.VIOLATION_COLS)
-                     for r in driver_rows],
-                    C.VIOLATION_DDL)
-                out_violations = out_violations.unionByName(drv)
+            if drv_rows:
+                out_violations = out_violations.unionByName(
+                    local_frame(spark, drv_rows, C.VIOLATION_DDL))
 
             out_violations = C.stable_order(out_violations)
             _mark("plan-violations")
@@ -510,8 +527,6 @@ def validate(
             # .collect() double materialization. The store is idempotent
             # per partition, so resume reproduces prior runs' violation
             # rows without re-scanning (catalog.append_violations).
-            persist = (write_violations if write_violations is not None
-                       else write_audit)
             if persist:
                 catalog.append_violations(out_violations, snapshot_id)
                 out_violations = C.stable_order(
@@ -572,8 +587,8 @@ def validate(
         # partition's tally — one drift hit must not flip all partitions
         verdict_rows.append((snapshot_id, -1, "fail", 0,
                              int(snapshot_level), wall_ms, json.dumps({})))
-    verdicts = spark.createDataFrame(
-        verdict_rows,
+    verdicts = local_frame(
+        spark, verdict_rows,
         "snapshot_id string, partition_id int, verdict string, "
         "n_rows bigint, n_violations bigint, wall_ms bigint, state_json string")
 

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.frames import local_frame
+
 AUDIT_SCHEMA = T.StructType([
     T.StructField("snapshot_id", T.StringType(), False),
     T.StructField("partition_id", T.IntegerType(), False),
@@ -108,7 +110,7 @@ class SnapshotCatalog:
         d = self._audit_dir(snapshot_id)
         if not os.path.isdir(d) or not any(
                 f.endswith(".parquet") for f in os.listdir(d)):
-            return spark.createDataFrame([], AUDIT_SCHEMA)
+            return local_frame(spark, [], AUDIT_SCHEMA)
         df = spark.read.parquet(d)
         return df.withColumn("snapshot_id", F.lit(snapshot_id)).select(
             *[f.name for f in AUDIT_SCHEMA.fields])
@@ -159,7 +161,7 @@ class SnapshotCatalog:
             f.endswith(".parquet")
             for _, _, fs in os.walk(d) for f in fs)
         if not has_files:
-            return spark.createDataFrame([], VIOLATION_DDL)
+            return local_frame(spark, [], VIOLATION_DDL)
         df = (spark.read.option("basePath", d).parquet(d)
               .withColumn("snapshot_id", F.lit(snapshot_id))
               .withColumn("partition_id", F.col("partition_id").cast("int")))

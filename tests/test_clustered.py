@@ -189,21 +189,28 @@ def _write_two_file_snapshot(root, snap, t0, t1):
     """One bucket, TWO parquet files listed in manifest order, manifest
     declaring the clustered write order — for engineering lies that exist
     only ACROSS a file boundary while each file is locally clean."""
+    _write_files_snapshot(root, snap, [t0, t1])
+
+
+def _write_files_snapshot(root, snap, tables):
+    """One bucket, one parquet file per table in manifest order, manifest
+    declaring the clustered write order."""
     import json
     import os
 
     import pyarrow.parquet as pq
     snap_dir = os.path.join(root, snap)
     os.makedirs(os.path.join(snap_dir, "bucket=0"), exist_ok=True)
-    pq.write_table(t0, os.path.join(snap_dir, "bucket=0", "part-0.parquet"))
-    pq.write_table(t1, os.path.join(snap_dir, "bucket=0", "part-1.parquet"))
+    files = [f"part-{i}.parquet" for i in range(len(tables))]
+    for t, f in zip(tables, files):
+        pq.write_table(t, os.path.join(snap_dir, "bucket=0", f))
+    n_rows = sum(t.num_rows for t in tables)
     manifest = {
         "snapshot_id": snap, "table": "transcripts", "format": "parquet",
         "n_buckets": 1, "partition_by": "bucket",
         "partitions": [{"partition_id": 0, "path": "bucket=0",
-                        "files": ["part-0.parquet", "part-1.parquet"],
-                        "n_rows": t0.num_rows + t1.num_rows}],
-        "n_rows": t0.num_rows + t1.num_rows,
+                        "files": files, "n_rows": n_rows}],
+        "n_rows": n_rows,
         "write_order": {"clustered_by": ["conv_id"],
                         "sorted_by": ["conv_id", "turn_idx", "ts"]},
     }
@@ -334,11 +341,10 @@ def test_validate_clustered_uses_one_fused_scan(spark, catalog):
     assert av == bv
 
 
-def test_fused_states_reduce_path_many_splits(spark, tmp_path):
-    """Above 256 splits the fused states merge executor-side
-    (reduceByKey) so the driver receives one row per partition; the
-    result must equal the SQL state engine exactly, same as the
-    driver-merge path."""
+def test_fused_states_many_partitions(spark, tmp_path):
+    """300 partitions' splits pack into a few scan tasks, each emitting
+    one state row per partition it read; the driver merge must equal the
+    SQL state engine exactly."""
     from schema_inference_spark.operators.infer import (
         finalize_infer,
         infer_snapshot,
@@ -366,3 +372,84 @@ def test_fused_states_reduce_path_many_splits(spark, tmp_path):
     assert fused.partition_states == sql.partition_states
     assert fused.column_stats == sql.column_stats
     assert fused.table_schema == sql.table_schema
+
+
+def test_packed_tasks_stitch_seam_anomalies(spark, tmp_path):
+    """Splits outnumber scan tasks, so several splits share one packed
+    task, and every anomaly sits exactly on a split seam: the driver-side
+    stitch must stay row-identical to the fused path."""
+    from schema_inference_spark.operators.clustered import (
+        _pack_tasks, _plan_splits)
+
+    rows = [("a", i, "user", None, i) for i in range(16)]
+    rows += [("a", 17 + i, "user", None, 20 + i) for i in range(16)]  # gap
+    rows += [("a", 32, "user", None, 36 + i) for i in range(16)]      # dup
+    rows += [("a", 33 + i, "user", None, 40 + i) for i in range(16)]  # ts
+    rows += [("b", i, "moderator" if i == 0 else "user",
+              "telepathy" if i == 16 else None, 100 + i)
+             for i in range(32 * 8)]
+    root = str(tmp_path)
+    write_snapshot(root, "pk", _mk_table(rows), n_buckets=1,
+                   row_group_size=16, declare_write_order=True)
+    cat = SnapshotCatalog(root)
+    splits = _plan_splits(cat, "pk", [0], 16)
+    tasks = [t.splits for t in _pack_tasks(spark, splits).collect()]
+    assert len(splits) > spark.sparkContext.defaultParallelism
+    assert len(tasks) == spark.sparkContext.defaultParallelism
+    assert sorted(s.split_id for t in tasks for s in t) == list(
+        range(len(splits)))
+    spark.conf.set("spark.schema_inference.clustered.splitTargetRows", "16")
+    try:
+        clu = _clustered(spark, cat, "pk")
+    finally:
+        spark.conf.unset("spark.schema_inference.clustered.splitTargetRows")
+    assert clu == _fused(spark, cat, "pk")
+    assert {r["check_id"] for r in clu} == {
+        "turn_gap", "turn_dup", "unique_key", "ts_order", "ref_role",
+        "ref_tool"}
+
+
+def test_empty_split_between_seams(spark, tmp_path):
+    """A zero-row file yields an empty split between two segments of one
+    conversation; the seam across it is still stitched, row-identical to
+    the fused path."""
+    t0 = _mk_table([("z", i, "user", None, i) for i in range(5)])
+    t2 = _mk_table([("z", i, "user", None, i) for i in range(7, 9)]
+                   + [("y", 0, "user", None, 50)])
+    root = str(tmp_path)
+    _write_files_snapshot(root, "es", [t0, t0.slice(0, 0), t2])
+    cat = SnapshotCatalog(root)
+    clu = _clustered(spark, cat, "es")
+    assert clu == _fused(spark, cat, "es")
+    assert [(r["check_id"], r["turn_idx"]) for r in clu] == [("turn_gap", 7)]
+
+
+def test_clustered_call_runs_at_most_five_jobs(spark, catalog):
+    """A clustered validate() plus reading its violations and verdicts
+    runs at most 5 Spark jobs: one scan, one collect, and nothing when
+    the caller reads the (local) results."""
+    sc = spark.sparkContext
+    validate(spark, catalog, "s1", resume=False, write_audit=False)
+    sc.setJobGroup("clustered-job-guard", "jobs of one clustered call")
+    try:
+        r = validate(spark, catalog, "s1", resume=False, write_audit=False)
+        r.violations.collect()
+        r.verdicts.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r.check_path == "clustered"
+    jobs = sc.statusTracker().getJobIdsForGroup("clustered-job-guard")
+    assert 0 < len(jobs) <= 5, jobs
+
+
+def test_clustered_calls_release_what_they_persist(spark, catalog):
+    """The scan checkpoint is released before validate() returns: a
+    long-lived session holds no more persisted RDDs after 3 calls than
+    before them."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        r = validate(spark, catalog, "s1", resume=False, write_audit=False)
+        assert r.check_path == "clustered"
+        r.violations.collect()
+    assert jsc.getPersistentRDDs().size() == before

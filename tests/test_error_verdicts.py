@@ -278,3 +278,53 @@ def test_all_partitions_errored_still_returns(spark, snap):
     res2 = validate(spark, cat, "snap")
     assert sorted(res2.partitions) == [0, 1, 2, 3]
     assert res2.errors == {}
+
+
+def test_extent_lie_next_to_dropped_partition(spark, tmp_path):
+    """Segments are ranked among the partitions left after a read error:
+    an extent lie in the partition after the dropped one still refuses,
+    and the same layout without the lie is row-identical to the fused
+    path over the healthy partition."""
+    from schema_inference_spark.operators import checks as C
+    from schema_inference_spark.operators.clustered import (
+        check_rowlevel_clustered,
+    )
+    from schema_inference_spark.pipeline import ROLE_VOCAB, TOOL_VOCAB
+
+    import numpy as np
+
+    from schema_inference_spark.sources.transcripts import _hash_bucket
+
+    def in_bucket(prefix, b):
+        return next(f"{prefix}{i}" for i in range(100) if int(_hash_bucket(
+            np.array([f"{prefix}{i}"], dtype=object), 2)[0]) == b)
+
+    # the errored partition (0) comes first in manifest (file) order
+    x, y, h = in_bucket("x", 1), in_bucket("y", 1), in_bucket("h", 0)
+    healthy = [(x, i, "user", None, i) for i in range(64)]
+    healthy += [(y, i, "user", None, 100 + i) for i in range(64)]
+    lie = healthy + [(x, i, "user", None, 200 + i) for i in range(64, 128)]
+    clean = healthy + [(y, i, "user", None, 200 + i) for i in range(66, 130)]
+    bad = [(h, i, "user", None, 500 + i) for i in range(300)]
+    for snap, rows in (("lie", lie), ("clean", clean)):
+        write_snapshot(str(tmp_path), snap, _mk_table(bad + rows),
+                       n_buckets=2, row_group_size=64,
+                       declare_write_order=True)
+        _corrupt_cut(glob.glob(f"{tmp_path}/{snap}/bucket=0/*.parquet")[0])
+    cat = SnapshotCatalog(str(tmp_path))
+
+    with _split64(spark):
+        with pytest.raises(ValueError, match="non-adjacent segments"):
+            check_rowlevel_clustered(
+                spark, cat, "lie", cat.partition_ids("lie"),
+                ROLE_VOCAB, TOOL_VOCAB, with_errors=True)
+        viols, errors = check_rowlevel_clustered(
+            spark, cat, "clean", cat.partition_ids("clean"),
+            ROLE_VOCAB, TOOL_VOCAB, with_errors=True)
+    assert set(errors) == {0}
+    fused = C.check_rowlevel_fused(cat.read_snapshot(spark, "clean", [1]),
+                                   "clean", ROLE_VOCAB, TOOL_VOCAB)
+    got = [r.asDict() for r in C.stable_order(viols).collect()]
+    assert got == [r.asDict() for r in C.stable_order(fused).collect()]
+    assert [(r["check_id"], r["turn_idx"]) for r in got] == [
+        ("turn_gap", 66)]

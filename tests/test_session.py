@@ -25,3 +25,25 @@ def test_explicit_master_always_wins():
     env = {"PYSPARK_GATEWAY_PORT": "46165"}
     assert _resolve_master("local[2]", "32", env) == "local[2]"
     assert _resolve_master("local[2]", "32", {}) == "local[2]"
+
+
+def test_session_sized_from_host_memory():
+    from schema_inference_spark.functions.session import size_session
+    # default heap: a share of what the host has, pre-touched
+    assert size_session({}, 15000) == ("6000m", "-Xms6000m -XX:+AlwaysPreTouch")
+    # capped at the old 32g default on a big host
+    assert size_session({}, 1 << 20)[0] == "32768m"
+    # an explicit heap that fits gives the same flags as before sizing
+    assert size_session({"SPARK_GRAFT_DRIVER_MEM": "3g"}, 15000) == (
+        "3g", "-Xms3g -XX:+AlwaysPreTouch")
+    # one the host cannot back keeps its -Xmx but is neither pre-sized
+    # past the budget nor pre-touched
+    assert size_session({"SPARK_GRAFT_DRIVER_MEM": "32g"}, 15000) == (
+        "32g", "-Xms6000m")
+    assert size_session({"SPARK_GRAFT_DRIVER_MEM": "4g",
+                         "SPARK_GRAFT_XMS": "20g"}, 15000) == (
+        "4g", "-Xms6000m")
+    assert size_session({"SPARK_GRAFT_PRETOUCH": "0"}, 15000) == (
+        "6000m", None)
+    # unknown host memory: the explicit or old defaults, unclamped
+    assert size_session({}, None) == ("32g", "-Xms32g -XX:+AlwaysPreTouch")

@@ -142,3 +142,23 @@ def test_grouped_quantiles_even_group_lower_method(spark):
     out = {r.q: r.value for r in
            grouped_quantiles(df, "g", F.col("v"), qs=(0.5,)).collect()}
     assert out[0.5] == 2   # rank 1+floor(0.5*3) = 2 — lower, not midpoint
+
+
+def test_sketch_comparison_runs_no_spark_job(spark):
+    """Drift's KLL quantile and rank queries project over an Arrow local
+    frame, which Spark evaluates on the driver without a job."""
+    from schema_inference_spark.operators.drift import psi_ks_from_sketches
+
+    def kll(lo):
+        return bytes(spark.range(lo, lo + 1000).select(
+            F.kll_sketch_agg_double(F.col("id").cast("double"))).first()[0])
+
+    base, cur = kll(0), kll(500)
+    sc = spark.sparkContext
+    sc.setJobGroup("kll-local", "sketch comparison")
+    try:
+        m = psi_ks_from_sketches(spark, base, cur)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m["psi"] > 0.25
+    assert list(sc.statusTracker().getJobIdsForGroup("kll-local")) == []
