@@ -19,10 +19,6 @@ from schema_inference_spark.driver_queries import (  # noqa: E402
     CORE_ORACLES,
     CORE_QUERIES,
 )
-from schema_inference_spark.driver_queries_anomaly import (  # noqa: E402
-    ANOMALY_ORACLES,
-    ANOMALY_QUERIES,
-)
 from schema_inference_spark.driver_queries_conv import (  # noqa: E402
     CONV_ORACLES,
     CONV_QUERIES,
@@ -65,10 +61,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {**CORE_QUERIES, **EXTRA_QUERIES, **CONV_QUERIES,
-            **ANOMALY_QUERIES, **MIX_QUERIES}
+    return {**CORE_QUERIES, **EXTRA_QUERIES, **CONV_QUERIES, **MIX_QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {**CORE_ORACLES, **EXTRA_ORACLES, **CONV_ORACLES,
-            **ANOMALY_ORACLES, **MIX_ORACLES}
+    return {**CORE_ORACLES, **EXTRA_ORACLES, **CONV_ORACLES, **MIX_ORACLES}

@@ -142,9 +142,7 @@ ORDER BY "column"
 
 
 def q_window_stats(spark, sf_dir):
-    """Per-event-time-window column stats (D7 in stream form — the batch
-    equivalent of streaming.window_stats_stream, which is asserted equal
-    to this plan on the same input in tests/test_streaming.py). One
+    """Per-event-time-window column stats (D7 in windowed form). One
     tumbling-window groupBy: partial+final agg, no Python."""
     ev = _t(spark, sf_dir, "events")
     return (ev.groupBy(F.window("ts", "1 hour").alias("w"))
@@ -174,9 +172,7 @@ ORDER BY w_start
 
 
 def q_window_drift(spark, sf_dir):
-    """Distribution drift per event-time window (the oracle-gated batch
-    twin of streaming.drift_stream, which swaps these exact edges for a
-    baseline KLL sketch): bin edges = exact interior deciles of `value`
+    """Distribution drift per event-time window (oracle-gated): bin edges = exact interior deciles of `value`
     over the whole table (the baseline), per-day windows count rows per
     bin, PSI = sum (q-p)·ln(q/p) with the same 1e-6 clamp drift.py uses.
     Plan: one decile agg broadcast as a 1-row dimension, two grouped
@@ -185,10 +181,10 @@ def q_window_drift(spark, sf_dir):
     driver collect, scales as a pair of key-grouped aggregations."""
     from pyspark.sql import Window as W
 
-    # null `value` rows are excluded outright (mirroring drift_stream):
-    # NULL > edge is NULL, so they would otherwise fall through every
-    # WHEN into bin 0 while the decile edges are computed null-excluded —
-    # inflating bin-0 mass and PSI relative to the streaming twin
+    # null `value` rows are excluded outright: NULL > edge is NULL, so
+    # they would otherwise fall through every WHEN into bin 0 while the
+    # decile edges are computed null-excluded — inflating bin-0 mass and
+    # PSI
     ev = (_t(spark, sf_dir, "events").select("ts", "value")
           .filter(F.col("value").isNotNull()))
     probs = [i / 10 for i in range(1, 10)]

@@ -1,14 +1,11 @@
-"""Conversions between the engine schema IR, pyarrow types, and Spark types.
+"""pyarrow DataType -> engine schema IR (the SURVEY.md §1.3 mapping table).
 
-The SURVEY.md §1.3 mapping table, code form. Two directions matter:
-
-1. pyarrow DataType -> IR   : used by the per-partition state UDF to record
-   *observed physical* types. This deliberately bypasses Spark's own scan
-   schema, because Spark widens at scan/union time while the reference's
-   merge semantics are strict-fail (SURVEY.md §7.3-1): the engine must see
-   "this partition physically stored turn_idx as double" even when Spark's
-   merged read schema already coerced it.
-2. IR -> Spark StructType   : used to surface the inferred snapshot schema.
+Used by the per-partition state extraction to record *observed physical*
+types. This deliberately bypasses Spark's own scan schema, because Spark
+widens at scan/union time while the reference's merge semantics are
+strict-fail (SURVEY.md §7.3-1): the engine must see "this partition
+physically stored turn_idx as double" even when Spark's merged read
+schema already coerced it.
 
 Integer widths collapse to the canonical engine int (ref: ground.clj:18-21);
 the observed physical width is preserved separately in the state record.
@@ -60,98 +57,3 @@ def arrow_type_to_ir(dt: pa.DataType) -> Schema:
     # unknown physical type -> opaque ground (ref: ground.clj:31 leaves
     # unknown classes as class-typed grounds)
     return {"type": f"arrow:{dt}"}
-
-
-def arrow_physical_name(dt: pa.DataType) -> str:
-    """Physical type string kept alongside the canonical IR type so width
-    information survives canonicalization (SURVEY.md §7.3-6)."""
-    return str(dt)
-
-
-def ir_to_spark_type(schema: Schema):
-    """IR -> pyspark DataType (imported lazily so the IR stays Spark-free)."""
-    from pyspark.sql import types as T
-
-    t = schema.get("type")
-    if t == "maybe":
-        return ir_to_spark_type(schema["child"])
-    atomic = {
-        "boolean": T.BooleanType(), "int": T.LongType(),
-        "float": T.FloatType(), "double": T.DoubleType(),
-        "string": T.StringType(), "char": T.StringType(),
-        "keyword": T.StringType(), "symbol": T.StringType(),
-        "uuid": T.StringType(), "bytes": T.BinaryType(),
-        "timestamp": T.TimestampType(), "date": T.DateType(),
-        "nil": T.NullType(), "any": T.StringType(),
-    }
-    if t in atomic:
-        return atomic[t]
-    if t in ("vector", "set", "sequential"):
-        return T.ArrayType(ir_to_spark_type(schema["child"]))
-    if t == "tuple":
-        return T.StructType([
-            T.StructField(f"_{i + 1}", ir_to_spark_type(c))
-            for i, c in enumerate(schema["children"])])
-    if t == "map-of":
-        return T.MapType(ir_to_spark_type(schema["key"]),
-                         ir_to_spark_type(schema["value"]))
-    if t == "map":
-        return T.StructType([
-            T.StructField(k, ir_to_spark_type(v))
-            for k, v in schema.get("entries", {}).items()])
-    if t in ("s-var", "scheme"):
-        # unresolved column type: NullType placeholder (SURVEY.md §1.3)
-        return T.NullType()
-    return T.StringType()
-
-
-def ir_to_struct_type(table_schema: Dict[str, Schema]):
-    """{column -> IR schema} -> StructType; :maybe becomes nullable."""
-    from pyspark.sql import types as T
-
-    fields = []
-    for name, s in table_schema.items():
-        nullable = s.get("type") in ("maybe", "s-var", "scheme")
-        meta = {}
-        if s.get("type") == "set" or (s.get("type") == "maybe"
-                                      and s["child"].get("type") == "set"):
-            meta["distinct"] = True
-        fields.append(T.StructField(name, ir_to_spark_type(s), nullable,
-                                    metadata=meta))
-    return T.StructType(fields)
-
-
-def spark_type_to_ir(dt) -> Schema:
-    """pyspark DataType -> IR (for registering baselines from StructTypes)."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.BooleanType):
-        return {"type": "boolean"}
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return {"type": "int"}
-    if isinstance(dt, T.FloatType):
-        return {"type": "float"}
-    if isinstance(dt, T.DoubleType):
-        return {"type": "double"}
-    if isinstance(dt, T.DecimalType):
-        return {"type": "decimal"}
-    if isinstance(dt, T.StringType):
-        return {"type": "string"}
-    if isinstance(dt, T.BinaryType):
-        return {"type": "bytes"}
-    if isinstance(dt, T.TimestampType):
-        return {"type": "timestamp"}
-    if isinstance(dt, T.DateType):
-        return {"type": "date"}
-    if isinstance(dt, T.NullType):
-        return {"type": "nil"}
-    if isinstance(dt, T.ArrayType):
-        return {"type": "vector", "child": spark_type_to_ir(dt.elementType)}
-    if isinstance(dt, T.MapType):
-        return {"type": "map-of", "key": spark_type_to_ir(dt.keyType),
-                "value": spark_type_to_ir(dt.valueType)}
-    if isinstance(dt, T.StructType):
-        return {"type": "map",
-                "entries": {f.name: spark_type_to_ir(f.dataType)
-                            for f in dt.fields}}
-    return {"type": f"spark:{dt.simpleString()}"}

@@ -233,12 +233,10 @@ def check_conv_dup(df: DataFrame, snapshot_id: str,
 
 
 # default prefix cap for conversation near-dup comparison — the ONE
-# definition the pipeline check, the deployment flag, and the bench
-# probes share (BENCH/stress_conv_near_dup.py's recall numbers are
-# measured at this value). The streaming fold (minhash_sig_stream)
-# defaults to None/uncapped for batch parity; a capped deployment must
-# use the same value stream-side AND in its index artifacts (enforced
-# by the mh_params fold tag).
+# definition the pipeline check and the deployment flag share (the
+# recall numbers of `git show 3abe443:BENCH/stress_conv_near_dup.py`
+# are measured at this value). A capped deployment must use the same
+# value in its index artifacts (enforced by the mh_params tag).
 CONV_NEAR_DUP_MAX_TURNS = 1024
 
 
@@ -262,10 +260,9 @@ def check_conv_near_dup(df: DataFrame, snapshot_id: str,
     dependent, so no digest trick applies. Downstream is the standard
     capped machinery (dedup.lsh_candidate_pairs banding with
     bucket_cap, exact-Jaccard verify on the candidate pairs only). At
-    the warehouse this runs as the scheduled corpus near-dedup pass —
-    the per-ingest and streaming forms (conv_dup_against_index's
-    MinHash analog via near_dup_candidates_from_sigs, and
-    streaming.conv_near_dup_stream) exist so this full-corpus pass is
+    the warehouse this runs as the scheduled corpus near-dedup pass;
+    the per-ingest form (conv_dup_against_index's MinHash analog via
+    near_dup_candidates_from_sigs) exists so this full-corpus pass is
     NOT on any ingest path.
 
     MEMORY CONTRACT (measured, not guessed): what gets persisted for
@@ -275,7 +272,8 @@ def check_conv_near_dup(df: DataFrame, snapshot_id: str,
     shuffle). Caching the shingled frame instead OOMs at corpus scale:
     the distinct word-k-shingle arrays are ~k× the text in per-string
     JVM objects, and materializing them into storage blocks blew a
-    32 GB heap at 19.1M turns (BENCH/stress_conv_near_dup.py) while
+    32 GB heap at 19.1M turns (`git show
+    3abe443:BENCH/stress_conv_near_dup.py`) while
     the assembled-text cache fits comfortably. Session-scoped cache
     note as ``dedup.jaccard_pairs``. ``partition_col`` rides the fold
     as a functionally-dependent group column (a conversation lives in
@@ -509,7 +507,8 @@ def fk_orphans_bloom(fact: DataFrame, dim: DataFrame, fact_key: str,
     fall back to ``fk_orphans``' shuffle form; this operator targets
     the cluster regime where the avoided exchange is a NETWORK shuffle
     of the fact side, not a replacement. Measured counter-example
-    (BENCH/stress_storage_ops.py, 19.1M turns, local[32] on tmpfs):
+    (`git show 3abe443:BENCH/stress_storage_ops.py`, 19.1M turns,
+    local[32] on tmpfs):
     the shuffle path wins 2x (20.7s vs 42.2s) because a tmpfs-local
     exchange is nearly free while the bloom pays two Python mapInArrow
     probe passes — on local[*] keep ``fk_orphans``.
@@ -743,8 +742,8 @@ def check_role_protocol(df: DataFrame, snapshot_id: str,
 
     Ties on (turn_idx, ts) — e.g. duplicated turns — are broken by the
     role string itself, so the transition sequence (and therefore the
-    violation set) is deterministic and identical between the batch and
-    streaming forms regardless of physical row order."""
+    violation set) is deterministic regardless of physical row
+    order."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts", "role")
     base = (df.select(partition_col, "conv_id", "turn_idx", "ts", "role")
             .withColumn("_prev_role", F.lag("role").over(w)))

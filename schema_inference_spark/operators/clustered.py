@@ -3,7 +3,7 @@ snapshots.
 
 ``check_rowlevel_fused`` (checks.py) pays one Exchange + one full sort —
 the memory-bandwidth-bound stage that caps its N->4N scaling at ~0.74
-(BENCH/BASELINE.md). But a transcripts table written the way an Iceberg
+(`git show 3abe443:BENCH/BASELINE.md`). But a transcripts table written the way an Iceberg
 pipeline would write it — bucket-partitioned by conv_id with a declared
 write sort order of (conv_id, turn_idx, ts) — already has every
 conversation's turns contiguous and sorted on disk. Validation then needs

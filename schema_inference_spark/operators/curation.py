@@ -313,9 +313,8 @@ SPLIT_BOUNDS = (("train", "c0"), ("val", "e0"))
 
 def split_columns(id_col: str = "doc_id", salt: str = "v1") -> tuple:
     """The (bucket, split) column pair as pure expressions — ONE
-    definition shared by the batch operator and the ingest-time stream
-    twin (``streaming.stream_checks.split_stream``), so the two can
-    never drift."""
+    definition shared by ``split_assign`` and ``split_leakage``, so
+    the two can never drift."""
     h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
     bucket = F.substring(h, 1, 2)
     split = F.lit("test")

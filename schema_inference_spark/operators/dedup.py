@@ -22,17 +22,31 @@ All Spark-first, no Python in the hot path:
 
 from __future__ import annotations
 
-
+import atexit
+import functools
+import itertools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# monotone suffix for the simhash pair-expansion spill (see
-# simhash_pairs_from_fp): guarantees a later call never overwrites a
-# spill an earlier lazy result may still read
-_SIMHASH_SPILL_SEQ = 0
+# simhash pair-expansion spills (see simhash_pairs_from_fp): one private
+# directory per process, removed at exit, and a monotone suffix so a later
+# call never overwrites a spill an earlier lazy result may still read.
+# next() on an itertools.count is atomic under the GIL, so concurrent
+# callers in one process never draw the same suffix.
+_SIMHASH_SPILL_SEQ = itertools.count(1)
+
+
+@functools.lru_cache(maxsize=None)
+def _simhash_spill_dir() -> str:
+    d = tempfile.mkdtemp(prefix="sgraft_simhash_spill_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
 
 BIG = 2_147_483_647
 
@@ -195,7 +209,7 @@ def segment_dedup(df: DataFrame, id_col: str = "doc_id",
     segmented. The repo's standing crawl doctrine (run exact dedup
     before any set-similarity pass) applied in-operator; measured 4.6x
     (155.3s -> 33.7s, identical n_segs/n_kept totals) on the 500k-doc
-    dup-heavy stress corpus (BENCH/BASELINE.md), vs a mild extra
+    dup-heavy stress corpus (`git show 3abe443:BENCH/BASELINE.md`), vs a mild extra
     exchange of (md5, id) pairs on low-dup corpora."""
     if exact_first:
         eh = F.md5(F.col(text_col))
@@ -619,10 +633,9 @@ def near_dup_candidates(new_df: DataFrame, index: DataFrame,
     -scoped note as ``jaccard_pairs``. Spark's CacheManager dedupes
     identical plans, so re-running the SAME probe costs one entry, but
     each DISTINCT batch adds one — a driver probing many batches in one
-    session should pass ``persist_sig=False`` (as the streaming form
-    does: recomputing a micro-batch's signatures twice is cheaper than
-    a cache entry leaking per epoch) or ``clearCache()`` between
-    corpora."""
+    session should pass ``persist_sig=False`` (recomputing a small
+    batch's signatures twice is cheaper than a cache entry leaking per
+    batch) or ``clearCache()`` between corpora."""
     sig = minhash_signature(new_df, n_hashes, text_col, k, id_col)
     if persist_sig:
         sig = sig.persist()
@@ -640,9 +653,8 @@ def near_dup_candidates_from_sigs(sig: DataFrame, index: DataFrame,
                                   fold_cap: int | None = None) -> DataFrame:
     """The post-signature half of ``near_dup_candidates``: candidates
     from a PRECOMPUTED (id, minhash) frame. Exposed for callers whose
-    signatures do not come from a text scan — the streaming probe folds
-    them incrementally in state (streaming.minhash_sig_stream), and a
-    warehouse ingest that persisted the batch's signature table probes
+    signatures do not come from a text scan — e.g. a warehouse ingest
+    that persisted the batch's signature table probes
     from that artifact directly. Same join shape and exchange notes as
     ``near_dup_candidates``. Raises if either index artifact records
     MinHash parameters differing from this probe's (``k=None`` skips
@@ -777,7 +789,7 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     ``max_df=None`` disables the cap.
 
     ORDER OF OPERATIONS on dup-heavy corpora (measured, 500k-doc 100x
-    stress probe in BENCH/BASELINE.md): duplication itself is the
+    stress probe in `git show 3abe443:BENCH/BASELINE.md`): duplication itself is the
     quadratic term — a corpus whose template shingles sit at df~100
     keeps them BELOW the default cap, and the exact join legitimately
     does ~df^2 work per shingle (>10min where LSH+verify takes 156s).
@@ -934,8 +946,7 @@ def minhash_signature(df: DataFrame, n_hashes: int = 64,
     to the JVM per tests). The previous explode + 64-min-aggregate form
     evaluated 64 full string hashes per posting row (166M at the 50k-doc
     proxy — the dominant index-build cost) and shuffled the postings;
-    values are unchanged (pinned by tests/test_driver_extras.py and the
-    streaming parity suite).
+    values are unchanged (pinned by tests/test_driver_extras.py).
     """
     import pyarrow as pa
 
@@ -1234,18 +1245,15 @@ def simhash_pairs_from_fp(fp: DataFrame, bits: int = 32,
     # for the rest of the session and measurably slowed every later
     # query; the parquet spill rides the OS page cache instead). At the
     # warehouse the same pattern writes to the job's scratch volume.
-    # Counter-suffixed path: a second call in the same process never
-    # overwrites a spill an earlier lazy result may still read; the
-    # spill from two calls back is reclaimed best-effort.
-    import shutil
-    import tempfile
-    global _SIMHASH_SPILL_SEQ
-    _SIMHASH_SPILL_SEQ += 1
-    base = os.path.join(tempfile.gettempdir(),
-                        f"sgraft_{os.getpid()}_simhash_pairs_spill")
-    path = f"{base}.{_SIMHASH_SPILL_SEQ}.parquet"
-    shutil.rmtree(f"{base}.{_SIMHASH_SPILL_SEQ - 2}.parquet",
-                  ignore_errors=True)
+    # Counter-suffixed path in the process's private spill dir: a second
+    # call never overwrites a spill an earlier lazy result may still
+    # read; the spill from two calls back is reclaimed best-effort, and
+    # the whole dir at exit. The dir is driver-local, so the spill
+    # targets local[*] sessions.
+    seq = next(_SIMHASH_SPILL_SEQ)
+    base = os.path.join(_simhash_spill_dir(), "pairs")
+    path = f"{base}.{seq}.parquet"
+    shutil.rmtree(f"{base}.{seq - 2}.parquet", ignore_errors=True)
     cross.unionByName(intra).write.mode("overwrite").parquet(path)
     return (fp.sparkSession.read.parquet(path)
             .repartitionByRange(par2, "d1", "d2")

@@ -199,8 +199,8 @@ def decode_features(df: DataFrame, fake: bool = False,
     callable ``bytes -> array-like of FEATURE_DIM floats``. The callables
     are cloudpickled into the UDF closure and run on the WORKERS, so prod
     registers its codec stack here (PIL thumbnail, librosa frames, ffmpeg
-    frame sampling) without touching this module; docs/MULTIMODAL.md has
-    the recipes. Kinds not covered fall through to the built-in probe
+    frame sampling) without touching this module; `git show
+    3abe443:docs/MULTIMODAL.md` has the recipes. Kinds not covered fall through to the built-in probe
     (`_probe_codecs` / `_real_decode`).
 
     ``fake=True`` uses the deterministic hash stand-in. With neither a

@@ -36,10 +36,7 @@ PII_PATTERNS = [
 
 def pii_count_columns(text_col: str = "text"):
     """The per-class match-count columns (``n_<class>`` bigint) and the
-    total (``n_pii``) — the ONE definition both the batch operator
-    (``pii_flags``) and the stream form (``streaming.pii_stream``) build
-    from, so a pattern or cast change cannot desynchronize the
-    batch/stream row-identity the tests assert."""
+    total (``n_pii``) that ``pii_flags`` builds from."""
     counts = [F.regexp_count(F.col(text_col), F.lit(pat))
               .cast("bigint").alias(f"n_{name}")
               for name, pat in PII_PATTERNS]

@@ -463,9 +463,7 @@ def text_validity(df: DataFrame, id_col: str = "doc_id",
 
 def text_validity_columns(text_col: str = "text") -> list:
     """The four validity columns (n_chars, n_control, n_replacement,
-    verdict) as reusable expressions — ONE definition shared by the
-    batch operator and ``streaming.text_validity_stream`` so the two
-    paths cannot drift."""
+    verdict) as reusable expressions."""
     t = F.col(text_col)
     n_chars = F.length(t).cast("bigint")
     n_control = F.regexp_count(t, F.lit(CONTROL_CHAR_RE)).cast("bigint")

@@ -41,10 +41,10 @@ class ValidationResult:
     ``snapshot_stats`` is LAZY: it is built from ``stats_thunk`` on first
     access (the first access triggers a Spark plan build — ~1s of
     driver-side Catalyst analysis over 50+ agg expressions — which most
-    callers, e.g. the scaling bench and plain pass/fail consumers, never
-    pay) and memoized. Pre-round-3 callers that constructed the result
-    with an eager ``snapshot_stats=`` DataFrame keyword still work: the
-    kwarg is accepted as an alias that wraps into ``stats_thunk``.
+    callers, e.g. plain pass/fail consumers, never pay) and memoized.
+    Pre-round-3 callers that constructed the result with an eager
+    ``snapshot_stats=`` DataFrame keyword still work: the kwarg is
+    accepted as an alias that wraps into ``stats_thunk``.
     """
 
     def __init__(self, snapshot_id: str, partitions: List[int],
@@ -64,8 +64,8 @@ class ValidationResult:
         # verdict='error' rows (not completed: resume retries after repair)
         self.errors = errors or {}
         # which row-level check engine actually ran: "clustered" (one
-        # fused native scan), "fused" (one scan + one shuffle),
-        # "separate" (per-check plans), or "none" (nothing pending)
+        # fused native scan), "fused" (one scan + one shuffle), or
+        # "none" (nothing pending)
         self.check_path = check_path
         if stats_thunk is None and snapshot_stats is not None:
             stats_thunk = lambda: snapshot_stats  # noqa: E731
@@ -103,7 +103,6 @@ def validate(
     resume: bool = True,
     write_audit: bool = True,
     write_violations: Optional[bool] = None,
-    fused_checks: bool = True,
     clustered_checks: Optional[bool] = None,
     partition_col: str = "bucket",
     partitions: Optional[List[int]] = None,
@@ -145,10 +144,11 @@ def validate(
     ``clustered`` (one fused native Arrow scan, zero shuffle, taken
     when the manifest declares the Iceberg sort-order contract and the
     snapshot has at least ``spark.schema_inference.clustered.minRows``
-    pending rows), ``fused`` (one scan + one skew-blocked shuffle), or
-    ``separate``; all three are row-identical (tested) and the chosen
-    path is reported as ``ValidationResult.check_path``. Without opt-in
-    checks or persistence, a clustered call runs 3 Spark jobs (the scan
+    pending rows) or ``fused`` (one scan + one skew-blocked shuffle,
+    taken otherwise); ``clustered_checks`` forces either. The two are
+    row-identical (tested) and the chosen path is reported as
+    ``ValidationResult.check_path``. Without opt-in checks or
+    persistence, a clustered call runs 3 Spark jobs (the scan
     and one collect) and returns its violations and verdicts as Arrow
     local frames, so reading them runs none. ``resume=True`` skips
     partitions already marked complete in the audit store;
@@ -208,7 +208,7 @@ def validate(
     # manifest declares the write order — the Iceberg sort-order contract —
     # AND the snapshot is big enough to amortize the path's fixed cost;
     # else fused (one scan + one skew-blocked shuffle). clustered_checks
-    # forces it either way. All three paths are row-identical (tested).
+    # forces it either way. Both paths are row-identical (tested).
     #
     # The row threshold was set when the clustered path paid ~3-5s of
     # fixed cost per call (26 Spark jobs, a Python task per split); at
@@ -240,7 +240,7 @@ def validate(
     # + fused shuffle checks (second scan).
     inf = None
     violations = None
-    path_used = "fused" if fused_checks else "separate"
+    path_used = "fused"
     opt_in = (role_protocol or baseline_transitions or rules or completeness
               or stuck_loops or conv_dedup or conv_near_dedup is not None
               or context_budget is not None)
@@ -324,34 +324,12 @@ def validate(
                 df = read_snapshot_tolerant(spark, catalog, snapshot_id,
                                             pending, census)
                 _mark("read-plan")
-                if fused_checks:
-                    # one scan + one skew-blocked shuffle produces every
-                    # row-level check's violations (row-identical to the
-                    # separate plans, which would scan the snapshot 4x;
-                    # asserted in tests)
-                    violations = C.check_rowlevel_fused(
-                        df, snapshot_id, role_vocab, tool_vocab,
-                        partition_col)
-                else:
-                    v_parts = [
-                        C.check_unique_key(df, snapshot_id,
-                                           partition_col=partition_col),
-                        C.check_referential(df, snapshot_id, "role",
-                                            role_vocab, "ref_role",
-                                            partition_col),
-                        C.check_referential(df, snapshot_id, "tool",
-                                            tool_vocab, "ref_tool",
-                                            partition_col, nullable=True),
-                        # blocked variant: bounded per-task cardinality even
-                        # for a hot conv_id holding 10% of all turns
-                        # (row-identical to the plain window; SURVEY.md
-                        # §7.3-4 skew escape hatch)
-                        C.check_ordering_blocked(df, snapshot_id,
-                                                 partition_col),
-                    ]
-                    violations = v_parts[0]
-                    for v in v_parts[1:]:
-                        violations = violations.unionByName(v)
+                # one scan + one skew-blocked shuffle produces every
+                # row-level check's violations (row-identical to the
+                # per-check plans, which would scan the snapshot 4x;
+                # asserted in tests)
+                violations = C.check_rowlevel_fused(
+                    df, snapshot_id, role_vocab, tool_vocab, partition_col)
 
             if opt_in:
                 # opt-in conversation-structure checks: the protocol
@@ -360,7 +338,7 @@ def validate(
                 # per-conv (turn_idx, ts) ordering, which the clustered
                 # kernel does not compute — so when enabled they add
                 # windowed passes over the tolerant read plan (sharing
-                # the D12 Exchange on the shuffle paths; extra scans on
+                # the D12 Exchange on the fused path; extra scans on
                 # the clustered path, paid only by configured callers).
                 if df is None:
                     df = read_snapshot_tolerant(spark, catalog,
@@ -557,7 +535,7 @@ def validate(
             # the retry recomputes violations via the shuffle path even
             # when the clustered path had succeeded before the failure —
             # report the path that actually produced the final rows
-            path_used = "fused" if fused_checks else "separate"
+            path_used = "fused"
             _mark(f"scan failure -> probe ({sorted(bad)} errored)")
 
     # -- verdicts: per-partition pass/fail + metrics (F4) ---------------------
@@ -629,34 +607,6 @@ def transition_baseline(spark: SparkSession, catalog: SnapshotCatalog,
     ``baseline_from_result``'s value sketches."""
     from .operators.drift import transition_matrix
     return transition_matrix(catalog.read_snapshot(spark, snapshot_id))
-
-
-def bind_baseline(table_schema: Dict[str, Dict],
-                  baseline_schema: Dict[str, Dict]) -> Dict[str, Dict]:
-    """Table-level concretize (ref: api.clj:10-15): bind baseline column
-    types into a snapshot schema whose unresolved (all-NULL) columns are
-    still ∀-quantified schemes. Resolved columns and failures pass through
-    unchanged; a scheme column takes the baseline's type where one exists,
-    re-generalizing anything still unknown.
-    """
-    from .ir.algo_w import concretize
-    from .ir.schema_ir import is_failure
-
-    out: Dict[str, Dict] = {}
-    for col, schema in table_schema.items():
-        if schema.get("type") != "scheme" or is_failure(schema):
-            out[col] = schema
-            continue
-        base = baseline_schema.get(col)
-        if base is None:
-            out[col] = schema
-            continue
-        # strip a maybe-wrapper mismatch: the scheme body is maybe<s-var>;
-        # bind the var to the baseline's value type
-        bindings = {v: (base["child"] if base.get("type") == "maybe" else base)
-                    for v in schema["s_vars"]}
-        out[col] = concretize(bindings, schema)
-    return out
 
 
 def validate_replica(

@@ -129,43 +129,3 @@ def _violation(snapshot_id: str, check_id: str, s1, s2, payload) -> Dict:
         "conv_id": None, "turn_idx": None,
         "payload": json.dumps(payload, sort_keys=True),
     }
-
-
-def default_registry() -> CheckRegistry:
-    """The built-in checks with their :=> signatures (DataFrame-level fns;
-    signatures describe the logical row contract each check consumes)."""
-    from ..operators import checks as C
-
-    reg = CheckRegistry()
-    key_sig = {"type": "=>",
-               "input": {"type": "cat",
-                         "children": [{"type": "string"}, {"type": "int"}]},
-               "output": {"type": "boolean"}}
-    reg.register("unique_key", key_sig,
-                 lambda df, sid: C.check_unique_key(df, sid),
-                 doc="(conv_id, turn_idx) uniqueness, salted two-phase")
-    vocab_sig = {"type": "scheme", "s_vars": ["a"],
-                 "body": {"type": "=>",
-                          "input": {"type": "cat",
-                                    "children": [{"type": "s-var", "sym": "a"}]},
-                          "output": {"type": "boolean"}}}
-    reg.register("ref_role", vocab_sig,
-                 lambda df, sid: C.check_referential(
-                     df, sid, "role",
-                     ["system", "user", "assistant", "tool"], "ref_role"),
-                 doc="role vocabulary containment, broadcast anti-join")
-    reg.register("ref_tool", vocab_sig,
-                 lambda df, sid: C.check_referential(
-                     df, sid, "tool",
-                     ["search", "code", "browser", "none"], "ref_tool",
-                     nullable=True),
-                 doc="tool vocabulary containment")
-    order_sig = {"type": "=>",
-                 "input": {"type": "cat",
-                           "children": [{"type": "string"}, {"type": "int"},
-                                        {"type": "timestamp"}]},
-                 "output": {"type": "boolean"}}
-    reg.register("ordering", order_sig,
-                 lambda df, sid: C.check_ordering_blocked(df, sid),
-                 doc="turn gap/dup/ts-regression, skew-blocked window")
-    return reg

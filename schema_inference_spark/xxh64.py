@@ -6,14 +6,15 @@ UTF-8 bytes with the full streaming algorithm; an int child hashes as
 the standard <32-byte tail's single 4-byte step (Spark's `hashInt` IS
 `XXH64(le4(i), seed)` — same constants, same finalization), a long as
 the single 8-byte step. This module implements the public XXH64 spec
-(https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md) so a
-Pandas-UDF streaming operator can fold the SAME signature values the
-JVM batch fold produces — verified bit-for-bit against `F.xxhash64`
-in tests/test_streaming_minhash.py.
+(https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md) so
+Python code can reproduce the SAME signature values the JVM fold
+produces — verified bit-for-bit against `F.xxhash64` in
+tests/test_streaming_minhash.py.
 
 `hash_int32_vec` vectorizes the int step over a seed-shared value
-vector (the 64 MinHash seeds hash the same shingle hash), the hot loop
-of the incremental signature fold.
+vector (the 64 MinHash seeds hash the same shingle hash);
+`hash_int32_seedvec` is its seed-vector twin used by the MinHash
+index build.
 """
 
 from __future__ import annotations

@@ -163,7 +163,7 @@ def main() -> int:
     # engine wall: validate() through the last action (violation sink +
     # verdict collect), excluding JVM/session startup — the number a
     # two-cluster-size throughput comparison should use (startup is O(1)
-    # per job, see BENCH/AMORTIZATION.md)
+    # per job; see `git show 3abe443:BENCH/AMORTIZATION.md`)
     wall = time.monotonic() - t0
     n_turns = sum(p.get("n_rows", 0)
                   for p in catalog.manifest(args.snapshot)["partitions"]

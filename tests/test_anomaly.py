@@ -1,18 +1,11 @@
 """Anomaly/change family (operators/anomaly.py): unit semantics on
-constructed frames, plan-shape regressions, and the local oracle gate
-for the four driver queries."""
+constructed frames and plan-shape regressions."""
 
 import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
-from schema_inference_spark.driver_queries_anomaly import (
-    ANOMALY_ORACLES,
-    ANOMALY_QUERIES,
-)
 from schema_inference_spark.operators import anomaly as A
-from tests.test_driver_queries import duck_conn, normalize
 
 
 # ---------------------------------------------------------------------------
@@ -147,25 +140,6 @@ def test_row_hash_null_sentinel(spark):
                                "x string, y string")
     hashes = [r[0] for r in df.select(A.row_hash_col(["x", "y"])).collect()]
     assert hashes[0] != hashes[1]
-
-
-# ---------------------------------------------------------------------------
-# driver-contract gate, locally reproduced
-# ---------------------------------------------------------------------------
-
-@pytest.mark.parametrize("name", sorted(ANOMALY_ORACLES))
-def test_anomaly_query_matches_oracle(spark, sf_dir, name):
-    sdf = ANOMALY_QUERIES[name](spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_conn(sf_dir)
-    res = con.execute(ANOMALY_ORACLES[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    con.close()
-    assert sorted(scols) == sorted(dcols)
-    assert len(srows) == len(drows)
-    assert normalize(srows, scols) == normalize(drows, dcols)
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,6 @@
 """Rule constraints (operators/constraints.py): FD + implication
 semantics, the documented NULL contracts, and plan shape."""
 
-import json
-
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -219,101 +217,6 @@ def _write_turns(path, rows):
         "tool": pa.array([r[3] for r in rows], pa.string()),
         "bucket": pa.array([r[4] for r in rows], pa.int32()),
     }), str(path))
-
-
-_TURN_DDL = "conv_id string, turn_idx int, role string, tool string, bucket int"
-
-# role 'a' violates role->tool from chunk 1 (incl. a NULL dependent);
-# role 'u' is consistent in chunk 1 and violated only once chunk 2 lands
-_CHUNK1 = [("c1", 0, "u", "x", 0), ("c1", 1, "a", "x", 0),
-           ("c2", 0, "u", "x", 1), ("c2", 1, "a", "y", 1),
-           ("c2", 2, "a", None, 1)]
-_CHUNK2 = [("c3", 0, "u", "z", 0), ("c3", 1, "t", None, 0)]
-
-
-def test_fd_rule_stream_converges_to_batch(spark, tmp_path):
-    """Streaming FD rule: update-mode re-emission per micro-batch; the
-    LAST emission per determinant equals the batch fd_rule_violations
-    row byte-for-byte (payload JSON included) once all data arrived —
-    including a key that only becomes violated in the second batch."""
-    from schema_inference_spark.operators.constraints import (
-        fd_rule_violations,
-    )
-    from schema_inference_spark.streaming.stream_checks import (
-        fd_rule_stream,
-    )
-
-    stream_dir = tmp_path / "fd_stream"
-    stream_dir.mkdir()
-    _write_turns(stream_dir / "f1.parquet", _CHUNK1)
-
-    got = []
-    sdf = spark.readStream.schema(_TURN_DDL).parquet(str(stream_dir))
-    q = (fd_rule_stream(sdf, "s1", "role_tool_fd", ["role"], ["tool"])
-         .writeStream.outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt_fd"))
-         .foreachBatch(lambda df, _eid: got.extend(df.collect()))
-         .start())
-    try:
-        q.processAllAvailable()
-        mid = {json.loads(r.payload)["role"] for r in got}
-        assert mid == {"a"}, "only 'a' is violated before chunk 2"
-        _write_turns(stream_dir / "f2.parquet", _CHUNK2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    last = {}  # emissions arrive in order; keep the latest per key
-    for r in got:
-        last[json.loads(r.payload)["role"]] = tuple(r)
-
-    batch_df = spark.createDataFrame(_CHUNK1 + _CHUNK2, _TURN_DDL)
-    want = {json.loads(r.payload)["role"]: tuple(r)
-            for r in fd_rule_violations(
-                batch_df, "s1", "role_tool_fd",
-                ["role"], ["tool"]).collect()}
-    assert last == want
-
-
-def test_implication_rules_stream_row_identity(spark, tmp_path):
-    """Stateless implication rules: the streaming rows equal the batch
-    compiler's rows for the same data (same plan, append mode)."""
-    from schema_inference_spark.operators.constraints import (
-        implication_rule_violations,
-    )
-    from schema_inference_spark.streaming.stream_checks import (
-        implication_rules_stream,
-    )
-
-    rules = [{"check_id": "tool_required", "kind": "implication",
-              "when": "role = 't' OR role = 'a'",
-              "then": "tool IS NOT NULL", "payload_cols": ["role"]}]
-    stream_dir = tmp_path / "impl_stream"
-    stream_dir.mkdir()
-    _write_turns(stream_dir / "f1.parquet", _CHUNK1 + _CHUNK2)
-
-    got = []
-    sdf = spark.readStream.schema(_TURN_DDL).parquet(str(stream_dir))
-    q = (implication_rules_stream(sdf, "s1", rules)
-         .writeStream.outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt_impl"))
-         .foreachBatch(lambda df, _eid: got.extend(df.collect()))
-         .start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    batch_df = spark.createDataFrame(_CHUNK1 + _CHUNK2, _TURN_DDL)
-    want = implication_rule_violations(
-        batch_df, "s1", "tool_required",
-        rules[0]["when"], rules[0]["then"], ["role"]).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-    assert len(want) == 2, "one 'a' NULL-tool turn + one 't' NULL-tool turn"
-
-    with pytest.raises(ValueError, match="fd_rule_stream"):
-        implication_rules_stream(
-            sdf, "s1", [{"check_id": "x", "kind": "fd"}])
 
 
 def test_implication_zero_shuffle_plan(spark):

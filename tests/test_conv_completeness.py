@@ -59,7 +59,7 @@ def test_check_shape_and_pipeline_optin(spark, catalog):
     from schema_inference_spark.pipeline import validate
 
     res = validate(spark, catalog, "s1", completeness=True,
-                   resume=False, write_audit=False)
+                   resume=False, write_audit=False, clustered_checks=False)
     rows = (res.violations
             .filter("check_id in ('conv_gap', 'conv_head_truncated')")
             .collect())
@@ -71,13 +71,13 @@ def test_check_shape_and_pipeline_optin(spark, catalog):
     assert json.loads(g.payload)["n_missing"] == 1
     assert all(r.check_id == "conv_gap" for r in rows)
 
-    res_sep = validate(spark, catalog, "s1", completeness=True,
+    res_clu = validate(spark, catalog, "s1", completeness=True,
                        resume=False, write_audit=False,
-                       fused_checks=False)
-    sep = {tuple(r) for r in res_sep.violations
+                       clustered_checks=True)
+    clu = {tuple(r) for r in res_clu.violations
            .filter("check_id in ('conv_gap', 'conv_head_truncated')")
            .collect()}
-    assert sep == {tuple(r) for r in rows}
+    assert clu == {tuple(r) for r in rows}
 
 
 # property: conv_completeness agrees with a pure-Python model on

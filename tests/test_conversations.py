@@ -220,46 +220,6 @@ def test_conv_query_matches_oracle(spark, sf_dir, name):
         f"{name}: value mismatch"
 
 
-def test_asof_stream_matches_batch(spark, quotes, tmp_path):
-    """asof_stream: per-epoch enrichment equals the batch asof_join on
-    the same probe rows."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from schema_inference_spark.streaming.stream_checks import asof_stream
-
-    stream_dir = tmp_path / "asof_stream"
-    stream_dir.mkdir()
-    probe_rows = [(1, _ts("2026-01-01T00:00:15"), "p1"),
-                  (1, _ts("2026-01-01T00:00:45"), "p2"),
-                  (2, _ts("2026-01-01T00:02:00"), "p3")]
-    pq.write_table(pa.table({
-        "k": pa.array([r[0] for r in probe_rows], pa.int32()),
-        "ts": pa.array([r[1] for r in probe_rows], pa.timestamp("us")),
-        "pid": pa.array([r[2] for r in probe_rows], pa.string()),
-    }), str(stream_dir / "f1.parquet"))
-
-    batch_probe = spark.createDataFrame(
-        probe_rows, "k int, ts timestamp, pid string")
-    from schema_inference_spark.operators.temporal import asof_join
-    want = {tuple(r) for r in
-            asof_join(batch_probe, quotes, on=["k"],
-                      value_cols=["v"]).collect()}
-
-    got = []
-    sdf = (spark.readStream.schema("k int, ts timestamp, pid string")
-           .parquet(str(stream_dir)))
-    writer = asof_stream(
-        sdf, quotes,
-        emit=lambda df, _eid: got.extend(tuple(r) for r in df.collect()),
-        on=["k"], value_cols=["v"])
-    q = (writer.option("checkpointLocation", str(tmp_path / "ckpt_asof"))
-         .start())
-    q.processAllAvailable()
-    q.stop()
-    assert set(got) == want and len(got) == len(want)
-
-
 # ---------------------------------------------------------------------------
 # interval (range) join — binned encoding
 # ---------------------------------------------------------------------------

@@ -157,68 +157,6 @@ def test_curation_summary_incremental_against_index(spark):
         + r.n_repetitive + r.n_kept
 
 
-def test_curation_stream_matches_per_batch_cascade(spark, tmp_path):
-    """curation_stream emits per-epoch exactly what the batch
-    incremental cascade computes on that micro-batch against the same
-    static index."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from schema_inference_spark.operators.curation import (
-        curation_summary_incremental,
-    )
-    from schema_inference_spark.operators.dedup import build_hash_index
-    from schema_inference_spark.streaming.stream_checks import (
-        curation_stream,
-    )
-
-    good = ("the quick brown fox jumps over a lazy dog and the old "
-            "sailor walks to the harbor in the morning light while it "
-            "rains softly on green hills and tall trees of the northern "
-            "valley where children play games near a quiet river")
-    hist = spark.createDataFrame([(1, "s1", good)],
-                                 "doc_id bigint, source string, text string")
-    index = build_hash_index(hist)
-
-    part0 = [(10, "s1", good), (11, "s1", "el la de que y en un es")]
-    part1 = [(20, "s2", good + " and then some more new words arrive"),
-             (21, "s2", "the " * 40)]
-    stream_dir = tmp_path / "cur_stream"
-    stream_dir.mkdir()
-    for age, (name, rows) in enumerate(
-            (("part-0.parquet", part0), ("part-1.parquet", part1))):
-        pq.write_table(pa.table({
-            "doc_id": pa.array([i for i, _, _ in rows], pa.int64()),
-            "source": pa.array([s for _, s, _ in rows], pa.string()),
-            "text": pa.array([t for _, _, t in rows], pa.string()),
-        }), str(stream_dir / name))
-        os.utime(str(stream_dir / name), (1_000_000 + age,) * 2)
-
-    sdf = (spark.readStream.schema("doc_id bigint, source string, text string")
-           .option("maxFilesPerTrigger", "1")
-           .parquet(str(stream_dir)))
-    got = {}
-
-    def emit(summary, epoch_id):
-        got[epoch_id] = {tuple(r) for r in summary.collect()}
-
-    q = (curation_stream(sdf, index, emit)
-         .option("checkpointLocation", str(tmp_path / "ckpt_cur"))
-         .start())
-    q.processAllAvailable()
-    q.stop()
-
-    assert len(got) == 2
-    for epoch, rows in enumerate((part0, part1)):
-        batch = spark.createDataFrame(
-            rows, "doc_id bigint, source string, text string")
-        want = {tuple(r) for r in
-                curation_summary_incremental(batch, index).collect()}
-        assert got[epoch] == want, epoch
-
-
 def test_packing_plan_boundaries(spark):
     """Concat-and-cut semantics: offsets tile the token stream with no
     gaps or overlaps in id order; a document straddling a pack boundary

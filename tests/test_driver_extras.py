@@ -584,8 +584,7 @@ def test_minhash_index_params_guard(spark):
     )
     with _pytest.raises(ValueError, match="signature table"):
         update_minhash_sigs(sigs, new, k=5).count()
-    # probing from precomputed signatures with an EXPLICIT k (the
-    # streaming probe's form) trips the shingle-width comparison that
+    # probing from precomputed signatures with an EXPLICIT k trips the shingle-width comparison that
     # k=None would skip
     with _pytest.raises(ValueError, match="MinHash index"):
         near_dup_candidates_from_sigs(

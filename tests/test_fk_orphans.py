@@ -93,46 +93,3 @@ def test_bloom_plan_never_shuffles_a_join_side(spark, sf_dir):
         assert plan.count("BroadcastHashJoin") == 2, plan
     finally:
         spark.catalog.clearCache()  # drop the operator's per_key persist
-
-
-def test_fk_orphans_stream_matches_batch(spark, tmp_path):
-    """fk_orphans_stream is the stream-static anti-join form: streaming
-    the files in micro-batches emits exactly the batch orphan ROWS once
-    each (append mode); per-key totals rebuilt from the stream output
-    equal the batch operator's counts."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from schema_inference_spark.streaming.stream_checks import (
-        fk_orphans_stream,
-    )
-
-    stream_dir = tmp_path / "fk_stream"
-    stream_dir.mkdir()
-    rows = [(0, 10), (1, 11), (2, 99), (3, 99), (4, 12), (5, 77)]
-    for i, chunk in enumerate((rows[:3], rows[3:])):
-        t = pa.table({
-            "row_id": pa.array([r[0] for r in chunk], pa.int64()),
-            "k": pa.array([r[1] for r in chunk], pa.int64()),
-        })
-        pq.write_table(t, str(stream_dir / f"part-{i}.parquet"))
-    dim = spark.createDataFrame([(10,), (11,), (12,)], "dk bigint")
-
-    sdf = (spark.readStream.schema("row_id bigint, k bigint")
-           .option("maxFilesPerTrigger", "1").parquet(str(stream_dir)))
-    got = []
-    q = (fk_orphans_stream(sdf, dim, "k", "dk")
-         .writeStream.outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt_fk"))
-         .foreachBatch(lambda df, _eid: got.extend(df.collect()))
-         .start())
-    q.processAllAvailable()
-    q.stop()
-
-    assert sorted((r.row_id, r.k) for r in got) == [(2, 99), (3, 99), (5, 77)]
-    # per-key totals from the stream rows == the batch operator's counts
-    batch = spark.createDataFrame([(k,) for _, k in rows], "k bigint")
-    want = {r.k: r.n_orphan_rows
-            for r in fk_orphans(batch, dim, "k", "dk").collect()}
-    from collections import Counter
-    assert dict(Counter(r.k for r in got)) == want == {99: 2, 77: 1}

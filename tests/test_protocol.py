@@ -1,11 +1,8 @@
 """Conversation-protocol check (role-transition matrix): batch operator,
-pipeline opt-in, and streaming twin convergence."""
+pipeline opt-in on both check paths, and structure drift."""
 
 import datetime as dt
 import json
-import os
-
-import pytest
 
 from schema_inference_spark.operators import checks as C
 from schema_inference_spark.pipeline import ROLE_VOCAB, validate
@@ -46,17 +43,20 @@ def test_check_role_protocol_shape(spark):
 
 def test_pipeline_protocol_optin_paths_agree(spark, catalog):
     res_fused = validate(spark, catalog, "s1", role_protocol=ALLOWED,
-                         resume=False, write_audit=False)
+                         resume=False, write_audit=False,
+                         clustered_checks=False)
     fused = {tuple(r) for r in res_fused.violations
              .filter("check_id = 'role_protocol'").collect()}
-    res_sep = validate(spark, catalog, "s1", role_protocol=ALLOWED,
-                       resume=False, write_audit=False, fused_checks=False)
-    sep = {tuple(r) for r in res_sep.violations
+    res_clu = validate(spark, catalog, "s1", role_protocol=ALLOWED,
+                       resume=False, write_audit=False, clustered_checks=True)
+    clu = {tuple(r) for r in res_clu.violations
            .filter("check_id = 'role_protocol'").collect()}
+    assert (res_fused.check_path, res_clu.check_path) == ("fused",
+                                                          "clustered")
     direct = {tuple(r) for r in
               C.check_role_protocol(catalog.read_snapshot(spark, "s1"),
                                     "s1", ALLOWED).collect()}
-    assert fused == sep == direct
+    assert fused == clu == direct
     assert direct  # the matrix actually fires on the fixture
     # default (no protocol arg) emits no role_protocol rows
     res_off = validate(spark, catalog, "s1", resume=False,
@@ -64,40 +64,8 @@ def test_pipeline_protocol_optin_paths_agree(spark, catalog):
     assert res_off.violations.filter(
         "check_id = 'role_protocol'").count() == 0
     res_fused.violations.unpersist(blocking=False)
-    res_sep.violations.unpersist(blocking=False)
+    res_clu.violations.unpersist(blocking=False)
     res_off.violations.unpersist(blocking=False)
-
-
-def test_protocol_stream_converges_to_batch(spark, catalog, fixture_root,
-                                            tmp_path):
-    from schema_inference_spark.streaming.stream_checks import (
-        protocol_stream,
-        read_turn_stream,
-    )
-    batch = {tuple(r) for r in
-             C.check_role_protocol(catalog.read_snapshot(spark, "s1"),
-                                   "s1", ALLOWED).collect()}
-    sdf = read_turn_stream(spark, os.path.join(fixture_root, "s1"),
-                           max_files_per_trigger=2)
-    out = protocol_stream(sdf, "s1", ALLOWED)
-    latest = {}
-
-    def collect(df, _epoch):
-        for conv_id, rows in df.toPandas().groupby("conv_id"):
-            latest[conv_id] = {
-                tuple(None if v != v or v is None else v for v in r)
-                for r in rows.itertuples(index=False, name=None)}
-
-    q = (out.writeStream.outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt_proto"))
-         .foreachBatch(collect)
-         .start())
-    q.processAllAvailable()
-    q.stop()
-    got = set().union(*latest.values()) if latest else set()
-    got = {(s, int(p) if p is not None else None, c, m, s1, s2, cv,
-            int(t), pl) for (s, p, c, m, s1, s2, cv, t, pl) in got}
-    assert got == batch
 
 
 def test_transition_drift_violation_unit():

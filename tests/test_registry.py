@@ -6,7 +6,6 @@ import pytest
 from schema_inference_spark.plans.registry import (
     TRANSCRIPTS_CONTRACT,
     CheckRegistry,
-    default_registry,
 )
 
 
@@ -73,17 +72,6 @@ def test_conformance_gate():
     assert reg.conforms(unresolved, snapshot_id="s") == []
 
 
-def test_default_registry_runs(spark, catalog):
-    reg = default_registry()
-    df = catalog.read_snapshot(spark, "s1")
-    parts = reg.run(df, "s1")
-    assert len(parts) == 4
-    total = 0
-    for p in parts:
-        total += p.count()
-    assert total > 0  # planted anomalies surface through the registry too
-
-
 def test_validate_with_contract(spark, catalog):
     from schema_inference_spark.pipeline import validate
     from schema_inference_spark.plans.registry import TRANSCRIPTS_CONTRACT
@@ -124,20 +112,3 @@ def test_winnow_properties(spark):
     pairs = {(r.d1, r.d2): r.n_shared
              for r in winnow_similar_pairs(df, min_shared=1).collect()}
     assert (1, 3) in pairs and (1, 2) in pairs and (1, 4) not in pairs
-
-
-def test_bind_baseline_concretizes_unresolved_columns(spark, catalog):
-    """s3's all-NULL tool column (a scheme) binds to s1's inferred type —
-    the table-level concretize (ref: api.clj:10-15, README.md:114-127)."""
-    from schema_inference_spark.operators.infer import infer_snapshot
-    from schema_inference_spark.pipeline import bind_baseline
-    s1 = infer_snapshot(spark, catalog, "s1")
-    s3 = infer_snapshot(spark, catalog, "s3")
-    assert s3.table_schema["tool"]["type"] == "scheme"
-    bound = bind_baseline(s3.table_schema, s1.table_schema)
-    assert bound["tool"] == {"type": "maybe", "child": {"type": "string"}}
-    # resolved columns unchanged
-    assert bound["conv_id"] == s3.table_schema["conv_id"]
-    # a column with no baseline stays quantified
-    partial = bind_baseline(s3.table_schema, {})
-    assert partial["tool"]["type"] == "scheme"

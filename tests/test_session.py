@@ -3,9 +3,8 @@
 A spark-submit child (PYSPARK_GATEWAY_PORT set) must NOT have its
 submitted --master overridden by get_spark's local[cpus] fallback;
 a plain `python` launch must still get the local default; an explicit
-master argument always wins. Verified end-to-end against real
-spark-submit once per round (see BENCH/notes); unit-tested here so the
-decision logic can't regress silently.
+master argument always wins. Unit-tested here so the decision logic
+can't regress silently.
 """
 
 from schema_inference_spark.functions.session import _resolve_master

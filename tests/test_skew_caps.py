@@ -144,7 +144,7 @@ def test_winnow_fp_cap(spark):
 
 
 def test_near_dup_probe_plan_ships_no_signature_arrays(spark):
-    """The incremental near-dup probe's 100-TB shape (BENCH/PLANS.md):
+    """The incremental near-dup probe's 100-TB shape (`git show 3abe443:BENCH/PLANS.md`):
     no exchange may carry a `minhash` array — the bucket join ships
     3-column band rows, pairs dedupe as scalars, and the signatures
     join in via broadcast only. Regression-guards the two-table index

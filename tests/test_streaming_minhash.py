@@ -1,20 +1,9 @@
-"""Streaming incremental MinHash: the pure-Python XXH64 must equal the
-JVM's xxhash64 bit-for-bit, the streamed signature fold must equal the
-batch minhash_signature over the assembled conversation byte-for-byte
-(including out-of-order arrival, boundary-crossing shingles, short /
-empty / NULL turns), and the near-dup probe composition must reproduce
-the batch near_dup_against_index rows."""
-
-import datetime
-import time
+"""The pure-Python XXH64 port (schema_inference_spark/xxh64.py) must
+equal the JVM's xxhash64 bit-for-bit, and its vectorized int step must
+equal the scalar chain."""
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
-
-BASE = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
 
 
 def test_xxh64_matches_spark_bit_for_bit(spark):
@@ -43,207 +32,3 @@ def test_xxh64_matches_spark_bit_for_bit(spark):
     vec = hash_int32_vec(np.arange(64), seed)
     assert vec.tolist() == [spark_xxhash64_str_int("hello world", i)
                             for i in range(64)]
-
-
-def _write_turn_file(path, rows):
-    pq.write_table(pa.table({
-        "conv_id": pa.array([r[0] for r in rows], pa.string()),
-        "turn_idx": pa.array([r[1] for r in rows], pa.int32()),
-        "role": pa.array(["user"] * len(rows), pa.string()),
-        "text": pa.array([r[2] for r in rows], pa.string()),
-        "tool": pa.array([None] * len(rows), pa.string()),
-        "ts": pa.array([BASE + datetime.timedelta(minutes=r[1])
-                        for r in rows], pa.timestamp("us", tz="UTC")),
-    }), str(path))
-
-
-def _batch_sigs(spark, rows):
-    """The batch twin: assemble each conversation's turns in (ts,
-    turn_idx) order, join by spaces, minhash_signature over the
-    assembled text."""
-    from schema_inference_spark.operators import dedup as D
-    bdf = spark.createDataFrame(
-        [(c, i, t, BASE + datetime.timedelta(minutes=i))
-         for (c, i, t) in rows],
-        "conv_id string, turn_idx int, text string, ts timestamp")
-    assembled = (bdf.groupBy(F.col("conv_id").alias("doc_id"))
-                 .agg(F.array_join(F.transform(F.array_sort(
-                     F.collect_list(F.struct(
-                         "ts", "turn_idx", F.col("text").alias("v")))),
-                     lambda x: x["v"]), " ").alias("text")))
-    return {r["doc_id"]: r["minhash"]
-            for r in D.minhash_signature(assembled).collect()}
-
-
-def _run_sig_stream(spark, tmp_path, files, **kw):
-    from schema_inference_spark.streaming.stream_checks import (
-        minhash_sig_stream,
-        read_turn_stream,
-    )
-    stream_dir = tmp_path / "mh_stream"
-    (stream_dir / "bucket=0").mkdir(parents=True)
-    for i, rows in enumerate(files):
-        _write_turn_file(stream_dir / "bucket=0" / f"f{i}.parquet", rows)
-    sdf = read_turn_stream(spark, str(stream_dir),
-                           max_files_per_trigger=1)
-    got = {}
-    sigs = minhash_sig_stream(sdf, idle_ms=400, **kw)
-
-    def emit(df, _epoch):
-        for r in df.collect():
-            got.setdefault(r["conv_id"], r["minhash"])
-
-    q = (sigs.writeStream.outputMode("update").foreachBatch(emit)
-         .option("checkpointLocation", str(tmp_path / "ckpt_mh"))
-         .start())
-    return q, got
-
-
-def test_minhash_sig_stream_converges_to_batch(spark, tmp_path):
-    # conversation A: long turns (interior fold) + boundary-crossing
-    # shingles between them, arriving OUT OF ORDER across micro-batches
-    # (file 0 carries the LATER turn); B: run of 1-word turns a single
-    # shingle spans entirely, plus an empty and a NULL turn; C: fewer
-    # than k tokens total -> NO signature row on either engine. Messy
-    # whitespace + case exercise the normalization mirror.
-    a0 = "The quick  Brown fox jumps over the lazy dog today"
-    a1 = "pack my\tbox with five dozen liquor jugs now then"
-    file0 = [("A", 1, a1), ("B", 0, "alpha"), ("B", 1, ""),
-             ("C", 0, "just two")]
-    file1 = [("A", 0, a0), ("B", 2, "beta"), ("B", 3, None),
-             ("B", 4, "gamma delta")]
-    q, got = _run_sig_stream(spark, tmp_path, [file0, file1])
-    try:
-        deadline = time.monotonic() + 90
-        while time.monotonic() < deadline and len(got) < 2:
-            time.sleep(0.2)
-    finally:
-        q.stop()
-    want = _batch_sigs(spark, file0 + file1)
-    assert "C" not in want          # sub-k conversation: batch has none
-    assert set(got) == {"A", "B"}   # ...and the stream emitted none
-    assert list(got["A"]) == list(want["A"])
-    assert list(got["B"]) == list(want["B"])
-
-
-def test_conv_near_dup_stream_probes_index(spark, tmp_path):
-    from schema_inference_spark.operators import dedup as D
-    from schema_inference_spark.streaming.stream_checks import (
-        conv_near_dup_stream,
-        read_turn_stream,
-    )
-    # indexed history: conversation H with 30 one-word turns; the
-    # streamed conversation N shares all 30 and adds a 3-turn tail
-    # (near-dup); conversation Z is disjoint vocabulary
-    hist_rows = [("H", i, f"tok{i}") for i in range(30)]
-    n_rows = ([("N", i, f"tok{i}") for i in range(30)]
-              + [("N", 30 + j, f"tail{j}") for j in range(3)])
-    z_rows = [("Z", i, f"other{i}") for i in range(30)]
-
-    hdf = spark.createDataFrame(
-        [(c, i, t, BASE + datetime.timedelta(minutes=i))
-         for (c, i, t) in hist_rows],
-        "conv_id string, turn_idx int, text string, ts timestamp")
-    assembled = (hdf.groupBy(F.col("conv_id").alias("doc_id"))
-                 .agg(F.array_join(F.transform(F.array_sort(
-                     F.collect_list(F.struct(
-                         "ts", "turn_idx", F.col("text").alias("v")))),
-                     lambda x: x["v"]), " ").alias("text")))
-    index = D.build_minhash_index(assembled).cache()
-    index_sigs = D.build_minhash_sigs(assembled).cache()
-    index.count(), index_sigs.count()
-
-    stream_dir = tmp_path / "nd_stream"
-    (stream_dir / "bucket=0").mkdir(parents=True)
-    _write_turn_file(stream_dir / "bucket=0" / "f0.parquet",
-                     n_rows + z_rows)
-    got = []
-
-    def emit(df, _epoch):
-        got.extend(tuple(r) for r in df.collect())
-
-    sdf = read_turn_stream(spark, str(stream_dir))
-    q = (conv_near_dup_stream(sdf, index, index_sigs, emit, idle_ms=400)
-         .option("checkpointLocation", str(tmp_path / "ckpt_nd"))
-         .start())
-    try:
-        deadline = time.monotonic() + 90
-        while time.monotonic() < deadline and not got:
-            time.sleep(0.2)
-        time.sleep(1.0)  # let a trailing empty batch flush Z's absence
-    finally:
-        q.stop()
-
-    assert [(r[0], r[1]) for r in got] == [("N", "H")]
-    assert got[0][2] >= 0.5
-    # row-for-row the batch probe over the same assembled conversations
-    sdf_b = spark.createDataFrame(
-        [(c, i, t, BASE + datetime.timedelta(minutes=i))
-         for (c, i, t) in n_rows + z_rows],
-        "conv_id string, turn_idx int, text string, ts timestamp")
-    new_assembled = (sdf_b.groupBy(F.col("conv_id").alias("doc_id"))
-                     .agg(F.array_join(F.transform(F.array_sort(
-                         F.collect_list(F.struct(
-                             "ts", "turn_idx", F.col("text").alias("v")))),
-                         lambda x: x["v"]), " ").alias("text")))
-    want = [(r["doc_id"], r["index_id"], r["est_jaccard"])
-            for r in D.near_dup_against_index(new_assembled, index,
-                                              index_sigs).collect()]
-    assert got == want
-
-
-def test_minhash_sig_stream_tied_turns_and_unicode_whitespace(spark,
-                                                              tmp_path):
-    """Two batch-parity edges: (a) turns TIED on (ts, turn_idx) — the
-    F1 duplicate-key anomaly — order by their text on both engines
-    (the stream ties on the stored normalized head, which agrees with
-    the batch's raw-text tiebreak whenever the heads differ); (b) a
-    Unicode space (\\xa0) stays INSIDE its token exactly as the batch
-    fold keeps it — Java's \\s is ASCII-only, so a str.split()-style
-    tokenizer would shingle differently and diverge."""
-    # D: duplicate (conv_id, turn_idx=1) rows, same ts, different texts
-    # arriving in the order OPPOSITE to their sort order
-    d_hi = "zebra yak xray wolf vulture unicorn"
-    d_lo = "apple banana cherry date elderberry fig"
-    # U: non-breaking space inside a token; ASCII tab between others
-    u0 = "foo\xa0bar baz qux quux corge"
-    u1 = "grault\tgarply waldo fred plugh xyzzy"
-    file0 = [("D", 0, "opening words here"), ("D", 1, d_hi),
-             ("U", 0, u0)]
-    file1 = [("D", 1, d_lo), ("D", 2, "closing words there"),
-             ("U", 1, u1)]
-    q, got = _run_sig_stream(spark, tmp_path, [file0, file1])
-    try:
-        deadline = time.monotonic() + 90
-        while time.monotonic() < deadline and len(got) < 2:
-            time.sleep(0.2)
-    finally:
-        q.stop()
-    want = _batch_sigs(spark, file0 + file1)
-    assert set(got) == {"D", "U"}
-    assert list(got["D"]) == list(want["D"])
-    assert list(got["U"]) == list(want["U"])
-
-
-def test_minhash_sig_stream_max_turns_prefix_parity(spark, tmp_path):
-    """The whale guard's streaming face: with max_turns=N the stream
-    emits the PREFIX signature, byte-identical to the batch fold over
-    turn_idx < N; beyond-cap turns never enter state or the fold, and
-    a conversation arriving entirely beyond the cap emits nothing."""
-    a = [("A", i, f"alpha beta tok{i} gamma delta common") for i in
-         range(6)]
-    z = [("Z", i, f"only beyond cap words here piece{i}") for i in
-         range(3, 6)]  # every turn >= cap
-    file0, file1 = a[:3] + z[:1], a[3:] + z[1:]
-    q, got = _run_sig_stream(spark, tmp_path, [file0, file1],
-                             max_turns=3)
-    try:
-        deadline = time.monotonic() + 90
-        while time.monotonic() < deadline and len(got) < 1:
-            time.sleep(0.2)
-        time.sleep(1.0)  # give Z's (empty) close a chance to fire
-    finally:
-        q.stop()
-    want = _batch_sigs(spark, [r for r in a if r[1] < 3])
-    assert set(got) == {"A"}          # Z emitted nothing
-    assert list(got["A"]) == list(want["A"])

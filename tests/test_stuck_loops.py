@@ -86,7 +86,7 @@ def test_pipeline_optin_both_paths(spark, tmp_path):
     cat = SnapshotCatalog(root)
 
     res = validate(spark, cat, "sL", stuck_loops=True,
-                   resume=False, write_audit=False)
+                   resume=False, write_audit=False, clustered_checks=False)
     got = res.violations.filter("check_id = 'stuck_loop'").collect()
     assert len(got) == 1 and got[0].conv_id == "stuck01"
     assert json.loads(got[0].payload)["run_len"] == 4
@@ -95,12 +95,12 @@ def test_pipeline_optin_both_paths(spark, tmp_path):
     assert res_off.violations.filter(
         "check_id = 'stuck_loop'").count() == 0
 
-    res_sep = validate(spark, cat, "sL", stuck_loops=True,
+    res_clu = validate(spark, cat, "sL", stuck_loops=True,
                        resume=False, write_audit=False,
-                       fused_checks=False)
-    sep = {tuple(r) for r in res_sep.violations
+                       clustered_checks=True)
+    clu = {tuple(r) for r in res_clu.violations
            .filter("check_id = 'stuck_loop'").collect()}
-    assert sep == {tuple(r) for r in got}
+    assert clu == {tuple(r) for r in got}
 
 
 def test_context_budget_optin_both_paths(spark, catalog):
@@ -110,19 +110,19 @@ def test_context_budget_optin_both_paths(spark, catalog):
     from schema_inference_spark.pipeline import validate
 
     res = validate(spark, catalog, "s1", context_budget=2000,
-                   resume=False, write_audit=False)
+                   resume=False, write_audit=False, clustered_checks=False)
     rows = res.violations.filter("check_id = 'context_overflow'").collect()
     assert rows, "fixture conversations must exceed a 2000-char budget"
     p = json.loads(rows[0].payload)
     assert p["total_cost"] > 2000 and p["budget"] == 2000
     assert p["first_over_idx"] >= 1 and rows[0].turn_idx == p["first_over_idx"]
 
-    res_sep = validate(spark, catalog, "s1", context_budget=2000,
+    res_clu = validate(spark, catalog, "s1", context_budget=2000,
                        resume=False, write_audit=False,
-                       fused_checks=False)
-    sep = {tuple(r) for r in res_sep.violations
+                       clustered_checks=True)
+    clu = {tuple(r) for r in res_clu.violations
            .filter("check_id = 'context_overflow'").collect()}
-    assert sep == {tuple(r) for r in rows}
+    assert clu == {tuple(r) for r in rows}
 
     res_big = validate(spark, catalog, "s1", context_budget=10**9,
                        resume=False, write_audit=False)
@@ -145,7 +145,8 @@ def test_all_optins_compose(spark, catalog):
                   completeness=True, stuck_loops=True,
                   context_budget=2000)
 
-    both = validate(spark, catalog, "s1", **combos, **kw)
+    both = validate(spark, catalog, "s1", **combos, **kw,
+                    clustered_checks=False)
     got = {tuple(r) for r in both.violations.collect()}
 
     want = set()
@@ -160,7 +161,7 @@ def test_all_optins_compose(spark, catalog):
     assert got == want
     assert len(got) > len(base)   # the opt-ins really added rows
 
-    sep = {tuple(r) for r in
+    clu = {tuple(r) for r in
            validate(spark, catalog, "s1", **combos, **kw,
-                    fused_checks=False).violations.collect()}
-    assert sep == got
+                    clustered_checks=True).violations.collect()}
+    assert clu == got

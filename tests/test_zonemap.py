@@ -2,7 +2,8 @@
 never depend on the stats (the residual predicate is always applied);
 the keep-rule must be conservative for statless footers; all-null and
 disjoint files must actually be skipped. The driver query's oracle gate
-(zonemap_scan vs the full-scan SQL) runs in BENCH/preflight.py."""
+(zonemap_scan vs the full-scan SQL) ran in `git show
+3abe443:BENCH/preflight.py`."""
 
 import datetime as dt
 
