@@ -575,25 +575,15 @@ def fk_orphans_bloom(fact: DataFrame, dim: DataFrame, fact_key: str,
 _PACK = "100000000000000000000"     # 10^20 block multiplier
 _BIAS_T = "1099511627776"           # 2^40 turn_idx bias
 _BIAS_M = "9223372036854775808"     # 2^63 unix_micros bias
+_PACK_TURN_TS = (f"(cast(turn_idx as decimal(38,0)) + {_BIAS_T})"
+                 f" * cast('{_PACK}' as decimal(38,0))"
+                 f" + (cast(unix_micros(ts) as decimal(38,0)) + {_BIAS_M})")
+_UNPACK_TURN = (f"cast(cast(_o / cast('{_PACK}' as decimal(38,0))"
+                f" as decimal(38,0)) - cast({_BIAS_T} as decimal(38,0))"
+                f" as bigint)")
+_UNPACK_TS = (f"timestamp_micros(cast((_o % cast('{_PACK}' as decimal(38,0)))"
+              f" - cast({_BIAS_M} as decimal(38,0)) as bigint))")
 
-
-def _pack_turn_ts():
-    return F.expr(
-        f"(cast(turn_idx as decimal(38,0)) + {_BIAS_T})"
-        f" * cast('{_PACK}' as decimal(38,0))"
-        f" + (cast(unix_micros(ts) as decimal(38,0)) + {_BIAS_M})")
-
-
-def _unpack_turn(col):
-    return ((col / F.expr(f"cast('{_PACK}' as decimal(38,0))"))
-            .cast("decimal(38,0)") - F.expr(f"cast({_BIAS_T} as decimal(38,0))")
-            ).cast("long")
-
-
-def _unpack_ts(col):
-    return F.timestamp_micros(
-        ((col % F.expr(f"cast('{_PACK}' as decimal(38,0))"))
-         - F.expr(f"cast({_BIAS_M} as decimal(38,0))")).cast("long"))
 
 def check_ordering(df: DataFrame, snapshot_id: str,
                    partition_col: str = "bucket") -> DataFrame:
@@ -665,21 +655,21 @@ def check_ordering_blocked(df: DataFrame, snapshot_id: str,
             .withColumn("_blk", F.floor(F.col("turn_idx") / block_size)))
 
     # last row of each (conv, block) by (turn_idx, ts): max of the packed
-    # decimal key (see _pack_turn_ts — hash-aggregable, unlike a struct
+    # decimal key (see _PACK_TURN_TS — hash-aggregable, unlike a struct
     # max). The carrier goes to the next NON-EMPTY block (a gap can span
     # whole blocks), found with a lead() over the per-conv block list —
     # rows there = #blocks per conv, so that window is tiny and skew-free
     # by construction. The carrier's partition id is never emitted
     # (carriers are filtered before violation shaping), so it carries 0.
     blk_last = (base.groupBy("conv_id", "_blk")
-                .agg(F.max(_pack_turn_ts()).alias("_o")))
+                .agg(F.max(F.expr(_PACK_TURN_TS)).alias("_o")))
     wb = Window.partitionBy("conv_id").orderBy("_blk")
     last = (blk_last
             .withColumn("_next_blk", F.lead("_blk").over(wb))
             .filter(F.col("_next_blk").isNotNull())
             .select("conv_id", F.col("_next_blk").alias("_blk"),
-                    _unpack_turn(F.col("_o")).alias("turn_idx"),
-                    _unpack_ts(F.col("_o")).alias("ts"),
+                    F.expr(_UNPACK_TURN).alias("turn_idx"),
+                    F.expr(_UNPACK_TS).alias("ts"),
                     F.lit(0).alias(partition_col),
                     F.lit(True).alias("_carrier")))
 
@@ -765,6 +755,103 @@ def check_role_protocol(df: DataFrame, snapshot_id: str,
 # Fused row-level checks: D10 + D11 (x2) + D12 in ONE scan, ONE shuffle
 # ---------------------------------------------------------------------------
 
+# the fused statement's per-row violation struct
+_VSTRUCT = ("struct<check_id:string,mgu_failure:string,schema_1:string,"
+            "schema_2:string,payload:string,partition_id:int>")
+
+
+def _vrow(check_id: str, payload: str, pid: str = "_pid",
+          mgu: str = "cast(null as string)", s1: str = "cast(null as string)",
+          s2: str = "cast(null as string)") -> str:
+    return (f"named_struct('check_id', '{check_id}', 'mgu_failure', {mgu}, "
+            f"'schema_1', {s1}, 'schema_2', {s2}, 'payload', {payload}, "
+            f"'partition_id', cast({pid} as int))")
+
+
+def _vocab_row(bad: str, col: str, check_id: str, enum: str) -> str:
+    return (f"CASE WHEN {bad} THEN " + _vrow(
+        check_id, f"to_json(named_struct('value', {col}))",
+        "IDENTIFIER(:pcol)", "'non_equal'",
+        f"to_json(named_struct('type', 'enum', 'values', array({col})))",
+        f":{enum}") + " END")
+
+
+# Only constants of this module enter the text; every value that comes
+# from a caller (vocabularies, their enum JSON, the snapshot id, the
+# partition column, the block size) binds as a named parameter.
+_FUSED_SQL = f"""
+WITH base AS (
+  SELECT IDENTIFIER(:pcol) AS _pid, conv_id, turn_idx, ts,
+    filter(array(
+      {_vocab_row("role IS NULL OR NOT array_contains(:roles, role)",
+                  "role", "ref_role", "role_enum")},
+      {_vocab_row("tool IS NOT NULL AND NOT array_contains(:tools, tool)",
+                  "tool", "ref_tool", "tool_enum")}),
+      x -> x IS NOT NULL) AS _vv,
+    floor(turn_idx / :block_size) AS _blk
+  FROM {{snap}}
+),
+blk_last AS (
+  SELECT conv_id, _blk, max({_PACK_TURN_TS}) AS _o
+  FROM base GROUP BY conv_id, _blk
+),
+carriers AS (
+  SELECT 0 AS _pid, conv_id, {_UNPACK_TURN} AS turn_idx, {_UNPACK_TS} AS ts,
+    cast(array() AS array<{_VSTRUCT}>) AS _vv, _next_blk AS _blk,
+    true AS _carrier
+  FROM (SELECT conv_id, _o,
+          lead(_blk) OVER (PARTITION BY conv_id ORDER BY _blk) AS _next_blk
+        FROM blk_last)
+  WHERE _next_blk IS NOT NULL
+),
+ordered AS (
+  SELECT *,
+    lag(turn_idx) OVER w AS _prev_idx,
+    lag(ts) OVER w AS _prev_ts,
+    lead(turn_idx) OVER w AS _next_idx
+  FROM (SELECT *, false AS _carrier FROM base
+        UNION ALL SELECT * FROM carriers)
+  WINDOW w AS (PARTITION BY conv_id, _blk ORDER BY turn_idx, ts)
+),
+exploded AS (
+  SELECT :snapshot_id AS snapshot_id, _v.partition_id, _v.check_id,
+    _v.mgu_failure, _v.schema_1, _v.schema_2,
+    cast(conv_id AS string) AS conv_id, cast(turn_idx AS bigint) AS turn_idx,
+    _v.payload
+  FROM (SELECT conv_id, turn_idx, explode(concat(_vv, filter(array(
+    CASE WHEN turn_idx = _prev_idx OR turn_idx = _next_idx
+      THEN {_vrow("unique_key", "cast(null as string)")} END,
+    CASE WHEN _prev_idx IS NOT NULL AND turn_idx > _prev_idx + 1
+      THEN {_vrow("turn_gap", "to_json(named_struct("
+                  "'prev_idx', cast(_prev_idx as bigint), 'missing', "
+                  "cast(turn_idx - _prev_idx - 1 as bigint)))")} END,
+    CASE WHEN _prev_idx IS NOT NULL AND turn_idx = _prev_idx
+      THEN {_vrow("turn_dup", "to_json(named_struct("
+                  "'prev_idx', cast(_prev_idx as bigint)))")} END,
+    CASE WHEN _prev_ts IS NOT NULL AND ts < _prev_ts
+      THEN {_vrow("ts_order", "to_json(named_struct("
+                  "'prev_ts', date_format(_prev_ts, :ts_format), "
+                  "'ts', date_format(ts, :ts_format)))")} END),
+    x -> x IS NOT NULL))) AS _v
+    FROM ordered WHERE NOT _carrier)
+)
+SELECT snapshot_id,
+  CASE WHEN check_id = 'unique_key' THEN _pmin ELSE partition_id END
+    AS partition_id,
+  check_id, mgu_failure, schema_1, schema_2, conv_id, turn_idx,
+  CASE WHEN check_id = 'unique_key'
+    THEN to_json(named_struct('n_copies', _n)) ELSE payload END AS payload
+FROM (
+  SELECT *,
+    count(1) OVER (PARTITION BY check_id, conv_id, turn_idx) AS _n,
+    min(partition_id) OVER (PARTITION BY check_id, conv_id, turn_idx) AS _pmin,
+    row_number() OVER (PARTITION BY check_id, conv_id, turn_idx
+                       ORDER BY partition_id) AS _rn
+  FROM exploded)
+WHERE check_id <> 'unique_key' OR _rn = 1
+"""
+
+
 def check_rowlevel_fused(df: DataFrame, snapshot_id: str,
                          role_vocab: List[str], tool_vocab: List[str],
                          partition_col: str = "bucket",
@@ -791,158 +878,31 @@ def check_rowlevel_fused(df: DataFrame, snapshot_id: str,
       post-explode window (partitioned by check_id, conv, turn — only
       violation rows, thousands not trillions) folds them into the
       single (n_copies, min-bucket) row the salted aggregate would
-      produce. (Standalone ``check_unique_key`` remains as the
-      aggregate form; note partial aggregation already bounds reducer
-      input for combinable aggs — see its docstring.)
-    - referential: vocab membership is a per-row predicate (the vocab is
-      a literal enum) — evaluated inline, same rows as the broadcast
-      anti-join.
+      produce.
+    - referential: vocab membership is a per-row predicate evaluated
+      MAP-SIDE; only the (sparse) pre-built violation structs travel
+      through the shuffle, not the role/tool strings of every row.
     - ordering: identical carrier-row construction as
-      ``check_ordering_blocked`` (gap spanning whole blocks included).
+      ``check_ordering_blocked`` (gap spanning whole blocks included):
+      each block's last row, found by a max over the packed decimal key
+      (``_PACK_TURN_TS``), is injected into the next non-empty block.
 
-    The only extra scan is the carrier aggregate (block boundaries).
-    A previous version also ran count/min/row_number windows keyed on
-    (conv, blk, turn_idx) — ~one group PER ROW, three extra sort+window
-    passes, 4x slower end-to-end at 9.5M turns.
+    The plan is ONE parameterized SQL statement (``_FUSED_SQL``): built
+    through the DataFrame API it took ~3,000 Py4J round trips per call,
+    as one ``spark.sql`` call the driver analyzes it in one. The input
+    frame binds as ``{snap}`` (a temp view that ``spark.sql`` drops before
+    returning) and every caller value as a named parameter.
     """
-    vj = lambda vocab: json.dumps({"type": "enum", "values": sorted(vocab)},  # noqa: E731
-                                  sort_keys=True, separators=(",", ":"))
+    def enum(vocab):
+        return json.dumps({"type": "enum", "values": sorted(vocab)},
+                          sort_keys=True, separators=(",", ":"))
 
-    def mk(check_id, mgu, s1, s2, payload, pid):
-        return F.struct(
-            F.lit(check_id).alias("check_id"),
-            F.lit(mgu).cast("string").alias("mgu_failure"),
-            (s1 if s1 is not None else F.lit(None)).cast("string").alias("schema_1"),
-            (s2 if s2 is not None else F.lit(None)).cast("string").alias("schema_2"),
-            payload.cast("string").alias("payload"),
-            pid.cast("int").alias("partition_id"))
-
-    enum1 = lambda c: F.to_json(F.struct(  # noqa: E731
-        F.lit("enum").alias("type"), F.array(F.col(c)).alias("values")))
-    pid = F.col(partition_col)
-
-    # vocab checks are per-row predicates over the scan — evaluate them
-    # MAP-SIDE and carry only the (sparse) pre-built violation structs
-    # through the shuffle, instead of shuffling the role/tool strings for
-    # every row into the sort. Clean rows carry an empty array (a null
-    # bit + offset in UnsafeRow), so the Exchange+Sort — the memory-
-    # bandwidth-bound stage that caps N->4N scaling here — moves ~40%
-    # fewer bytes per row.
-    role_cond = F.col("role").isNull() | ~F.col("role").isin(role_vocab)
-    tool_cond = F.col("tool").isNotNull() & ~F.col("tool").isin(tool_vocab)
-    vocab_arr = F.filter(F.array(
-        F.when(role_cond, mk(
-            "ref_role", "non_equal", enum1("role"), F.lit(vj(role_vocab)),
-            F.to_json(F.struct(F.col("role").alias("value"))), pid)),
-        F.when(tool_cond, mk(
-            "ref_tool", "non_equal", enum1("tool"), F.lit(vj(tool_vocab)),
-            F.to_json(F.struct(F.col("tool").alias("value"))), pid)),
-    ), lambda x: x.isNotNull())
-
-    base = (df.select(partition_col, "conv_id", "turn_idx", "ts",
-                      vocab_arr.alias("_vv"))
-            .withColumn("_blk", F.floor(F.col("turn_idx") / block_size)))
-    empty_vv = F.array().cast(base.schema["_vv"].dataType.simpleString())
-
-    # carrier rows: each block's last row injected into the next
-    # NON-EMPTY block (same construction as check_ordering_blocked,
-    # same packed-decimal hash aggregate — see _pack_turn_ts)
-    blk_last = (base.groupBy("conv_id", "_blk")
-                .agg(F.max(_pack_turn_ts()).alias("_o")))
-    wb = Window.partitionBy("conv_id").orderBy("_blk")
-    last = (blk_last
-            .withColumn("_next_blk", F.lead("_blk").over(wb))
-            .filter(F.col("_next_blk").isNotNull())
-            .select("conv_id", F.col("_next_blk").alias("_blk"),
-                    _unpack_turn(F.col("_o")).alias("turn_idx"),
-                    _unpack_ts(F.col("_o")).alias("ts"),
-                    F.lit(0).alias(partition_col),
-                    empty_vv.alias("_vv"),
-                    F.lit(True).alias("_carrier")))
-    unioned = base.withColumn("_carrier", F.lit(False)).unionByName(last)
-
-    w = Window.partitionBy("conv_id", "_blk").orderBy("turn_idx", "ts")
-    ordered = (unioned
-               .withColumn("_prev_idx", F.lag("turn_idx").over(w))
-               .withColumn("_prev_ts", F.lag("ts").over(w))
-               # lead: flags the FIRST member of a duplicate run (its lag
-               # is a different key). Carriers never share a key with real
-               # rows (a carrier's turn_idx comes from an EARLIER block),
-               # so no carrier guard is needed in the dup test.
-               .withColumn("_next_idx", F.lead("turn_idx").over(w))
-               .filter(~F.col("_carrier")))
-
-    uniq_cond = ((F.col("turn_idx") == F.col("_prev_idx"))
-                 | (F.col("turn_idx") == F.col("_next_idx")))
-    gap_cond = (F.col("_prev_idx").isNotNull()
-                & (F.col("turn_idx") > F.col("_prev_idx") + 1))
-    dup_cond = (F.col("_prev_idx").isNotNull()
-                & (F.col("turn_idx") == F.col("_prev_idx")))
-    ts_cond = (F.col("_prev_ts").isNotNull()
-               & (F.col("ts") < F.col("_prev_ts")))
-
-    arr = F.array(
-        F.when(uniq_cond, mk(
-            # raw per-member row; folded to one (n_copies, min-bucket)
-            # row by the post-explode window below
-            "unique_key", None, None, None,
-            F.lit(None).cast("string"), pid)),
-        F.when(gap_cond, mk(
-            "turn_gap", None, None, None,
-            F.to_json(F.struct(
-                F.col("_prev_idx").cast("bigint").alias("prev_idx"),
-                (F.col("turn_idx") - F.col("_prev_idx") - 1)
-                .cast("bigint").alias("missing"))), pid)),
-        F.when(dup_cond, mk(
-            "turn_dup", None, None, None,
-            F.to_json(F.struct(
-                F.col("_prev_idx").cast("bigint").alias("prev_idx"))), pid)),
-        F.when(ts_cond, mk(
-            "ts_order", None, None, None,
-            F.to_json(F.struct(
-                F.date_format("_prev_ts", "yyyy-MM-dd'T'HH:mm:ssXXX")
-                .alias("prev_ts"),
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ssXXX")
-                .alias("ts"))), pid)),
-    )
-
-    exploded = (ordered
-                .select("conv_id", "turn_idx",
-                        F.explode(F.concat(
-                            F.col("_vv"),
-                            F.filter(arr, lambda x: x.isNotNull()))).alias("_v"))
-                .select(F.lit(snapshot_id).alias("snapshot_id"),
-                        F.col("_v.partition_id").alias("partition_id"),
-                        F.col("_v.check_id").alias("check_id"),
-                        F.col("_v.mgu_failure").alias("mgu_failure"),
-                        F.col("_v.schema_1").alias("schema_1"),
-                        F.col("_v.schema_2").alias("schema_2"),
-                        F.col("conv_id").cast("string").alias("conv_id"),
-                        F.col("turn_idx").cast("bigint").alias("turn_idx"),
-                        F.col("_v.payload").alias("payload")))
-
-    # fold the per-member unique_key rows into one row per duplicated key
-    # (count = n_copies, min-bucket attribution — exactly the aggregate
-    # form's output). This window runs over VIOLATION rows only, which
-    # are sparse by assumption; every other check's rows pass through
-    # untouched (their duplicates are legitimate, e.g. two turn_dup rows
-    # for a triple-duplicated key).
-    is_uniq = F.col("check_id") == "unique_key"
-    wu = Window.partitionBy("check_id", "conv_id", "turn_idx")
-    return (exploded
-            .withColumn("_n", F.count(F.lit(1)).over(wu))
-            .withColumn("_pmin", F.min("partition_id").over(wu))
-            .withColumn("_rn", F.row_number().over(
-                wu.orderBy("partition_id")))
-            .filter(~is_uniq | (F.col("_rn") == 1))
-            .select("snapshot_id",
-                    F.when(is_uniq, F.col("_pmin"))
-                    .otherwise(F.col("partition_id")).alias("partition_id"),
-                    "check_id", "mgu_failure", "schema_1", "schema_2",
-                    "conv_id", "turn_idx",
-                    F.when(is_uniq, F.to_json(F.struct(
-                        F.col("_n").alias("n_copies"))))
-                    .otherwise(F.col("payload")).alias("payload")))
+    return df.sparkSession.sql(_FUSED_SQL, args={
+        "pcol": partition_col, "snapshot_id": snapshot_id,
+        "roles": list(role_vocab), "tools": list(tool_vocab),
+        "role_enum": enum(role_vocab), "tool_enum": enum(tool_vocab),
+        "block_size": block_size, "ts_format": "yyyy-MM-dd'T'HH:mm:ssXXX",
+    }, snap=df)
 
 
 # ---------------------------------------------------------------------------

@@ -13,13 +13,50 @@ from __future__ import annotations
 
 import json
 import math
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
-from .stats import kll_cdf, kll_quantiles
+from pyspark.sql import functions as F
+
+from ..functions.frames import local_frame
 
 DEFAULT_BINS = 10
 # conventional PSI thresholds: <0.1 stable, 0.1-0.25 moderate, >0.25 drifted
 PSI_THRESHOLD = 0.25
+
+
+def psi_ks_many(spark, pairs: Dict[str, Tuple[bytes, bytes]],
+                n_bins: int = DEFAULT_BINS) -> Dict[str, Dict[str, float]]:
+    """``psi_ks_from_sketches`` for every column of ``pairs`` ({column:
+    (baseline kll, current kll)}) in ONE projection, evaluated on the
+    driver without a job: the baseline's interior quantiles (the bin
+    edges) and both sketches' ranks there. The current sketches sit in a
+    one-row local frame, the baseline ones are literals (a rank query
+    takes only a constant quantile). Equal edges are deduped afterwards:
+    the rank at two equal edges is equal, so PSI and KS do not change."""
+    cols = sorted(pairs)
+    probs = F.array(*[F.lit(i / n_bins) for i in range(1, n_bins)])
+    sel = []
+    for i, c in enumerate(cols):
+        base = F.lit(bytearray(pairs[c][0]))
+        edges = F.kll_sketch_get_quantile_double(base, probs)
+        sel.append(F.struct(edges, F.kll_sketch_get_rank_double(base, edges),
+                            F.kll_sketch_get_rank_double(f"c{i}", edges)))
+    row = local_frame(spark, [tuple(bytes(pairs[c][1]) for c in cols)],
+                      ", ".join(f"c{i} binary" for i in range(len(cols)))
+                      ).select(*sel).first() if cols else []
+    out = {}
+    for c, (edges, base_rank, cur_rank) in zip(cols, row):
+        keep = [j for j, e in enumerate(edges) if j == 0 or e > max(edges[:j])]
+        base_cdf = [0.0] + [base_rank[j] for j in keep] + [1.0]
+        cur_cdf = [0.0] + [cur_rank[j] for j in keep] + [1.0]
+        eps, psi, ks = 1e-6, 0.0, 0.0
+        for i in range(1, len(base_cdf)):
+            p = max(base_cdf[i] - base_cdf[i - 1], eps)   # baseline bin mass
+            q = max(cur_cdf[i] - cur_cdf[i - 1], eps)     # current bin mass
+            psi += (q - p) * math.log(q / p)
+            ks = max(ks, abs(base_cdf[i] - cur_cdf[i]))
+        out[c] = {"psi": psi, "ks": ks, "n_bins": len(keep) + 1}
+    return out
 
 
 def psi_ks_from_sketches(spark, baseline_kll: bytes, current_kll: bytes,
@@ -28,28 +65,7 @@ def psi_ks_from_sketches(spark, baseline_kll: bytes, current_kll: bytes,
     KLL quantile sketches. Edges = baseline deciles (interior), so the
     baseline bin mass is ~uniform and PSI is well-conditioned.
     """
-    probs = [i / n_bins for i in range(1, n_bins)]
-    edges = kll_quantiles(spark, baseline_kll, probs)
-    # dedupe degenerate edges (constant-ish columns)
-    uniq: List[float] = []
-    for e in edges:
-        if not uniq or e > uniq[-1]:
-            uniq.append(e)
-    if not uniq:
-        return {"psi": 0.0, "ks": 0.0, "n_bins": 1}
-
-    base_cdf = [0.0] + kll_cdf(spark, baseline_kll, uniq) + [1.0]
-    cur_cdf = [0.0] + kll_cdf(spark, current_kll, uniq) + [1.0]
-
-    eps = 1e-6
-    psi = 0.0
-    ks = 0.0
-    for i in range(1, len(base_cdf)):
-        p = max(base_cdf[i] - base_cdf[i - 1], eps)   # baseline bin mass
-        q = max(cur_cdf[i] - cur_cdf[i - 1], eps)     # current bin mass
-        psi += (q - p) * math.log(q / p)
-        ks = max(ks, abs(base_cdf[i] - cur_cdf[i]))
-    return {"psi": psi, "ks": ks, "n_bins": len(uniq) + 1}
+    return psi_ks_many(spark, {"": (baseline_kll, current_kll)}, n_bins)[""]
 
 
 def drift_violations(spark, snapshot_id: str,
@@ -59,17 +75,22 @@ def drift_violations(spark, snapshot_id: str,
                      n_bins: int = DEFAULT_BINS) -> List[Dict]:
     """Compare every column present in both sketch registries; emit a
     drift_psi violation row (F5 shape) where PSI exceeds the threshold."""
+    pairs = {c: (baseline_stats[c], current_stats[c])
+             for c in set(baseline_stats) & set(current_stats)
+             if None not in (baseline_stats[c], current_stats[c])}
+    try:
+        metrics = psi_ks_many(spark, pairs, n_bins)
+    except Exception:
+        # an invalid/empty sketch fails the whole projection: compare
+        # column by column and skip the incomparable ones (not a drift)
+        metrics = {}
+        for col, pair in pairs.items():
+            try:
+                metrics.update(psi_ks_many(spark, {col: pair}, n_bins))
+            except Exception:
+                continue
     out: List[Dict] = []
-    for col in sorted(set(baseline_stats) & set(current_stats)):
-        b, c = baseline_stats[col], current_stats[col]
-        if b is None or c is None:
-            continue
-        try:
-            m = psi_ks_from_sketches(spark, b, c, n_bins)
-        except Exception:
-            # invalid/empty sketch (e.g. a column that lost KLL eligibility
-            # between snapshots): not comparable, not a drift failure
-            continue
+    for col, m in sorted(metrics.items()):
         if m["psi"] > threshold:
             out.append({
                 "snapshot_id": snapshot_id,

@@ -31,8 +31,8 @@ from __future__ import annotations
 
 import datetime
 import json
-from dataclasses import dataclass, field
-from typing import Any, Dict, Iterator, List, Optional, Tuple
+from dataclasses import dataclass, field, replace
+from typing import Any, Dict, Iterator, List, Optional, Sequence, Tuple
 
 import pyarrow.parquet as pq
 
@@ -443,8 +443,20 @@ def partition_states(df, partition_col: str = "bucket") -> List[Tuple[int, PartS
 def sql_partition_states(df, census: Dict[int, Dict[str, Dict[str, Any]]],
                          partition_col: str = "bucket",
                          ) -> List[Tuple[int, PartState]]:
+    """``sql_states_and_sketches``' states, without sketches."""
+    return sql_states_and_sketches(df, census, partition_col)[0]
+
+
+def sql_states_and_sketches(df, census: Dict[int, Dict[str, Dict[str, Any]]],
+                            partition_col: str = "bucket",
+                            sketch_columns: Sequence[str] = (),
+                            ) -> Tuple[List[Tuple[int, PartState]],
+                                       Dict[str, bytes]]:
     """Per-partition column states via one JVM aggregation (the default
-    state engine).
+    state engine), plus {column: snapshot KLL sketch} for each of
+    ``sketch_columns`` that can carry one: the drift sketches ride on this
+    aggregation, one per partition, and merge on the driver (KLL sketches
+    are mergeable).
 
     Same monoid as ``partition_states`` — Spark's partial+final hash
     aggregation IS the associative per-partition combine — but entirely
@@ -457,12 +469,16 @@ def sql_partition_states(df, census: Dict[int, Dict[str, Dict[str, Any]]],
     """
     from pyspark.sql import functions as F
 
+    from .stats import kll_aggs, merge_kll
+
     data_cols = [c for c in df.columns if c != partition_col]
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in data_cols:
         aggs.append(F.count(c).alias(f"{c}__cnt"))
         aggs.append(F.min(c).alias(f"{c}__min"))
         aggs.append(F.max(c).alias(f"{c}__max"))
+    sketch_aggs = kll_aggs(df, sketch_columns)
+    aggs += sketch_aggs.values()
     rows = df.groupBy(F.col(partition_col).alias("_pid")).agg(*aggs).collect()
 
     out: List[Tuple[int, PartState]] = []
@@ -483,7 +499,7 @@ def sql_partition_states(df, census: Dict[int, Dict[str, Dict[str, Any]]],
                 st["max"] = _json_safe(r[f"{c}__max"])
             state[c] = st
         out.append((pid, state))
-    return sorted(out)
+    return sorted(out), merge_kll(df.sparkSession, rows, list(sketch_aggs))
 
 
 def tree_merge_states(spark, part_states: List[Tuple[int, PartState]]) -> PartState:
@@ -517,6 +533,8 @@ class InferResult:
     partition_states: Dict[int, PartState]
     census: Dict[int, Dict[str, Any]]
     violations: List[Dict[str, Any]] = field(default_factory=list)
+    # column -> snapshot KLL sketch of infer_snapshot's sketch_columns
+    sketches: Dict[str, bytes] = field(default_factory=dict)
 
 
 def finalize_schema(col: str, st: ColState) -> Dict[str, Any]:
@@ -613,6 +631,7 @@ def infer_snapshot(spark, catalog, snapshot_id: str,
                    partitions: Optional[List[int]] = None,
                    engine: str = "sql",
                    census: Optional[Dict[int, Dict[str, Any]]] = None,
+                   df=None, sketch_columns: Sequence[str] = (),
                    ) -> InferResult:
     """Full inference for one snapshot (optionally a partition subset).
 
@@ -621,19 +640,24 @@ def infer_snapshot(spark, catalog, snapshot_id: str,
     executor-side in pyarrow — semantically identical (asserted in tests),
     the escape hatch for state shapes SQL can't express. A precomputed
     ``census`` skips the footer re-read (the pipeline does the census
-    first to select its check path).
+    first to select its check path), and a given ``df`` (their tolerant
+    read plan) skips building it again. ``sketch_columns`` (sql engine)
+    fills ``InferResult.sketches``.
     """
     if partitions is None:
         partitions = catalog.partition_ids(snapshot_id)
     if census is None:
         census = snapshot_census(spark, catalog, snapshot_id, partitions)
-
-    df = read_snapshot_tolerant(spark, catalog, snapshot_id, partitions, census)
+    if df is None:
+        df = read_snapshot_tolerant(spark, catalog, snapshot_id, partitions,
+                                    census)
     if engine == "arrow":
-        pstates = partition_states(df)
-    else:
-        pstates = sql_partition_states(df, census)
-    return finalize_infer(spark, snapshot_id, census, pstates)
+        return finalize_infer(spark, snapshot_id, census,
+                              partition_states(df))
+    pstates, sketches = sql_states_and_sketches(
+        df, census, sketch_columns=sketch_columns)
+    return replace(finalize_infer(spark, snapshot_id, census, pstates),
+                   sketches=sketches)
 
 
 def finalize_infer(spark, snapshot_id: str,

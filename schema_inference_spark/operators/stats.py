@@ -55,10 +55,6 @@ def _num_key(df: DataFrame, col: str) -> Optional[Column]:
     return None
 
 
-def _kll_input(df: DataFrame, col: str) -> Optional[Column]:
-    return _num_key(df, col)
-
-
 def partition_profile(df: DataFrame, snapshot_id: str,
                       columns: Optional[List[str]] = None,
                       partition_col: str = "bucket") -> DataFrame:
@@ -88,11 +84,10 @@ def partition_profile(df: DataFrame, snapshot_id: str,
         if dict(df.dtypes)[c] in ("float", "double"):
             hll_in = F.col(c).cast("string")
         aggs.append(F.hll_sketch_agg(hll_in).alias(f"{c}__hll"))
-        kll_in = _kll_input(df, c)
         aggs.append(
-            (F.kll_sketch_agg_double(kll_in) if kll_in is not None
+            (F.kll_sketch_agg_double(nk) if nk is not None
              else F.lit(None).cast("binary")).alias(f"{c}__kll"))
-        aggs.append(F.lit(kll_in is not None).alias(f"{c}__kll_ok"))
+        aggs.append(F.lit(nk is not None).alias(f"{c}__kll_ok"))
         aggs.append(F.lit(nk is not None).alias(f"{c}__is_num"))
 
     wide = df.groupBy(F.col(partition_col).alias("partition_id")).agg(*aggs)
@@ -156,9 +151,44 @@ def snapshot_profile(partition_stats: DataFrame) -> DataFrame:
 def profile_snapshot(df: DataFrame, snapshot_id: str,
                      columns: Optional[List[str]] = None,
                      partition_col: str = "bucket") -> Dict[str, DataFrame]:
+    """Both profile levels as lazy frames; nothing is cached."""
     part = partition_profile(df, snapshot_id, columns, partition_col)
-    part = part.cache()  # reused by snapshot level + audit state
     return {"partition": part, "snapshot": snapshot_profile(part)}
+
+
+def text_len() -> Column:
+    """Derived ``text_len``: length(text) as double, the planted drift
+    signal (FIXTURES.md F3), for the full profile and the drift sketches."""
+    return F.length("text").cast("double")
+
+
+def kll_aggs(df: DataFrame, columns: Sequence[str]) -> Dict[str, Column]:
+    """{column: its KLL sketch aggregate, aliased ``<column>__kll``} for
+    the ``columns`` that can carry one (numeric, temporal, ``text_len``)."""
+    out = {}
+    for c in columns:
+        inp = (text_len() if c == "text_len" and "text" in df.columns
+               else _num_key(df, c) if c in df.columns else None)
+        if inp is not None:
+            out[c] = F.kll_sketch_agg_double(inp).alias(f"{c}__kll")
+    return out
+
+
+def merge_kll(spark, rows: Sequence, columns: Sequence[str]
+              ) -> Dict[str, bytes]:
+    """Merge the per-partition sketches in ``rows`` into one per column:
+    one projection (a fold of ``kll_sketch_merge_double``) over a one-row
+    local frame, which Spark evaluates on the driver without a job."""
+    if not rows or not columns:
+        return {}
+    frame = local_frame(
+        spark, [tuple([bytes(r[f"{c}__kll"]) for r in rows] for c in columns)],
+        ", ".join(f"s{i} array<binary>" for i in range(len(columns))))
+    merged = frame.select(*[
+        F.aggregate(F.slice(f"s{i}", 2, F.size(f"s{i}")), F.col(f"s{i}")[0],
+                    F.kll_sketch_merge_double)
+        for i in range(len(columns))]).first()
+    return {c: bytes(m) for c, m in zip(columns, merged)}
 
 
 def kll_quantiles(spark, kll_bytes: bytes, probs: List[float]) -> List[float]:
@@ -168,15 +198,6 @@ def kll_quantiles(spark, kll_bytes: bytes, probs: List[float]) -> List[float]:
                      for i, p in enumerate(probs)])
            .first())
     return [row[f"q{i}"] for i in range(len(probs))]
-
-
-def kll_cdf(spark, kll_bytes: bytes, edges: List[float]) -> List[float]:
-    """CDF (rank) estimates at the given edges from one KLL sketch."""
-    row = (local_frame(spark, [(bytes(kll_bytes),)], "kll binary")
-           .select(*[F.kll_sketch_get_rank_double("kll", F.lit(float(e))).alias(f"r{i}")
-                     for i, e in enumerate(edges)])
-           .first())
-    return [row[f"r{i}"] for i in range(len(edges))]
 
 
 def grouped_quantiles(df: DataFrame, group_col: str, value,

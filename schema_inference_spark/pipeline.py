@@ -38,20 +38,20 @@ TOOL_VOCAB = ["search", "code", "browser", "none"]
 class ValidationResult:
     """Result of one ``validate()`` run.
 
-    ``snapshot_stats`` is LAZY: it is built from ``stats_thunk`` on first
-    access (the first access triggers a Spark plan build — ~1s of
-    driver-side Catalyst analysis over 50+ agg expressions — which most
-    callers, e.g. plain pass/fail consumers, never pay) and memoized.
-    Pre-round-3 callers that constructed the result with an eager
-    ``snapshot_stats=`` DataFrame keyword still work: the kwarg is
-    accepted as an alias that wraps into ``stats_thunk``.
+    ``violations`` and ``verdicts`` are Arrow local frames of rows held
+    on the driver: reading them runs no Spark job.
+
+    ``snapshot_stats`` is LAZY: the full per-column profile is built from
+    ``stats_thunk`` on first access (a fresh read plan and ~1s of
+    Catalyst analysis over 50+ agg expressions, which pass/fail callers
+    never pay; ``validate()`` builds only drift's sketches) and memoized,
+    with nothing cached in Spark.
     """
 
     def __init__(self, snapshot_id: str, partitions: List[int],
                  table_schema: Dict, violations: DataFrame,
                  verdicts: DataFrame, infer: InferResult,
                  stats_thunk: Optional[Callable[[], DataFrame]] = None,
-                 snapshot_stats: Optional[DataFrame] = None,
                  errors: Optional[Dict[int, str]] = None,
                  check_path: str = "fused"):
         self.snapshot_id = snapshot_id
@@ -67,8 +67,6 @@ class ValidationResult:
         # fused native scan), "fused" (one scan + one shuffle), or
         # "none" (nothing pending)
         self.check_path = check_path
-        if stats_thunk is None and snapshot_stats is not None:
-            stats_thunk = lambda: snapshot_stats  # noqa: E731
         self.stats_thunk = stats_thunk
 
     @property
@@ -147,17 +145,27 @@ def validate(
     pending rows) or ``fused`` (one scan + one skew-blocked shuffle,
     taken otherwise); ``clustered_checks`` forces either. The two are
     row-identical (tested) and the chosen path is reported as
-    ``ValidationResult.check_path``. Without opt-in checks or
-    persistence, a clustered call runs 3 Spark jobs (the scan
-    and one collect) and returns its violations and verdicts as Arrow
-    local frames, so reading them runs none. ``resume=True`` skips
-    partitions already marked complete in the audit store;
-    ``partitions=[...]`` restricts to an explicit subset (the conv-
-    dedup checks still fold the full corpus but emit only pending
-    partitions' rows). ``write_audit``/``write_violations`` persist
-    per-partition lineage + violation rows idempotently (dynamic
-    per-partition overwrite), which is what makes interrupted runs
-    resumable without rescanning validated partitions."""
+    ``ValidationResult.check_path``. Drift compares KLL sketches of the
+    ``baseline_sketches`` columns only, built inside the shuffle path's
+    state aggregation (the clustered path runs that narrow aggregation
+    alone); the full profile, ``result.snapshot_stats``, is built only
+    when read.
+
+    Memory contract: on every path a call's violation rows are
+    materialized once, ON THE DRIVER (one collect, plus the driver-side
+    schema-merge/drift/compat rows), ordered and counted there, so they
+    must stay violation-sized (one row per anomaly, not per turn).
+    Violations and verdicts return as Arrow local frames that read
+    without a Spark job; a clustered call without opt-in checks or
+    persistence runs 3 jobs.
+    ``resume=True`` skips partitions already marked complete in the
+    audit store; ``partitions=[...]`` restricts to an explicit subset
+    (the conv-dedup checks still fold the full corpus but emit only
+    pending partitions' rows). ``write_audit``/``write_violations``
+    persist per-partition lineage + violation rows idempotently (each
+    validated partition's stored rows, and -1's when every partition was
+    validated, become this run's, none included), which is what makes
+    interrupted runs resumable without rescanning validated partitions."""
     t0 = time.monotonic()
     _mark = profile_marker("validate")
 
@@ -236,14 +244,17 @@ def validate(
     # -- the corpus pass(es): checks + inference states ---------------------
     # clustered path: ONE fused native scan computes the row-level checks
     # AND the inference column states (collect_states) — the snapshot is
-    # read once, total. Fallback paths: JVM state aggregation (one scan)
-    # + fused shuffle checks (second scan).
+    # read once, total. Shuffle path: JVM state aggregation (with the
+    # drift sketches) + fused shuffle checks over one read plan.
     inf = None
     violations = None
     path_used = "fused"
     opt_in = (role_protocol or baseline_transitions or rules or completeness
               or stuck_loops or conv_dedup or conv_near_dedup is not None
               or context_budget is not None)
+    # drift's columns: their KLL sketches are all the profile a call builds
+    sketch_cols = sorted(c for c, b in (baseline_sketches or {}).items()
+                         if b is not None)
     if not pending:
         # every pending partition errored at census: nothing left to
         # scan — emit only the error verdicts below
@@ -274,9 +285,8 @@ def validate(
         except Exception as exc:  # noqa: BLE001 — executor errors arrive
             if "clustered checks:" not in str(exc):  # as Py4J wrappers
                 raise
-    # -- stats + sketches (D7-D9), one scan, two agg levels (lazy) -----------
-    # text_len: derived numeric for the drift check (FIXTURES.md F3 —
-    # "length(text) distribution" is the planted drift signal)
+
+    # -- full profile (D7-D9), built only when snapshot_stats is read --------
     def _build_stats() -> DataFrame:
         # always rebuilds the read plan instead of capturing `df`: the
         # thunk outlives validate() on the returned result, and holding
@@ -287,13 +297,11 @@ def validate(
         d = read_snapshot_tolerant(spark, catalog, snapshot_id, pending,
                                    census)
         if "text" in d.columns:
-            d = d.withColumn("text_len", F.length("text").cast("double"))
+            d = d.withColumn("text_len", S.text_len())
         return S.profile_snapshot(
             d, snapshot_id, partition_col=partition_col)["snapshot"]
 
-    snapshot_stats = None  # built on demand below / via the result thunk
     df = None
-
     # The scan section runs under a probe-gated retry: a JVM scan abort
     # (data page corrupt under an intact footer — invisible to the
     # census) names no partition, so on the first failure a page-depth
@@ -308,22 +316,30 @@ def validate(
                 violations = C.empty_violations(spark)
                 inf = InferResult(snapshot_id, {}, {}, {}, {}, [])
                 path_used = "none"
-            if inf is None:
-                # -- infer: column states + strict merge (D5/D6/D14) --------
-                inf = infer_snapshot(spark, catalog, snapshot_id, pending,
-                                     census=census)
-                _mark("infer")
-
-            # the tolerant-read plan is needed eagerly only by the shuffle
-            # check paths; on the fused clustered path it exists solely as
-            # the stats profile's input, and BUILDING those two plans costs
-            # ~1-1.5s of driver-side Catalyst analysis that pass/fail
-            # consumers never use — so both are deferred behind the
-            # snapshot_stats thunk.
-            if violations is None:
+            # ONE tolerant read plan per call (building one runs a
+            # schema-merge job), shared by every pass below
+            if pending and df is None and (violations is None or opt_in
+                                           or sketch_cols):
                 df = read_snapshot_tolerant(spark, catalog, snapshot_id,
                                             pending, census)
                 _mark("read-plan")
+            sketches: Dict[str, bytes] = {}
+            if inf is None:
+                # -- infer: column states + strict merge (D5/D6/D14), with
+                # the drift sketches in the same aggregation ----------------
+                inf = infer_snapshot(spark, catalog, snapshot_id, pending,
+                                     census=census, df=df,
+                                     sketch_columns=sketch_cols)
+                sketches = inf.sketches
+                _mark("infer")
+            elif sketch_cols and df is not None:
+                # clustered path: the same narrow sketch aggregation, alone
+                aggs = S.kll_aggs(df, sketch_cols)
+                sketches = S.merge_kll(spark, df.groupBy(partition_col).agg(
+                    *aggs.values()).collect() if aggs else [], list(aggs))
+                _mark("drift sketches")
+
+            if violations is None:
                 # one scan + one skew-blocked shuffle produces every
                 # row-level check's violations (row-identical to the
                 # per-check plans, which would scan the snapshot 4x;
@@ -340,10 +356,6 @@ def validate(
                 # windowed passes over the tolerant read plan (sharing
                 # the D12 Exchange on the fused path; extra scans on
                 # the clustered path, paid only by configured callers).
-                if df is None:
-                    df = read_snapshot_tolerant(spark, catalog,
-                                                snapshot_id, pending,
-                                                census)
                 if role_protocol:
                     violations = violations.unionByName(
                         C.check_role_protocol(df, snapshot_id,
@@ -455,15 +467,8 @@ def validate(
                 driver_rows += CheckRegistry().conforms(
                     inf.table_schema, contract, snapshot_id)
             if baseline_sketches:
-                if snapshot_stats is None:
-                    snapshot_stats = _build_stats()
-                    _mark("profile-plan")
-                cur = {r["column"]:
-                       bytes(r["kll"]) if r["kll"] is not None else None
-                       for r in snapshot_stats.select("column",
-                                                      "kll").collect()}
                 driver_rows += drift_violations(spark, snapshot_id,
-                                                baseline_sketches, cur)
+                                                baseline_sketches, sketches)
             if baseline_schema:
                 for col, base in sorted(baseline_schema.items()):
                     snap = inf.table_schema.get(col)
@@ -473,51 +478,17 @@ def validate(
                                                  base)
                     if row:
                         driver_rows.append(row)
-            drv_rows = [tuple(r[c] for c in C.VIOLATION_COLS)
-                        for r in driver_rows]
-            persist = (write_violations if write_violations is not None
-                       else write_audit)
-            if path_used == "clustered" and not (opt_in or persist):
-                # the clustered violations are a LocalRelation of
-                # violation-sized rows: merge the driver rows, order and
-                # count them here, and return another LocalRelation — no
-                # Spark job, neither now nor when the caller reads them.
-                # Python str order is Spark's UTF-8 binary order.
-                rows = sorted([tuple(r) for r in violations.collect()]
-                              + drv_rows, key=C.stable_key)
-                counts = Counter(r[1] for r in rows)
-                violations = local_frame(spark, rows, C.VIOLATION_DDL)
-                _mark("order+count violations (driver)")
-                break
-            out_violations = violations
-            if drv_rows:
-                out_violations = out_violations.unionByName(
-                    local_frame(spark, drv_rows, C.VIOLATION_DDL))
 
-            out_violations = C.stable_order(out_violations)
-            _mark("plan-violations")
-
-            # -- materialize violations ONCE (D2 second half + the round-1
-            # scaling fix): when persisting, the single action is the
-            # partitioned write to the violation store; per-partition
-            # counts then come from the written artifact (a metadata-sized
-            # parquet agg), replacing the round-1 cache()+groupBy()
-            # .collect() double materialization. The store is idempotent
-            # per partition, so resume reproduces prior runs' violation
-            # rows without re-scanning (catalog.append_violations).
-            if persist:
-                catalog.append_violations(out_violations, snapshot_id)
-                out_violations = C.stable_order(
-                    catalog.read_violations(spark, snapshot_id,
-                                            partitions=sorted(pending)
-                                            + [-1]))
-            else:
-                out_violations = out_violations.cache()
-            counts = {r.partition_id: r.n for r in
-                      (out_violations.groupBy("partition_id")
-                       .agg(F.count(F.lit(1)).alias("n")).collect())}
-            violations = out_violations
-            _mark("materialize-violations")
+            # -- materialize violations ONCE, on the driver: one collect
+            # runs the check plan, then the rows are ordered (Python str
+            # order is Spark's UTF-8 binary order) and counted here and
+            # return as a LocalRelation that reads without a Spark job.
+            rows = sorted([tuple(r) for r in violations.collect()]
+                          + [tuple(r[c] for c in C.VIOLATION_COLS)
+                             for r in driver_rows], key=C.stable_key)
+            counts = Counter(r[1] for r in rows)
+            violations = local_frame(spark, rows, C.VIOLATION_DDL)
+            _mark("materialize-violations (driver)")
             break
         except Exception:  # noqa: BLE001 — scan aborts arrive as Py4J
             if _attempt == 2:  # wrappers with no partition attribution
@@ -531,12 +502,26 @@ def validate(
             pending = [p for p in pending if p not in bad]
             inf = None
             violations = None
-            snapshot_stats = None
+            df = None
             # the retry recomputes violations via the shuffle path even
             # when the clustered path had succeeded before the failure —
             # report the path that actually produced the final rows
             path_used = "fused"
             _mark(f"scan failure -> probe ({sorted(bad)} errored)")
+
+    # -- persist (D2 second half), a true per-partition replace: dynamic
+    # overwrite replaces only partitions present in the written rows, so
+    # a validated partition that came out clean (and -1, when this run
+    # covered every manifest partition) is cleared AFTER the write — a
+    # crash in between loses nothing.
+    if (write_violations if write_violations is not None else write_audit):
+        if rows:
+            catalog.append_violations(violations, snapshot_id)
+        cleared = set(pending) - set(counts)
+        if set(pending) == set(all_parts) and -1 not in counts:
+            cleared.add(-1)
+        catalog.clear_violations(snapshot_id, sorted(cleared))
+        _mark("persist violations")
 
     # -- verdicts: per-partition pass/fail + metrics (F4) ---------------------
     man = {p["partition_id"]: p for p in man_full["partitions"]}
@@ -576,7 +561,6 @@ def validate(
         catalog.append_audit(verdicts, snapshot_id)
         _mark("audit")
 
-    built = snapshot_stats
     return ValidationResult(
         snapshot_id=snapshot_id,
         partitions=sorted(pending),
@@ -584,7 +568,7 @@ def validate(
         violations=violations,
         verdicts=verdicts,
         infer=inf,
-        stats_thunk=(lambda: built) if built is not None else _build_stats,
+        stats_thunk=_build_stats,
         errors=errors,
         check_path=path_used,
     )
@@ -694,7 +678,6 @@ def validate_replica(
         F.col("turn_idx").cast("bigint").alias("turn_idx"),
         payload.alias("payload"))
     if write_violations:
-        import os
         import shutil
 
         store_id = f"{snapshot_id}--replica--{reference_id}"
@@ -709,10 +692,7 @@ def validate_replica(
             # rows as still-divergent — so the requested partitions'
             # dirs are cleared explicitly first, making the subset run
             # a true per-partition replace
-            base = catalog._violations_dir(store_id)
-            for p in partitions:
-                shutil.rmtree(os.path.join(base, f"partition_id={int(p)}"),
-                              ignore_errors=True)
+            catalog.clear_violations(store_id, partitions)
         catalog.append_violations(shaped, store_id)
         shaped = (catalog.read_violations(spark, store_id)
                   .withColumn("snapshot_id", F.lit(snapshot_id)))

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +39,7 @@ AUDIT_SCHEMA = T.StructType([
     T.StructField("wall_ms", T.LongType(), False),
     T.StructField("state_json", T.StringType(), True),      # merged column state
 ])
+_AUDIT_FILE_SCHEMA = T.StructType(AUDIT_SCHEMA.fields[1:])  # no snapshot_id
 
 
 VIOLATION_DDL = ("snapshot_id string, partition_id int, check_id string, "
@@ -57,30 +59,12 @@ class SnapshotCatalog:
 
     # -- snapshot metadata ---------------------------------------------------
 
-    def snapshots(self) -> List[str]:
-        return sorted(
-            d for d in os.listdir(self.root)
-            if os.path.isfile(os.path.join(self.root, d, "manifest.json")))
-
     def manifest(self, snapshot_id: str) -> Dict:
         with open(os.path.join(self.root, snapshot_id, "manifest.json")) as f:
             return json.load(f)
 
     def partition_ids(self, snapshot_id: str) -> List[int]:
         return [p["partition_id"] for p in self.manifest(snapshot_id)["partitions"]]
-
-    def partition_files(self, snapshot_id: str,
-                        partitions: Optional[Sequence[int]] = None) -> List[str]:
-        """Absolute parquet file paths, manifest-driven (no globbing)."""
-        man = self.manifest(snapshot_id)
-        keep = set(partitions) if partitions is not None else None
-        out = []
-        for p in man["partitions"]:
-            if keep is not None and p["partition_id"] not in keep:
-                continue
-            for fname in p["files"]:
-                out.append(os.path.join(self.root, snapshot_id, p["path"], fname))
-        return out
 
     # -- reads ----------------------------------------------------------------
 
@@ -107,21 +91,21 @@ class SnapshotCatalog:
         return os.path.join(self.audit_root, f"snapshot_id={snapshot_id}")
 
     def read_audit(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
+        """Audit rows, read with their file schema: no inference job."""
         d = self._audit_dir(snapshot_id)
         if not os.path.isdir(d) or not any(
                 f.endswith(".parquet") for f in os.listdir(d)):
             return local_frame(spark, [], AUDIT_SCHEMA)
-        df = spark.read.parquet(d)
+        df = spark.read.schema(_AUDIT_FILE_SCHEMA).parquet(d)
         return df.withColumn("snapshot_id", F.lit(snapshot_id)).select(
             *[f.name for f in AUDIT_SCHEMA.fields])
 
     def completed_partitions(self, spark: SparkSession, snapshot_id: str) -> List[int]:
-        audit = self.read_audit(spark, snapshot_id)
-        if audit.isEmpty():
-            return []
-        rows = (audit.filter(F.col("verdict").isin("pass", "fail"))
-                .select("partition_id").distinct().collect())
-        return sorted(r.partition_id for r in rows)
+        """Partitions with a pass/fail audit row, in one collect."""
+        rows = (self.read_audit(spark, snapshot_id)
+                .filter(F.col("verdict").isin("pass", "fail"))
+                .select("partition_id").collect())
+        return sorted({r.partition_id for r in rows})
 
     def pending_partitions(self, spark: SparkSession, snapshot_id: str) -> List[int]:
         """Resume point: manifest partitions minus completed audit rows."""
@@ -151,6 +135,15 @@ class SnapshotCatalog:
          .partitionBy("partition_id")
          .parquet(self._violations_dir(snapshot_id)))
 
+    def clear_violations(self, snapshot_id: str,
+                         partitions: Sequence[int]) -> None:
+        """Remove the stored violation rows of ``partitions`` (their
+        partition directories); pass -1 for the snapshot-level rows."""
+        d = self._violations_dir(snapshot_id)
+        for p in partitions:
+            shutil.rmtree(os.path.join(d, f"partition_id={int(p)}"),
+                          ignore_errors=True)
+
     def read_violations(self, spark: SparkSession, snapshot_id: str,
                         partitions: Optional[Sequence[int]] = None) -> DataFrame:
         """Read persisted violations (optionally pruned to a partition
@@ -170,9 +163,9 @@ class SnapshotCatalog:
         return df.select(*_VIOLATION_COLS)
 
     def append_audit(self, audit_df: DataFrame, snapshot_id: str) -> None:
-        """Idempotent per-run append. Partition-grained overwrite semantics
-        come from the read side (latest verdict per partition wins via the
-        distinct in completed_partitions); prod uses Iceberg MERGE."""
+        """Idempotent per-run append. Partition-grained semantics come
+        from the read side (completed_partitions dedupes the partition
+        ids); prod uses Iceberg MERGE."""
         (audit_df.drop("snapshot_id")
          .repartition(1)
          .write.mode("append").parquet(self._audit_dir(snapshot_id)))

@@ -200,13 +200,20 @@ def test_fused_checks_match_separate_plans(spark, catalog):
         (0, "c1", 30, d(2026, 1, 1, 0, 5), "user", "telepathy"),  # gap over blocks + bad tool
         (0, "c1", 31, d(2026, 1, 1, 0, 6), None, None),           # null role
     ]
+    # a vocabulary entry with a quote and a backslash: the fused check
+    # binds vocabularies as parameters, never as SQL text
+    odd = 'sys"tem\\x'
+    rows.append((1, "c2", 0, d(2026, 1, 1, 0, 0), odd, None))
+    ROLE_VOCAB_T = ROLE_VOCAB + [odd]
     tiny = spark.createDataFrame(
         rows, "bucket int, conv_id string, turn_idx int, ts timestamp, "
               "role string, tool string")
     fused = [r.asDict() for r in C.stable_order(
-        C.check_rowlevel_fused(tiny, "t", ROLE_VOCAB, TOOL_VOCAB,
+        C.check_rowlevel_fused(tiny, "t", ROLE_VOCAB_T, TOOL_VOCAB,
                                block_size=4)).collect()]
     assert fused == separate(tiny, "t", bs=4)
+    assert all(odd in json.loads(r["schema_2"])["values"]
+               for r in fused if r["check_id"] == "ref_role")
     by_check = {}
     for r in fused:
         by_check.setdefault(r["check_id"], 0)
@@ -501,3 +508,90 @@ def test_check_path_auto_selection_by_size(spark, catalog):
     # identical violations either way (row-identity is asserted in depth
     # in test_clustered; here just the selection contract)
     assert small.violations.count() == forced.violations.count()
+
+
+# --- one call shape on the shuffle path --------------------------------------
+
+def _stores(fixture_root, name):
+    return SnapshotCatalog(fixture_root,
+                           audit_root=f"{fixture_root}/_audit_{name}",
+                           violations_root=f"{fixture_root}/_vstore_{name}")
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_shuffle_call_job_guard(spark, fixture_root, r1):
+    """A shuffle-path drift call that persists, plus reading its
+    violations and verdicts, runs at most 12 Spark jobs: the schema merge
+    of its one read plan (1), the state + drift-sketch aggregation (2),
+    the fused check's collect (5, one per adaptive query stage), and the
+    violation-store and audit writes (2 each). Its resubmit, which resume
+    skips, runs at most 1: the audit read."""
+    base = baseline_from_result(r1)["sketches"]
+    cat = _stores(fixture_root, "jobguard")
+
+    def call():
+        r = validate(spark, cat, "s4", baseline_sketches=base,
+                     write_audit=True)
+        r.violations.collect()
+        r.verdicts.collect()
+        return r
+
+    r, jobs = _jobs(spark, "shuffle-job-guard", call)
+    assert r.check_path == "fused"
+    assert "drift_psi" in {x.check_id for x in r.violations.collect()}
+    assert 0 < len(jobs) <= 12, jobs
+    # the fused check's input view is dropped when spark.sql returns
+    assert not [t for t in spark.catalog.listTables() if t.isTemporary]
+    again, jobs = _jobs(spark, "resubmit-job-guard", lambda: validate(
+        spark, cat, "s4", baseline_sketches=base, write_audit=True))
+    assert again.partitions == [] and again.check_path == "none"
+    assert len(jobs) <= 1, jobs
+
+
+def test_violation_store_is_a_per_partition_replace(spark, fixture_root,
+                                                    r1):
+    """A run that validates every partition replaces the store's rows for
+    each of them and for the snapshot level, also where it found none: a
+    drift row from an earlier run must not survive a run without a
+    baseline, neither in the store nor in the result or its verdicts."""
+    base = baseline_from_result(r1)
+    cat = _stores(fixture_root, "replace")
+    first = validate(spark, cat, "s4", baseline_sketches=base["sketches"],
+                     write_audit=True)
+    assert first.violations.filter("partition_id = -1").count() == 1
+    r = validate(spark, cat, "s4", resume=False, write_audit=True)
+    C = validate.__globals__["C"]
+    stored = [x.asDict() for x in C.stable_order(cat.read_violations(
+        spark, "s4", partitions=r.partitions + [-1])).collect()]
+    assert not [x for x in stored if x["partition_id"] == -1]
+    assert stored == [x.asDict() for x in r.violations.collect()]
+    assert -1 not in {v.partition_id for v in r.verdicts.collect()}
+
+
+def test_clustered_drift_matches_fused(spark, catalog, r1):
+    """The clustered path's drift sketches (one narrow aggregation of their
+    own) flag the same columns as the shuffle path's (built inside the
+    state aggregation)."""
+    base = baseline_from_result(r1)["sketches"]
+
+    def drift(**kw):
+        r = validate(spark, catalog, "s4", baseline_sketches=base,
+                     write_audit=False, **kw)
+        return r.check_path, sorted(
+            (p["column"], p["threshold"], p["psi"] > p["threshold"])
+            for p in (json.loads(x.payload) for x in r.violations.collect()
+                      if x.check_id == "drift_psi"))
+
+    clu_path, clu = drift(clustered_checks=True)
+    fus_path, fus = drift(clustered_checks=False)
+    assert (clu_path, fus_path) == ("clustered", "fused")
+    assert clu == fus == [("text_len", 0.25, True)]

@@ -162,3 +162,69 @@ def test_sketch_comparison_runs_no_spark_job(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert m["psi"] > 0.25
     assert list(sc.statusTracker().getJobIdsForGroup("kll-local")) == []
+
+
+def _psi_ks_per_column_queries(spark, base, cur, n_bins=10):
+    """The earlier drift comparison, kept as the oracle: three local
+    projections per column (baseline quantiles, then each sketch's ranks
+    at the deduped edges)."""
+    import math
+
+    from schema_inference_spark.functions.frames import local_frame
+
+    def one(kll, exprs):
+        return list(local_frame(spark, [(bytes(kll),)], "kll binary")
+                    .select(*exprs).first())
+
+    probs = [i / n_bins for i in range(1, n_bins)]
+    edges = one(base, [F.kll_sketch_get_quantile_double("kll", F.lit(p))
+                       for p in probs])
+    uniq = []
+    for e in edges:
+        if not uniq or e > uniq[-1]:
+            uniq.append(e)
+
+    def cdf(kll):
+        return [0.0] + one(kll, [F.kll_sketch_get_rank_double(
+            "kll", F.lit(float(e))) for e in uniq]) + [1.0]
+
+    b, c = cdf(base), cdf(cur)
+    psi = ks = 0.0
+    for i in range(1, len(b)):
+        p = max(b[i] - b[i - 1], 1e-6)
+        q = max(c[i] - c[i - 1], 1e-6)
+        psi += (q - p) * math.log(q / p)
+        ks = max(ks, abs(b[i] - c[i]))
+    return {"psi": psi, "ks": ks, "n_bins": len(uniq) + 1}
+
+
+def test_one_projection_drift_equals_per_column_queries(spark, catalog):
+    """Every compared column's PSI/KS from ONE projection equals the
+    per-column query oracle exactly: rank and quantile queries are
+    deterministic over fixed sketch bytes, and deduping equal edges
+    afterwards leaves the ranks at the kept edges unchanged."""
+    from schema_inference_spark.operators.drift import psi_ks_many
+    from schema_inference_spark.pipeline import baseline_from_result, validate
+
+    sk = {s: baseline_from_result(validate(spark, catalog, s,
+                                           write_audit=False))["sketches"]
+          for s in ("s1", "s4")}
+    cols = sorted(c for c, v in sk["s1"].items() if v is not None)
+    assert "text_len" in cols and "turn_idx" in cols
+    for a, b in (("s1", "s4"), ("s4", "s1"), ("s1", "s1")):
+        got = psi_ks_many(spark, {c: (sk[a][c], sk[b][c]) for c in cols})
+        for c in cols:
+            assert got[c] == _psi_ks_per_column_queries(
+                spark, sk[a][c], sk[b][c]), (a, b, c)
+
+
+def test_reading_snapshot_stats_persists_nothing(spark, catalog):
+    """The lazy full profile caches nothing: building and reading
+    ``snapshot_stats`` leaves the session's persistent RDDs as they were."""
+    from schema_inference_spark.pipeline import validate
+
+    r = validate(spark, catalog, "s1", write_audit=False)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert r.snapshot_stats.collect()
+    assert jsc.getPersistentRDDs().size() == before
