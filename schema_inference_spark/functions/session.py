@@ -34,6 +34,19 @@ def _resolve_master(explicit: str | None, cpus: str,
     return f"local[{cpus}]"
 
 
+def _resolve_parallelism(master: str | None,
+                         shuffle_partitions: int | None,
+                         env: "os._Environ[str] | dict[str, str]",
+                         ) -> tuple[str | None, int]:
+    """(master or None, spark.sql.shuffle.partitions): local[N] and N
+    shuffle partitions, N = ``SPARK_GRAFT_CPUS`` or else the CPUs this
+    process may run on."""
+    cpus = env.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    return (_resolve_master(master, cpus, env),
+            shuffle_partitions if shuffle_partitions is not None
+            else int(cpus))
+
+
 def _mem_mb(size: str) -> float:
     """JVM size string ('3g', '512m', '1048576') -> MiB."""
     s = size.strip().lower()
@@ -95,17 +108,19 @@ def get_spark(app_name: str = "schema-inference-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               max_partition_bytes: str | None = None) -> SparkSession:
-    """local[$SPARK_GRAFT_CPUS] by default; AQE on (coalesce + skew-join,
-    SURVEY.md §2.D18); Arrow on for every pandas/Arrow UDF boundary.
+    """local[N] by default, with N shuffle partitions: N is
+    ``$SPARK_GRAFT_CPUS``, or the CPUs this process may run on
+    (``os.sched_getaffinity``) when that is unset. AQE on (coalesce +
+    skew-join, SURVEY.md §2.D18); Arrow on for every pandas/Arrow UDF
+    boundary.
 
     max_partition_bytes: local-mode inputs are small relative to the 128MB
     default, which starves the scan of splits (a 650MB snapshot = 6 tasks
     regardless of cores). 16MB keeps local scans parallel; prod clusters
     keep the default.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = _resolve_master(master, cpus, os.environ)
-    shuffle = shuffle_partitions if shuffle_partitions is not None else int(cpus)
+    master, shuffle = _resolve_parallelism(master, shuffle_partitions,
+                                           os.environ)
     mpb = max_partition_bytes or os.environ.get(
         "SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
     driver_mem, java_opts = size_session(os.environ, host_memory_mb())

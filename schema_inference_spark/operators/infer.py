@@ -204,7 +204,7 @@ def physical_census(spark, files_by_partition: List[Tuple[int, str]],
         cols = {}
         for fld in sch:
             cols[fld.name] = {"ir": arrow_type_to_ir(fld.type),
-                              "phys": str(fld.type),
+                              "phys": str(fld.type), "arrow": fld.type,
                               "rg": rg.get(fld.name)}
         return cols
 
@@ -250,7 +250,8 @@ def _merge_file_cols(a, b):
     if CENSUS_ERROR_KEY in b:
         return b
     out = {}
-    for col in sorted(set(a) | set(b)):
+    # file column order, which the census read schema keeps
+    for col in list(a) + [c for c in b if c not in a]:
         if col not in a:
             out[col] = b[col]
         elif col not in b:
@@ -259,7 +260,11 @@ def _merge_file_cols(a, b):
             merged = merge_column_schema(a[col]["ir"], b[col]["ir"])
             phys = ",".join(sorted(set(a[col]["phys"].split(","))
                                    | set(b[col]["phys"].split(","))))
+            arrow = a[col].get("arrow")
             out[col] = {"ir": merged, "phys": phys,
+                        # None: the files disagree on the physical type
+                        "arrow": arrow if arrow == b[col].get("arrow")
+                        else None,
                         "rg": _merge_rg(a[col].get("rg"), b[col].get("rg"))}
     return out
 
@@ -305,6 +310,49 @@ def _widened(types: List[str]) -> str:
     return "string"
 
 
+def _scan_type(at):
+    """The Spark type a parquet read infers for a column of arrow type
+    ``at``, or None when the arrow type alone does not settle it:
+    unsigned integers, timestamps without a time zone (parquet INT96
+    reads as one) or in nanoseconds, durations, nulls, binaries
+    (``spark.sql.parquet.binaryAsString``) and nested types."""
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pat.is_dictionary(at):
+        at = at.value_type
+    plain = (pat.is_boolean(at) or pat.is_signed_integer(at)
+             or pat.is_float32(at) or pat.is_float64(at)
+             or pat.is_decimal(at) or pat.is_string(at)
+             or pat.is_large_string(at) or pat.is_date32(at)
+             or (pat.is_timestamp(at) and at.tz is not None
+                 and at.unit in ("ms", "us")))
+    return from_arrow_type(at) if plain else None
+
+
+def census_read_schema(census: Dict[int, Dict[str, Dict[str, Any]]],
+                       partitions: List[int]):
+    """The read schema of ``partitions`` from their footer census: the
+    file columns in file order, then ``bucket int``. None when the files
+    of some column disagree on its physical type, or ``_scan_type``
+    cannot settle its Spark type; the read then merges the footers."""
+    from pyspark.sql import types as T
+
+    cols = census.get(partitions[0]) if partitions else None
+    if not cols or "bucket" in cols:
+        return None
+    fields = []
+    for col in cols:
+        arrows = {census.get(p, {}).get(col, {}).get("arrow")
+                  for p in partitions}
+        at = arrows.pop() if len(arrows) == 1 else None
+        st = None if at is None else _scan_type(at)
+        if st is None:
+            return None
+        fields.append(T.StructField(col, st))
+    return T.StructType(fields + [T.StructField("bucket", T.IntegerType())])
+
+
 def read_snapshot_tolerant(spark, catalog, snapshot_id: str,
                            partitions: List[int],
                            census: Dict[int, Dict[str, Dict[str, Any]]]):
@@ -314,7 +362,10 @@ def read_snapshot_tolerant(spark, catalog, snapshot_id: str,
     with its own consistent schema (partition-pruned, pushdown intact), is
     cast to the widened common schema, and the groups union. Group count is
     bounded by the number of distinct schema versions (1-2 in practice), so
-    this adds no extra shuffle — union is a narrow transformation.
+    this adds no extra shuffle — union is a narrow transformation. Each
+    group's read schema comes from the census (``census_read_schema``), so
+    building the plan runs no schema-merge job unless a group's files
+    disagree on a physical type.
     """
     sig_of = {}
     for pid in partitions:
@@ -326,7 +377,9 @@ def read_snapshot_tolerant(spark, catalog, snapshot_id: str,
         groups.setdefault(sig, []).append(pid)
 
     if len(groups) <= 1:
-        return catalog.read_snapshot(spark, snapshot_id, partitions)
+        return catalog.read_snapshot(
+            spark, snapshot_id, partitions,
+            schema=census_read_schema(census, partitions))
 
     # widened target per column (scan-side only)
     from collections import defaultdict
@@ -346,7 +399,8 @@ def read_snapshot_tolerant(spark, catalog, snapshot_id: str,
     parts = []
     for sig in sorted(groups):
         pids = sorted(groups[sig])
-        df = catalog.read_snapshot(spark, snapshot_id, pids)
+        df = catalog.read_snapshot(spark, snapshot_id, pids,
+                                   schema=census_read_schema(census, pids))
         exprs = []
         for c in df.columns:
             if c in target and target[c] in spark_t:

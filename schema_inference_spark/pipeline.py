@@ -157,15 +157,21 @@ def validate(
     must stay violation-sized (one row per anomaly, not per turn).
     Violations and verdicts return as Arrow local frames that read
     without a Spark job; a clustered call without opt-in checks or
-    persistence runs 3 jobs.
-    ``resume=True`` skips partitions already marked complete in the
-    audit store; ``partitions=[...]`` restricts to an explicit subset
+    persistence runs 3 jobs. The shuffle path's read plan takes its
+    schema from the footer census (no schema-merge job), and the catalog
+    reads and writes its stores on the driver (no job), so a persisting
+    shuffle-path drift call runs 7: the state + sketch aggregation (2)
+    and the fused check's collect (5).
+    ``resume=True`` skips partitions whose latest audit verdict is pass
+    or fail; a resubmit with nothing pending runs 0 jobs and returns the
+    stored verdicts. ``partitions=[...]`` restricts to an explicit subset
     (the conv-dedup checks still fold the full corpus but emit only
     pending partitions' rows). ``write_audit``/``write_violations``
     persist per-partition lineage + violation rows idempotently (each
     validated partition's stored rows, and -1's when every partition was
-    validated, become this run's, none included), which is what makes
-    interrupted runs resumable without rescanning validated partitions."""
+    validated, become this run's, none included; violations are written
+    before verdicts), which is what makes interrupted runs resumable
+    without rescanning validated partitions."""
     t0 = time.monotonic()
     _mark = profile_marker("validate")
 
@@ -509,14 +515,14 @@ def validate(
             path_used = "fused"
             _mark(f"scan failure -> probe ({sorted(bad)} errored)")
 
-    # -- persist (D2 second half), a true per-partition replace: dynamic
-    # overwrite replaces only partitions present in the written rows, so
+    # -- persist (D2 second half), a true per-partition replace of the
+    # driver rows: the write replaces only partitions present in them, so
     # a validated partition that came out clean (and -1, when this run
     # covered every manifest partition) is cleared AFTER the write — a
     # crash in between loses nothing.
     if (write_violations if write_violations is not None else write_audit):
         if rows:
-            catalog.append_violations(violations, snapshot_id)
+            catalog.append_violations(rows, snapshot_id)
         cleared = set(pending) - set(counts)
         if set(pending) == set(all_parts) and -1 not in counts:
             cleared.add(-1)
@@ -558,7 +564,7 @@ def validate(
     # -- audit append (D19): idempotent per-partition lineage -----------------
     _mark("verdicts")
     if write_audit:
-        catalog.append_audit(verdicts, snapshot_id)
+        catalog.append_audit(verdict_rows, snapshot_id)
         _mark("audit")
 
     return ValidationResult(
@@ -680,10 +686,13 @@ def validate_replica(
     if write_violations:
         import shutil
 
+        # one row per failing turn is not violation-sized, so unlike the
+        # catalog's driver-side stores this one is written and read by
+        # Spark, in the same hive layout
         store_id = f"{snapshot_id}--replica--{reference_id}"
+        store = catalog._violations_dir(store_id)
         if partitions is None:
-            shutil.rmtree(catalog._violations_dir(store_id),
-                          ignore_errors=True)
+            shutil.rmtree(store, ignore_errors=True)
         else:
             # dynamic partition overwrite only replaces partitions
             # PRESENT in the written frame: a re-verified partition
@@ -693,7 +702,11 @@ def validate_replica(
             # dirs are cleared explicitly first, making the subset run
             # a true per-partition replace
             catalog.clear_violations(store_id, partitions)
-        catalog.append_violations(shaped, store_id)
-        shaped = (catalog.read_violations(spark, store_id)
-                  .withColumn("snapshot_id", F.lit(snapshot_id)))
+        (shaped.drop("snapshot_id").repartition(1).write
+         .option("partitionOverwriteMode", "dynamic").mode("overwrite")
+         .partitionBy("partition_id").parquet(store))
+        shaped = (spark.read.schema(C.VIOLATION_DDL.split(", ", 1)[1])
+                  .option("basePath", store).parquet(store)
+                  .select(F.lit(snapshot_id).alias("snapshot_id"),
+                          *C.VIOLATION_COLS[1:]))
     return C.stable_order(shaped)

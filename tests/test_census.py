@@ -5,6 +5,7 @@ exactness.
 """
 
 from schema_inference_spark.operators.infer import (
+    census_read_schema,
     census_stats,
     infer_snapshot,
     physical_census,
@@ -78,3 +79,51 @@ def test_census_rg_merge_across_files(spark, tmp_path):
     import pyarrow.compute as pc
     assert cs["turn_idx"]["min"] == pc.min(table["turn_idx"]).as_py()
     assert cs["turn_idx"]["max"] == pc.max(table["turn_idx"]).as_py()
+
+
+def test_census_read_schema_is_the_inferred_one(spark, catalog):
+    """The read schema built from the footer census is the schema Spark's
+    mergeSchema read infers, column order included: per partition of s2
+    (turn_idx int32 in all but partition 2, double there) and per snapshot
+    of the others."""
+    for snap in ("s1", "s2", "s3", "s4"):
+        census = _census(spark, catalog, snap)
+        pids = catalog.partition_ids(snap)
+        for group in ([[p] for p in pids] if snap == "s2" else [pids]):
+            assert census_read_schema(census, group) == \
+                catalog.read_snapshot(spark, snap, group).schema, (snap, group)
+    # partitions that disagree on a type have no one read schema
+    census = _census(spark, catalog, "s2")
+    assert census_read_schema(census, pids) is None
+
+
+def test_census_read_schema_falls_back_on_mixed_files(spark, tmp_path):
+    """A partition whose files disagree on a column's arrow type (string
+    in one file, large_string in the other) gets no census schema, so the
+    read merges the footers and still scans both files."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from schema_inference_spark.operators.infer import read_snapshot_tolerant
+    from schema_inference_spark.sources.catalog import SnapshotCatalog
+
+    root = str(tmp_path)
+    os.makedirs(f"{root}/m/bucket=0")
+    for i, t in enumerate((pa.string(), pa.large_string())):
+        pq.write_table(pa.table({"conv_id": pa.array([f"c{i}"], t),
+                                 "turn_idx": [i]}),
+                       f"{root}/m/bucket=0/part-{i}.parquet")
+    with open(f"{root}/m/manifest.json", "w") as f:
+        json.dump({"snapshot_id": "m", "partitions": [
+            {"partition_id": 0, "path": "bucket=0",
+             "files": ["part-0.parquet", "part-1.parquet"], "n_rows": 2}]},
+            f)
+    cat = SnapshotCatalog(root)
+    census = _census(spark, cat, "m")
+    assert census_read_schema(census, [0]) is None
+    df = read_snapshot_tolerant(spark, cat, "m", [0], census)
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("c0", 0, 0), ("c1", 1, 0)]

@@ -46,3 +46,18 @@ def test_session_sized_from_host_memory():
         "6000m", None)
     # unknown host memory: the explicit or old defaults, unclamped
     assert size_session({}, None) == ("32g", "-Xms32g -XX:+AlwaysPreTouch")
+
+
+def test_parallelism_defaults_to_the_cpus_this_process_may_use():
+    import os
+
+    from schema_inference_spark.functions.session import _resolve_parallelism
+    n = len(os.sched_getaffinity(0))
+    # SPARK_GRAFT_CPUS unset: local[N] and N shuffle partitions
+    assert _resolve_parallelism(None, None, {}) == (f"local[{n}]", n)
+    assert _resolve_parallelism(None, None, {"SPARK_GRAFT_CPUS": "3"}) == (
+        "local[3]", 3)
+    # explicit arguments and spark-submit keep their precedence
+    assert _resolve_parallelism("local[2]", 5, {}) == ("local[2]", 5)
+    assert _resolve_parallelism(None, None, {
+        "PYSPARK_GATEWAY_PORT": "46165"}) == (None, n)
