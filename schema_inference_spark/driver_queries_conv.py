@@ -789,9 +789,8 @@ CONV_ORACLES: Dict[str, str] = {
 
 def q_turn_text_diff(spark, sf_dir):
     """Row-level per-turn text-equality diff between two table copies
-    (operators/checks.turn_text_diff) — the localization complement of
-    the aggregate-only reconcile_buckets: one violation row per turn
-    where the copies disagree, exchange carries digests only."""
+    (operators/checks.turn_text_diff): one violation row per turn where
+    the copies disagree, exchange carries digests only."""
     from pyspark.sql import Window as W
 
     from .operators.checks import turn_text_diff

@@ -96,15 +96,6 @@ def maybe(child: Schema) -> Schema:
     return {"type": "maybe", "child": child}
 
 
-def vector_of(child: Schema) -> Schema:
-    return {"type": "vector", "child": child}
-
-
-def fn_schema(inputs: Iterable[Schema], output: Schema) -> Schema:
-    return {"type": "=>", "input": {"type": "cat", "children": list(inputs)},
-            "output": output}
-
-
 def scheme(s_vars: Iterable[str], body: Schema) -> Schema:
     return {"type": "scheme", "s_vars": list(s_vars), "body": body}
 

@@ -958,12 +958,8 @@ def turn_text_diff(left: DataFrame, right: DataFrame,
     ``status`` in {'missing_right', 'missing_left', 'text_mismatch'}
     and each side's text digest for triage.
 
-    This is the row-level complement of ``anomaly.reconcile_checksum``:
-    the checksum reconciliation detects that two copies diverged using
-    a 256-bucket aggregate exchange; this operator localizes the
-    divergence to the exact (conv_id, turn_idx) turns once a bucket
-    mismatches. Run the aggregate first at 100 TB; run this on the
-    (partition-pruned) mismatching slice.
+    It localizes a divergence to the exact (conv_id, turn_idx) turns;
+    at 100 TB, run it on a partition-pruned slice.
 
     Scale shape: each side is reduced to (keys, md5, is_null) BEFORE
     the join, so the full-outer exchange carries 16-byte digests and a

@@ -24,7 +24,7 @@ normalization + k as the dedup family, so the DuckDB oracle shares the
 shingle CTE chain).
 
 ref: no reference counterpart (schema-algebra PoC); training-data
-pipeline scope, same adjudication as dedup/similarity/textstats.
+pipeline scope, same adjudication as dedup/textstats.
 """
 
 from __future__ import annotations

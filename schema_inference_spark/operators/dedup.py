@@ -17,7 +17,6 @@ All Spark-first, no Python in the hot path:
                 all-pairs to chained pairing (linear, still connected).
 - SimHash:      per-bit sign sums over token hashes (explode + one
                 partial+final agg), Hamming-adjacent buckets.
-- embedding:    cosine near-dup pairs (see similarity.py for ANN top-k).
 """
 
 from __future__ import annotations

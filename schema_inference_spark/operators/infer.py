@@ -150,7 +150,7 @@ def keyed_footer_map(spark, items: List[tuple], fn, reduce_fn=None) -> Dict:
 def physical_census(spark, files_by_partition: List[Tuple[int, str]],
                     ) -> Dict[int, Dict[str, Dict[str, Any]]]:
     """Distributed parquet-footer read: [(partition_id, path)] ->
-    {partition_id: {column: {"ir": <IR>, "phys": "<arrow type>"}}}.
+    {partition_id: {column: {"ir": <IR>, "phys": [<arrow type>, ...]}}}.
 
     Runs as a Spark job when the file list is large (10^5+ footers
     parallelize across executors); small manifests are read driver-side in
@@ -204,7 +204,7 @@ def physical_census(spark, files_by_partition: List[Tuple[int, str]],
         cols = {}
         for fld in sch:
             cols[fld.name] = {"ir": arrow_type_to_ir(fld.type),
-                              "phys": str(fld.type), "arrow": fld.type,
+                              "phys": [str(fld.type)], "arrow": fld.type,
                               "rg": rg.get(fld.name)}
         return cols
 
@@ -258,8 +258,7 @@ def _merge_file_cols(a, b):
             out[col] = a[col]
         else:
             merged = merge_column_schema(a[col]["ir"], b[col]["ir"])
-            phys = ",".join(sorted(set(a[col]["phys"].split(","))
-                                   | set(b[col]["phys"].split(","))))
+            phys = sorted(set(a[col]["phys"]) | set(b[col]["phys"]))
             arrow = a[col].get("arrow")
             out[col] = {"ir": merged, "phys": phys,
                         # None: the files disagree on the physical type
@@ -548,7 +547,7 @@ def sql_states_and_sketches(df, census: Dict[int, Dict[str, Dict[str, Any]]],
                 info = census.get(pid, {}).get(c)
                 st["schema"] = (dict(info["ir"]) if info
                                 else {"type": "any"})
-                st["phys"] = [info["phys"]] if info else []
+                st["phys"] = list(info["phys"]) if info else []
                 st["min"] = _json_safe(r[f"{c}__min"])
                 st["max"] = _json_safe(r[f"{c}__max"])
             state[c] = st

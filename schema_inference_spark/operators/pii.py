@@ -11,7 +11,7 @@ identical redacted text.
 
 ref: the reference has no PII surface at all (it is a schema-algebra
 PoC); this operator exists for the training-data pipeline scope, same
-adjudication as dedup/similarity/textstats.
+adjudication as dedup/textstats.
 
 Scale: per-row JVM expressions inside WholeStageCodegen; 100-TB cost is
 exactly one scan with no exchange. Redaction order is fixed

@@ -441,10 +441,9 @@ REPLACEMENT_CHAR = "�"
 
 def text_validity(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
-    """Encoding-corruption verdicts per document: the text-column twin
-    of ``embeddings.embedding_quality`` (value-domain checks the type
-    system cannot see). Catches how transcript text actually rots:
-    NULL payloads, whitespace-only/empty turns from truncated writes,
+    """Encoding-corruption verdicts per document: value-domain checks
+    the type system cannot see. Catches how transcript text actually
+    rots: NULL payloads, whitespace-only/empty turns from truncated writes,
     raw control bytes from terminal capture or binary bleed-through,
     and U+FFFD replacement characters — the scar tissue a lossy
     re-encode leaves behind (mojibake's tombstone).

@@ -520,11 +520,13 @@ def validate(
     # a validated partition that came out clean (and -1, when this run
     # covered every manifest partition) is cleared AFTER the write — a
     # crash in between loses nothing.
+    clear_snapshot_level = (set(pending) == set(all_parts)
+                            and -1 not in counts)
     if (write_violations if write_violations is not None else write_audit):
         if rows:
             catalog.append_violations(rows, snapshot_id)
         cleared = set(pending) - set(counts)
-        if set(pending) == set(all_parts) and -1 not in counts:
+        if clear_snapshot_level:
             cleared.add(-1)
         catalog.clear_violations(snapshot_id, sorted(cleared))
         _mark("persist violations")
@@ -564,7 +566,10 @@ def validate(
     # -- audit append (D19): idempotent per-partition lineage -----------------
     _mark("verdicts")
     if write_audit:
-        catalog.append_audit(verdict_rows, snapshot_id)
+        # a run that cleared the snapshot-level violations drops their
+        # stored -1 verdict in the same write, or latest-wins keeps it
+        catalog.append_audit(verdict_rows, snapshot_id,
+                             drop=[-1] if clear_snapshot_level else ())
         _mark("audit")
 
     return ValidationResult(
@@ -621,10 +626,8 @@ def validate_replica(
     - ``replica_extra_turn``    — the copy has a turn the reference
       never had
 
-    The aggregate-only ``reconcile_checksum`` (operators/anomaly.py)
-    DETECTS divergence with a 256-bucket exchange; this job LOCALIZES
-    it — run this on the mismatching slice (``partitions=...``) after
-    the cheap detector fires, or standalone as a post-migration gate.
+    Run it as a post-migration gate, on the whole snapshot or on a
+    slice (``partitions=...``).
 
     Plan (operators/checks.turn_text_diff): each side reduces map-side
     to (bucket, conv_id, turn_idx, md5, is_null), so the full-outer

@@ -211,11 +211,14 @@ class SnapshotCatalog:
         done = set(self.completed_partitions(spark, snapshot_id))
         return [p for p in self.partition_ids(snapshot_id) if p not in done]
 
-    def append_audit(self, audit: StoreRows, snapshot_id: str) -> None:
+    def append_audit(self, audit: StoreRows, snapshot_id: str,
+                     drop: Sequence[int] = ()) -> None:
         """Merge verdict rows (``AUDIT_SCHEMA``: tuples, an Arrow table or
         a DataFrame) into the snapshot's audit store, latest row per
-        partition winning, as one compacted ``run-<seq>`` file; then
-        delete the files it supersedes. Prod uses Iceberg MERGE."""
+        partition winning, and remove the rows of the partitions in
+        ``drop`` (-1 for the snapshot-level verdict), as one compacted
+        ``run-<seq>`` file; then delete the files it supersedes. Prod
+        uses Iceberg MERGE."""
         new = _table(audit, AUDIT_SCHEMA).drop_columns(["snapshot_id"])
         d = self._audit_dir(snapshot_id)
         os.makedirs(d, exist_ok=True)
@@ -223,6 +226,8 @@ class SnapshotCatalog:
         latest = self._latest_audit(old)
         for row in zip(*(c.to_pylist() for c in new.columns)):
             latest[row[0]] = row
+        for p in drop:
+            latest.pop(int(p), None)
         seq = 1 + max((_run_seq(os.path.basename(f)) or 0 for f in old),
                       default=0)
         _write_atomic(arrow_table([latest[p] for p in sorted(latest)],

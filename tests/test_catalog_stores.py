@@ -207,7 +207,7 @@ def _crash_before_violations(monkeypatch):
 
 
 def _crash_before_audit(monkeypatch):
-    def crash(self, rows, snapshot_id):
+    def crash(self, *args, **kwargs):
         raise Crash("between append_violations and append_audit")
     monkeypatch.setattr(SnapshotCatalog, "append_audit", crash)
 

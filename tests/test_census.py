@@ -21,6 +21,28 @@ def _census(spark, catalog, snap):
     return physical_census(spark, files)
 
 
+def _one_partition_snapshot(root, sid, tables):
+    """Write ``tables`` as the files of partition 0 of snapshot ``sid``
+    (no declared write order) and return its catalog."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from schema_inference_spark.sources.catalog import SnapshotCatalog
+
+    os.makedirs(f"{root}/{sid}/bucket=0")
+    files = [f"part-{i}.parquet" for i in range(len(tables))]
+    for f, t in zip(files, tables):
+        pq.write_table(t, f"{root}/{sid}/bucket=0/{f}")
+    n_rows = sum(t.num_rows for t in tables)
+    with open(f"{root}/{sid}/manifest.json", "w") as fh:
+        json.dump({"snapshot_id": sid, "partitions": [
+            {"partition_id": 0, "path": "bucket=0", "files": files,
+             "n_rows": n_rows}], "n_rows": n_rows}, fh)
+    return SnapshotCatalog(root)
+
+
 def test_census_stats_agree_with_scan(spark, catalog):
     """count/nulls always exact; numeric + timestamp min/max exact; string
     min/max are bounds containing the scan extremes."""
@@ -53,27 +75,12 @@ def test_census_stats_all_null_column(spark, catalog):
 def test_census_rg_merge_across_files(spark, tmp_path):
     """Many-files-per-partition: row-group stats aggregate across a
     partition's files (the 100TB layout)."""
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-
-    from schema_inference_spark.sources.catalog import SnapshotCatalog
     from schema_inference_spark.sources.transcripts import generate_turns
 
-    root = str(tmp_path)
     table = generate_turns(n_conv=20, seed=11)
-    snap = f"{root}/c1"
-    os.makedirs(f"{snap}/bucket=0", exist_ok=True)
     half = table.num_rows // 2
-    pq.write_table(table.slice(0, half), f"{snap}/bucket=0/part-0.parquet")
-    pq.write_table(table.slice(half), f"{snap}/bucket=0/part-1.parquet")
-    with open(f"{snap}/manifest.json", "w") as f:
-        json.dump({"snapshot_id": "c1", "partitions": [
-            {"partition_id": 0, "path": "bucket=0",
-             "files": ["part-0.parquet", "part-1.parquet"],
-             "n_rows": table.num_rows}], "n_rows": table.num_rows}, f)
-    cat = SnapshotCatalog(root)
+    cat = _one_partition_snapshot(str(tmp_path), "c1", [
+        table.slice(0, half), table.slice(half)])
     cs = census_stats(_census(spark, cat, "c1"))
     assert cs["turn_idx"]["count"] == table.num_rows
     import pyarrow.compute as pc
@@ -101,29 +108,44 @@ def test_census_read_schema_falls_back_on_mixed_files(spark, tmp_path):
     """A partition whose files disagree on a column's arrow type (string
     in one file, large_string in the other) gets no census schema, so the
     read merges the footers and still scans both files."""
-    import json
-    import os
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from schema_inference_spark.operators.infer import read_snapshot_tolerant
-    from schema_inference_spark.sources.catalog import SnapshotCatalog
 
-    root = str(tmp_path)
-    os.makedirs(f"{root}/m/bucket=0")
-    for i, t in enumerate((pa.string(), pa.large_string())):
-        pq.write_table(pa.table({"conv_id": pa.array([f"c{i}"], t),
-                                 "turn_idx": [i]}),
-                       f"{root}/m/bucket=0/part-{i}.parquet")
-    with open(f"{root}/m/manifest.json", "w") as f:
-        json.dump({"snapshot_id": "m", "partitions": [
-            {"partition_id": 0, "path": "bucket=0",
-             "files": ["part-0.parquet", "part-1.parquet"], "n_rows": 2}]},
-            f)
-    cat = SnapshotCatalog(root)
+    cat = _one_partition_snapshot(str(tmp_path), "m", [
+        pa.table({"conv_id": pa.array([f"c{i}"], t), "turn_idx": [i]})
+        for i, t in enumerate((pa.string(), pa.large_string()))])
     census = _census(spark, cat, "m")
     assert census_read_schema(census, [0]) is None
     df = read_snapshot_tolerant(spark, cat, "m", [0], census)
     assert sorted(tuple(r) for r in df.collect()) == [
         ("c0", 0, 0), ("c1", 1, 0)]
+
+
+def test_census_phys_of_a_two_file_partition(spark, tmp_path):
+    """A column's census ``phys`` is a list of arrow type strings merged
+    across a partition's files, so a type whose string holds a comma
+    (``timestamp[us, tz=UTC]``) survives the merge, and the partition
+    state validate() stores for a two-file partition equals that of the
+    same rows in one file."""
+    import json
+
+    from schema_inference_spark.pipeline import validate
+    from schema_inference_spark.sources.transcripts import generate_turns
+
+    table = generate_turns(n_conv=20, seed=11)
+    assert str(table.schema.field("ts").type) == "timestamp[us, tz=UTC]"
+    half = table.num_rows // 2
+    _one_partition_snapshot(str(tmp_path), "one", [table])
+    cat = _one_partition_snapshot(str(tmp_path), "two", [
+        table.slice(0, half), table.slice(half)])
+    assert _census(spark, cat, "two")[0]["ts"]["phys"] == [
+        "timestamp[us, tz=UTC]"]
+
+    def state_json(sid):
+        r = validate(spark, cat, sid, write_audit=False)
+        return [v.state_json for v in r.verdicts.collect()]
+
+    one, two = state_json("one"), state_json("two")
+    assert json.loads(two[0])["ts"]["phys"] == ["timestamp[us, tz=UTC]"]
+    assert two == one

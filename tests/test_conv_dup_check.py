@@ -77,8 +77,7 @@ def test_pipeline_conv_dedup_optin(spark, tmp_path):
 def test_validate_replica_localizes_planted_divergence(spark, tmp_path):
     """validate_replica: a migrated copy with one corrupted turn, one
     lost turn, and one fabricated turn yields exactly three violation
-    rows with the right check_ids, keys, and digests — the row-level
-    localization stage behind the aggregate reconcile detector."""
+    rows with the right check_ids, keys, and digests."""
     import pandas as pd
 
     from schema_inference_spark.pipeline import validate_replica

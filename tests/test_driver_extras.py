@@ -1,7 +1,6 @@
 """Oracle gate for the training-data operators, plus recall/property tests
 for the hash-seeded (rows-only) ones."""
 
-import pandas as pd
 import pytest
 
 from schema_inference_spark.driver_queries_extras import EXTRA_ORACLES, EXTRA_QUERIES
@@ -64,212 +63,6 @@ def test_simhash_identical_docs_same_fp(spark):
     assert fp[1] == fp[2]
     pairs = {(r.d1, r.d2): r.hamming for r in simhash_near_pairs(df).collect()}
     assert pairs.get((1, 2)) == 0
-
-
-def test_ann_lsh_subset_of_bruteforce_space(spark, sf_dir):
-    """ANN results are valid neighbors with correct per-bucket ranking and
-    nonzero coverage of the true top-k."""
-    ann = EXTRA_QUERIES["ann_lsh_topk"](spark, sf_dir).collect()
-    assert len(ann) > 0
-    exact = EXTRA_QUERIES["cosine_topk"](spark, sf_dir).collect()
-    exact_pairs = {(r.pid, r.nid) for r in exact}
-    ann_pairs = {(r.pid, r.nid) for r in ann}
-    # recall over the exact top-5: lower bound only (8-bit buckets are coarse)
-    assert len(ann_pairs & exact_pairs) > 0
-
-
-def test_multimodal_decode_stub_raises_without_fake(spark):
-    from schema_inference_spark.operators.multimodal import (
-        attach_payload,
-        decode_features,
-    )
-    df = spark.createDataFrame([(1, "hello")], "doc_id bigint, text string")
-    with pytest.raises(Exception) as e:
-        decode_features(attach_payload(df), fake=False).collect()
-    assert "NotImplementedError" in str(e.value) or "real decode" in str(e.value)
-
-
-def test_multimodal_registered_decoder_real_path(spark):
-    """The PROD seam: a registered per-kind decoder (plain callable,
-    cloudpickled to the workers) drives the REAL (non-fake) path end to
-    end — proving the real-path plumbing executes without PIL/librosa in
-    the container (VERDICT r2 #9)."""
-    import hashlib
-
-    import numpy as np
-
-    from schema_inference_spark.operators.multimodal import (
-        FEATURE_DIM,
-        attach_payload,
-        decode_features,
-    )
-
-    def dec(payload: bytes):
-        h = hashlib.md5(payload).digest()
-        return np.frombuffer((h * 4)[:FEATURE_DIM * 4],
-                             dtype=np.uint8)[:FEATURE_DIM] / 255.0
-
-    df = spark.createDataFrame([(i, f"doc {i}") for i in range(20)],
-                               "doc_id long, text string")
-    decoders = {"image": dec, "audio": dec, "video": dec}
-    out = decode_features(attach_payload(df), fake=False,
-                          decoders=decoders).collect()
-    assert len(out) == 20
-    assert all(len(r.feature) == FEATURE_DIM for r in out)
-    # deterministic and payload-dependent
-    again = decode_features(attach_payload(df), fake=False,
-                            decoders=decoders).collect()
-    assert [r.feature for r in sorted(out, key=lambda r: r.doc_id)] == \
-        [r.feature for r in sorted(again, key=lambda r: r.doc_id)]
-    feats = {tuple(r.feature) for r in out}
-    assert len(feats) == 20
-
-    # a kind with no registered decoder still hits the honest stub
-    with pytest.raises(Exception, match="NotImplementedError|no codec"):
-        decode_features(attach_payload(df), fake=False,
-                        decoders={"image": dec}).collect()
-
-
-def test_multimodal_fake_features_deterministic(spark):
-    from schema_inference_spark.operators.multimodal import (
-        FEATURE_DIM,
-        attach_payload,
-        decode_features,
-    )
-    df = spark.createDataFrame([(i, f"text {i}") for i in range(10)],
-                               "doc_id bigint, text string")
-    a = decode_features(attach_payload(df), fake=True).collect()
-    b = decode_features(attach_payload(df), fake=True).collect()
-    assert sorted(map(str, a)) == sorted(map(str, b))
-    assert all(len(r.feature) == FEATURE_DIM for r in a)
-    assert all(0.0 <= v < 1.0 for r in a for v in r.feature)
-
-
-def test_ivf_topk_recall(spark, sf_dir):
-    """IVF ANN: results rank-consistent within cells, nonzero recall vs
-    brute force, deterministic across runs."""
-    from schema_inference_spark.operators.similarity import ivf_topk
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    probes = list(range(10))
-    a = ivf_topk(df, probes, k=5, nprobe=2)
-    rows = a.collect()
-    assert len(rows) > 0
-    b_rows = ivf_topk(df, probes, k=5, nprobe=2).collect()
-    assert [tuple(r) for r in rows] == [tuple(r) for r in b_rows]
-    exact = {(r.pid, r.nid) for r in
-             EXTRA_QUERIES["cosine_topk"](spark, sf_dir).collect()}
-    got = {(r.pid, r.nid) for r in rows}
-    assert len(got & exact) > 0
-    # nprobe=16 (all cells) must recover the exact top-k entirely
-    full = ivf_topk(df, probes, k=5, nprobe=16)
-    full_pairs = {(r.pid, r.nid) for r in full.collect()}
-    assert exact <= full_pairs
-
-
-def test_ann_against_index_incremental(spark):
-    """Incremental ANN: a new vector identical to an indexed one lands
-    in the same bucket and ranks it first at sim 1.0; appending the
-    probed batch to the index (plain bucketed append) makes it findable
-    by the NEXT ingest — the embedding analog of the near-dup
-    two-ingest cycle."""
-    import numpy as np
-
-    from schema_inference_spark.operators.similarity import (
-        ann_against_index,
-        lsh_blocks,
-        with_lsh_bucket,
-        as_double,
-    )
-    from pyspark.sql import functions as F
-
-    rng = np.random.default_rng(7)
-    dim = 8
-    corpus_rows = [(i, [float(x) for x in rng.standard_normal(dim)])
-                   for i in range(20)]
-    corpus = spark.createDataFrame(corpus_rows,
-                                   "vec_id bigint, embedding array<float>")
-    index, _ = lsh_blocks(corpus, [], dim=dim)
-
-    # batch A: an exact copy of vector 3 under a new id + one random
-    batch_a = spark.createDataFrame(
-        [(100, corpus_rows[3][1]),
-         (101, [float(x) for x in rng.standard_normal(dim)])],
-        "vec_id bigint, embedding array<float>")
-    rep = ann_against_index(batch_a, index, k=3, dim=dim).collect()
-    top_100 = [r for r in rep if r.pid == 100 and r.rank == 1]
-    assert top_100 and top_100[0].nid == 3 and top_100[0].sim == 1.0
-
-    # append batch A to the index (bucketed append, no rewrite), then
-    # batch B finds an A-vector
-    a_blocks = (with_lsh_bucket(batch_a, dim)
-                .select(F.col("vec_id").alias("nid"), "lsh_bucket",
-                        as_double(F.col("embedding")).alias("nvec")))
-    index2 = index.unionByName(a_blocks)
-    batch_b = spark.createDataFrame(
-        [(200, corpus_rows[3][1])], "vec_id bigint, embedding array<float>")
-    rep_b = ann_against_index(batch_b, index2, k=3, dim=dim).collect()
-    hits = {r.nid for r in rep_b if r.sim == 1.0}
-    assert hits == {3, 100}   # the original AND the batch-A copy
-
-    # determinism
-    again = ann_against_index(batch_b, index2, k=3, dim=dim).collect()
-    assert sorted(map(tuple, rep_b)) == sorted(map(tuple, again))
-
-
-def test_multimodal_builtin_real_decoders_end_to_end(spark):
-    """The REAL decode branch (fake=False, NO registered decoders)
-    executes in-container on dependency-free formats: binary PPM images
-    and PCM16 WAV audio, magic-sniffed in _real_decode (VERDICT r3 #7).
-    Features must equal a local numpy decode of the identical payloads."""
-    import numpy as np
-
-    from schema_inference_spark.operators.multimodal import (
-        FEATURE_DIM,
-        decode_features,
-        decode_ppm,
-        decode_wav,
-        synth_ppm,
-        synth_wav,
-    )
-
-    rows = []
-    for i in range(12):
-        if i % 2 == 0:
-            p = synth_ppm(seed=i, w=10 + i, h=7 + i,
-                          maxval=65535 if i % 4 == 0 else 255)
-            rows.append((i, bytearray(p), "image", len(p)))
-        else:
-            p = synth_wav(seed=i, n_frames=500 + 40 * i,
-                          channels=2 if i % 3 == 0 else 1)
-            rows.append((i, bytearray(p), "audio", len(p)))
-    df = spark.createDataFrame(
-        rows, "doc_id bigint, payload binary, kind string, n_bytes bigint")
-    out = {r.doc_id: r.feature
-           for r in decode_features(df, fake=False).collect()}
-    assert len(out) == 12
-    for i, p, kind, _ in rows:
-        expect = (decode_ppm(bytes(p)) if kind == "image"
-                  else decode_wav(bytes(p)))
-        assert np.allclose(out[i], expect, atol=1e-6), i
-        assert len(out[i]) == FEATURE_DIM
-        assert all(0.0 <= v <= 1.0 for v in out[i]), i
-
-    # decoder unit semantics: flat image -> constant blocks; silence -> 0
-    flat = b"P5\n2 2\n255\n" + bytes([128, 128, 128, 128])
-    assert np.allclose(decode_ppm(flat), 128 / 255.0)
-    silence = synth_wav(seed=0, n_frames=64)
-    silent = silence[:silence.index(b"data") + 8] + b"\x00" * 128
-    silent = silent[:4] + (len(silent) - 8).to_bytes(4, "little") + silent[8:]
-    assert np.allclose(decode_wav(silent), 0.0)
-
-    # malformed payloads are data errors the caller sees, not silence
-    with pytest.raises(ValueError, match="truncated"):
-        decode_ppm(b"P6\n100 100\n255\n" + b"\x00" * 10)
-    with pytest.raises(ValueError, match="PCM16 only"):
-        bad = bytearray(synth_wav(seed=1))
-        fmt_at = bytes(bad).index(b"fmt ") + 8
-        bad[fmt_at + 14:fmt_at + 16] = (8).to_bytes(2, "little")
-        decode_wav(bytes(bad))
 
 
 def test_dedup_incremental_semantics(spark):

@@ -10,7 +10,7 @@ import pytest
 from schema_inference_spark.driver_queries import CORE_ORACLES, CORE_QUERIES
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+          "lineitem", "events", "documents"]
 
 
 def duck_conn(sf_dir):

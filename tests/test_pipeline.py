@@ -3,6 +3,7 @@
 """
 
 import json
+import os
 
 import pytest
 
@@ -582,6 +583,27 @@ def test_violation_store_is_a_per_partition_replace(spark, fixture_root,
     assert not [x for x in stored if x["partition_id"] == -1]
     assert stored == [x.asDict() for x in r.violations.collect()]
     assert -1 not in {v.partition_id for v in r.verdicts.collect()}
+
+
+def test_audit_drops_stale_snapshot_level_verdict(spark, fixture_root, r1):
+    """A run that clears the snapshot-level violations also drops their
+    -1 audit verdict, in the same compacted audit file: a resubmit after
+    a drift run and a full run without a baseline reports no -1 verdict,
+    matching the violation store."""
+    base = baseline_from_result(r1)["sketches"]
+    cat = _stores(fixture_root, "stale_minus_one")
+    first = validate(spark, cat, "s4", baseline_sketches=base,
+                     write_audit=True)
+    assert ("s4", -1, "fail") in {(v.snapshot_id, v.partition_id, v.verdict)
+                                  for v in first.verdicts.collect()}
+    validate(spark, cat, "s4", resume=False, write_audit=True)
+    again = validate(spark, cat, "s4", write_audit=True)
+    assert again.check_path == "none"
+    assert cat.read_violations(spark, "s4", partitions=[-1]).count() == 0
+    verdicts = again.verdicts.collect()
+    assert -1 not in {v.partition_id for v in verdicts}
+    assert {v.partition_id for v in verdicts} == set(cat.partition_ids("s4"))
+    assert len(os.listdir(f"{cat.audit_root}/snapshot_id=s4")) == 1
 
 
 def test_clustered_drift_matches_fused(spark, catalog, r1):

@@ -10,12 +10,6 @@ import os
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "schema_inference_spark"
 
-# Modules only their own tests import. Its driver queries were retired
-# with driver_queries_anomaly.py; this set may only shrink, and an entry
-# leaves it when the module is deleted or wired to an entry point.
-KNOWN_UNREACHED = ["schema_inference_spark/operators/embeddings.py"]
-
-
 def _path(mod):
     base = os.path.join(ROOT, *mod.split("."))
     for p in (os.path.join(base, "__init__.py"), base + ".py"):
@@ -58,4 +52,4 @@ def test_every_package_module_is_reachable():
              for d, _, files in os.walk(os.path.join(ROOT, PKG))
              for f in files if f.endswith(".py")}
     unreached = sorted(os.path.relpath(p, ROOT) for p in every - reached)
-    assert unreached == KNOWN_UNREACHED
+    assert unreached == []
