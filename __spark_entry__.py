@@ -27,10 +27,6 @@ from schema_inference_spark.driver_queries_extras import (  # noqa: E402
     EXTRA_ORACLES,
     EXTRA_QUERIES,
 )
-from schema_inference_spark.driver_queries_mix import (  # noqa: E402
-    MIX_ORACLES,
-    MIX_QUERIES,
-)
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -61,8 +57,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {**CORE_QUERIES, **EXTRA_QUERIES, **CONV_QUERIES, **MIX_QUERIES}
+    return {**CORE_QUERIES, **EXTRA_QUERIES, **CONV_QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {**CORE_ORACLES, **EXTRA_ORACLES, **CONV_ORACLES, **MIX_ORACLES}
+    return {**CORE_ORACLES, **EXTRA_ORACLES, **CONV_ORACLES}

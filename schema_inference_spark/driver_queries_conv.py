@@ -499,98 +499,6 @@ ORDER BY user_id
 """
 
 
-def q_json_census(spark, sf_dir):
-    """Per-key typed census of the semi-structured `props` payload —
-    the schema-inference engine pointed at the one UNdeclared column."""
-    from .operators.semistructured import json_key_census
-    ev = _t(spark, sf_dir, "events")
-    return json_key_census(ev, "props").orderBy("key")
-
-
-SQL_JSON_CENSUS = """
-WITH e AS (
-  SELECT props FROM events
-  WHERE props IS NOT NULL
-    AND coalesce(CASE WHEN json_valid(props)
-                      THEN json_type(props) END, '') = 'OBJECT'
-), x AS (
-  SELECT props, unnest(json_keys(props)) AS key FROM e
-), v AS (
-  SELECT key, json_extract_string(props, '$.' || key) AS val FROM x
-), t AS (
-  SELECT key, CASE WHEN regexp_matches(val, '^-?[0-9]+$')
-                   THEN CAST(val AS BIGINT) END AS iv
-  FROM v
-)
-SELECT key, count(*) AS n_present, count(iv) AS n_int,
-       min(iv) AS min_int, max(iv) AS max_int
-FROM t GROUP BY key ORDER BY key
-"""
-
-
-def q_json_validity(spark, sf_dir):
-    """One-row object-validity summary of `props` (text_validity's
-    semi-structured sibling)."""
-    from .operators.semistructured import json_validity
-    ev = _t(spark, sf_dir, "events")
-    return json_validity(ev, "props")
-
-
-SQL_JSON_VALIDITY = """
-SELECT count(*) AS n_rows, count(props) AS n_present,
-       sum(CASE WHEN props IS NOT NULL
-                AND coalesce(CASE WHEN json_valid(props)
-                                  THEN json_type(props) END, '')
-                    <> 'OBJECT'
-                THEN 1 ELSE 0 END) AS n_invalid
-FROM events
-"""
-
-
-def q_json_schema_drift(spark, sf_dir):
-    """Payload schema evolution between the corpus's two time-halves:
-    per-key added/dropped/type_shift verdicts — the schema-inference
-    unify step lifted across time."""
-    from .operators.semistructured import json_schema_drift
-    ev = _t(spark, sf_dir, "events")
-    return json_schema_drift(ev, "props", "ts").orderBy("key")
-
-
-SQL_JSON_SCHEMA_DRIFT = """
-WITH e AS (
-  SELECT props, epoch_us(ts) AS us FROM events
-  WHERE props IS NOT NULL
-    AND coalesce(CASE WHEN json_valid(props)
-                      THEN json_type(props) END, '') = 'OBJECT'
-), m AS (
-  SELECT CAST(floor((min(us) + max(us)) / 2.0) AS BIGINT) AS mid FROM e
-), x AS (
-  SELECT props, us < mid AS early, unnest(json_keys(props)) AS key
-  FROM e, m
-), v AS (
-  SELECT key, early,
-         CASE WHEN regexp_matches(
-                  json_extract_string(props, '$.' || key), '^-?[0-9]+$')
-              THEN 1 ELSE 0 END AS is_int
-  FROM x
-), h AS (
-  SELECT key,
-         sum(CASE WHEN early THEN 1 ELSE 0 END) AS n_early,
-         sum(CASE WHEN early THEN is_int ELSE 0 END) AS n_int_early,
-         sum(CASE WHEN NOT early THEN 1 ELSE 0 END) AS n_late,
-         sum(CASE WHEN NOT early THEN is_int ELSE 0 END) AS n_int_late
-  FROM v GROUP BY key
-)
-SELECT key, n_early, n_int_early, n_late, n_int_late,
-       CASE WHEN n_early = 0 THEN 'added'
-            WHEN n_late = 0 THEN 'dropped'
-            WHEN (n_int_early = n_early) <> (n_int_late = n_late)
-                 THEN 'type_shift'
-            ELSE 'ok' END AS verdict
-FROM h ORDER BY key
-"""
-
-
 SESSION_GAP_US = 86_400_000_000   # 24h inactivity gap, exact micros
 # (the synthetic feed's inter-event gap averages ~12h per user, so a
 # day gap yields real multi-event windows; 60 / 431 containment
@@ -743,9 +651,6 @@ CONV_QUERIES: Dict[str, Callable] = {
     "conv_completeness": q_conv_completeness,
     "stuck_loops": q_stuck_loops,
     "context_overflow": q_context_overflow,
-    "json_census": q_json_census,
-    "json_validity": q_json_validity,
-    "json_schema_drift": q_json_schema_drift,
     "interval_join": q_interval_join,
 }
 
@@ -764,9 +669,6 @@ CONV_ORACLES: Dict[str, str] = {
     "conv_completeness": SQL_CONV_COMPLETENESS,
     "stuck_loops": SQL_STUCK_LOOPS,
     "context_overflow": SQL_CONTEXT_OVERFLOW,
-    "json_census": SQL_JSON_CENSUS,
-    "json_validity": SQL_JSON_VALIDITY,
-    "json_schema_drift": SQL_JSON_SCHEMA_DRIFT,
     "interval_join": SQL_INTERVAL_JOIN,
 }
 

@@ -80,49 +80,42 @@ def host_memory_mb() -> int | None:
 
 
 def size_session(env: Mapping[str, str],
-                 host_mb: int | None) -> tuple[str, str | None]:
-    """(spark.driver.memory, driver extraJavaOptions or None) for a host
+                 host_mb: int | None) -> tuple[str, str]:
+    """(spark.driver.memory, driver extraJavaOptions) for a host
     with ``host_mb`` MiB available (None: unknown).
 
     The default heap is ``HEAP_SHARE`` of the host, capped at 32g. An
-    explicit ``SPARK_GRAFT_DRIVER_MEM`` is used as given. The initial heap
-    (``SPARK_GRAFT_XMS``, default: the heap) is clamped to the same
-    budget, and the heap is pre-touched only when both fit in it: a heap
-    the host cannot back makes the JVM die at start under
-    ``-XX:+AlwaysPreTouch``.
+    explicit ``SPARK_GRAFT_DRIVER_MEM`` is used as given. The heap is
+    pre-sized (``-Xms``) and pre-touched when it fits in the same budget;
+    otherwise ``-Xms`` is clamped to the budget and nothing is
+    pre-touched: a heap the host cannot back makes the JVM die at start
+    under ``-XX:+AlwaysPreTouch``.
     """
     budget = (None if host_mb is None
               else min(int(host_mb * HEAP_SHARE), MAX_DEFAULT_HEAP_MB))
     heap = env.get("SPARK_GRAFT_DRIVER_MEM") or (
         "32g" if budget is None else f"{budget}m")
-    if env.get("SPARK_GRAFT_PRETOUCH", "1") == "0":
-        return heap, None
-    xms = env.get("SPARK_GRAFT_XMS", heap)
-    if budget is None or (_mem_mb(heap) <= budget
-                          and _mem_mb(xms) <= budget):
-        return heap, f"-Xms{xms} -XX:+AlwaysPreTouch"
-    return heap, f"-Xms{min(int(_mem_mb(xms)), budget)}m"
+    if budget is None or _mem_mb(heap) <= budget:
+        return heap, f"-Xms{heap} -XX:+AlwaysPreTouch"
+    return heap, f"-Xms{budget}m"
 
 
 def get_spark(app_name: str = "schema-inference-spark",
               master: str | None = None,
-              shuffle_partitions: int | None = None,
-              max_partition_bytes: str | None = None) -> SparkSession:
+              shuffle_partitions: int | None = None) -> SparkSession:
     """local[N] by default, with N shuffle partitions: N is
     ``$SPARK_GRAFT_CPUS``, or the CPUs this process may run on
     (``os.sched_getaffinity``) when that is unset. AQE on (coalesce +
     skew-join, SURVEY.md §2.D18); Arrow on for every pandas/Arrow UDF
     boundary.
-
-    max_partition_bytes: local-mode inputs are small relative to the 128MB
-    default, which starves the scan of splits (a 650MB snapshot = 6 tasks
-    regardless of cores). 16MB keeps local scans parallel; prod clusters
-    keep the default.
     """
     master, shuffle = _resolve_parallelism(master, shuffle_partitions,
                                            os.environ)
-    mpb = max_partition_bytes or os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
+    # local-mode inputs are small relative to the 128MB default, which
+    # starves the scan of splits (a 650MB snapshot = 6 tasks regardless
+    # of cores); 16MB keeps local scans parallel, prod clusters keep the
+    # default
+    mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
     driver_mem, java_opts = size_session(os.environ, host_memory_mb())
     builder = (
         SparkSession.builder.appName(app_name)
@@ -155,12 +148,10 @@ def get_spark(app_name: str = "schema-inference-spark",
     # cluster executor pays this once at executor launch and never per
     # query, which is exactly what the flag reproduces locally (guide
     # §5: memory behavior belongs to process lifecycle, not to the
-    # queries that happen to run first). size_session() keeps both the
-    # heap and the pre-touch within what the host can back; opt out via
-    # env. No effect under spark-submit (the JVM is already up, Spark
-    # ignores driver extraJavaOptions then).
-    if java_opts is not None:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
+    # queries that happen to run first). size_session() pre-touches only
+    # a heap the host can back. No effect under spark-submit (the JVM is
+    # already up, Spark ignores driver extraJavaOptions then).
+    builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     if master is not None:
         builder = builder.master(master)
     return builder.getOrCreate()

@@ -46,14 +46,6 @@ Subs = Dict[str, Schema]
 # Ground types (ref: impl/ground.clj)
 # ---------------------------------------------------------------------------
 
-# Canonical ground names. Integer widths collapse to one engine int
-# (ref: ground.clj:18-21 maps byte/short/int/long -> int?).
-CANONICAL_GROUNDS = {
-    "boolean", "int", "float", "double", "string", "char", "keyword",
-    "symbol", "bytes", "uuid", "timestamp", "date", "decimal", "nil",
-    "any", "var",
-}
-
 _GROUND_ALIASES = {
     # integer widths collapse (ground.clj:18-21)
     "byte": "int", "short": "int", "integer": "int", "long": "int",

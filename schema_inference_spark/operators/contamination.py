@@ -74,43 +74,3 @@ def contamination_pairs(docs: DataFrame, bench: DataFrame,
                        "containment_bp")
             .transform(lambda d: ordered_output(d, "doc_id", "bench_id")))
 
-
-def decontaminate_summary(docs: DataFrame, bench: DataFrame,
-                          threshold: float = 0.5, k: int = 3,
-                          id_col: str = "doc_id",
-                          source_col: str = "source",
-                          text_col: str = "text") -> DataFrame:
-    """The decision stage after ``contamination_pairs``: per source, how
-    many documents are contaminated (>= ``threshold`` containment of ANY
-    bench item) and what survives decontamination — (source, n_docs,
-    n_contaminated, n_kept, tokens_kept). This is the audit a pipeline
-    ships with a decontaminated corpus: the drop counts AND the token
-    mass that remains for training.
-
-    Scale shape: the pair stage keeps its asymmetric broadcast-join form
-    (corpus scanned once, never shuffled); the contaminated-id set is
-    sparse (only docs sharing shingles with some bench item), distinct-ed
-    on the doc key, and LEFT-joined back to a per-doc token projection;
-    the rollup is a partial-aggregated groupBy on the low-cardinality
-    source key. No stage materializes anything corpus-sized besides the
-    scan itself."""
-    from .textstats import _tokens
-
-    dirty = (contamination_pairs(docs, bench, threshold, k, id_col=id_col,
-                                 text_col=text_col)
-             .select(F.col("doc_id").alias(id_col)).distinct()
-             .withColumn("_dirty", F.lit(True)))
-    per_doc = docs.select(
-        F.col(id_col), F.col(source_col),
-        F.size(_tokens(F.col(text_col))).cast("bigint").alias("_ws"))
-    flagged = per_doc.join(dirty, id_col, "left")
-    hit = F.col("_dirty").isNotNull()
-    return (flagged.groupBy(F.col(source_col).alias("source"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                 F.sum(F.when(hit, 1).otherwise(0)).cast("bigint")
-                 .alias("n_contaminated"),
-                 F.sum(F.when(hit, 0).otherwise(1)).cast("bigint")
-                 .alias("n_kept"),
-                 F.sum(F.when(hit, F.lit(0)).otherwise(F.col("_ws")))
-                 .cast("bigint").alias("tokens_kept"))
-            .orderBy("source"))

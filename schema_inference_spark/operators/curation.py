@@ -114,10 +114,7 @@ def token_budget_sample(df: DataFrame, budgets: DataFrame,
     token_budget).
 
     Scale: the running sum is a per-source window — fine up to sources
-    of ~10^7 docs; for a mega-source the window serializes on one task.
-    Use ``token_budget_sample_bucketed`` (below) there: identical
-    outputs (identity-tested), windows bounded by (source, hash-rank
-    bucket), no giant window partition."""
+    of ~10^7 docs; for a mega-source the window serializes on one task."""
     t = F.col(text_col)
     base = df.select(
         F.col(id_col), F.col(source_col),
@@ -302,189 +299,3 @@ def curation_summary_incremental(new_df: DataFrame, index: DataFrame,
                          lang_keep, quality_min_bp, ratio_min_bp)
     return _summarize(verdict, source_col)
 
-
-# md5-hex range boundaries for the deterministic corpus split: the first
-# two hex chars order lexicographically exactly as their numeric value
-# (digits sort before 'a'-'f' in ASCII), so a string range compare IS a
-# 256-bucket numeric compare — and every engine with md5 draws the same
-# boundary. 0x00-0xbf train (75.0%), 0xc0-0xdf val (12.5%), 0xe0- test.
-SPLIT_BOUNDS = (("train", "c0"), ("val", "e0"))
-
-
-def split_columns(id_col: str = "doc_id", salt: str = "v1") -> tuple:
-    """The (bucket, split) column pair as pure expressions — ONE
-    definition shared by ``split_assign`` and ``split_leakage``, so
-    the two can never drift."""
-    h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
-    bucket = F.substring(h, 1, 2)
-    split = F.lit("test")
-    for name, bound in reversed(SPLIT_BOUNDS):
-        split = F.when(bucket < bound, F.lit(name)).otherwise(split)
-    return bucket, split
-
-
-def split_assign(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", source_col: str = "source",
-                 salt: str = "v1") -> DataFrame:
-    """Deterministic train/val/test assignment: each document lands in
-    the split chosen by the first byte of md5(id:salt) — reproducible
-    across engines, runs, and months (the holdout contract: a doc NEVER
-    migrates between splits unless the salt changes), and independent of
-    corpus order or size (appending documents never reshuffles existing
-    assignments, unlike a row_number % 8 split). Returns
-    (doc_id, source, bucket, split, ws_tokens).
-
-    Scale shape: pure per-row column expressions — one scan, ZERO
-    shuffle (no orderBy here: presentation sorts belong to callers, and
-    an exchange-free frame composes into ``split_balance`` without a
-    wasted pre-aggregation sort; pinned by
-    test_split_assign_plan_no_exchange), whole-stage codegen end to
-    end; the split is a function of the id alone, so it needs no global
-    state at any corpus size."""
-    bucket, split = split_columns(id_col, salt)
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(source_col).alias("source"),
-        bucket.alias("bucket"), split.alias("split"),
-        F.size(_tokens(F.col(text_col))).cast("bigint").alias("ws_tokens"))
-
-
-def split_balance(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", source_col: str = "source",
-                  salt: str = "v1") -> DataFrame:
-    """Audit rollup of ``split_assign``: per split, document and token
-    counts plus integer basis-point shares of the corpus — the check a
-    pipeline runs before training to confirm the holdout actually holds
-    ~12.5%. (share_bp sums to <= 10000; remainder is floor-division
-    dust.) The global total enters via a window over the ALREADY
-    AGGREGATED <= 256-row split frame, never over the corpus."""
-    agg = (split_assign(df, id_col, text_col, source_col, salt)
-           .groupBy("split")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("ws_tokens").cast("bigint").alias("ws_tokens")))
-    return (agg
-            .withColumn("share_bp", F.expr(
-                "(10000 * n_docs) div sum(n_docs) over ()").cast("bigint"))
-            .withColumn("token_share_bp", F.expr(
-                "(10000 * ws_tokens) div sum(ws_tokens) over ()")
-                .cast("bigint"))
-            .orderBy("split"))
-
-
-def mixture_plan(df: DataFrame, weights: DataFrame, token_budget: int,
-                 id_col: str = "doc_id", text_col: str = "text",
-                 source_col: str = "source") -> DataFrame:
-    """Epoch/repeat planning for a target data mixture: given per-source
-    target weights (basis points of ``token_budget``) and the tokens
-    actually available per source, compute how many passes over each
-    source the training run needs — ``epochs_x100 = ceil(100 *
-    tokens_needed / tokens_available)`` (fixed-point hundredths; > 100
-    means the source must repeat, the up-sampling a weighted mixture
-    forces on small sources). The planning complement of
-    ``token_budget_sample``, which executes a plan's single-epoch
-    prefix. Returns (source, tokens_available, target_weight_bp,
-    tokens_needed, epochs_x100, oversampled).
-
-    Integer-exact throughout (ceil division via ``(a + b - 1) div b``).
-    Scale shape: ONE per-source token aggregate over the corpus (map
-    -side partials on the low-cardinality source key), then arithmetic
-    on the broadcast-joined weights frame — rollup-sized, no second
-    scan."""
-    avail = (df.groupBy(F.col(source_col).alias("source"))
-             .agg(F.sum(F.size(_tokens(F.col(text_col))).cast("bigint"))
-                  .alias("tokens_available")))
-    out = (avail.join(F.broadcast(
-        weights.select(F.col(source_col).alias("source"),
-                       F.col("weight_bp").cast("bigint")
-                       .alias("target_weight_bp"))), "source")
-        .withColumn("tokens_needed", F.expr(
-            f"({token_budget} * target_weight_bp) div 10000")
-            .cast("bigint"))
-        .withColumn("epochs_x100", F.when(
-            F.col("tokens_available") > 0,
-            F.expr("(100 * tokens_needed + tokens_available - 1) "
-                   "div tokens_available")).cast("bigint"))
-        .withColumn("oversampled", F.col("epochs_x100") > 100))
-    return out.orderBy("source")
-
-
-def split_leakage(pairs: DataFrame, d1: str = "d1", d2: str = "d2",
-                  salt: str = "v1") -> DataFrame:
-    """Holdout-leak audit: near-duplicate pairs whose members land in
-    DIFFERENT splits — the eval-contamination a dedup-unaware split
-    ships (a test document whose near-twin sits in train leaks the
-    answer). Feed it any pair frame (exact-Jaccard, MinHash-verified,
-    simhash): pairs straddling a split boundary come back with both
-    split labels; same-split pairs (handled by ordinary within-split
-    dedup) are dropped.
-
-    Because ``split_assign``'s split is a pure function of the id, the
-    splits are COMPUTED here via the shared ``split_columns``
-    expressions — zero joins, zero extra scans, a projection+filter on
-    the (sparse) pair list; the audit costs nothing beyond the pair
-    graph it consumes at any corpus size."""
-    _, s1 = split_columns(d1, salt)
-    _, s2 = split_columns(d2, salt)
-    return (pairs.withColumn("split1", s1).withColumn("split2", s2)
-            .filter(F.col("split1") != F.col("split2"))
-            .orderBy(d1, d2))
-
-
-def token_budget_sample_bucketed(df: DataFrame, budgets: DataFrame,
-                                 id_col: str = "doc_id",
-                                 text_col: str = "text",
-                                 source_col: str = "source",
-                                 hex_chars: int = 1) -> DataFrame:
-    """The mega-source scale path ``token_budget_sample``'s docstring
-    promises, with IDENTICAL outputs (asserted row-for-row in tests):
-    rows bucket by the first ``hex_chars`` of their md5 order key (a
-    string-prefix bucket is order-aligned with the full-hash sort, so
-    bucket order == scan order), per-(source, bucket) token/row totals
-    collect to the driver (16^hex_chars rows per source), prefix-sum
-    there, and broadcast back as literal offset maps. Each row's global
-    inclusive cum_tokens / mix_rank = bucket offset + a WITHIN-BUCKET
-    window — every window partition is (source, bucket)-sized, 16x
-    (or 256x at hex_chars=2) smaller than the per-source window that
-    serializes a 10^7-doc source on one task; buckets lying entirely
-    past the budget cutoff are dropped BEFORE the window runs."""
-    t = F.col(text_col)
-    base = df.select(
-        F.col(id_col), F.col(source_col),
-        F.size(_tokens(t)).cast("bigint").alias("ws_tokens"),
-        F.md5(F.col(id_col).cast("string")).alias("_h"))
-    bkt = F.substring("_h", 1, hex_chars)
-    base = base.withColumn("_bkt", bkt)
-    stats = (base.groupBy(source_col, "_bkt")
-             .agg(F.sum("ws_tokens").alias("_t"),
-                  F.count(F.lit(1)).alias("_n"))
-             .collect())
-    per_source: dict = {}
-    for r in stats:
-        per_source.setdefault(r[source_col], []).append(
-            (r["_bkt"], int(r["_t"]), int(r["_n"])))
-    tok_off, rank_off = {}, {}
-    for src, lst in per_source.items():
-        t_acc = n_acc = 0
-        for b, tsum, n in sorted(lst):
-            tok_off[f"{src}:{b}"] = t_acc
-            rank_off[f"{src}:{b}"] = n_acc
-            t_acc += tsum
-            n_acc += n
-    mk_map = lambda d: F.create_map(  # noqa: E731
-        *[F.lit(x) for kv in sorted(d.items()) for x in kv])
-    key = F.concat(F.col(source_col), F.lit(":"), F.col("_bkt"))
-    from pyspark.sql import Window
-    w = Window.partitionBy(source_col, "_bkt").orderBy("_h", id_col)
-    joined = (base.join(F.broadcast(budgets), source_col)
-              .withColumn("_toff", mk_map(tok_off)[key])
-              .withColumn("_roff", mk_map(rank_off)[key])
-              # buckets entirely past the cutoff never reach the window
-              .filter(F.col("_toff") < F.col("token_budget")))
-    ranked = (joined
-              .withColumn("cum_tokens",
-                          F.col("_toff") + F.sum("ws_tokens").over(w))
-              .withColumn("mix_rank",
-                          F.col("_roff") + F.row_number().over(w)))
-    return (ranked.filter(F.col("cum_tokens") <= F.col("token_budget"))
-            .select(id_col, F.col(source_col).alias("source"),
-                    "ws_tokens", "cum_tokens", "mix_rank", "token_budget")
-            .orderBy("source", "mix_rank"))

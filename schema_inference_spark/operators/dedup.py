@@ -1268,38 +1268,3 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
     return simhash_pairs_from_fp(simhash(df, id_col, text_col, bits),
                                  bits, max_hamming)
 
-
-def hot_segments(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", seg_words: int = 10,
-                 min_docs: int = 2, k: int = 50) -> DataFrame:
-    """Boilerplate discovery: the top-k fixed-width segments by the
-    number of DISTINCT documents containing them (plus total occurrence
-    count) — the survey a pipeline runs before segment-level dedup to
-    see WHAT the repeated boilerplate actually is (headers, footers,
-    license blocks) and calibrate ``seg_words``/policy. Shares the
-    ``_segments`` projection with ``segment_dedup``, so "segment" means
-    exactly what the dedup pass will deduplicate.
-
-    Returns (rank, seg, n_docs, n_occurrences), tiebreak (n_docs desc,
-    n_occurrences desc, seg asc). Scale shape: one partial+final
-    aggregate on the segment key (map-side combine absorbs hot
-    boilerplate before the exchange — counting distinct docs goes
-    through a (seg, doc) pre-aggregate, bounded by the corpus's
-    distinct pairs, not raw occurrences); top-k is
-    TakeOrderedAndProject; the rank window runs after limit(k)."""
-    segs = _segments(df, id_col, text_col, seg_words)
-    per_doc = (segs.groupBy("seg", F.col(id_col))
-               .agg(F.count(F.lit(1)).alias("_n")))
-    agg = (per_doc.groupBy("seg")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("_n").cast("bigint").alias("n_occurrences"))
-           .filter(F.col("n_docs") >= min_docs))
-    ranked = (agg.orderBy(F.col("n_docs").desc(),
-                          F.col("n_occurrences").desc(), F.col("seg"))
-              .limit(k))
-    from pyspark.sql import Window
-    w = Window.orderBy(F.col("n_docs").desc(),
-                       F.col("n_occurrences").desc(), F.col("seg"))
-    return (ranked.withColumn("rank", F.row_number().over(w))
-            .select("rank", "seg", "n_docs", "n_occurrences")
-            .orderBy("rank"))

@@ -11,10 +11,8 @@ Both are pure built-in-function plans (no Python in the hot path):
 - stratified_sample: deterministic per-stratum top-k by a content hash
   (md5 — chosen because the oracle engine computes the identical digest,
   so the sample is reproducible ACROSS engines, not just across runs).
-  Scale note: rank-by-hash within a stratum is a per-key window; for
-  strata of 10^9+ rows use ``hash_sample`` (below) — the fraction-
-  threshold form of the same hash order: a pure filter, no sort, no
-  shuffle, at the cost of a Binomial rather than exact-k kept count.
+  Scale note: rank-by-hash within a stratum is a per-key window, so a
+  stratum of 10^9+ rows sorts on one task.
 """
 
 from __future__ import annotations
@@ -55,123 +53,3 @@ def stratified_sample(df: DataFrame, stratum_col: str, id_col: str,
             .withColumn("sample_rank", F.row_number().over(w))
             .filter(F.col("sample_rank") <= k))
 
-
-def funnel(df: DataFrame, steps: list, user_col: str = "user_id",
-           ts_col: str = "ts", type_col: str = "event_type",
-           within_seconds: int | None = None) -> DataFrame:
-    """Ordered-funnel completion over an event stream: a user reaches
-    step i when they have an event of type ``steps[i]`` at-or-after
-    their step i-1 completion time (min-timestamp cascade — the
-    deterministic funnel definition: every step time is a min over a
-    well-defined set, so timestamp ties never change the answer, unlike
-    row_number-sequenced funnels). ``within_seconds`` bounds each
-    step-to-step conversion (the standard attribution window: a click
-    seven weeks after the view doesn't convert) — the bound applies per
-    STEP, inclusive, against the previous step's completion time.
-    Returns ONE row per step:
-    (step_idx, step, n_users, conv_prev_bp, conv_first_bp) with integer
-    basis-point conversions.
-
-    Plan shape: each stage is a filtered scan of ``df`` (the type
-    predicate pushes to the source) aggregated per user, joined to the
-    previous stage's per-user completion-time frame — the joined sides
-    are both per-user aggregates, so at 10^12 events the exchanges
-    carry one row per funnel-surviving user, never raw events, and AQE
-    broadcasts the (monotonically shrinking) prior-stage frame when it
-    fits. The final output is a constant ``len(steps)`` rows stacked
-    from one single-row count aggregate."""
-    if len(steps) < 2:
-        raise ValueError("funnel needs >= 2 steps")
-    u = (df.filter(F.col(type_col) == steps[0])
-         .groupBy(user_col).agg(F.min(ts_col).alias("t1")))
-    for i, s in enumerate(steps[1:], start=2):
-        cond = F.col(ts_col) >= F.col(f"t{i-1}")
-        if within_seconds is not None:
-            # interval arithmetic, not an epoch-double cast: works for
-            # TIMESTAMP and TIMESTAMP_NTZ alike and matches the
-            # oracle's `<= t + INTERVAL n seconds` exactly
-            cond = cond & (F.col(ts_col) <= F.expr(
-                f"t{i-1} + INTERVAL {int(within_seconds)} SECOND"))
-        nxt = (df.filter(F.col(type_col) == s)
-               .join(u.select(user_col, f"t{i-1}"), user_col)
-               .filter(cond)
-               .groupBy(user_col).agg(F.min(ts_col).alias(f"t{i}")))
-        u = u.join(nxt, user_col, "left")
-    counts = u.agg(*[
-        F.count(F.col(f"t{i}")).cast("bigint").alias(f"n{i}")
-        for i in range(1, len(steps) + 1)])
-    rows = []
-    for i, s in enumerate(steps, start=1):
-        prev = F.col(f"n{i-1}") if i > 1 else F.col("n1")
-        rows.append(F.struct(
-            F.lit(i).cast("bigint").alias("step_idx"),
-            F.lit(s).alias("step"),
-            F.col(f"n{i}").alias("n_users"),
-            F.when(prev > 0, F.expr(f"(10000 * n{i}) div n{i-1 if i > 1 else 1}"))
-            .otherwise(F.lit(None).cast("bigint")).alias("conv_prev_bp"),
-            F.when(F.col("n1") > 0, F.expr(f"(10000 * n{i}) div n1"))
-            .otherwise(F.lit(None).cast("bigint")).alias("conv_first_bp")))
-    return (counts.select(F.explode(F.array(*rows)).alias("r"))
-            .select("r.*").orderBy("step_idx"))
-
-
-def cohort_retention(df: DataFrame, user_col: str = "user_id",
-                     ts_col: str = "ts", max_offset: int = 30
-                     ) -> DataFrame:
-    """Daily cohort retention: users are cohorted by the calendar date
-    of their first event; a cohort member is retained at day offset d
-    if they have >= 1 event on cohort_date + d. Returns
-    (cohort_date, day_offset, n_users, retained_bp) for offsets
-    0..max_offset (offset 0 is the cohort size by construction).
-
-    Plan shape: one per-user min aggregate (the cohort frame), one
-    equi-join of events back to it on the user key, and one distinct
-    aggregate on (cohort, offset, user) before the rollup — at scale
-    both exchanges hash on user_id, so the cohort join co-partitions
-    with the aggregate; the (cohort x offset) result is tiny."""
-    cohort = (df.groupBy(user_col)
-              .agg(F.min(F.to_date(ts_col)).alias("cohort_date")))
-    act = (df.select(user_col, F.to_date(ts_col).alias("_d"))
-           .join(cohort, user_col)
-           .withColumn("day_offset",
-                       F.datediff("_d", "cohort_date").cast("bigint"))
-           .filter(F.col("day_offset") <= max_offset)
-           .select(user_col, "cohort_date", "day_offset").distinct())
-    sizes = cohort.groupBy("cohort_date").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_size"))
-    return (act.groupBy("cohort_date", "day_offset")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
-            .join(sizes, "cohort_date")
-            .withColumn("retained_bp",
-                        F.expr("(10000 * n_users) div _size"))
-            .drop("_size")
-            .orderBy("cohort_date", "day_offset"))
-
-
-def hash_sample(df: DataFrame, fraction: float, id_col: str,
-                salt: str = "v1") -> DataFrame:
-    """The scale path ``stratified_sample``'s docstring promises: a
-    FRACTION sampler with no window, no sort, no shuffle — keep a row
-    iff the first 8 hex chars of md5(id:salt) fall below
-    ``floor(fraction * 16^8)`` (hex strings of equal length compare
-    lexicographically as their numeric value, same argument as
-    ``curation.split_columns``). Deterministic and engine-independent
-    like the window form, but a pure filter: at 10^9-row strata the
-    exact-k window serializes per stratum while this scans. The trade
-    is exactness — the kept count is Binomial(n, fraction), not k —
-    which is what the audit column is for: ``sample_bucket`` exposes
-    each row's hash prefix so a reader can verify the threshold.
-    Appending rows never changes existing keep/drop decisions (the
-    ``split_assign`` append-stability contract)."""
-    if not (0.0 <= fraction <= 1.0):
-        raise ValueError(f"fraction must be in [0, 1]: {fraction}")
-    # fraction 1.0 would format to 9 hex chars and break the equal-
-    # length lexicographic compare; 'g' sorts above every hex char, so
-    # it is the keep-everything threshold
-    thresh = ("g" if fraction >= 1.0
-              else format(int(fraction * 16 ** 8), "08x"))
-    h = F.substring(
-        F.md5(F.concat(F.col(id_col).cast("string"),
-                       F.lit(":" + salt))), 1, 8)
-    return (df.withColumn("sample_bucket", h)
-            .filter(F.col("sample_bucket") < thresh))

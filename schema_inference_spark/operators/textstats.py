@@ -480,67 +480,3 @@ def text_validity_columns(text_col: str = "text") -> list:
         verdict.alias("verdict"),
     ]
 
-
-def collocations(df: DataFrame, k: int = 50, min_count: int = 5,
-                 text_col: str = "text") -> DataFrame:
-    """Top-k bigram collocations by integer Dice coefficient:
-    ``dice_bp = (2 * 10000 * c_xy) // (c_x + c_y)`` over normalized
-    tokens, where c_xy is the bigram occurrence count and c_x/c_y the
-    unigram occurrence counts of its two words. Dice is chosen over
-    log-PMI deliberately: it needs no corpus-total product (a PMI
-    numerator ``N * c_xy`` overflows int64 once the corpus passes
-    ~10^11 tokens) and no float log (engine libm ties), so the score is
-    integer-exact and oracle-gatable at any scale. Deterministic
-    tiebreak (dice desc, count desc, gram asc); ``min_count`` floors
-    c_xy so one-off juxtapositions of two rare words don't saturate the
-    ranking at dice=10000.
-
-    Returns (rank, gram, n_occurrences, c_left, c_right, dice_bp).
-    Scale shape: unigram and bigram counts are each one partial+final
-    aggregate; the two c_x joins attach to the ALREADY-AGGREGATED
-    bigram table on the word key (vocabulary-sized, broadcastable);
-    top-k is TakeOrderedAndProject; the rank window runs after
-    limit(k) on k rows."""
-    from .dedup import eval_once
-
-    toks_e = _tokens(F.col(text_col))
-    uni = (df.select(F.explode(toks_e).alias("w"))
-           .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
-    # bigram branch: tokens materialize once behind the barrier (the
-    # slice/size consumers re-ran tokenization ~5x per row before)
-    b1 = eval_once(df.select(F.col(text_col)), "_toks", toks_e)
-    toks = F.col("_toks")
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.zip_with(F.slice(toks, 1, F.size(toks) - 1),
-                   F.slice(toks, 2, F.size(toks) - 1),
-                   lambda a, b: F.concat(a, F.lit(" "), b))
-    ).otherwise(F.array().cast("array<string>"))
-    big = (b1.select(F.explode(bigrams).alias("gram"))
-           .groupBy("gram")
-           .agg(F.count(F.lit(1)).alias("n_occurrences"))
-           .filter(F.col("n_occurrences") >= min_count)
-           .withColumn("_w", F.split("gram", " ")))
-    left = uni.select(F.col("w").alias("_wl"), F.col("c").alias("c_left"))
-    right = uni.select(F.col("w").alias("_wr"), F.col("c").alias("c_right"))
-    scored = (big
-              .join(left, big["_w"][0] == left["_wl"])
-              .join(right, big["_w"][1] == right["_wr"])
-              .withColumn("dice_bp", F.expr(
-                  "(2 * 10000 * n_occurrences) div (c_left + c_right)")
-                  .cast("bigint")))
-    ranked = (scored
-              .orderBy(F.col("dice_bp").desc(),
-                       F.col("n_occurrences").desc(), F.col("gram"))
-              .limit(k))
-    from pyspark.sql import Window
-    w = Window.orderBy(F.col("dice_bp").desc(),
-                       F.col("n_occurrences").desc(), F.col("gram"))
-    return (ranked.withColumn("rank", F.row_number().over(w))
-            .select("rank", "gram",
-                    F.col("n_occurrences").cast("bigint")
-                    .alias("n_occurrences"),
-                    F.col("c_left").cast("bigint").alias("c_left"),
-                    F.col("c_right").cast("bigint").alias("c_right"),
-                    "dice_bp")
-            .orderBy("rank"))

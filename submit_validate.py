@@ -11,9 +11,14 @@ Local smoke:
 
 The job is resume-safe: completed partitions are skipped via the audit
 table; violations are written stable-ordered, partitioned by snapshot.
-Exit code is 0 when every pending partition passed, 1 when any failed —
-data errors are verdicts, never exceptions (the reference's by-value
-failure propagation, algo_w.clj:9-11).
+Exit code is 0 when every pending partition passed, 1 when any failed or
+could not be read (verdict 'error': not completed, so a resubmit retries
+it and exits 1 again until the partition is repaired) — data errors are
+verdicts, never exceptions (the reference's by-value failure
+propagation, algo_w.clj:9-11). The last stdout line is a JSON summary
+with ``partitions_validated``, ``partitions_failed`` and
+``partitions_errored``; ``already_complete`` is true only when nothing
+was pending.
 """
 
 from __future__ import annotations
@@ -172,15 +177,17 @@ def main() -> int:
         "snapshot": args.snapshot,
         "partitions_validated": len(validated),
         "partitions_failed": n_fail,
-        "already_complete": not validated,
+        "partitions_errored": len(result.errors),
+        "already_complete": not validated and not result.errors,
         "wall_sec_validate": round(wall, 2),
         "turns": n_turns,
         "turns_per_sec": round(n_turns / wall, 1) if wall > 0 else None,
         "schema": {k: v for k, v in result.table_schema.items()},
     }, default=str))
     spark.stop()
-    # idempotent rerun with nothing pending exits 0
-    return 1 if n_fail else 0
+    # idempotent rerun with nothing pending exits 0; an unreadable
+    # partition stays pending and keeps the exit at 1
+    return 1 if n_fail or result.errors else 0
 
 
 if __name__ == "__main__":

@@ -53,3 +53,65 @@ def test_every_package_module_is_reachable():
              for f in files if f.endswith(".py")}
     unreached = sorted(os.path.relpath(p, ROOT) for p in every - reached)
     assert unreached == []
+
+
+# The Spark entry contract's own functions, called by name from outside.
+CONTRACT = {"entry", "queries", "oracle_sql"}
+
+
+def _py_files(*tops):
+    for top in tops:
+        top = os.path.join(ROOT, top)
+        if top.endswith(".py"):
+            yield top
+            continue
+        for d, _, files in os.walk(top):
+            yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
+
+
+def _defined(stmt):
+    """Names a top-level statement defines."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
+                         ast.ClassDef)):
+        return {stmt.name}
+    targets = (stmt.targets if isinstance(stmt, ast.Assign)
+               else [stmt.target] if isinstance(stmt, ast.AnnAssign)
+               else [])
+    return {n.id for t in targets for n in ast.walk(t)
+            if isinstance(n, ast.Name)}
+
+
+def _referenced(node):
+    """Identifiers ``node`` reads: names, attributes, imported names and
+    identifier strings (perfbench patches functions named in strings)."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.split(".")[-1]
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n.value.isidentifier()):
+            yield n.value
+
+
+def test_every_package_definition_is_referenced():
+    """Every top-level def, class and module-level name of the package is
+    referenced outside its own definition by the package, the entry
+    points, the tests or perfbench; a cut that leaves an operator nothing
+    calls fails here. Names are matched by identifier, not by scope."""
+    covered = set(_py_files(PKG, "__spark_entry__.py"))
+    defs, refs = [], set()
+    for path in _py_files(PKG, "__spark_entry__.py", "submit_validate.py",
+                          "tests", "perfbench"):
+        for stmt in ast.parse(open(path).read()).body:
+            own = _defined(stmt)
+            if path in covered:
+                rel = os.path.relpath(path, ROOT)
+                defs += [(rel, name) for name in own
+                         if not (name.startswith("__") and name.endswith("__"))
+                         and not (rel == "__spark_entry__.py"
+                                  and name in CONTRACT)]
+            refs |= set(_referenced(stmt)) - own
+    assert sorted(d for d in defs if d[1] not in refs) == []

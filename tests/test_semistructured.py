@@ -1,89 +1,20 @@
-"""Semi-structured JSON census + the two new conversation QA operators
-(stuck loops, context overflow): planted-pathology semantics and the
-DuckDB-robustness of the oracle formulas on corrupted payloads."""
+"""The two conversation QA operators behind validate()'s stuck-loop and
+context-budget checks (``conversations.repeated_runs`` /
+``context_overflow``): planted-pathology semantics, plan shape, and
+agreement with pure-Python models."""
 
 import datetime as dt
 
-import duckdb
 from pyspark.sql import functions as F
 
 from schema_inference_spark.operators.conversations import (
     context_overflow,
     repeated_runs,
 )
-from schema_inference_spark.operators.semistructured import (
-    json_key_census,
-    json_validity,
-)
 
 
 def _ts(i):
     return dt.datetime(2026, 1, 1) + dt.timedelta(seconds=i)
-
-
-# ---------------------------------------------------------------------------
-# JSON census / validity
-# ---------------------------------------------------------------------------
-
-JSON_ROWS = [
-    (0, '{"k": 1, "s": "x"}'),    # int + string keys
-    (1, '{"k": 2}'),
-    (2, '{"k": "oops"}'),         # type violation: k carries a string
-    (3, '{"k": 8.5}'),            # float is NOT an exact int (no rounding)
-    (4, '{bad json'),             # malformed
-    (5, '87'),                    # scalar json: valid JSON, not an object
-    (6, '[1,2]'),                 # array: not an object
-    (7, None),                    # null payload
-    (8, '{"n": -3}'),             # negative int
-]
-
-
-def _json_df(spark):
-    return spark.createDataFrame(JSON_ROWS, "id bigint, props string")
-
-
-def test_json_key_census_planted(spark):
-    out = {r.key: r for r in json_key_census(_json_df(spark),
-                                             "props").collect()}
-    assert set(out) == {"k", "s", "n"}
-    k = out["k"]
-    # 4 objects carry k; only the two literal ints count as ints —
-    # "oops" and 8.5 both land in the n_present - n_int violation gap
-    assert (k.n_present, k.n_int, k.min_int, k.max_int) == (4, 2, 1, 2)
-    assert (out["s"].n_int, out["s"].min_int) == (0, None)
-    assert (out["n"].n_int, out["n"].min_int, out["n"].max_int) == (1, -3, -3)
-
-
-def test_json_validity_planted(spark):
-    r = json_validity(_json_df(spark), "props").first()
-    # 9 rows, 8 non-null, 3 invalid-as-object (malformed, scalar, array)
-    assert (r.n_rows, r.n_present, r.n_invalid) == (9, 8, 3)
-
-
-def test_json_oracles_robust_on_corrupted_payloads(spark):
-    """The CASE-guarded DuckDB formulas must survive malformed JSON
-    (DuckDB evaluates AND eagerly, so an unguarded json_type() call
-    errors out on '{bad') and must agree with Spark row-for-row on the
-    planted mixed-pathology table."""
-    from schema_inference_spark.driver_queries_conv import (
-        SQL_JSON_CENSUS,
-        SQL_JSON_VALIDITY,
-    )
-    con = duckdb.connect()
-    con.execute("CREATE TABLE events (id BIGINT, props VARCHAR)")
-    con.executemany("INSERT INTO events VALUES (?, ?)", JSON_ROWS)
-
-    spark_census = sorted(
-        tuple(r) for r in json_key_census(_json_df(spark),
-                                          "props").collect())
-    duck_census = sorted(tuple(r) for r in
-                         con.execute(SQL_JSON_CENSUS).fetchall())
-    assert spark_census == duck_census
-
-    spark_val = tuple(json_validity(_json_df(spark), "props").first())
-    duck_val = con.execute(SQL_JSON_VALIDITY).fetchone()
-    assert spark_val == tuple(duck_val)
-    con.close()
 
 
 # ---------------------------------------------------------------------------
@@ -188,42 +119,6 @@ def test_context_overflow_single_exchange(spark):
                              cost=F.col("c"), budget=10)
             ._jdf.queryExecution().executedPlan().toString())
     assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_json_census_prunes_scan_and_stays_jvm(spark, sf_dir):
-    """The census reads ONLY the json column (column pruning reaches
-    the parquet scan) and has no Python evaluation in the plan —
-    from_json + explode are JVM generators."""
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    plan = (json_key_census(df, "props")
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "ReadSchema: struct<props:string>" in plan, plan
-    assert "Python" not in plan and "ArrowEval" not in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# json schema drift (payload evolution)
-# ---------------------------------------------------------------------------
-
-def test_json_schema_drift_verdicts(spark):
-    """Planted evolution: a stable key, a key added late, a key dropped
-    early, and a key whose values stop being integers mid-corpus."""
-    from schema_inference_spark.operators.semistructured import (
-        json_schema_drift,
-    )
-    early = ['{"stable": 1, "old": 2, "shift": 3}'] * 3
-    late = ['{"stable": 9, "new": 4, "shift": "oops"}'] * 3
-    rows = ([(p, _ts(i)) for i, p in enumerate(early)]
-            + [(p, _ts(100 + i)) for i, p in enumerate(late)])
-    df = spark.createDataFrame(rows, "props string, ts timestamp")
-    out = {r.key: r for r in json_schema_drift(df, "props",
-                                               "ts").collect()}
-    assert out["stable"].verdict == "ok"
-    assert out["new"].verdict == "added"
-    assert (out["new"].n_early, out["new"].n_late) == (0, 3)
-    assert out["old"].verdict == "dropped"
-    assert out["shift"].verdict == "type_shift"
-    assert (out["shift"].n_int_early, out["shift"].n_int_late) == (3, 0)
 
 
 # ---------------------------------------------------------------------------

@@ -39,11 +39,6 @@ def test_session_sized_from_host_memory():
     # past the budget nor pre-touched
     assert size_session({"SPARK_GRAFT_DRIVER_MEM": "32g"}, 15000) == (
         "32g", "-Xms6000m")
-    assert size_session({"SPARK_GRAFT_DRIVER_MEM": "4g",
-                         "SPARK_GRAFT_XMS": "20g"}, 15000) == (
-        "4g", "-Xms6000m")
-    assert size_session({"SPARK_GRAFT_PRETOUCH": "0"}, 15000) == (
-        "6000m", None)
     # unknown host memory: the explicit or old defaults, unclamped
     assert size_session({}, None) == ("32g", "-Xms32g -XX:+AlwaysPreTouch")
 

@@ -3,8 +3,9 @@ subprocess — the same process shape as `spark-submit` local mode (the
 module runs its own session and stops it, so it must NOT share the test
 session). Asserts the north-rule deployment contract: data errors are
 verdicts (exit 1, never an exception), the metrics JSON self-reports
-engine wall + throughput, and an idempotent rerun resumes off the audit
-table and exits 0 with nothing pending."""
+engine wall + throughput, an idempotent rerun resumes off the audit
+table and exits 0 with nothing pending, and an unreadable partition keeps
+every run at exit 1."""
 import json
 import os
 import subprocess
@@ -68,6 +69,35 @@ def test_submit_validate_idempotent_rerun_resumes(submit_root):
     assert out["already_complete"] is True
     assert out["partitions_validated"] == 0
     assert out["turns"] == 0
+
+
+def test_submit_unreadable_partition_exits_1_on_every_run(tmp_path):
+    """A partition whose parquet footer is unreadable gets verdict
+    'error' and stays pending: the run and every resubmit until it is
+    repaired exit 1, count it in ``partitions_errored`` and do not report
+    the snapshot complete."""
+    import glob
+
+    from schema_inference_spark.sources.transcripts import (
+        generate_turns,
+        write_snapshot,
+    )
+    root = str(tmp_path / "cat")
+    write_snapshot(root, "s1", generate_turns(n_conv=40, seed=11),
+                   n_buckets=4)
+    (path,) = glob.glob(f"{root}/s1/bucket=2/*.parquet")
+    size = os.path.getsize(path)
+    with open(path, "r+b") as f:        # zero the footer and its magic
+        f.seek(size - 64)
+        f.write(b"\0" * 64)
+    args = ["--root", root, "--snapshot", "s1",
+            "--audit", str(tmp_path / "audit")]
+    for run in ("first", "resubmit"):
+        rc, out, res = _run(args)
+        assert rc == 1, (run, res.stderr[-2000:])
+        assert out["partitions_errored"] == 1, run
+        assert out["already_complete"] is False, run
+    assert out["partitions_validated"] == 0
 
 
 def test_submit_replica_mode(submit_root, tmp_path):
