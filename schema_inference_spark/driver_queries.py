@@ -657,33 +657,6 @@ ORDER BY lvl, region, nation
 """
 
 
-
-# ---------------------------------------------------------------------------
-# D11 large-dim form — FK orphans via shuffle anti-join (fk_orphans).
-# Planted lagging dimension: every 13th customer key is dropped from the
-# dim, so events referencing those users surface as orphan groups. Both
-# engines derive the identical thinned dim from pristine parquet.
-# ---------------------------------------------------------------------------
-
-def q_fk_orphans(spark, sf_dir):
-    from .operators.checks import fk_orphans
-    fact = _t(spark, sf_dir, "events")
-    dim = (_t(spark, sf_dir, "customer")
-           .filter(F.col("c_custkey") % 13 != 0))
-    return (fk_orphans(fact, dim, "user_id", "c_custkey")
-            .orderBy("user_id"))
-
-
-SQL_FK_ORPHANS = """
-WITH dim AS (SELECT c_custkey FROM customer WHERE c_custkey % 13 <> 0)
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_orphan_rows
-FROM events e
-WHERE NOT EXISTS (SELECT 1 FROM dim WHERE dim.c_custkey = e.user_id)
-GROUP BY user_id
-ORDER BY user_id
-"""
-
-
 # ---------------------------------------------------------------------------
 # D22/D15 semi-join form — TPC-H Q4 shape on the available columns
 # ---------------------------------------------------------------------------
@@ -725,20 +698,6 @@ WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
-
-
-def q_fk_orphans_bloom(spark, sf_dir):
-    """The bloom-hybrid twin of q_fk_orphans: same planted lagging dim,
-    same oracle (an IDENTITY gate — the hybrid is exact by construction,
-    and the shared SQL proves it end-to-end). The dim is scanned for the
-    bloom + semi-join filter but never shuffled; bloom-negative fact
-    keys (most of the planted orphans) never probe the dim at all."""
-    from .operators.checks import fk_orphans_bloom
-    fact = _t(spark, sf_dir, "events")
-    dim = (_t(spark, sf_dir, "customer")
-           .filter(F.col("c_custkey") % 13 != 0))
-    return (fk_orphans_bloom(fact, dim, "user_id", "c_custkey")
-            .orderBy("user_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -793,8 +752,6 @@ CORE_QUERIES: Dict[str, Callable] = {
     "quantiles_kll": q_quantiles_kll,
     "unique_key": q_unique_key,
     "ref_vocab": q_ref_vocab,
-    "fk_orphans": q_fk_orphans,
-    "fk_orphans_bloom": q_fk_orphans_bloom,
     "vocab_diff": q_vocab_diff,
     "ordering": q_ordering,
     "session_stats": q_session_stats,
@@ -820,8 +777,6 @@ CORE_ORACLES: Dict[str, str] = {
     "group_quantiles": SQL_GROUP_QUANTILES,
     "unique_key": SQL_UNIQUE_KEY,
     "ref_vocab": SQL_REF_VOCAB,
-    "fk_orphans": SQL_FK_ORPHANS,
-    "fk_orphans_bloom": SQL_FK_ORPHANS,
     "vocab_diff": SQL_VOCAB_DIFF,
     "ordering": SQL_ORDERING,
     "session_stats": SQL_SESSION_STATS,

@@ -2,9 +2,17 @@
 
 from __future__ import annotations
 
+import atexit
+import fcntl
+import hashlib
 import os
+import shutil
+import subprocess
+from dataclasses import dataclass
 from typing import Mapping
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Share of the host's available memory the default driver heap takes. The
@@ -100,6 +108,232 @@ def size_session(env: Mapping[str, str],
     return heap, f"-Xms{budget}m"
 
 
+# -- class-data sharing --------------------------------------------------------
+#
+# Every driver JVM parses the same ~10k Spark/Scala/Parquet/Arrow classes.
+# A dynamic CDS archive (JDK 13+) maps them in pre-parsed: on a 4-core host
+# with a 3g heap, JVM start went 9.0-10.9 s -> 4.6-6.8 s and the first job
+# (range(10).count()) 4.1-5.3 s -> 2.1-2.8 s. The archive is 140-190 MB
+# and its dump at JVM exit takes 15-25 s, once per host and key.
+
+# What the last JVM launch of this process did with the archive: "used",
+# "dumping" or "skipped: <reason>". None until get_spark() launches one.
+cds_decision: str | None = None
+# the JVM this module launched ("proc") and, while it dumps, its plan ("dump")
+_launched: dict = {}
+# how long the exit hook waits for the JVM; a dump takes 15-25 s
+_JVM_EXIT_WAIT_S = 180
+# The JVM logs CDS warnings on stdout: ~600 "Preload Warning" / "Skipping
+# ... Signed JAR" lines per dump, and "Unable to use shared archive" when
+# the classpath no longer matches. stdout belongs to the caller (the
+# deployed job's last line is its JSON summary), so the dump is silent and
+# a start from the archive reports a fall-back on stderr.
+_CDS_QUIET = "-Xlog:cds*=off"
+_CDS_TO_STDERR = "-Xlog:cds*=off -Xlog:cds*=warning:stderr"
+
+
+@dataclass
+class _CdsPlan:
+    decision: str               # "used" | "dumping" | "skipped: <reason>"
+    opts: str = ""              # JVM options to add
+    conf_dir: str | None = None  # SPARK_CONF_DIR for the launch
+    archive: str | None = None  # used: the archive file
+    cache: str = ""
+    key: str = ""
+    lock: int | None = None     # dumping: the fd holding the dump lock
+    tmp: str = ""               # dumping: where the JVM writes the archive
+
+
+def cds_cache_dir(env: Mapping[str, str]) -> str:
+    """``${XDG_CACHE_HOME:-~/.cache}/schema_inference_spark/cds``; never
+    under ``TMPDIR``, which a caller may delete after every run."""
+    base = env.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "schema_inference_spark", "cds")
+
+
+def _stat_id(path: str) -> str:
+    st = os.stat(path)
+    return f"{st.st_size}:{st.st_mtime_ns}"
+
+
+def cds_key(env: Mapping[str, str], spark_home: str, conf_dir: str) -> str:
+    """What the JVM checks an archive against: the JDK (the real path of
+    the ``java`` spark-class runs, and the size and mtime of its
+    ``libjvm.so`` or ``release``), the Spark home, the name, size and mtime
+    of every jar in it, and the conf dir on the classpath. Starts no
+    process; raises OSError when a part is missing."""
+    java = (os.path.join(env["JAVA_HOME"], "bin", "java")
+            if env.get("JAVA_HOME")
+            else shutil.which("java", path=env.get("PATH")) or "java")
+    java = os.path.realpath(java)
+    jdk = os.path.dirname(os.path.dirname(java))
+    libjvm = os.path.join(jdk, "lib", "server", "libjvm.so")
+    parts = [java, _stat_id(libjvm if os.path.exists(libjvm)
+                            else os.path.join(jdk, "release")),
+             spark_home, conf_dir]
+    jars = os.path.join(spark_home, "jars")
+    parts += [f"{n}:{_stat_id(os.path.join(jars, n))}"
+              for n in sorted(os.listdir(jars))]
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+
+
+def _published(cache: str, key: str) -> tuple[str, int] | None:
+    """(path, published size) of the archive of ``key``: its name is
+    ``<key>-<size>.jsa``."""
+    for name in os.listdir(cache):
+        size = name[len(key) + 1:-len(".jsa")]
+        if name.startswith(key + "-") and name.endswith(".jsa") \
+                and size.isdigit():
+            return os.path.join(cache, name), int(size)
+    return None
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
+
+def _plan_cds(env: Mapping[str, str]) -> _CdsPlan:
+    """How the JVM about to launch uses the archive.
+
+    A published archive of this key is used after its size is checked: a
+    truncated one crashes the JVM (SIGBUS) instead of falling back, so a
+    mismatch deletes it and starts plain. With no archive, the process
+    that takes the dump lock dumps at JVM exit; the others start plain.
+    The lock is an flock, so a dead holder's lock is free again."""
+    if "PYSPARK_GATEWAY_PORT" in env:
+        return _CdsPlan("skipped: under spark-submit the JVM is already up")
+    try:
+        spark_home = os.path.realpath(env.get("SPARK_HOME")
+                                      or _find_spark_home())
+        conf = env.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        real = sorted(n for n in (os.listdir(conf) if os.path.isdir(conf)
+                                  else []) if not n.endswith(".template"))
+        if real:
+            # a non-empty directory on the classpath makes the dump fail
+            return _CdsPlan(f"skipped: conf dir {conf} holds {real[0]}")
+        cache = cds_cache_dir(env)
+        if any(c.isspace() for c in cache):
+            return _CdsPlan(f"skipped: cache path {cache!r} has whitespace")
+        # kept empty: Spark reads no template, so nothing changes
+        conf_dir = os.path.join(cache, "conf")
+        key = cds_key(env, spark_home, conf_dir)
+    except OSError as exc:
+        return _CdsPlan(f"skipped: {exc}")
+    try:
+        os.makedirs(conf_dir, exist_ok=True)
+        lock = os.open(os.path.join(cache, key + ".lock"),
+                       os.O_RDWR | os.O_CREAT | os.O_CLOEXEC, 0o600)
+    except OSError as exc:
+        return _CdsPlan(f"skipped: cache not writable: {exc}")
+    found = _published(cache, key)
+    if found is None:
+        try:
+            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            os.close(lock)
+            return _CdsPlan("skipped: another process holds the dump lock")
+        found = _published(cache, key)  # published while we looked?
+    if found is None:
+        tmp = os.path.join(cache, f"{key}.jsa.{os.getpid()}.tmp")
+        return _CdsPlan("dumping", f"-XX:ArchiveClassesAtExit={tmp} "
+                        + _CDS_QUIET, conf_dir, cache=cache, key=key,
+                        lock=lock, tmp=tmp)
+    os.close(lock)
+    path, size = found
+    try:
+        actual = os.path.getsize(path)
+    except OSError:
+        actual = -1
+    if actual != size:
+        _remove(path)
+        return _CdsPlan(f"skipped: archive is {actual} bytes, published "
+                        f"{size}; deleted")
+    return _CdsPlan("used", f"-XX:SharedArchiveFile={path} " + _CDS_TO_STDERR,
+                    conf_dir, archive=path)
+
+
+def _publish(plan: _CdsPlan, exit_code: int | None) -> None:
+    """Rename a finished dump to ``<key>-<size>.jsa``, delete every other
+    archive and dump in the cache, and release the dump lock. A dump that
+    did not finish is deleted; the next launch dumps again."""
+    try:
+        size = os.path.getsize(plan.tmp) if exit_code == 0 else 0
+        if size:
+            keep = f"{plan.key}-{size}.jsa"
+            os.replace(plan.tmp, os.path.join(plan.cache, keep))
+            for name in os.listdir(plan.cache):
+                if ".jsa" in name and name != keep:
+                    _remove(os.path.join(plan.cache, name))
+    except OSError:
+        pass
+    finally:
+        _remove(plan.tmp)
+        os.close(plan.lock)
+
+
+def _end_jvm() -> None:
+    """Stop Spark, close the gateway of the JVM this module launched and
+    wait for that JVM, then publish what it dumped. A JVM launched from
+    Python exits only on stdin EOF, so without the wait a dumping JVM
+    outlives its Python process and never publishes."""
+    proc, plan = _launched.pop("proc", None), _launched.pop("dump", None)
+    if proc is None:
+        return
+    gateway = SparkContext._gateway
+    if gateway is not None and gateway.proc is proc:
+        try:
+            if SparkContext._active_spark_context is not None:
+                SparkContext._active_spark_context.stop()
+        finally:
+            gateway.shutdown()
+            SparkContext._gateway = None
+            SparkContext._jvm = None
+    if proc.stdin is not None and not proc.stdin.closed:
+        proc.stdin.close()
+    try:
+        proc.wait(timeout=_JVM_EXIT_WAIT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    if plan is not None:
+        _publish(plan, proc.returncode)
+
+
+def _launch(builder: SparkSession.Builder, java_opts: str,
+            plan: _CdsPlan) -> SparkSession:
+    """Launch the JVM with ``plan``; ``SPARK_CONF_DIR`` is set only for
+    the launch, and ``os.environ`` restored after it."""
+    global cds_decision
+    saved = os.environ.get("SPARK_CONF_DIR")
+    if plan.conf_dir is not None:
+        os.environ["SPARK_CONF_DIR"] = plan.conf_dir
+    try:
+        spark = builder.config("spark.driver.extraJavaOptions",
+                               f"{java_opts} {plan.opts}".strip()
+                               ).getOrCreate()
+    except BaseException:
+        if plan.lock is not None:
+            os.close(plan.lock)
+        raise
+    finally:
+        if saved is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    cds_decision = plan.decision
+    proc = SparkContext._gateway.proc
+    if proc is not None:
+        _launched["proc"] = proc
+        if plan.lock is not None:
+            _launched["dump"] = plan
+        atexit.register(_end_jvm)
+    return spark
+
+
 def get_spark(app_name: str = "schema-inference-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -108,6 +342,31 @@ def get_spark(app_name: str = "schema-inference-spark",
     (``os.sched_getaffinity``) when that is unset. AQE on (coalesce +
     skew-join, SURVEY.md §2.D18); Arrow on for every pandas/Arrow UDF
     boundary.
+
+    The driver JVM starts from a dynamic class-data-sharing archive of
+    the classes every start loads, about half the JVM start and first-job
+    time. The archive lives in
+    ``${XDG_CACHE_HOME:-~/.cache}/schema_inference_spark/cds/`` as
+    ``<key>-<size>.jsa``; the key covers the JDK (real path of ``java``,
+    size and mtime of ``libjvm.so``), the Spark home, its jars (names,
+    sizes, mtimes) and the conf dir. The first launch on a host (per key)
+    dumps it at JVM exit, 15-25 s: an exit hook (or ``stop_spark()``)
+    closes the gateway, waits for the JVM and publishes the archive by
+    rename. Concurrent first launches start plain while one holds the
+    dump lock. The archive is skipped, and ``cds_decision`` says why,
+    when:
+
+    - the conf dir holds a real file (the JVM refuses to dump with a
+      non-empty directory on the classpath; a conf dir of ``*.template``
+      files only is swapped for an empty one in the cache);
+    - the cache is not writable, or another process holds the dump lock;
+    - the archive's size is not the published one (deleted: a truncated
+      archive crashes the JVM instead of falling back);
+    - running under ``spark-submit`` (``PYSPARK_GATEWAY_PORT`` set): the
+      JVM is already up, so cluster jobs get no gain from the archive.
+
+    A start from the archive that fails anyway deletes it and retries
+    plain once.
     """
     master, shuffle = _resolve_parallelism(master, shuffle_partitions,
                                            os.environ)
@@ -151,13 +410,26 @@ def get_spark(app_name: str = "schema-inference-spark",
     # queries that happen to run first). size_session() pre-touches only
     # a heap the host can back. No effect under spark-submit (the JVM is
     # already up, Spark ignores driver extraJavaOptions then).
-    builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     if master is not None:
         builder = builder.master(master)
-    return builder.getOrCreate()
+    if SparkContext._gateway is not None:  # the JVM is up: nothing launches
+        return builder.config("spark.driver.extraJavaOptions",
+                              java_opts).getOrCreate()
+    plan = _plan_cds(os.environ)
+    try:
+        return _launch(builder, java_opts, plan)
+    except Exception:
+        if plan.decision != "used":
+            raise
+        _remove(plan.archive)
+        return _launch(builder, java_opts, _CdsPlan(
+            "skipped: the JVM failed to start from the archive; deleted"))
 
 
 def stop_spark() -> None:
+    """Stop the session; end a JVM that get_spark() launched and publish
+    the archive it dumped."""
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+    _end_jvm()

@@ -388,165 +388,6 @@ def check_context_overflow(df: DataFrame, snapshot_id: str,
         snapshot_id, "context_overflow", payload_col=payload)
 
 
-def fk_orphans(fact: DataFrame, dim: DataFrame, fact_key: str,
-               dim_key: str) -> DataFrame:
-    """D11's LARGE-dimension form: FK orphan detection when the
-    dimension is NOT broadcastable (billions of conv/user keys — the
-    100-TB case ``check_referential``'s broadcast vocab cannot cover).
-
-    LEFT ANTI equi-join on the key, then a per-key count — output is
-    |missing keys|-sized, never |orphan rows|-sized, so a hot missing
-    key (one deleted user with 10^9 events) costs one output row. The
-    groupBy reuses the anti-join's key partitioning, so the aggregate
-    adds no second exchange on the fact side.
-
-    Scale shape: both sides shuffle on the key (AQE will still
-    broadcast a small dim at runtime; a plan test pins the SortMergeJoin
-    LeftAnti form with broadcast disabled). At warehouse scale, bucket
-    both tables on the key — or use Iceberg storage-partitioned joins —
-    and both exchanges disappear; skewed fact keys are safe because an
-    anti join never expands rows. NULL fact keys never match the dim
-    (SQL equality), so they surface as an orphan group under the NULL
-    key — dirty data reports, not vanishes.
-    """
-    keys = dim.select(F.col(dim_key).alias(fact_key))
-    return (fact.select(fact_key)
-            .join(keys, on=fact_key, how="left_anti")
-            .groupBy(fact_key)
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_orphan_rows")))
-
-
-# ---------------------------------------------------------------------------
-# D11 bloom hybrid — FK orphans without shuffling either table
-# ---------------------------------------------------------------------------
-
-def _bloom_positions(key_col: str, num_bits: int, num_hashes: int):
-    """The k bit-position expressions for one key — JVM-side
-    ``pmod(xxhash64(key, i), m)``. ONE definition shared by the build
-    pass and the probe pass, so the two sides cannot disagree on the
-    hash formula (the bloom's no-false-negative guarantee rests on it).
-    xxhash64 folds a NULL key to the seed column's hash, so NULL keys
-    get a deterministic position set rather than a NULL position."""
-    return [F.pmod(F.xxhash64(F.col(key_col), F.lit(i)),
-                   F.lit(num_bits)).cast("long").alias(f"_bp{i}")
-            for i in range(num_hashes)]
-
-
-def build_key_bloom(df: DataFrame, key_col: str,
-                    num_bits: int = 1 << 20,
-                    num_hashes: int = 5) -> bytes:
-    """Bloom bitset over ``df[key_col]`` — a broadcastable membership
-    sketch for dimensions too large for an exact broadcast vocabulary.
-
-    Shuffle-free build: the k positions per key are computed JVM-side
-    (`_bloom_positions`), then ONE mapInArrow pass ORs every batch into
-    a per-task numpy bitset and emits one ``num_bits/8``-byte blob per
-    task; the driver ORs the blobs. Collect volume is
-    ``tasks x m/8`` bytes — metadata-sized; at 10^5+ partitions the
-    blobs would merge executor-side first (the D6 reduceByKey ladder in
-    ``operators/infer.py``), not change shape.
-
-    PySpark exposes no ``df.stat.bloomFilter`` (Scala only), and Spark's
-    own runtime bloom pruning only fires on inner/semi joins — an anti
-    join's interesting rows are exactly the ones a pruning filter would
-    drop — so the engine owns the sketch.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    m_bytes = (num_bits + 7) // 8
-    pos = df.select(*_bloom_positions(key_col, num_bits, num_hashes))
-    k = num_hashes
-
-    def _build(batches):
-        bits = np.zeros(m_bytes, dtype=np.uint8)
-        saw = False
-        for b in batches:
-            saw = True
-            for j in range(k):
-                p = b.column(j).to_numpy(zero_copy_only=False)
-                np.bitwise_or.at(bits, p >> 3,
-                                 (1 << (p & 7)).astype(np.uint8))
-        if saw:
-            yield pa.record_batch(
-                [pa.array([bits.tobytes()], type=pa.binary())],
-                names=["bitset"])
-
-    out = np.zeros(m_bytes, dtype=np.uint8)
-    for row in pos.mapInArrow(_build, "bitset binary").collect():
-        out |= np.frombuffer(row.bitset, dtype=np.uint8)
-    return out.tobytes()
-
-
-def fk_orphans_bloom(fact: DataFrame, dim: DataFrame, fact_key: str,
-                     dim_key: str, num_bits: int = 1 << 20,
-                     num_hashes: int = 5) -> DataFrame:
-    """EXACT FK orphan check (same output contract as ``fk_orphans``)
-    in which NEITHER table is ever shuffled by a join:
-
-    1. ``per_key`` — fact aggregated to (key, n_rows). Map-side partial
-       combine shrinks the one exchange to ~|distinct keys| (vs
-       ``fk_orphans``, whose anti join ships every fact row's key).
-    2. A dim-side bloom (one scan, no shuffle) probes ``per_key`` via a
-       vectorized pandas UDF over JVM-computed positions. Bloom-negative
-       keys are CERTAIN orphans and never touch the dim again — in the
-       lagging-dim audit regime (the q_fk_orphans scenario) the orphan
-       keys take this free path.
-    3. ``matched`` = dim LEFT SEMI broadcast(bloom-positive keys): the
-       dim is scanned and filtered, never exchanged; output is at most
-       |dim ∩ fact keys| rows.
-    4. orphans = ``per_key`` LEFT ANTI broadcast(``matched``). Exact
-       regardless of the bloom's false-positive rate: true matches are
-       always bloom-positive (no false negatives), so ``matched`` is
-       exactly dim ∩ fact-keys, and false positives fall out here.
-
-    ``per_key`` is persisted (it feeds both the probe and the final
-    anti join; distinct-key-sized). Envelope: the broadcast candidate /
-    matched sets are |distinct fact keys ∩ bloom|-sized — when the
-    matched-key set itself exceeds driver memory (10^9 live users),
-    fall back to ``fk_orphans``' shuffle form; this operator targets
-    the cluster regime where the avoided exchange is a NETWORK shuffle
-    of the fact side, not a replacement. Measured counter-example
-    (`git show 3abe443:BENCH/stress_storage_ops.py`, 19.1M turns,
-    local[32] on tmpfs):
-    the shuffle path wins 2x (20.7s vs 42.2s) because a tmpfs-local
-    exchange is nearly free while the bloom pays two Python mapInArrow
-    probe passes — on local[*] keep ``fk_orphans``.
-    NULL fact keys: deterministic bloom positions; if bloom-positive
-    they survive to step 4, where SQL equality never matches them —
-    either way they surface as an orphan group, same as ``fk_orphans``.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    spark = fact.sparkSession
-    bitset = build_key_bloom(dim.select(F.col(dim_key).alias(fact_key)),
-                             fact_key, num_bits, num_hashes)
-    bc = spark.sparkContext.broadcast(bitset)
-
-    @pandas_udf("boolean")
-    def _bloom_maybe(*pos_cols):
-        bits = np.frombuffer(bc.value, dtype=np.uint8)
-        ok = np.ones(len(pos_cols[0]), dtype=bool)
-        for p in pos_cols:
-            pv = p.to_numpy(dtype=np.int64)
-            ok &= (bits[pv >> 3] & (1 << (pv & 7)).astype(np.uint8)) != 0
-        return pd.Series(ok)
-
-    per_key = (fact.groupBy(fact_key)
-               .agg(F.count(F.lit(1)).cast("bigint").alias("n_orphan_rows"))
-               .persist())
-    pos = _bloom_positions(fact_key, num_bits, num_hashes)
-    candidates = (per_key
-                  .withColumn("_maybe", _bloom_maybe(*pos))
-                  .filter(F.col("_maybe"))
-                  .select(fact_key))
-    matched = dim.select(F.col(dim_key).alias(fact_key)).join(
-        F.broadcast(candidates), on=fact_key, how="left_semi")
-    return per_key.join(F.broadcast(matched), on=fact_key, how="left_anti")
-
-
 # ---------------------------------------------------------------------------
 # D12 — turn ordering: gaps, duplicates, ts regressions in ONE window pass
 # ---------------------------------------------------------------------------

@@ -11,14 +11,17 @@ Local smoke:
 
 The job is resume-safe: completed partitions are skipped via the audit
 table; violations are written stable-ordered, partitioned by snapshot.
-Exit code is 0 when every pending partition passed, 1 when any failed or
-could not be read (verdict 'error': not completed, so a resubmit retries
-it and exits 1 again until the partition is repaired) — data errors are
-verdicts, never exceptions (the reference's by-value failure
-propagation, algo_w.clj:9-11). The last stdout line is a JSON summary
-with ``partitions_validated``, ``partitions_failed`` and
-``partitions_errored``; ``already_complete`` is true only when nothing
-was pending.
+Exit code is 0 when every pending partition passed, 1 when any failed,
+when the snapshot-level checks failed (drift or a cross-partition schema
+merge, verdict partition -1), or when a partition could not be read
+(verdict 'error': not completed, so a resubmit retries it and exits 1
+again until the partition is repaired) — data errors are verdicts, never
+exceptions (the reference's by-value failure propagation,
+algo_w.clj:9-11). The last stdout line is a JSON summary with
+``partitions_validated``, ``partitions_failed`` (validated partitions
+only, never more than ``partitions_validated``), ``snapshot_failed``
+and ``partitions_errored``; ``already_complete`` is true only when
+nothing was pending.
 """
 
 from __future__ import annotations
@@ -162,9 +165,13 @@ def main() -> int:
          .parquet(args.violations_out))
 
     validated = set(result.partitions)
-    verdicts = [v for v in result.verdicts.collect()
-                if v.partition_id in validated or v.partition_id == -1]
-    n_fail = sum(1 for v in verdicts if v.verdict == "fail")
+    verdicts = result.verdicts.collect()
+    n_fail = sum(1 for v in verdicts
+                 if v.partition_id in validated and v.verdict == "fail")
+    # the snapshot-level verdict (partition -1: drift, cross-partition
+    # schema merge) is not a partition
+    snapshot_failed = any(v.partition_id == -1 and v.verdict == "fail"
+                          for v in verdicts)
     # engine wall: validate() through the last action (violation sink +
     # verdict collect), excluding JVM/session startup — the number a
     # two-cluster-size throughput comparison should use (startup is O(1)
@@ -177,6 +184,7 @@ def main() -> int:
         "snapshot": args.snapshot,
         "partitions_validated": len(validated),
         "partitions_failed": n_fail,
+        "snapshot_failed": snapshot_failed,
         "partitions_errored": len(result.errors),
         "already_complete": not validated and not result.errors,
         "wall_sec_validate": round(wall, 2),
@@ -187,7 +195,7 @@ def main() -> int:
     spark.stop()
     # idempotent rerun with nothing pending exits 0; an unreadable
     # partition stays pending and keeps the exit at 1
-    return 1 if n_fail or result.errors else 0
+    return 1 if n_fail or snapshot_failed or result.errors else 0
 
 
 if __name__ == "__main__":

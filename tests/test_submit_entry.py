@@ -100,6 +100,36 @@ def test_submit_unreadable_partition_exits_1_on_every_run(tmp_path):
     assert out["partitions_validated"] == 0
 
 
+def test_submit_snapshot_level_failure_is_not_a_partition(spark, tmp_path):
+    """A snapshot that drifts against its baseline fails at the snapshot
+    level (verdict partition -1): the job reports ``snapshot_failed`` and
+    exits 1, and ``partitions_failed`` counts validated partitions only."""
+    from schema_inference_spark.pipeline import baseline_from_result, validate
+    from schema_inference_spark.sources.catalog import SnapshotCatalog
+    from schema_inference_spark.sources.transcripts import (
+        generate_turns,
+        write_snapshot,
+    )
+    base_root, root = str(tmp_path / "base"), str(tmp_path / "cat")
+    write_snapshot(base_root, "s0", generate_turns(n_conv=40, seed=11),
+                   n_buckets=4)
+    write_snapshot(root, "s1", generate_turns(n_conv=40, seed=11,
+                                              text_len_scale=1.6),
+                   n_buckets=4)
+    r0 = validate(spark, SnapshotCatalog(base_root), "s0", write_audit=False)
+    baseline = tmp_path / "baseline.json"
+    baseline.write_text(json.dumps({
+        c: b.hex() if b else None
+        for c, b in baseline_from_result(r0)["sketches"].items()}))
+    rc, out, res = _run(["--root", root, "--snapshot", "s1",
+                         "--audit", str(tmp_path / "audit"),
+                         "--baseline", str(baseline)])
+    assert rc == 1, res.stderr[-2000:]
+    assert out["snapshot_failed"] is True
+    assert out["partitions_validated"] == 4
+    assert out["partitions_failed"] <= out["partitions_validated"]
+
+
 def test_submit_replica_mode(submit_root, tmp_path):
     """--replica-of runs the replica-verification job: a faithful copy
     exits 0 with zero violations; a copy with one corrupted turn exits
