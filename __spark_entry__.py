@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)   -> flagship validation run over sf0.001 events
-queries()      -> operator queries from SURVEY.md §2 (+ training-data ops)
+queries()      -> the core check/stat queries and the training-data ops
 oracle_sql()   -> DuckDB oracles for every SQL-expressible query
 """
 
@@ -18,10 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from schema_inference_spark.driver_queries import (  # noqa: E402
     CORE_ORACLES,
     CORE_QUERIES,
-)
-from schema_inference_spark.driver_queries_conv import (  # noqa: E402
-    CONV_ORACLES,
-    CONV_QUERIES,
 )
 from schema_inference_spark.driver_queries_extras import (  # noqa: E402
     EXTRA_ORACLES,
@@ -57,8 +53,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {**CORE_QUERIES, **EXTRA_QUERIES, **CONV_QUERIES}
+    return {**CORE_QUERIES, **EXTRA_QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {**CORE_ORACLES, **EXTRA_ORACLES, **CONV_ORACLES}
+    return {**CORE_ORACLES, **EXTRA_ORACLES}

@@ -46,8 +46,8 @@ def _t_redist(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ONLY for queries whose outputs are partition-order independent:
     integer/string/hash-exact aggregates, min/max, or scalar formulas
-    over them (the extras/mix/conv families are such by design — their
-    scores are integer basis points precisely so engines agree). The
+    over them (the extras family is such by design — its scores are
+    integer basis points precisely so engines agree). The
     CORE stats + TPC-H queries keep the plain reader: a double SUM/AVG
     accumulates in partition order, and a repartitioned scan can flip
     their round()ed fourth decimal vs the single-threaded oracle

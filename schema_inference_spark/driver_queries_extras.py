@@ -353,13 +353,10 @@ def q_dedup_jaccard(spark, sf_dir):
     return _jaccard_pairs_cached(spark, sf_dir)
 
 
-# shingle CTE chain (distinct word 3-shingles + per-doc counts), shared
-# by the jaccard oracles and the minhash verification-stage oracle;
-# parameterized by the source relation so the conversation-level
-# near-dup oracle (driver_queries_conv) consumes the SAME definition
-# over its assembled-transcript CTE instead of a hand-copied one
-def shingle_ctes(src: str = "documents") -> str:
-    return f"""t AS (SELECT doc_id, string_split({_NORM}, ' ') AS ws FROM {src}),
+# shingle CTE chain (distinct word 3-shingles + per-doc counts) over
+# `documents`, shared by the jaccard oracles and the minhash
+# verification-stage oracle
+_SHINGLE_CTES = f"""t AS (SELECT doc_id, string_split({_NORM}, ' ') AS ws FROM documents),
 sh AS (SELECT doc_id,
               unnest(list_distinct(list_transform(
                   range(1, len(ws) - 1),
@@ -368,13 +365,12 @@ sh AS (SELECT doc_id,
 cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)"""
 
 
-def verify_stage_sql(cand_path: str, src: str = "documents") -> str:
+def verify_stage_sql(cand_path: str) -> str:
     """The exact-Jaccard verification stage (mirrors
     dedup.verify_candidates at threshold 0.5) over an exported candidate
-    seam — the tail of a WITH chain: interpolate AFTER the CTE defining
-    ``src``."""
+    seam and the `documents` relation — the body of a WITH chain."""
     return f"""cand AS (SELECT d1, d2 FROM '{cand_path}/*.parquet'),
-{shingle_ctes(src)},
+{_SHINGLE_CTES},
 inter AS (SELECT c.d1, c.d2, count(*) AS i
           FROM cand c
           JOIN sh a ON a.doc_id = c.d1
@@ -387,8 +383,6 @@ JOIN cnt cb ON d2 = cb.doc_id
 WHERE round(i * 1.0 / (ca.n + cb.n - i), 4) >= 0.5
 ORDER BY d1, d2"""
 
-
-_SHINGLE_CTES = shingle_ctes()
 
 # jaccard pair CTE chain, shared by the pair oracle and the
 # connected-components (dedup groups) oracle

@@ -45,14 +45,15 @@ def _resolve_master(explicit: str | None, cpus: str,
 def _resolve_parallelism(master: str | None,
                          shuffle_partitions: int | None,
                          env: "os._Environ[str] | dict[str, str]",
-                         ) -> tuple[str | None, int]:
-    """(master or None, spark.sql.shuffle.partitions): local[N] and N
-    shuffle partitions, N = ``SPARK_GRAFT_CPUS`` or else the CPUs this
-    process may run on."""
+                         ) -> tuple[str | None, int | None]:
+    """(master or None, spark.sql.shuffle.partitions or None): local[N]
+    and N shuffle partitions, N = ``SPARK_GRAFT_CPUS`` or else the CPUs
+    this process may run on. Under spark-submit both are None unless
+    given: the submitted --master and --conf decide."""
     cpus = env.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
-    return (_resolve_master(master, cpus, env),
-            shuffle_partitions if shuffle_partitions is not None
-            else int(cpus))
+    if shuffle_partitions is None and "PYSPARK_GATEWAY_PORT" not in env:
+        shuffle_partitions = int(cpus)
+    return _resolve_master(master, cpus, env), shuffle_partitions
 
 
 def _mem_mb(size: str) -> float:
@@ -339,9 +340,16 @@ def get_spark(app_name: str = "schema-inference-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """local[N] by default, with N shuffle partitions: N is
     ``$SPARK_GRAFT_CPUS``, or the CPUs this process may run on
-    (``os.sched_getaffinity``) when that is unset. AQE on (coalesce +
-    skew-join, SURVEY.md §2.D18); Arrow on for every pandas/Arrow UDF
-    boundary.
+    (``os.sched_getaffinity``) when that is unset; scan splits and AQE's
+    advisory partition size are 16m. AQE on (coalesce + skew-join,
+    SURVEY.md §2.D18); Arrow on for every pandas/Arrow UDF boundary.
+
+    Under ``spark-submit`` (``PYSPARK_GATEWAY_PORT`` set) the submitted
+    ``--master`` and the ``--conf`` values of
+    ``spark.sql.shuffle.partitions``, ``spark.sql.files.maxPartitionBytes``
+    and ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` stand: this
+    sets none of them. An explicit ``master`` or ``shuffle_partitions``
+    argument still applies.
 
     The driver JVM starts from a dynamic class-data-sharing archive of
     the classes every start loads, about half the JVM start and first-job
@@ -370,27 +378,11 @@ def get_spark(app_name: str = "schema-inference-spark",
     """
     master, shuffle = _resolve_parallelism(master, shuffle_partitions,
                                            os.environ)
-    # local-mode inputs are small relative to the 128MB default, which
-    # starves the scan of splits (a 650MB snapshot = 6 tasks regardless
-    # of cores); 16MB keeps local scans parallel, prod clusters keep the
-    # default
-    mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
     driver_mem, java_opts = size_session(os.environ, host_memory_mb())
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.files.maxPartitionBytes", mpb)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # local analog of the 16m scan-split note above: AQE's 64MB
-        # advisory target coalesces the CPU-heavy post-shuffle stages
-        # (JSON parse, regex, digest folds) of MB-sized local inputs
-        # down to a handful of tasks; 16m keeps them spread (measured
-        # ~10% on a warm mid-tier subset, and removes whole-stage
-        # serialization cliffs). Prod clusters override via env to the
-        # guide's 100MB-1GB sizing (§2.2).
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "16m"))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -398,6 +390,19 @@ def get_spark(app_name: str = "schema-inference-spark",
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    if shuffle is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle))
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        # Local inputs are small against the 128MB split and 64MB AQE
+        # advisory defaults, which starve the scan of splits (a 650MB
+        # snapshot = 6 tasks regardless of cores) and coalesce CPU-heavy
+        # post-shuffle stages to a handful of tasks; 16m keeps both
+        # spread (measured ~10% on a warm mid-tier subset). A cluster
+        # job sizes these with spark-submit --conf.
+        builder = (builder
+                   .config("spark.sql.files.maxPartitionBytes", "16m")
+                   .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+                           "16m"))
     # Pre-size and PRE-TOUCH the heap at JVM start (once per process,
     # before any query runs) instead of letting every big first
     # execution page-fault its working set in: a cold 100M-group

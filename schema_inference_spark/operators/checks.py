@@ -790,6 +790,10 @@ def violations_diff(cur: DataFrame, prev: DataFrame,
          .otherwise(F.lit("persisting")).alias("status"))
 
 
+# ---------------------------------------------------------------------------
+# replica comparison: per-turn text equality (validate_replica)
+# ---------------------------------------------------------------------------
+
 def turn_text_diff(left: DataFrame, right: DataFrame,
                    keys: List[str], text_col: str = "text") -> DataFrame:
     """Per-turn text-equality check between two copies of a transcripts

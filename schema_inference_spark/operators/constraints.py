@@ -15,6 +15,10 @@ rules, the same by-value-violation contract as checks.py):
   "event_type='purchase' implies value >= 0"). Output is the offending
   rows themselves, projected to caller-chosen columns.
 
+Both are declared as rule dicts (``validate(rules=)``, the deployed
+job's ``--rules``); ``rules_violations`` turns each rule into canonical
+violation rows.
+
 Scale design:
 - fd: ONE hash aggregation on the determinant; count + count(distinct)
   and min/max examples are all distributive/algebraic, so map-side
@@ -80,7 +84,7 @@ def fd_violations(df: DataFrame,
 def implication_violations(df: DataFrame,
                            antecedent: Union[str, Column],
                            consequent: Union[str, Column],
-                           cols: Iterable[str]) -> DataFrame:
+                           cols: Iterable[Union[str, Column]]) -> DataFrame:
     """Rows where ``antecedent`` holds but ``consequent`` does not,
     projected to ``cols``. SQL tri-state: a NULL consequent is not a
     violation (see module docstring)."""
@@ -111,12 +115,13 @@ def implication_rule_violations(df, snapshot_id: str, check_id: str,
     """``when => then`` as canonical violation rows: one per offending
     turn, carrying the rule text in (schema_1, schema_2) and the
     offending row's ``payload_cols`` values as the JSON payload. Plan:
-    the same zero-shuffle scan filter as implication_violations."""
+    implication_violations' zero-shuffle scan filter."""
     from .checks import _shape
     pc = list(payload_cols)
-    bad = (df.filter(F.expr(when) & ~F.expr(then))
-           .select(F.col(partition_col).alias("partition_id"),
-                   "conv_id", "turn_idx", *pc))
+    bad = implication_violations(
+        df, when, then,
+        [F.col(partition_col).alias("partition_id"), "conv_id", "turn_idx",
+         *pc])
     payload = (F.to_json(F.struct(*[F.col(c) for c in pc]))
                if pc else F.lit(None))
     return _shape(bad, snapshot_id, check_id, payload_col=payload,
@@ -174,145 +179,3 @@ def rules_violations(df, snapshot_id: str, rules,
             raise ValueError(f"unknown rule kind: {kind!r}")
         out = v if out is None else out.unionByName(v)
     return out
-
-
-# ---------------------------------------------------------------------------
-# Constraint SUGGESTION: infer declarable constraints from a profile
-# ---------------------------------------------------------------------------
-
-_INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
-_TS_TYPES = {"timestamp", "timestamp_ntz"}
-
-def _ts_us(v) -> int:
-    import datetime as dt
-    return (v - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
-
-
-def suggest_constraints(df: DataFrame, cols: Iterable[str] = None,
-                        vocab_cap: int = 16) -> DataFrame:
-    """The reference's inference philosophy lifted from TYPES to
-    CONSTRAINTS (the ``algo_w`` analog over values): profile the table
-    once and emit the constraints the data already satisfies, ready to
-    be declared as D10/D11/implication rules for future snapshots —
-
-    - ``not_null``   — column has zero NULLs (and the table is non-empty)
-    - ``unique``     — exact distinct count == non-null count (> 0)
-    - ``vocab``      — string column with 1..vocab_cap distinct values;
-                       detail = the sorted '|'-joined vocabulary
-    - ``range``      — integral column: detail = "min..max"; timestamp
-                       column: detail = "min_us..max_us" (epoch micros —
-                       integer-exact and engine-neutral; float columns
-                       get NO range suggestion: cross-engine float
-                       formatting is not a contract worth gating on)
-
-    Output: (col_name, kind, detail), sorted — |suggestions|-sized.
-
-    Scale shape: ONE aggregation pass computes every count / exact
-    distinct / min / max (Catalyst rewrites the multi-distinct via
-    Expand + two-phase hash aggregate: one shuffle carrying
-    |cols| x |rows| expanded rows with map-side partials — the price of
-    EXACT uniqueness evidence; swap countDistinct for
-    approx_count_distinct when profiling for exploration rather than
-    declaration). The profile row plus <= vocab_cap values per
-    qualifying string column are the only driver-side data — metadata-
-    sized at any corpus size. The suggestion DataFrame is built
-    driver-side (bounded by 4 x |cols| rows).
-    """
-    fields = [f for f in df.schema.fields
-              if cols is None or f.name in set(cols)]
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in fields:
-        c = F.col(f.name)
-        aggs += [F.count(c).alias(f"nn_{f.name}"),
-                 F.countDistinct(c).alias(f"nd_{f.name}")]
-        t = f.dataType.simpleString()
-        if t in _INT_TYPES or t in _TS_TYPES:
-            aggs += [F.min(c).alias(f"mn_{f.name}"),
-                     F.max(c).alias(f"mx_{f.name}")]
-    prof = df.agg(*aggs).first()
-    n = prof["__n"]
-
-    rows = []
-    for f in fields:
-        name = f.name
-        t = f.dataType.simpleString()
-        nn, nd = prof[f"nn_{name}"], prof[f"nd_{name}"]
-        if n > 0 and nn == n:
-            rows.append((name, "not_null", ""))
-        if nn > 0 and nd == nn:
-            rows.append((name, "unique", ""))
-        if t == "string" and 1 <= nd <= vocab_cap:
-            vals = [r[0] for r in
-                    df.select(name).filter(F.col(name).isNotNull())
-                      .distinct().collect()]
-            rows.append((name, "vocab", "|".join(sorted(vals))))
-        if nn > 0 and t in _INT_TYPES:
-            rows.append((name, "range",
-                         f"{prof[f'mn_{name}']}..{prof[f'mx_{name}']}"))
-        if nn > 0 and t in _TS_TYPES:
-            rows.append((name, "range",
-                         f"{_ts_us(prof[f'mn_{name}'])}.."
-                         f"{_ts_us(prof[f'mx_{name}'])}"))
-    return df.sparkSession.createDataFrame(
-        sorted(rows), "col_name string, kind string, detail string")
-
-
-def suggestions_to_rules(suggestions, schema=None) -> tuple:
-    """Close the inference loop: convert collected ``suggest_constraints``
-    rows into (rules, unique_cols) —
-
-    - ``rules``: declarative implication-rule dicts (the
-      ``rules_violations`` contract) for not_null / vocab / range:
-      zero-shuffle scan filters when enforced. Integer ranges compare
-      directly; timestamp ranges (epoch-micros details — resolved via
-      ``schema``, a pyspark StructType or {col: simpleString} mapping)
-      compare through ``unix_micros(CAST(col AS TIMESTAMP))``, the
-      repo-wide NTZ hop (exact under the UTC session convention every
-      oracle uses). Without a schema, range suggestions are assumed
-      integral.
-    - ``unique_cols``: column names whose uniqueness was evidenced —
-      uniqueness is a D10 aggregation check, not a row predicate, so
-      the caller feeds these to the pipeline's uniqueness opt-in
-      rather than to rules_violations.
-
-    The round-trip contract (tested): suggestions profiled from a
-    snapshot, declared as rules, enforce CLEANLY on that snapshot —
-    zero violations — and flag exactly the rows a later snapshot
-    corrupts. ``suggestions`` is the collected suggestion frame
-    (metadata-sized by construction).
-    """
-    types = {}
-    if schema is not None:
-        fields = getattr(schema, "fields", None)
-        types = ({f.name: f.dataType.simpleString() for f in fields}
-                 if fields is not None else dict(schema))
-    rules = []
-    unique_cols = []
-    for r in suggestions:
-        col, kind, detail = r["col_name"], r["kind"], r["detail"]
-        if kind == "not_null":
-            rules.append({"check_id": f"suggested_notnull_{col}",
-                          "kind": "implication", "when": "true",
-                          "then": f"{col} IS NOT NULL",
-                          "payload_cols": []})
-        elif kind == "unique":
-            unique_cols.append(col)
-        elif kind == "vocab":
-            vals = ", ".join(
-                "'" + v.replace("'", "''") + "'"
-                for v in detail.split("|"))
-            rules.append({"check_id": f"suggested_vocab_{col}",
-                          "kind": "implication", "when": "true",
-                          "then": f"{col} IN ({vals})",
-                          "payload_cols": [col]})
-        elif kind == "range":
-            lo, hi = detail.split("..")
-            if types.get(col) in _TS_TYPES:
-                expr = f"unix_micros(CAST({col} AS TIMESTAMP))"
-            else:
-                expr = col
-            rules.append({"check_id": f"suggested_range_{col}",
-                          "kind": "implication", "when": "true",
-                          "then": f"{expr} BETWEEN {lo} AND {hi}",
-                          "payload_cols": [col]})
-    return rules, unique_cols

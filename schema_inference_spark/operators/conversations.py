@@ -1,30 +1,28 @@
 """Conversation-level operators over turn-per-row transcript tables.
 
 The north-rule input is turn-per-row (conv_id, turn_idx, role, text,
-tool, ts); training-data export and conversation-level QA both need the
-per-conversation view:
+tool, ts); conversation-level QA needs the per-conversation view. The
+checks in ``checks.py`` and the drift check in ``drift.py`` build on:
 
 - ``assemble_conversations``: fold each conversation's turns into ONE
-  row (ordered role/text sequence, turn count, time span) — the export
-  shape an SFT pipeline writes. One shuffle on the conversation key;
-  the per-group state is a single conversation (bounded by max dialogue
-  length, thousands of turns, never corpus-sized), so ``collect_list``
-  here is per-key bounded, not a driver collect. ``max_turns`` guards
-  against pathological mega-conversations by keeping the earliest N
-  turns (deterministic: the sort is by (ts, tiebreak) inside the
-  aggregated array, applied AFTER array_sort, so truncation is stable).
-- ``transition_counts``: the (prev -> cur) transition matrix over an
-  ordered per-key sequence (lag window + groupBy) — the corpus-level
-  fingerprint of dialogue structure. Drift in this matrix between
-  snapshots catches role-protocol regressions (e.g. assistant turns
-  that stop following user turns) that per-column stats never see.
-- ``invalid_transitions``: violation rows for transitions outside an
-  allowed set — the conversation-protocol analog of the D11 vocabulary
-  check, emitted in the same per-row violation shape so it composes
-  with the audit sink.
+  row (ordered value sequence, turn count, time span) — the transcript
+  the near-dup check shingles. One shuffle on the conversation key; the
+  per-group state is a single conversation, so ``collect_list`` here is
+  per-key bounded, not a driver collect.
+- ``transition_counts``: the (prev -> cur) role-transition matrix, the
+  input of the ``transition_drift`` snapshot check.
+- ``repeated_runs`` / ``context_overflow`` / ``conv_completeness``:
+  stuck loops, context-budget overflow and truncated or gapped
+  conversations, one row per finding.
+- ``conv_sigs``: one ordered-content digest per conversation, the key
+  of the exact-duplicate check.
 
-All three are pure built-in-function plans (window + groupBy; no Python
-in the hot path) sharing one Exchange on the conversation key.
+``invalid_transitions``, ``turn_latency``, ``conv_dup_groups`` and
+the persisted signature index (``build_conv_sig_index`` /
+``conv_dup_against_index``) are exercised by tests only.
+
+All are built-in-function plans (window + groupBy; no Python in the hot
+path).
 """
 
 from __future__ import annotations
@@ -52,9 +50,9 @@ def assemble_conversations(
     ``extra_group_cols`` ride the fold as functionally-dependent group
     columns (e.g. the catalog bucket — a conversation lives in exactly
     one), same contract as ``conv_sigs``. This is THE assembled-
-    transcript fold: every conversation-granularity consumer
-    (near-dup shingling, the driver queries' assembled CTE) goes
-    through it so the ordering semantics live in one place."""
+    transcript fold: conversation-granularity consumers (the near-dup
+    check's shingling) go through it so the ordering semantics live in
+    one place."""
     ts = F.col(ts_col).cast("timestamp")
     turn = F.struct(
         F.unix_micros(ts).alias("us"),
@@ -92,48 +90,6 @@ def transition_counts(df: DataFrame, key_col: str, ts_col: str,
             .agg(F.count(F.lit(1)).alias("n")))
 
 
-def transition_drift(df: DataFrame, key_col: str, ts_col: str,
-                     seq_col: str, tiebreak_col: str,
-                     eps: float = 1e-6) -> DataFrame:
-    """Distribution drift of the (prev -> cur) transition matrix between
-    the two time-halves of the corpus (split at the midpoint of the
-    observed transition-time range — exact integer arithmetic, no
-    quantile interpolation to disagree across engines). Output: one row
-    per observed transition with its early/late counts and its PSI
-    term ``(q-p)*ln(q/p)`` (both proportions clamped at ``eps``, the
-    same clamp drift.py uses); sum the terms for the matrix PSI.
-
-    This is the D13 drift check lifted from column VALUES to dialogue
-    STRUCTURE: a role-protocol regression (assistant turns that stop
-    following user turns) shifts this matrix while every per-column
-    distribution stays flat. Plan: one lag window + one
-    |roles|^2-cardinality aggregate; the global sums run over the tiny
-    aggregated matrix, never the corpus."""
-    lagged, prev = _with_prev(df, key_col, ts_col, seq_col, tiebreak_col)
-    base = (lagged.filter(F.col(prev).isNotNull())
-            .select(F.col(prev).alias("prev"),
-                    F.col(seq_col).alias("cur"),
-                    F.unix_micros(
-                        F.col(ts_col).cast("timestamp")).alias("_us")))
-    mid = base.agg(F.floor((F.min("_us") + F.max("_us")) / 2)
-                   .cast("bigint").alias("_mid"))
-    halves = (base.join(F.broadcast(mid))
-              .groupBy("prev", "cur")
-              .agg(F.sum(F.when(F.col("_us") < F.col("_mid"), 1)
-                         .otherwise(0)).alias("n_early"),
-                   F.sum(F.when(F.col("_us") >= F.col("_mid"), 1)
-                         .otherwise(0)).alias("n_late")))
-    # totals as a broadcast 1-row join (not a global window: that plans
-    # a single-partition WindowExec even over the tiny matrix)
-    tot = halves.agg(F.sum("n_early").alias("_tot_early"),
-                     F.sum("n_late").alias("_tot_late"))
-    p = F.greatest(F.col("n_early") / F.col("_tot_early"), F.lit(eps))
-    q = F.greatest(F.col("n_late") / F.col("_tot_late"), F.lit(eps))
-    return (halves.join(F.broadcast(tot))
-            .select("prev", "cur", "n_early", "n_late",
-                    F.round((q - p) * F.log(q / p), 4).alias("psi_term")))
-
-
 def turn_latency(df: DataFrame, key_col: str, ts_col: str,
                  seq_col: str, tiebreak_col: str) -> DataFrame:
     """Inter-turn latency statistics per (prev -> cur) transition: for
@@ -160,51 +116,6 @@ def turn_latency(df: DataFrame, key_col: str, ts_col: str,
                  F.sum("gap_us").alias("sum_gap_us"),
                  F.min("gap_us").alias("min_gap_us"),
                  F.max("gap_us").alias("max_gap_us")))
-
-
-def conv_prefix_groups(df: DataFrame, key_col: str, ts_col: str,
-                       seq_col: str, tiebreak_col: str,
-                       k: int, sep: str = ">") -> DataFrame:
-    """Conversations sharing an identical first-``k``-turn sequence:
-    one row per shared prefix with ``n_convs``, the canonical (min) key
-    and the sorted member list. The branch-detection primitive for
-    agent-rollout corpora — N rollouts forked from one seed prompt
-    share their prefix verbatim, and training on all N overweights the
-    seed; this surfaces every such family.
-
-    Conversations shorter than ``k`` group by their full (shorter)
-    sequence — two 2-turn twins are still twins. Plan: one window
-    shuffle on the key (rank the first k turns), one groupBy per key
-    (bounded k-element fold), one groupBy on the prefix string.
-    At 100 TB the member list is the only unbounded output column —
-    for a pathologically shared prefix (empty seed) swap the
-    ``collect_list`` for the count + canonical and cap members via
-    ``slice``, same guidance as assemble_conversations' max_turns."""
-    # alias BEFORE the window so the window's hashpartitioning(_k) is
-    # the same attribute the downstream groupBy("_k") needs — the per-key
-    # fold then reuses the window Exchange instead of adding one. The
-    # rn <= k filter compiles to WindowGroupLimit (partial+final): only
-    # <= k rows per key per input partition ride that one Exchange.
-    base = df.select(F.col(key_col).alias("_k"),
-                     F.col(seq_col).alias("_v"),
-                     F.col(ts_col).cast("timestamp").alias("_ts"),
-                     F.col(tiebreak_col).alias("_tb"))
-    w = Window.partitionBy("_k").orderBy(F.col("_ts"), F.col("_tb"))
-    ranked = (base.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") <= int(k)))
-    prefixes = (ranked.groupBy("_k")
-                .agg(F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(
-                            F.struct(F.col("_rn"), F.col("_v").alias("v")))),
-                        lambda x: x["v"]), sep).alias("prefix_seq")))
-    return (prefixes.groupBy("prefix_seq")
-            .agg(F.count(F.lit(1)).alias("n_convs"),
-                 F.min("_k").alias("canonical_id"),
-                 F.concat_ws(",", F.transform(
-                     F.array_sort(F.collect_list("_k")),
-                     lambda x: x.cast("string"))).alias("members"))
-            .filter(F.col("n_convs") > 1))
 
 
 def invalid_transitions(
@@ -297,11 +208,11 @@ def context_overflow(df: DataFrame, key_col: str, ts_col: str,
     token count) so the running sum is integer-exact on every engine —
     no float summation-order hazard. Plan shape: one window Exchange on
     the key (running sum + row_number in one WindowExec), then a
-    groupBy on the SAME key that reuses that Exchange (aliased before
-    the window, the conv_prefix_groups trick) — map-side partials, no
-    second shuffle. ``extra_group_cols`` ride along for columns
-    functionally dependent on the key (same contract as
-    repeated_runs)."""
+    groupBy on the SAME key that reuses that Exchange (the key is
+    aliased before the window, so both plan the same hashpartitioning
+    attribute) — map-side partials, no second shuffle.
+    ``extra_group_cols`` ride along for columns functionally dependent
+    on the key (same contract as repeated_runs)."""
     extras = list(extra_group_cols)
     w = Window.partitionBy("_k", *extras).orderBy(
         F.col("_ts"), F.col("_tb"))
@@ -392,8 +303,9 @@ def conv_dup_groups(df: DataFrame, key_col: str, ts_col: str,
     it is reduced to a single 32-char digest BEFORE the second shuffle —
     the group-by-signature exchange carries (digest, key, count) per
     conversation, not transcripts. Members lists are duplicate-group
-    sized; cap with the same slice guidance as conv_prefix_groups if a
-    corpus can contain thousand-way boilerplate conversations.
+    sized; cap them with ``slice`` (assemble_conversations' max_turns
+    guidance) if a corpus can contain thousand-way boilerplate
+    conversations.
 
     NULL turn text folds as ``null_marker`` (array_join would otherwise
     silently DROP the element, making [a, NULL, b] collide with [a, b]);

@@ -168,10 +168,12 @@ def main() -> int:
     verdicts = result.verdicts.collect()
     n_fail = sum(1 for v in verdicts
                  if v.partition_id in validated and v.verdict == "fail")
+    already_complete = not validated and not result.errors
     # the snapshot-level verdict (partition -1: drift, cross-partition
-    # schema merge) is not a partition
-    snapshot_failed = any(v.partition_id == -1 and v.verdict == "fail"
-                          for v in verdicts)
+    # schema merge) is not a partition; with nothing pending the verdicts
+    # are the stored audit rows, whose -1 an earlier run reported
+    snapshot_failed = not already_complete and any(
+        v.partition_id == -1 and v.verdict == "fail" for v in verdicts)
     # engine wall: validate() through the last action (violation sink +
     # verdict collect), excluding JVM/session startup — the number a
     # two-cluster-size throughput comparison should use (startup is O(1)
@@ -186,7 +188,7 @@ def main() -> int:
         "partitions_failed": n_fail,
         "snapshot_failed": snapshot_failed,
         "partitions_errored": len(result.errors),
-        "already_complete": not validated and not result.errors,
+        "already_complete": already_complete,
         "wall_sec_validate": round(wall, 2),
         "turns": n_turns,
         "turns_per_sec": round(n_turns / wall, 1) if wall > 0 else None,

@@ -227,117 +227,3 @@ def test_implication_zero_shuffle_plan(spark):
         df, "m = 0", "id < 50", ["id"])._jdf \
         .queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-# ---------------------------------------------------------------------------
-# suggest_constraints
-# ---------------------------------------------------------------------------
-
-def test_suggest_constraints_planted(spark):
-    """Planted table: id unique+not_null+range; grp a 2-value vocab with
-    one NULL (so no not_null); v has a dup (no unique) and nulls."""
-    from schema_inference_spark.operators.constraints import (
-        suggest_constraints,
-    )
-    df = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 10), (3, "a", None), (4, None, 7)],
-        "id bigint, grp string, v bigint")
-    got = {(r.col_name, r.kind): r.detail
-           for r in suggest_constraints(df).collect()}
-    assert got == {
-        ("id", "not_null"): "",
-        ("id", "unique"): "",
-        ("id", "range"): "1..4",
-        ("grp", "vocab"): "a|b",
-        ("v", "range"): "7..10",
-    }
-
-
-def test_suggest_constraints_vocab_cap_and_empty(spark):
-    from schema_inference_spark.operators.constraints import (
-        suggest_constraints,
-    )
-    df = spark.createDataFrame([(str(i),) for i in range(5)], "s string")
-    # cap below the cardinality: no vocab suggestion (unique+not_null stay)
-    kinds = {r.kind for r in
-             suggest_constraints(df, vocab_cap=4).collect()}
-    assert kinds == {"not_null", "unique"}
-    # empty table: no suggestions at all (nothing is evidenced)
-    assert suggest_constraints(df.filter("false")).count() == 0
-
-
-def test_suggest_constraints_ts_range_is_epoch_micros(spark):
-    import datetime as dt
-
-    from schema_inference_spark.operators.constraints import (
-        suggest_constraints,
-    )
-    df = spark.createDataFrame(
-        [(dt.datetime(1970, 1, 1, 0, 0, 1),),
-         (dt.datetime(1970, 1, 1, 0, 0, 2, 500000),)],
-        "ts timestamp")
-    got = {(r.col_name, r.kind): r.detail
-           for r in suggest_constraints(df).collect()}
-    assert got[("ts", "range")] == "1000000..2500000"
-
-
-def test_suggest_declare_enforce_roundtrip(spark):
-    """The closed inference loop: profile a clean snapshot, declare the
-    suggested constraints as rules, enforce — the clean snapshot passes
-    with ZERO violations (self-consistency), and a corrupted later
-    snapshot flags exactly the planted rows under the suggested
-    check_ids."""
-    from schema_inference_spark.operators.constraints import (
-        rules_violations,
-        suggest_constraints,
-        suggestions_to_rules,
-    )
-    clean = spark.createDataFrame(
-        [(0, f"c{i // 3}", i % 3, "user" if i % 2 else "agent")
-         for i in range(30)],
-        "bucket int, conv_id string, turn_idx bigint, role string")
-
-    sugg = suggest_constraints(clean, cols=["role", "turn_idx"]).collect()
-    rules, unique_cols = suggestions_to_rules(sugg, clean.schema)
-    assert {r["check_id"] for r in rules} == {
-        "suggested_notnull_role", "suggested_notnull_turn_idx",
-        "suggested_vocab_role", "suggested_range_turn_idx"}
-    assert unique_cols == []
-
-    # self-consistency: the snapshot that evidenced the rules passes them
-    assert rules_violations(clean, "snap0", rules).count() == 0
-
-    bad = clean.unionByName(spark.createDataFrame(
-        [(0, "c99", 999, "alien"),      # range + vocab
-         (0, "c99", 1, None)],          # not_null (vocab is tri-state NULL
-         "bucket int, conv_id string, turn_idx bigint, role string"))
-    v = rules_violations(bad, "snap1", rules)
-    got = {(r.check_id, r.turn_idx) for r in v.collect()}
-    assert got == {("suggested_range_turn_idx", 999),
-                   ("suggested_vocab_role", 999),
-                   ("suggested_notnull_role", 1)}
-
-
-def test_suggested_ts_range_rule_uses_micros_hop(spark):
-    import datetime as dt
-
-    from schema_inference_spark.operators.constraints import (
-        rules_violations,
-        suggest_constraints,
-        suggestions_to_rules,
-    )
-    clean = spark.createDataFrame(
-        [(0, "c0", i, dt.datetime(2024, 1, 1 + i)) for i in range(3)],
-        "bucket int, conv_id string, turn_idx bigint, ts timestamp")
-    sugg = suggest_constraints(clean, cols=["ts"]).collect()
-    rules, _ = suggestions_to_rules(sugg, clean.schema)
-    range_rule = [r for r in rules
-                  if r["check_id"] == "suggested_range_ts"][0]
-    assert "unix_micros" in range_rule["then"]
-    assert rules_violations(clean, "s", rules).count() == 0
-    late = clean.unionByName(spark.createDataFrame(
-        [(0, "c1", 9, dt.datetime(2025, 6, 1))],
-        "bucket int, conv_id string, turn_idx bigint, ts timestamp"))
-    v = rules_violations(late, "s", rules)
-    assert [(r.check_id, r.turn_idx) for r in v.collect()] \
-        == [("suggested_range_ts", 9)]

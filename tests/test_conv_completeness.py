@@ -1,7 +1,7 @@
 """conv_completeness (operators/conversations.py): the aggregate
 complement of the D12 lag-window ordering check — head truncation and
-per-conversation gap totals. The driver query's oracle gate runs in
-tests/test_conversations.py via CONV_ORACLES."""
+per-conversation gap totals, checked against a pure-Python model in
+test_conv_completeness_matches_model."""
 
 from pyspark.sql import functions as F
 

@@ -1,7 +1,7 @@
 """check_conv_dup (operators/checks.py): whole-conversation duplicate
 members as pipeline violation rows, and the validate(conv_dedup=True)
-opt-in. The driver-query form (conv_dup_exact / conv_dup_incremental)
-is oracle-gated in tests/test_conversations.py; this file covers the
+opt-in. The signature fold (conv_sigs) is checked against a hashlib
+model in tests/test_conversations.py; this file covers the
 violation-store shape and the planted end-to-end path."""
 
 import datetime as dt

@@ -1,91 +1,19 @@
-"""Temporal (as-of join) + conversation-level operators: semantics,
-oracle parity, and plan shape."""
+"""Conversation-level operators: semantics and plan shape."""
 
 import datetime as dt
+import hashlib
 
-import duckdb
-import pytest
 from pyspark.sql import functions as F
 
-from schema_inference_spark.driver_queries_conv import (
-    CONV_ORACLES,
-    CONV_QUERIES,
-)
 from schema_inference_spark.operators.conversations import (
     assemble_conversations,
     invalid_transitions,
     transition_counts,
 )
-from schema_inference_spark.operators.temporal import asof_join
-
-from tests.test_driver_queries import duck_conn, normalize
 
 
 def _ts(s):
     return dt.datetime.fromisoformat(s)
-
-
-@pytest.fixture(scope="module")
-def quotes(spark):
-    return spark.createDataFrame(
-        [(1, _ts("2026-01-01T00:00:10"), 100.0),
-         (1, _ts("2026-01-01T00:00:20"), 110.0),
-         (1, _ts("2026-01-01T00:00:40"), None),   # legit NULL payload
-         (2, _ts("2026-01-01T00:01:00"), 99.0)],
-        "k int, ts timestamp, v double")
-
-
-@pytest.fixture(scope="module")
-def probes(spark):
-    return spark.createDataFrame(
-        [(1, _ts("2026-01-01T00:00:05"), "p_before_any"),
-         (1, _ts("2026-01-01T00:00:10"), "p_exact"),
-         (1, _ts("2026-01-01T00:00:25"), "p_mid"),
-         (1, _ts("2026-01-01T00:00:50"), "p_after_null"),
-         (2, _ts("2026-01-01T00:00:30"), "p_no_prior"),
-         (3, _ts("2026-01-01T00:00:30"), "p_no_key")],
-        "k int, ts timestamp, pid string")
-
-
-def test_asof_backward_semantics(quotes, probes):
-    out = {r.pid: r for r in
-           asof_join(probes, quotes, on=["k"], value_cols=["v"]).collect()}
-    assert out["p_before_any"].matched_ts is None
-    assert out["p_exact"].v == 100.0          # inclusive at equal ts
-    assert out["p_mid"].v == 110.0
-    # the matched quote EXISTS but carries a NULL value — the struct
-    # wrapper must preserve it (not fall back to the previous quote)
-    assert out["p_after_null"].matched_ts == _ts("2026-01-01T00:00:40")
-    assert out["p_after_null"].v is None
-    assert out["p_no_prior"].matched_ts is None
-    assert out["p_no_key"].matched_ts is None
-
-
-def test_asof_forward_and_tolerance(quotes, probes):
-    fwd = {r.pid: r for r in
-           asof_join(probes, quotes, on=["k"], value_cols=["v"],
-                     direction="forward").collect()}
-    assert fwd["p_before_any"].v == 100.0     # nearest at-or-after
-    assert fwd["p_exact"].v == 100.0          # inclusive
-    assert fwd["p_mid"].matched_ts == _ts("2026-01-01T00:00:40")
-    assert fwd["p_after_null"].matched_ts is None
-
-    tol = {r.pid: r for r in
-           asof_join(probes, quotes, on=["k"], value_cols=["v"],
-                     tolerance_s=7.0).collect()}
-    assert tol["p_exact"].v == 100.0              # delta 0s <= 7
-    assert tol["p_mid"].v == 110.0                # delta 5s <= 7
-    assert tol["p_after_null"].matched_ts is None  # delta 10s > 7
-
-
-def test_asof_plan_single_exchange_no_amplification(quotes, probes):
-    """The union-window plan must shuffle once on the key and never
-    produce a nested-loop / cartesian join."""
-    plan = (asof_join(probes, quotes, on=["k"], value_cols=["v"])
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_assemble_conversations_max_turns(spark):
@@ -121,39 +49,6 @@ def test_transition_counts_and_protocol(spark):
         and viol[0].cur == "user" and viol[0].i == 6
 
 
-def test_transition_drift_detects_structure_shift(spark):
-    """Early half alternates user/assistant; late half degenerates to
-    user->user loops — the (user, user) cell must carry a large positive
-    PSI term and the vanished (user, assistant) cell a large one too,
-    while a structure-stable corpus stays ~0."""
-    from schema_inference_spark.operators.conversations import (
-        transition_drift,
-    )
-    rows = []
-    for c in range(4):
-        for i in range(20):
-            # first 10 turns alternate; last 10 are user->user
-            role = ("user" if (i >= 10 or i % 2 == 0) else "assistant")
-            rows.append((f"c{c}", _ts("2026-01-01T00:00:00")
-                         + dt.timedelta(seconds=i), i, role))
-    df = spark.createDataFrame(
-        rows, "cid string, ts timestamp, i long, r string")
-    terms = {(r.prev, r.cur): r.psi_term for r in
-             transition_drift(df, "cid", "ts", "r", "i").collect()}
-    assert terms[("user", "user")] > 1.0        # appears only late
-    assert terms[("user", "assistant")] > 1.0   # vanishes late
-    # stable corpus: every cell's term ~0
-    stable = [(f"c{c}", _ts("2026-01-01T00:00:00")
-               + dt.timedelta(seconds=i), i,
-               "user" if i % 2 == 0 else "assistant")
-              for c in range(4) for i in range(20)]
-    sdf = spark.createDataFrame(
-        stable, "cid string, ts timestamp, i long, r string")
-    sterms = [r.psi_term for r in
-              transition_drift(sdf, "cid", "ts", "r", "i").collect()]
-    assert all(abs(t) < 0.05 for t in sterms)
-
-
 def test_turn_latency_exact_gaps(spark):
     from schema_inference_spark.operators.conversations import turn_latency
     base = _ts("2026-01-01T00:00:00")
@@ -172,124 +67,6 @@ def test_turn_latency_exact_gaps(spark):
     assert (au.n, au.sum_gap_us) == (1, 3_000_000)
     # first turns contribute no gap; cross-conversation pairs never pair
     assert sum(r.n for r in out.values()) == 3
-
-
-def test_conv_prefix_groups_semantics(spark):
-    from schema_inference_spark.operators.conversations import (
-        conv_prefix_groups,
-    )
-    base = _ts("2026-01-01T00:00:00")
-
-    def conv(cid, seq):
-        return [(cid, base + dt.timedelta(seconds=i), i, r)
-                for i, r in enumerate(seq)]
-
-    rows = (conv(10, ["a", "b", "c", "x"])    # shares a>b>c with 2
-            + conv(2, ["a", "b", "c", "y", "z"])
-            + conv(3, ["a", "b", "d"])        # differs at turn 3
-            + conv(4, ["q", "r"])             # short twin of 5
-            + conv(5, ["q", "r"]))
-    df = spark.createDataFrame(rows, "cid long, ts timestamp, i long, r string")
-    out = {r.prefix_seq: r for r in
-           conv_prefix_groups(df, "cid", "ts", "r", "i", k=3).collect()}
-    assert set(out) == {"a>b>c", "q>r"}
-    g = out["a>b>c"]
-    assert g.n_convs == 2 and g.canonical_id == 2
-    assert g.members == "2,10", "members sort numerically, not lexically"
-    assert out["q>r"].members == "4,5", \
-        "conversations shorter than k group by their full sequence"
-
-
-@pytest.mark.parametrize("name", sorted(CONV_ORACLES))
-def test_conv_query_matches_oracle(spark, sf_dir, name):
-    sdf = CONV_QUERIES[name](spark, sf_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    con = duck_conn(sf_dir)
-    res = con.execute(CONV_ORACLES[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    con.close()
-
-    assert sorted(spark_cols) == sorted(duck_cols), \
-        f"{name}: column mismatch {spark_cols} vs {duck_cols}"
-    assert len(spark_rows) == len(duck_rows), \
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    assert normalize(spark_rows, spark_cols) == normalize(duck_rows, duck_cols), \
-        f"{name}: value mismatch"
-
-
-# ---------------------------------------------------------------------------
-# interval (range) join — binned encoding
-# ---------------------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def windows(spark):
-    """Intervals deliberately spanning bin boundaries (bin=10s)."""
-    return spark.createDataFrame(
-        [(1, _ts("2026-01-01T00:00:05"), _ts("2026-01-01T00:00:25"), "w_a"),
-         (1, _ts("2026-01-01T00:00:20"), _ts("2026-01-01T00:00:30"), "w_b"),
-         (1, _ts("2026-01-01T00:01:00"), _ts("2026-01-01T00:01:00"), "w_pt"),
-         (2, _ts("2026-01-01T00:00:00"), _ts("2026-01-01T00:05:00"), "w_c")],
-        "k int, s_ts timestamp, e_ts timestamp, name string")
-
-
-def test_interval_join_semantics(spark, windows):
-    from schema_inference_spark.operators.temporal import interval_join
-    probes = spark.createDataFrame(
-        [(1, _ts("2026-01-01T00:00:22"), "p_two"),     # inside w_a AND w_b
-         (1, _ts("2026-01-01T00:00:05"), "p_lo"),      # inclusive start
-         (1, _ts("2026-01-01T00:00:30"), "p_hi"),      # inclusive end
-         (1, _ts("2026-01-01T00:01:00"), "p_pt"),      # zero-length window
-         (1, _ts("2026-01-01T00:00:45"), "p_miss"),    # no window
-         (3, _ts("2026-01-01T00:00:10"), "p_nokey")],  # no such key
-        "k int, ts timestamp, pid string")
-    got = {}
-    rows = interval_join(probes, windows, on=["k"], probe_ts="ts",
-                         start_ts="s_ts", end_ts="e_ts",
-                         value_cols=["name"], bin_seconds=10).collect()
-    for r in rows:
-        got.setdefault(r.pid, set()).add(r.name)
-    assert got == {"p_two": {"w_a", "w_b"}, "p_lo": {"w_a"},
-                   "p_hi": {"w_b"}, "p_pt": {"w_pt"}}
-    # exactly-once per qualifying pair (no bin-duplication)
-    assert len(rows) == 5
-
-
-def test_interval_join_plan_no_nested_loop(spark, windows):
-    """The whole point of the binned encoding: Catalyst must plan an
-    equi-join on (key, bin), never a nested loop / cartesian over a
-    raw BETWEEN predicate."""
-    from schema_inference_spark.operators.temporal import interval_join
-    probes = spark.createDataFrame(
-        [(1, _ts("2026-01-01T00:00:22"), "p")],
-        "k int, ts timestamp, pid string")
-    plan = (interval_join(probes, windows, on=["k"], probe_ts="ts",
-                          start_ts="s_ts", end_ts="e_ts",
-                          value_cols=["name"], bin_seconds=10)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def test_interval_join_left_keeps_misses(spark, windows):
-    from schema_inference_spark.operators.temporal import interval_join
-    probes = spark.createDataFrame(
-        [(1, _ts("2026-01-01T00:00:22"), "p_hit"),
-         (1, _ts("2026-01-01T00:00:45"), "p_miss")],
-        "k int, ts timestamp, pid string")
-    out = interval_join(probes, windows, on=["k"], probe_ts="ts",
-                        start_ts="s_ts", end_ts="e_ts",
-                        value_cols=["name"], bin_seconds=10,
-                        how="left").collect()
-    by_pid = {}
-    for r in out:
-        by_pid.setdefault(r.pid, set()).add(r.name)
-    assert by_pid["p_hit"] == {"w_a", "w_b"}
-    assert by_pid["p_miss"] == {None}      # kept, null interval payload
-    miss = [r for r in out if r.pid == "p_miss"][0]
-    assert miss.interval_start_us is None
 
 
 # ---------------------------------------------------------------------------
@@ -358,9 +135,14 @@ def _conv_rows():
     return rows
 
 
+def _md5(s):
+    return hashlib.md5(s.encode()).hexdigest()
+
+
 def test_conv_dup_groups_exact_and_null_fold(spark):
     from schema_inference_spark.operators.conversations import (
         conv_dup_groups,
+        conv_sigs,
     )
     df = spark.createDataFrame(
         _conv_rows(), "k int, ts timestamp, tb int, txt string")
@@ -370,6 +152,16 @@ def test_conv_dup_groups_exact_and_null_fold(spark):
     (g,) = out
     assert (g["n_convs"], g["n_turns"], g["canonical_id"],
             g["members"]) == (2, 2, 1, "1,2")
+    # every conversation's signature is the md5 of its (ts, tiebreak)-
+    # ordered per-turn md5 digests, NULL text digested as the marker
+    sigs = {r["conv_id"]: r["conv_sig"] for r in conv_sigs(
+        df, key_col="k", ts_col="ts", text_col="txt",
+        tiebreak_col="tb").collect()}
+    turns = {}
+    for k, _, _, txt in sorted(_conv_rows(), key=lambda r: r[:3]):
+        turns.setdefault(k, []).append(_md5("\x00" if txt is None else txt))
+    assert sigs == {k: _md5("\x1f".join(d)) for k, d in turns.items()}
+    assert g["conv_sig"] == sigs[1]
 
 
 def test_conv_dup_groups_ordering_is_ts_then_tiebreak(spark):

@@ -3,9 +3,11 @@
 A spark-submit child (PYSPARK_GATEWAY_PORT set) must NOT have its
 submitted --master overridden by get_spark's local[cpus] fallback;
 a plain `python` launch must still get the local default; an explicit
-master argument always wins. Unit-tested here so the decision logic
-can't regress silently. The class-data-sharing archive's plan is tested
-on a fake JDK and Spark home, and end to end through the deployed job.
+master argument always wins. The same holds for the submitted --conf
+sizing, checked through a real spark-submit. Unit-tested here so the
+decision logic can't regress silently. The class-data-sharing archive's
+plan is tested on a fake JDK and Spark home, and end to end through the
+deployed job.
 """
 
 import os
@@ -53,10 +55,12 @@ def test_parallelism_defaults_to_the_cpus_this_process_may_use():
     assert _resolve_parallelism(None, None, {}) == (f"local[{n}]", n)
     assert _resolve_parallelism(None, None, {"SPARK_GRAFT_CPUS": "3"}) == (
         "local[3]", 3)
-    # explicit arguments and spark-submit keep their precedence
+    # explicit arguments win; under spark-submit its --master and --conf
+    # decide unless an argument is given
     assert _resolve_parallelism("local[2]", 5, {}) == ("local[2]", 5)
-    assert _resolve_parallelism(None, None, {
-        "PYSPARK_GATEWAY_PORT": "46165"}) == (None, n)
+    submit = {"PYSPARK_GATEWAY_PORT": "46165"}
+    assert _resolve_parallelism(None, None, submit) == (None, None)
+    assert _resolve_parallelism(None, 5, submit) == (None, 5)
 
 
 # --- class-data sharing archive -------------------------------------------------
@@ -308,3 +312,44 @@ def test_submit_dumps_then_starts_from_the_archive(tmp_path):
     assert decision.startswith("skipped: archive is 5242880 bytes")
     assert archives == []
     assert glob.glob(str(tmp_path / "hs_err_pid*.log")) == []
+
+
+_PROBE = """
+import json
+
+from schema_inference_spark.functions import get_spark
+
+spark = get_spark()
+print(json.dumps({k: spark.conf.get(k) for k in (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    "spark.sql.shuffle.partitions")}))
+spark.stop()
+"""
+
+
+def test_spark_submit_conf_survives_get_spark(tmp_path):
+    """A job's spark-submit --conf sizing reaches the session: get_spark()
+    sets none of the three local defaults under spark-submit."""
+    import json
+    import subprocess
+    import sys
+
+    from pyspark.find_spark_home import _find_spark_home
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = tmp_path / "probe.py"
+    probe.write_text(_PROBE)
+    conf = {"spark.sql.files.maxPartitionBytes": "256m",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128m",
+            "spark.sql.shuffle.partitions": "7"}
+    env = dict(os.environ, SPARK_LOCAL_IP="127.0.0.1", PYTHONPATH=repo,
+               PYSPARK_PYTHON=sys.executable,
+               XDG_CACHE_HOME=str(tmp_path / "xdg"))
+    res = subprocess.run(
+        [os.path.join(_find_spark_home(), "bin", "spark-submit"),
+         "--master", "local[1]", "--driver-memory", "512m",
+         *[a for k, v in conf.items() for a in ("--conf", f"{k}={v}")],
+         str(probe)],
+        capture_output=True, text=True, cwd=tmp_path, env=env, timeout=300)
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert json.loads(res.stdout.splitlines()[-1]) == conf

@@ -1,8 +1,8 @@
 """check_stuck_loops (operators/checks.py): violation-store form of
 repeated_runs, plus the validate() opt-in — the retry-loop pathology
 D12's gap/order checks never see (stuck loops have perfectly
-consecutive turn_idx). The driver query's oracle gate runs in
-tests/test_conversations.py via CONV_ORACLES."""
+consecutive turn_idx). repeated_runs itself is checked against a
+pure-Python model in tests/test_semistructured.py."""
 
 import datetime as dt
 import json

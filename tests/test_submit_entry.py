@@ -103,7 +103,9 @@ def test_submit_unreadable_partition_exits_1_on_every_run(tmp_path):
 def test_submit_snapshot_level_failure_is_not_a_partition(spark, tmp_path):
     """A snapshot that drifts against its baseline fails at the snapshot
     level (verdict partition -1): the job reports ``snapshot_failed`` and
-    exits 1, and ``partitions_failed`` counts validated partitions only."""
+    exits 1, and ``partitions_failed`` counts validated partitions only.
+    A resubmit with nothing pending reports no failure of its own (the
+    stored -1 verdict belongs to the first run) and exits 0."""
     from schema_inference_spark.pipeline import baseline_from_result, validate
     from schema_inference_spark.sources.catalog import SnapshotCatalog
     from schema_inference_spark.sources.transcripts import (
@@ -121,13 +123,18 @@ def test_submit_snapshot_level_failure_is_not_a_partition(spark, tmp_path):
     baseline.write_text(json.dumps({
         c: b.hex() if b else None
         for c, b in baseline_from_result(r0)["sketches"].items()}))
-    rc, out, res = _run(["--root", root, "--snapshot", "s1",
-                         "--audit", str(tmp_path / "audit"),
-                         "--baseline", str(baseline)])
+    args = ["--root", root, "--snapshot", "s1",
+            "--audit", str(tmp_path / "audit"), "--baseline", str(baseline)]
+    rc, out, res = _run(args)
     assert rc == 1, res.stderr[-2000:]
     assert out["snapshot_failed"] is True
     assert out["partitions_validated"] == 4
     assert out["partitions_failed"] <= out["partitions_validated"]
+
+    rc, out, res = _run(args)
+    assert rc == 0, res.stderr[-2000:]
+    assert out["snapshot_failed"] is False
+    assert out["already_complete"] is True
 
 
 def test_submit_replica_mode(submit_root, tmp_path):
