@@ -95,18 +95,16 @@ def size_session(env: Mapping[str, str],
 
     The default heap is ``HEAP_SHARE`` of the host, capped at 32g. An
     explicit ``SPARK_GRAFT_DRIVER_MEM`` is used as given. The heap is
-    pre-sized (``-Xms``) and pre-touched when it fits in the same budget;
-    otherwise ``-Xms`` is clamped to the budget and nothing is
-    pre-touched: a heap the host cannot back makes the JVM die at start
-    under ``-XX:+AlwaysPreTouch``.
+    pre-sized (``-Xms``) to the smaller of itself and the budget, and
+    not pre-touched; its young generation is fixed (``-Xmn``) at a
+    quarter of that size (see ``get_spark``).
     """
     budget = (None if host_mb is None
               else min(int(host_mb * HEAP_SHARE), MAX_DEFAULT_HEAP_MB))
     heap = env.get("SPARK_GRAFT_DRIVER_MEM") or (
         "32g" if budget is None else f"{budget}m")
-    if budget is None or _mem_mb(heap) <= budget:
-        return heap, f"-Xms{heap} -XX:+AlwaysPreTouch"
-    return heap, f"-Xms{budget}m"
+    xms = heap if budget is None or _mem_mb(heap) <= budget else f"{budget}m"
+    return heap, f"-Xms{xms} -Xmn{int(_mem_mb(xms)) // 4}m"
 
 
 # -- class-data sharing --------------------------------------------------------
@@ -403,18 +401,26 @@ def get_spark(app_name: str = "schema-inference-spark",
                    .config("spark.sql.files.maxPartitionBytes", "16m")
                    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
                            "16m"))
-    # Pre-size and PRE-TOUCH the heap at JVM start (once per process,
-    # before any query runs) instead of letting every big first
-    # execution page-fault its working set in: a cold 100M-group
-    # aggregation measured 42.6s against 18.2s with a pre-touched heap
-    # (the first touch of ~20GB of heap pages IS the difference — -Xms
-    # alone, without AlwaysPreTouch, changed nothing). A long-lived
-    # cluster executor pays this once at executor launch and never per
-    # query, which is exactly what the flag reproduces locally (guide
-    # §5: memory behavior belongs to process lifecycle, not to the
-    # queries that happen to run first). size_session() pre-touches only
-    # a heap the host can back. No effect under spark-submit (the JVM is
-    # already up, Spark ignores driver extraJavaOptions then).
+    # The heap is pre-sized but not pre-touched (-XX:+AlwaysPreTouch):
+    # touching every page at start keeps the whole -Xms resident for the
+    # life of the process. Measured with perfbench (4 cores, 3g heap,
+    # 10 pairs each): peak RSS fell from 3,662 to 3,047 MB on
+    # unclustered_drift_resume, whose row-level checks run in Python
+    # workers (a traced run of them with pre-touch peaked at 3,937 MB,
+    # over the benchmark's 5 % bound), and from 4,279 to 1,675 MB on
+    # clustered_snapshot. Over 6 pairs with pre-touch as the only
+    # difference, clustered turns_per_s moved +2.6 % (3 of 6 better) and
+    # the cold call +2.8 %: inside run-to-run noise.
+    # The young generation is fixed at a quarter of -Xms (-Xmn): an
+    # untouched heap grows its resident set with G1's adaptive young
+    # size, which follows pause times, so peak RSS varied from run to run
+    # (drift JVM VmHWM 2,317-2,788 MB over 7 runs on the 3g heap). With
+    # -Xmn768m it read 1,598-1,660 MB over 15 runs, drift turns_per_s
+    # stayed +52 % over the pre-touched parent (10 of 10 pairs), and
+    # clustered_snapshot's JVM, whose adaptive young generation stayed
+    # small (906-995 MB), reads 1,453-1,561 MB at the same speed.
+    # No effect under spark-submit (the JVM is already up, Spark ignores
+    # driver extraJavaOptions then).
     if master is not None:
         builder = builder.master(master)
     if SparkContext._gateway is not None:  # the JVM is up: nothing launches

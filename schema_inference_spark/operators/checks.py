@@ -1,13 +1,15 @@
 """Constraint checks D10-D12: uniqueness, referential integrity, ordering.
 
-Each check is a declarative DataFrame plan (Catalyst optimizes; no Python
-in the hot path) that emits violation rows in the reference failure-object
-shape (FIXTURES.md F5; ref util.clj:153-155):
+Each check emits violation rows in the reference failure-object shape
+(FIXTURES.md F5; ref util.clj:153-155):
 
     (snapshot_id, partition_id, check_id, mgu_failure, schema_1, schema_2,
      conv_id, turn_idx, payload)
 
-Scale design (SURVEY.md §4.3):
+``validate()`` runs D10-D12 together through ``check_rowlevel_fused``:
+one exchange on conv_id feeding the clustered path's Arrow kernel. The
+per-check declarative plans below are its oracles in tests. Their scale
+design (SURVEY.md §4.3):
 - uniqueness (D10): salted two-phase aggregation — partial counts on
   (key, salt) absorb hot keys before the global shuffle; a single hot
   conv_id (agent loop) cannot pin one reducer. AQE skew handling stays on
@@ -30,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.frames import local_frame
+from .clustered import _OUT_DDL, _segment_checker
 
 VIOLATION_COLS = [
     "snapshot_id", "partition_id", "check_id", "mgu_failure",
@@ -392,40 +395,6 @@ def check_context_overflow(df: DataFrame, snapshot_id: str,
 # D12 — turn ordering: gaps, duplicates, ts regressions in ONE window pass
 # ---------------------------------------------------------------------------
 
-# (turn_idx, ts) packs into one decimal(38,0) whose numeric order equals
-# the lexicographic order the blocked window sorts by. Why pack:
-# max(struct(...)) cannot use the mutable hash-aggregation buffer and
-# falls back to SortAggregate — two full sorts of the table just to find
-# block boundaries; max(decimal) hash-aggregates with map-side partials
-# (verified: HashAggregate in plan, decode byte-equal).
-#
-# Both fields are BIASED into non-negative space before packing (and
-# un-biased in decimal space on unpack, BEFORE the long cast) so that
-# dirty data with pre-1970 timestamps (negative unix_micros) or negative
-# turn_idx round-trips exactly — these checks exist to validate dirty
-# data, so the carrier must not corrupt it:
-#   pack = (turn_idx + 2^40) * 10^20 + (unix_micros + 2^63)
-# - micros + 2^63 in [0, 2^64) < 10^20 for the FULL long range, so the
-#   block term never bleeds; the quotient's fraction stays <= 0.185, so
-#   the scale-6 decimal division never rounds the long cast off-by-one.
-# - valid turn_idx domain: (-2^40, 10^18 - 2^40) — far beyond the int32
-#   input contract (input_hint); outside it the decimal overflows (raises
-#   under ANSI, nulls otherwise).
-# The affine bias preserves ordering, so max(pack) is still the
-# lexicographic (turn_idx, ts) max.
-_PACK = "100000000000000000000"     # 10^20 block multiplier
-_BIAS_T = "1099511627776"           # 2^40 turn_idx bias
-_BIAS_M = "9223372036854775808"     # 2^63 unix_micros bias
-_PACK_TURN_TS = (f"(cast(turn_idx as decimal(38,0)) + {_BIAS_T})"
-                 f" * cast('{_PACK}' as decimal(38,0))"
-                 f" + (cast(unix_micros(ts) as decimal(38,0)) + {_BIAS_M})")
-_UNPACK_TURN = (f"cast(cast(_o / cast('{_PACK}' as decimal(38,0))"
-                f" as decimal(38,0)) - cast({_BIAS_T} as decimal(38,0))"
-                f" as bigint)")
-_UNPACK_TS = (f"timestamp_micros(cast((_o % cast('{_PACK}' as decimal(38,0)))"
-              f" - cast({_BIAS_M} as decimal(38,0)) as bigint))")
-
-
 def check_ordering(df: DataFrame, snapshot_id: str,
                    partition_col: str = "bucket") -> DataFrame:
     """Window over (conv_id ORDER BY turn_idx, ts): a single shuffle on
@@ -478,78 +447,6 @@ def check_ordering(df: DataFrame, snapshot_id: str,
     return gap_v.unionByName(dup_v).unionByName(ts_v)
 
 
-def check_ordering_blocked(df: DataFrame, snapshot_id: str,
-                           partition_col: str = "bucket",
-                           block_size: int = 8192) -> DataFrame:
-    """Skew-bounded variant of ``check_ordering`` (SURVEY.md §7.3-4).
-
-    A single hot conversation (agent loop) puts ALL its turns into one
-    window task in the plain check — an Amdahl bottleneck no executor
-    count can fix. Here the window is partitioned by
-    (conv_id, turn_idx div block_size): each task sorts at most
-    ~block_size turns. The pair that spans a block boundary is recovered
-    by computing each block's last row (one groupBy max-struct) and
-    injecting it into the next block as a non-emitting carrier row.
-    Output is row-identical to ``check_ordering`` (asserted in tests).
-    """
-    base = (df.select(partition_col, "conv_id", "turn_idx", "ts")
-            .withColumn("_blk", F.floor(F.col("turn_idx") / block_size)))
-
-    # last row of each (conv, block) by (turn_idx, ts): max of the packed
-    # decimal key (see _PACK_TURN_TS — hash-aggregable, unlike a struct
-    # max). The carrier goes to the next NON-EMPTY block (a gap can span
-    # whole blocks), found with a lead() over the per-conv block list —
-    # rows there = #blocks per conv, so that window is tiny and skew-free
-    # by construction. The carrier's partition id is never emitted
-    # (carriers are filtered before violation shaping), so it carries 0.
-    blk_last = (base.groupBy("conv_id", "_blk")
-                .agg(F.max(F.expr(_PACK_TURN_TS)).alias("_o")))
-    wb = Window.partitionBy("conv_id").orderBy("_blk")
-    last = (blk_last
-            .withColumn("_next_blk", F.lead("_blk").over(wb))
-            .filter(F.col("_next_blk").isNotNull())
-            .select("conv_id", F.col("_next_blk").alias("_blk"),
-                    F.expr(_UNPACK_TURN).alias("turn_idx"),
-                    F.expr(_UNPACK_TS).alias("ts"),
-                    F.lit(0).alias(partition_col),
-                    F.lit(True).alias("_carrier")))
-
-    unioned = base.withColumn("_carrier", F.lit(False)).unionByName(last)
-    w = Window.partitionBy("conv_id", "_blk").orderBy("turn_idx", "ts")
-    ordered = (unioned
-               .withColumn("_prev_idx", F.lag("turn_idx").over(w))
-               .withColumn("_prev_ts", F.lag("ts").over(w))
-               .filter(~F.col("_carrier")))
-
-    gap = ordered.filter(F.col("_prev_idx").isNotNull()
-                         & (F.col("turn_idx") > F.col("_prev_idx") + 1))
-    gap_v = _shape(
-        gap.withColumnRenamed(partition_col, "partition_id"),
-        snapshot_id, "turn_gap",
-        payload_col=F.to_json(F.struct(
-            F.col("_prev_idx").cast("bigint").alias("prev_idx"),
-            (F.col("turn_idx") - F.col("_prev_idx") - 1).cast("bigint").alias("missing"))),
-    )
-    dup = ordered.filter(F.col("_prev_idx").isNotNull()
-                         & (F.col("turn_idx") == F.col("_prev_idx")))
-    dup_v = _shape(
-        dup.withColumnRenamed(partition_col, "partition_id"),
-        snapshot_id, "turn_dup",
-        payload_col=F.to_json(F.struct(
-            F.col("_prev_idx").cast("bigint").alias("prev_idx"))),
-    )
-    ts_bad = ordered.filter(F.col("_prev_ts").isNotNull()
-                            & (F.col("ts") < F.col("_prev_ts")))
-    ts_v = _shape(
-        ts_bad.withColumnRenamed(partition_col, "partition_id"),
-        snapshot_id, "ts_order",
-        payload_col=F.to_json(F.struct(
-            F.date_format("_prev_ts", "yyyy-MM-dd'T'HH:mm:ssXXX").alias("prev_ts"),
-            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ssXXX").alias("ts"))),
-    )
-    return gap_v.unionByName(dup_v).unionByName(ts_v)
-
-
 # ---------------------------------------------------------------------------
 # Conversation-protocol check: role-transition matrix (opt-in)
 # ---------------------------------------------------------------------------
@@ -564,9 +461,9 @@ def check_role_protocol(df: DataFrame, snapshot_id: str,
     ``allowed`` is a set of (prev, cur) string pairs (roles x roles —
     tiny), compiled into a literal array tested per row inside
     whole-stage codegen: no second join, no broadcast table. The window
-    is the SAME (conv_id ORDER BY turn_idx, ts) ordering the D12 checks
-    use (the stable-turn-ordering invariant), so under composition the
-    Exchange is shared. A conversation's first turn has no predecessor
+    is the (conv_id ORDER BY turn_idx, ts) ordering the D12 checks use
+    (the stable-turn-ordering invariant), with its own exchange. A
+    conversation's first turn has no predecessor
     and never violates (start-state validation is a vocabulary check).
     A NULL role on either side of a transition is left to the D11
     referential check — protocol rows require both roles present.
@@ -593,157 +490,45 @@ def check_role_protocol(df: DataFrame, snapshot_id: str,
 
 
 # ---------------------------------------------------------------------------
-# Fused row-level checks: D10 + D11 (x2) + D12 in ONE scan, ONE shuffle
+# Row-level checks on the shuffle path: D10 + D11 (x2) + D12 in one kernel
 # ---------------------------------------------------------------------------
-
-# the fused statement's per-row violation struct
-_VSTRUCT = ("struct<check_id:string,mgu_failure:string,schema_1:string,"
-            "schema_2:string,payload:string,partition_id:int>")
-
-
-def _vrow(check_id: str, payload: str, pid: str = "_pid",
-          mgu: str = "cast(null as string)", s1: str = "cast(null as string)",
-          s2: str = "cast(null as string)") -> str:
-    return (f"named_struct('check_id', '{check_id}', 'mgu_failure', {mgu}, "
-            f"'schema_1', {s1}, 'schema_2', {s2}, 'payload', {payload}, "
-            f"'partition_id', cast({pid} as int))")
-
-
-def _vocab_row(bad: str, col: str, check_id: str, enum: str) -> str:
-    return (f"CASE WHEN {bad} THEN " + _vrow(
-        check_id, f"to_json(named_struct('value', {col}))",
-        "IDENTIFIER(:pcol)", "'non_equal'",
-        f"to_json(named_struct('type', 'enum', 'values', array({col})))",
-        f":{enum}") + " END")
-
-
-# Only constants of this module enter the text; every value that comes
-# from a caller (vocabularies, their enum JSON, the snapshot id, the
-# partition column, the block size) binds as a named parameter.
-_FUSED_SQL = f"""
-WITH base AS (
-  SELECT IDENTIFIER(:pcol) AS _pid, conv_id, turn_idx, ts,
-    filter(array(
-      {_vocab_row("role IS NULL OR NOT array_contains(:roles, role)",
-                  "role", "ref_role", "role_enum")},
-      {_vocab_row("tool IS NOT NULL AND NOT array_contains(:tools, tool)",
-                  "tool", "ref_tool", "tool_enum")}),
-      x -> x IS NOT NULL) AS _vv,
-    floor(turn_idx / :block_size) AS _blk
-  FROM {{snap}}
-),
-blk_last AS (
-  SELECT conv_id, _blk, max({_PACK_TURN_TS}) AS _o
-  FROM base GROUP BY conv_id, _blk
-),
-carriers AS (
-  SELECT 0 AS _pid, conv_id, {_UNPACK_TURN} AS turn_idx, {_UNPACK_TS} AS ts,
-    cast(array() AS array<{_VSTRUCT}>) AS _vv, _next_blk AS _blk,
-    true AS _carrier
-  FROM (SELECT conv_id, _o,
-          lead(_blk) OVER (PARTITION BY conv_id ORDER BY _blk) AS _next_blk
-        FROM blk_last)
-  WHERE _next_blk IS NOT NULL
-),
-ordered AS (
-  SELECT *,
-    lag(turn_idx) OVER w AS _prev_idx,
-    lag(ts) OVER w AS _prev_ts,
-    lead(turn_idx) OVER w AS _next_idx
-  FROM (SELECT *, false AS _carrier FROM base
-        UNION ALL SELECT * FROM carriers)
-  WINDOW w AS (PARTITION BY conv_id, _blk ORDER BY turn_idx, ts)
-),
-exploded AS (
-  SELECT :snapshot_id AS snapshot_id, _v.partition_id, _v.check_id,
-    _v.mgu_failure, _v.schema_1, _v.schema_2,
-    cast(conv_id AS string) AS conv_id, cast(turn_idx AS bigint) AS turn_idx,
-    _v.payload
-  FROM (SELECT conv_id, turn_idx, explode(concat(_vv, filter(array(
-    CASE WHEN turn_idx = _prev_idx OR turn_idx = _next_idx
-      THEN {_vrow("unique_key", "cast(null as string)")} END,
-    CASE WHEN _prev_idx IS NOT NULL AND turn_idx > _prev_idx + 1
-      THEN {_vrow("turn_gap", "to_json(named_struct("
-                  "'prev_idx', cast(_prev_idx as bigint), 'missing', "
-                  "cast(turn_idx - _prev_idx - 1 as bigint)))")} END,
-    CASE WHEN _prev_idx IS NOT NULL AND turn_idx = _prev_idx
-      THEN {_vrow("turn_dup", "to_json(named_struct("
-                  "'prev_idx', cast(_prev_idx as bigint)))")} END,
-    CASE WHEN _prev_ts IS NOT NULL AND ts < _prev_ts
-      THEN {_vrow("ts_order", "to_json(named_struct("
-                  "'prev_ts', date_format(_prev_ts, :ts_format), "
-                  "'ts', date_format(ts, :ts_format)))")} END),
-    x -> x IS NOT NULL))) AS _v
-    FROM ordered WHERE NOT _carrier)
-)
-SELECT snapshot_id,
-  CASE WHEN check_id = 'unique_key' THEN _pmin ELSE partition_id END
-    AS partition_id,
-  check_id, mgu_failure, schema_1, schema_2, conv_id, turn_idx,
-  CASE WHEN check_id = 'unique_key'
-    THEN to_json(named_struct('n_copies', _n)) ELSE payload END AS payload
-FROM (
-  SELECT *,
-    count(1) OVER (PARTITION BY check_id, conv_id, turn_idx) AS _n,
-    min(partition_id) OVER (PARTITION BY check_id, conv_id, turn_idx) AS _pmin,
-    row_number() OVER (PARTITION BY check_id, conv_id, turn_idx
-                       ORDER BY partition_id) AS _rn
-  FROM exploded)
-WHERE check_id <> 'unique_key' OR _rn = 1
-"""
-
 
 def check_rowlevel_fused(df: DataFrame, snapshot_id: str,
                          role_vocab: List[str], tool_vocab: List[str],
-                         partition_col: str = "bucket",
-                         block_size: int = 8192) -> DataFrame:
-    """Every row-level check in a single pass, row-identical to the union
-    of ``check_unique_key`` + ``check_referential`` (role, tool) +
-    ``check_ordering_blocked`` (asserted in tests).
+                         partition_col: str = "bucket") -> DataFrame:
+    """Every row-level check in one lazy plan over any row source. On
+    rows with non-null keys it is row-identical to the union of
+    ``check_unique_key`` + ``check_referential`` (role, tool) +
+    ``check_ordering``; null keys follow the turn-blocked window plan it
+    replaced (both asserted in tests):
 
-    Why: run separately, the four checks scan the snapshot four times
-    (five with the blocked-ordering carrier aggregate), and each
-    violation family re-executes its window lineage. At 100 TB the scan
-    IS the cost, so the fused plan computes all of them from ONE
-    skew-blocked window pass with ONE sort:
+      scan -> project the six check columns -> Exchange(conv_id) ->
+      Sort(conv_id, turn_idx, ts) -> mapInArrow(clustered kernel)
 
-      scan -> Exchange(conv_id, turn_idx div block_size) ->
-      Sort(turn_idx, ts) -> Window(lag idx, lag ts, lead idx) ->
-      per-row ARRAY of violation structs -> explode ->
-      tiny window over the (sparse) violation rows only
+    The kernel is the clustered path's ``_segment_checker`` in its
+    sorted-input mode: each conversation is whole in one task, so the
+    lag checks and duplicate runs need no carrier rows, seam stitch or
+    second branch, and collecting the plan runs one scan and one
+    exchange. AQE sizes the exchange. The kernel emits violation rows
+    only, a duplicate key as one ``unique_key`` row (its copy count, the
+    min bucket of its copies).
 
-    - uniqueness: all copies of a key share a block (same turn_idx =>
-      same block) and sort ADJACENT, so lag/lead equality flags every
-      member of a duplicate run — no per-key window or aggregation over
-      the 10^12-row data. Members emit a raw unique_key struct; the
-      post-explode window (partitioned by check_id, conv, turn — only
-      violation rows, thousands not trillions) folds them into the
-      single (n_copies, min-bucket) row the salted aggregate would
-      produce.
-    - referential: vocab membership is a per-row predicate evaluated
-      MAP-SIDE; only the (sparse) pre-built violation structs travel
-      through the shuffle, not the role/tool strings of every row.
-    - ordering: identical carrier-row construction as
-      ``check_ordering_blocked`` (gap spanning whole blocks included):
-      each block's last row, found by a max over the packed decimal key
-      (``_PACK_TURN_TS``), is injected into the next non-empty block.
-
-    The plan is ONE parameterized SQL statement (``_FUSED_SQL``): built
-    through the DataFrame API it took ~3,000 Py4J round trips per call,
-    as one ``spark.sql`` call the driver analyzes it in one. The input
-    frame binds as ``{snap}`` (a temp view that ``spark.sql`` drops before
-    returning) and every caller value as a named parameter.
+    Skew: a conversation's turns go to one task, unblocked. With a
+    1M-turn conversation added to a 120k-turn unclustered snapshot, a
+    warm ``validate()`` took 8.4 s against 8.9 s with the turn-blocked
+    window plan this replaced, at a 4.7 % higher peak RSS than that plan
+    without heap pre-touch (4 cores, 3g driver heap).
     """
-    def enum(vocab):
-        return json.dumps({"type": "enum", "values": sorted(vocab)},
-                          sort_keys=True, separators=(",", ":"))
-
-    return df.sparkSession.sql(_FUSED_SQL, args={
-        "pcol": partition_col, "snapshot_id": snapshot_id,
-        "roles": list(role_vocab), "tools": list(tool_vocab),
-        "role_enum": enum(role_vocab), "tool_enum": enum(tool_vocab),
-        "block_size": block_size, "ts_format": "yyyy-MM-dd'T'HH:mm:ssXXX",
-    }, snap=df)
+    return (df.select(F.col(partition_col).cast("int").alias("bucket"),
+                      F.col("conv_id").cast("string").alias("conv_id"),
+                      F.col("turn_idx").cast("bigint").alias("turn_idx"),
+                      "ts", F.col("role").cast("string").alias("role"),
+                      F.col("tool").cast("string").alias("tool"))
+            .repartition("conv_id")
+            .sortWithinPartitions("conv_id", "turn_idx", "ts")
+            .mapInArrow(_segment_checker(role_vocab, tool_vocab), _OUT_DDL)
+            .select(F.lit(snapshot_id).alias("snapshot_id"),
+                    *VIOLATION_COLS[1:]))
 
 
 # ---------------------------------------------------------------------------

@@ -1,16 +1,16 @@
 """Layout-aware row-level checks: ZERO-shuffle validation over clustered
-snapshots.
+snapshots, and the Arrow check kernel both check paths run.
 
-``check_rowlevel_fused`` (checks.py) pays one Exchange + one full sort —
-the memory-bandwidth-bound stage that caps its N->4N scaling at ~0.74
-(`git show 3abe443:BENCH/BASELINE.md`). But a transcripts table written the way an Iceberg
-pipeline would write it — bucket-partitioned by conv_id with a declared
-write sort order of (conv_id, turn_idx, ts) — already has every
-conversation's turns contiguous and sorted on disk. Validation then needs
-NO shuffle at all: every check is a sequential lag over rows in scan
-order, evaluated vectorized per input split, with conversations spanning
-split boundaries stitched by per-segment boundary rows (a few hundred
-rows, not 10^12).
+The kernel (``_segment_checker``) evaluates every row-level check as a
+vectorized lag over rows in (conv_id, turn_idx, ts) order. The shuffle
+path (``checks.check_rowlevel_fused``) gets that order from one Exchange
+on conv_id plus a sort within each task. A transcripts table written the
+way an Iceberg pipeline would write it — bucket-partitioned by conv_id
+with a declared write sort order of (conv_id, turn_idx, ts) — already
+has every conversation's turns contiguous and sorted on disk, so this
+module's path needs NO shuffle at all: the kernel runs per input split,
+with conversations spanning split boundaries stitched by per-segment
+boundary rows (a few hundred rows, not 10^12).
 
 Plan shape (3 Spark jobs per call):
 
@@ -38,8 +38,8 @@ Plan shape (3 Spark jobs per call):
 The scan is embarrassingly parallel (file splits), so scaling follows the
 scan, not a sort; a hot conv_id is handled by the same mechanism that
 handles big files — byte-range splitting + boundary stitching — instead
-of turn-block salting. Output is row-identical to
-``check_rowlevel_fused`` (asserted in tests).
+of turn-block salting. Output is row-identical to the shuffle path's
+(asserted in tests).
 
 Trust model: the path is selected only when the snapshot manifest
 declares the write order (``write_order`` — the Iceberg sort-order
@@ -102,10 +102,26 @@ def _jstr(v) -> str:
     return json.dumps(v, ensure_ascii=False)
 
 
-def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
-    """Build the mapInArrow function. All per-row work is pyarrow/numpy;
-    Python objects materialize only for violation rows (sparse)."""
+def _segment_checker(role_vocab: List[str], tool_vocab: List[str],
+                     fid_of: dict | None = None):
+    """Build the mapInArrow function over (bucket, conv_id, turn_idx, ts,
+    role, tool) batches. All per-row work is pyarrow/numpy; Python objects
+    materialize only for violation rows (sparse).
+
+    With ``fid_of`` (split id -> file id) the input is a clustered scan:
+    the kernel verifies the declared layout, raises on a lie or a null
+    key, and emits the boundary, extent and edge unique-key rows the
+    driver stitches across splits. Without it the input is one task's
+    rows already sorted by (conv_id, turn_idx, ts), nulls first (the
+    shuffle path): every conversation is whole in the stream, so it
+    emits only violation rows, a duplicate key as one ``unique_key`` row,
+    and null keys follow the SQL window's semantics — null conv_ids form
+    one conversation, and a pair with a null turn_idx (or, for ts_order,
+    a null ts) compares false."""
     import numpy as np
+    stitch = fid_of is not None
+    role_schema2 = _vocab_json(role_vocab)
+    tool_schema2 = _vocab_json(tool_vocab)
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import pyarrow as pa
@@ -120,10 +136,15 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
 
         def emit_v(bucket, check_id, mgu, s1, s2, conv, turn, payload):
             out.append((0, int(bucket), check_id, mgu, s1, s2, conv,
-                        int(turn), payload, None, None, None,
+                        None if turn is None else int(turn), payload,
+                        None, None, None,
                         None, None, None, None, None, None, None))
 
         def emit_uk(bucket, conv, turn, cnt):
+            if not stitch:  # the run is complete: the violation itself
+                emit_v(bucket, "unique_key", None, None, None, conv, turn,
+                       '{"n_copies":%d}' % cnt)
+                return
             out.append((2, int(bucket), None, None, None, None, conv,
                         int(turn), None, int(cnt), None, None,
                         None, None, None, None, None, None, None))
@@ -140,9 +161,16 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
                         fid, pos0,
                         None, None, None, None, None, None, None))
 
+        def ints(a):
+            """(int64 values with nulls as 0, validity mask)."""
+            if a.null_count:
+                return (a.fill_null(0).to_numpy(zero_copy_only=False),
+                        np.asarray(a.is_valid()))
+            return a.to_numpy(zero_copy_only=False), np.ones(len(a), bool)
+
         # segment state (a segment = maximal run of rows from one file
-        # split, in scan order)
-        seg = None  # dict: fid, pos0, first=(conv,turn,ts,bucket), prev=(...)
+        # split, in scan order; the whole stream when not stitching)
+        seg = None  # dict: prev=(conv, turn, ts, bucket, turn ok, ts ok), ...
         run = None  # dict: conv, turn, cnt, bucket, at_seg_start
         seen_convs: set = set()
 
@@ -150,7 +178,8 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
             nonlocal run
             if run is None:
                 return
-            if run["cnt"] >= 2 or run["at_seg_start"] or at_seg_end:
+            if run["cnt"] >= 2 or (stitch and (run["at_seg_start"]
+                                               or at_seg_end)):
                 emit_uk(run["bucket"], run["conv"], run["turn"], run["cnt"])
             run = None
 
@@ -159,15 +188,16 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
             if seg is None:
                 return
             close_run(at_seg_end=True)
-            if seg["open_conv"] is not None:
-                emit_c3(seg["open_conv"], seg["fid"], seg["pos0"],
-                        seg["open_is_first"], True)
-            f_conv, f_turn, f_ts, f_bucket = seg["first"]
-            l_conv, l_turn, l_ts, _ = seg["prev"]
-            out.append((1, None, None, None, None, None, None, None, None,
-                        None, seg["fid"], seg["pos0"],
-                        f_conv, int(f_turn), int(f_ts), int(f_bucket),
-                        l_conv, int(l_turn), int(l_ts)))
+            if stitch:
+                if seg["open_conv"] is not None:
+                    emit_c3(seg["open_conv"], seg["fid"], seg["pos0"],
+                            seg["open_is_first"], True)
+                f_conv, f_turn, f_ts, f_bucket = seg["first"]
+                l_conv, l_turn, l_ts = seg["prev"][:3]
+                out.append((1, None, None, None, None, None, None, None,
+                            None, None, seg["fid"], seg["pos0"],
+                            f_conv, int(f_turn), int(f_ts), int(f_bucket),
+                            l_conv, int(l_turn), int(l_ts)))
             seg = None
             seen_convs = set()
 
@@ -183,64 +213,71 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
                 continue
             col = {name: batch.column(i)
                    for i, name in enumerate(batch.schema.names)}
-            # nulls in the clustering/sort keys make the numpy lag
-            # comparisons garbage (NaN -> undefined int64), and the
-            # declared sort order cannot hold for null keys anyway —
-            # refuse and let validate() fall back to the fused path,
-            # whose SQL null semantics are well-defined (ADVICE r2).
-            for k in ("conv_id", "turn_idx", "ts"):
-                if col[k].null_count:
-                    raise ValueError(
-                        f"clustered checks: null {k} in scan batch — the "
-                        "declared write order cannot hold for null keys; "
-                        "shuffle path (check_rowlevel_fused) required")
-            fh = col["_fh"].to_numpy(zero_copy_only=False)
+            if stitch:
+                # nulls in the clustering/sort keys break the declared
+                # sort order — refuse and let validate() fall back to the
+                # shuffle path, which defines null semantics (ADVICE r2)
+                for k in ("conv_id", "turn_idx", "ts"):
+                    if col[k].null_count:
+                        raise ValueError(
+                            f"clustered checks: null {k} in scan batch — "
+                            "the declared write order cannot hold for null "
+                            "keys; shuffle path (check_rowlevel_fused) "
+                            "required")
+                fh = col["_fh"].to_numpy(zero_copy_only=False)
+                pos = col["pos"].to_numpy(zero_copy_only=False)
             conv = col["conv_id"]  # stays an Arrow string array
-            turn = col["turn_idx"].to_numpy(zero_copy_only=False)
+            conv_null = (np.asarray(conv.is_null()) if conv.null_count
+                         else None)
+            turn, turn_ok = ints(col["turn_idx"])
             # timestamp[us] -> epoch-us int64 (zero-copy buffer view)
-            ts = col["ts"].cast(pa.int64()).to_numpy(zero_copy_only=False)
+            ts, ts_ok = ints(col["ts"].cast(pa.int64()))
             bucket = col["bucket"].to_numpy(zero_copy_only=False)
-            pos = col["pos"].to_numpy(zero_copy_only=False)
-            rb = col["rb"].to_numpy(zero_copy_only=False)
-            tb = col["tb"].to_numpy(zero_copy_only=False)
-            rv, tv = col["rv"], col["tv"]
+            role, tool = col["role"], col["tool"]
 
-            # vocab checks: flags computed JVM-side; only flagged rows
-            # materialize their string value here
+            # vocab checks (a null role is out of vocabulary, a null tool
+            # is not); only flagged rows materialize their string value
+            rb = ~np.asarray(pc.is_in(
+                role, value_set=pa.array(role_vocab, role.type)))
+            tb = np.asarray(tool.is_valid()) & ~np.asarray(pc.is_in(
+                tool, value_set=pa.array(tool_vocab, tool.type)))
             for i in np.flatnonzero(rb):
-                v = rv[i].as_py()
+                v = role[i].as_py()
                 emit_v(bucket[i], "ref_role", "non_equal",
                        ('{"type":"enum","values":[' + _jstr(v) + "]}"
                         if v is not None else ROLE_NULL_SCHEMA),
-                       role_schema2, conv[int(i)].as_py(), turn[i],
+                       role_schema2, conv[int(i)].as_py(),
+                       turn[i] if turn_ok[i] else None,
                        '{"value":' + _jstr(v) + "}" if v is not None else "{}")
             for i in np.flatnonzero(tb):
-                v = tv[i].as_py()
+                v = tool[i].as_py()
                 emit_v(bucket[i], "ref_tool", "non_equal",
                        '{"type":"enum","values":[' + _jstr(v) + "]}",
-                       tool_schema2, conv[int(i)].as_py(), turn[i],
+                       tool_schema2, conv[int(i)].as_py(),
+                       turn[i] if turn_ok[i] else None,
                        '{"value":' + _jstr(v) + "}")
 
             # split the batch at file-split changes (rare): each chunk is
             # one contiguous piece of one segment
-            change = np.flatnonzero(fh[1:] != fh[:-1]) + 1
-            starts = np.concatenate(([0], change, [n]))
+            starts = ([0, n] if not stitch else np.concatenate(
+                ([0], np.flatnonzero(fh[1:] != fh[:-1]) + 1, [n])))
             for s, e in zip(starts[:-1], starts[1:]):
                 s, e = int(s), int(e)
-                if seg is not None and seg["fh"] != fh[s]:
+                if stitch and seg is not None and seg["fh"] != fh[s]:
                     close_segment()
                 seg_started_here = seg is None
                 if seg is None:
-                    fid = fid_of.get(int(fh[s]))
-                    if fid is None:
-                        raise ValueError(
-                            "clustered checks: scan produced a file not in "
-                            "the snapshot manifest")
-                    seg = {"fh": fh[s], "fid": fid, "pos0": int(pos[s]),
-                           "first": (conv[s].as_py(), turn[s], ts[s],
-                                     bucket[s]),
-                           "prev": None,
-                           "open_conv": None, "open_is_first": False}
+                    seg = {"prev": None, "open_conv": None,
+                           "open_is_first": False}
+                    if stitch:
+                        fid = fid_of.get(int(fh[s]))
+                        if fid is None:
+                            raise ValueError(
+                                "clustered checks: scan produced a file not "
+                                "in the snapshot manifest")
+                        seg.update(fh=fh[s], fid=fid, pos0=int(pos[s]),
+                                   first=(conv[s].as_py(), turn[s], ts[s],
+                                          bucket[s]))
 
                 # lag arrays for the chunk; index 0 pairs with seg["prev"]
                 m = e - s
@@ -249,56 +286,68 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
                     c_same[1:] = np.asarray(
                         pc.equal(conv.slice(s + 1, m - 1),
                                  conv.slice(s, m - 1)).fill_null(False))
+                    if conv_null is not None:  # null conv_ids: one group
+                        c_same[1:] |= conv_null[s + 1:e] & conv_null[s:e - 1]
                 p_turn = np.empty(m, dtype=np.int64)
                 p_ts = np.empty(m, dtype=np.int64)
+                p_turn_ok = np.empty(m, dtype=bool)
+                p_ts_ok = np.empty(m, dtype=bool)
                 p_turn[1:] = turn[s:e - 1]
                 p_ts[1:] = ts[s:e - 1]
+                p_turn_ok[1:] = turn_ok[s:e - 1]
+                p_ts_ok[1:] = ts_ok[s:e - 1]
                 if seg["prev"] is not None:
-                    pv_conv, pv_turn, pv_ts, _ = seg["prev"]
+                    (pv_conv, p_turn[0], p_ts[0], _, p_turn_ok[0],
+                     p_ts_ok[0]) = seg["prev"]
                     c_same[0] = (conv[s].as_py() == pv_conv)
-                    p_turn[0], p_ts[0] = pv_turn, pv_ts
                 else:
                     c_same[0] = False
-                    p_turn[0], p_ts[0] = 0, 0
+                    p_turn[0] = p_ts[0] = 0
+                    p_turn_ok[0] = p_ts_ok[0] = False
                 t_ = turn[s:e]
                 ts_ = ts[s:e]
                 b_ = bucket[s:e]
 
-                # layout verification: within a conv, (turn, ts) must be
-                # non-decreasing in scan order (the declared sort order)
-                bad_sort = c_same & ((t_ < p_turn)
-                                     | ((t_ == p_turn) & (ts_ < p_ts)))
-                if bad_sort.any():
-                    i = int(np.flatnonzero(bad_sort)[0])
-                    raise ValueError(
-                        "clustered checks: manifest declares sort order "
-                        "(conv_id, turn_idx, ts) but conv "
-                        f"{conv[s + i].as_py()!r} is out of order at scan "
-                        f"position {int(pos[s + i])} — falling back to the "
-                        "shuffle path (check_rowlevel_fused) is required")
-                # conv contiguity: a conv may not reappear after changing.
-                # Batch-extract the changed conv values (take+to_pylist ~
-                # 10x per-index as_py) — one string per conversation, not
-                # per row.
-                chg = np.flatnonzero(~c_same)
-                for cv in conv.take(pa.array(chg + s)).to_pylist():
-                    if cv in seen_convs:
+                if stitch:
+                    # layout verification: within a conv, (turn, ts) must
+                    # be non-decreasing in scan order (the declared order)
+                    bad_sort = c_same & ((t_ < p_turn)
+                                         | ((t_ == p_turn) & (ts_ < p_ts)))
+                    if bad_sort.any():
+                        i = int(np.flatnonzero(bad_sort)[0])
                         raise ValueError(
-                            "clustered checks: manifest declares clustering "
-                            f"by conv_id but conv {cv!r} is non-contiguous "
-                            "in scan order — shuffle path required")
-                    seen_convs.add(cv)
-                    # close the previous conv's extent row, open this one
-                    is_first = seg["open_conv"] is None
-                    if not is_first:
-                        emit_c3(seg["open_conv"], seg["fid"], seg["pos0"],
-                                seg["open_is_first"], False)
-                    seg["open_conv"] = cv
-                    seg["open_is_first"] = is_first
+                            "clustered checks: manifest declares sort order "
+                            "(conv_id, turn_idx, ts) but conv "
+                            f"{conv[s + i].as_py()!r} is out of order at scan "
+                            f"position {int(pos[s + i])} — falling back to "
+                            "the shuffle path (check_rowlevel_fused) is "
+                            "required")
+                    # conv contiguity: a conv may not reappear after
+                    # changing. Batch-extract the changed conv values
+                    # (take+to_pylist ~10x per-index as_py) — one string
+                    # per conversation, not per row.
+                    chg = np.flatnonzero(~c_same)
+                    for cv in conv.take(pa.array(chg + s)).to_pylist():
+                        if cv in seen_convs:
+                            raise ValueError(
+                                "clustered checks: manifest declares "
+                                f"clustering by conv_id but conv {cv!r} is "
+                                "non-contiguous in scan order — shuffle path "
+                                "required")
+                        seen_convs.add(cv)
+                        # close the previous conv's extent row, open this
+                        is_first = seg["open_conv"] is None
+                        if not is_first:
+                            emit_c3(seg["open_conv"], seg["fid"],
+                                    seg["pos0"], seg["open_is_first"], False)
+                        seg["open_conv"] = cv
+                        seg["open_is_first"] = is_first
 
-                gap = c_same & (t_ > p_turn + 1)
-                dup = c_same & (t_ == p_turn)
-                tsb = c_same & (ts_ < p_ts)
+                # a lag pair: same conv, both turn_idx known
+                pair = c_same & turn_ok[s:e] & p_turn_ok
+                gap = pair & (t_ > p_turn + 1)
+                dup = pair & (t_ == p_turn)
+                tsb = pair & ts_ok[s:e] & p_ts_ok & (ts_ < p_ts)
                 for i in np.flatnonzero(gap):
                     emit_v(bucket[s + i], "turn_gap", None, None, None,
                            conv[s + int(i)].as_py(), t_[i],
@@ -337,9 +386,9 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
                     lens = np.diff(np.append(run_starts, m))
                     nruns = len(run_starts)
                     # complete runs (all but the last) that must emit:
-                    # cnt >= 2, or the segment-first run
+                    # cnt >= 2, or the segment-first run (for the stitch)
                     emit = np.flatnonzero(lens[:nruns - 1] >= 2)
-                    if (seg_started_here and run_starts[0] == 0
+                    if (stitch and seg_started_here and run_starts[0] == 0
                             and nruns > 1 and lens[0] < 2):
                         emit = np.concatenate(([0], emit))
                     if len(emit):
@@ -357,7 +406,7 @@ def _segment_checker(fid_of: dict, role_schema2: str, tool_schema2: str):
                            "bucket": int(b_[rs:rs + cnt].min()),
                            "at_seg_start": rs == 0 and seg_started_here}
                 seg["prev"] = (conv[e - 1].as_py(), turn[e - 1], ts[e - 1],
-                               bucket[e - 1])
+                               bucket[e - 1], turn_ok[e - 1], ts_ok[e - 1])
             yield from flush()
         close_segment()
         yield from flush()
@@ -458,8 +507,7 @@ def _pack_tasks(spark, splits: List[tuple]) -> DataFrame:
 _SCAN_COLS = ["conv_id", "turn_idx", "role", "tool", "ts"]
 
 
-def _native_split_reader(checker, role_vocab: List[str],
-                         tool_vocab: List[str], batch_rows: int,
+def _native_split_reader(checker, batch_rows: int,
                          state_cols: List[str] | None = None):
     """mapInArrow over packed task rows (``_pack_tasks``): each task
     reads its splits' parquet row-group ranges natively with pyarrow
@@ -492,7 +540,6 @@ def _native_split_reader(checker, role_vocab: List[str],
         import json as _json
 
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         from schema_inference_spark.operators.infer import (
@@ -505,8 +552,6 @@ def _native_split_reader(checker, role_vocab: List[str],
             pa.set_io_thread_count(1)
         except Exception:
             pass
-        role_set = pa.array(role_vocab, pa.string())
-        tool_set = pa.array(tool_vocab, pa.string())
         read_cols = (_SCAN_COLS if state_cols is None else
                      list(dict.fromkeys([*_SCAN_COLS, *state_cols])))
         states: dict = {}  # pid -> PartState
@@ -546,30 +591,18 @@ def _native_split_reader(checker, role_vocab: List[str],
                 b = full.select(_SCAN_COLS)
                 n = b.num_rows
                 ix = b.schema.get_field_index
-                role = b.column(ix("role"))
-                tool = b.column(ix("tool"))
-                rb = pc.or_kleene(
-                    role.is_null(),
-                    pc.invert(pc.is_in(role, value_set=role_set))
-                    .fill_null(True))
-                tb = pc.and_(
-                    tool.is_valid(),
-                    pc.invert(pc.is_in(tool, value_set=tool_set))
-                    .fill_null(False))
                 yield pa.RecordBatch.from_arrays([
                     pa.array(np.full(n, row["partition_id"],
                                      np.int32)),
                     b.column(ix("conv_id")).cast(pa.string()),
                     b.column(ix("turn_idx")).cast(pa.int64()),
                     b.column(ix("ts")),
-                    rb,
-                    pc.if_else(rb, role, pa.nulls(n, pa.string())),
-                    tb,
-                    pc.if_else(tb, tool, pa.nulls(n, pa.string())),
+                    b.column(ix("role")).cast(pa.string()),
+                    b.column(ix("tool")).cast(pa.string()),
                     pa.array(np.full(n, row["split_id"], np.int64)),
                     pa.array(np.arange(pos, pos + n, dtype=np.int64)),
                 ], names=["bucket", "conv_id", "turn_idx", "ts",
-                          "rb", "rv", "tb", "tv", "_fh", "pos"])
+                          "role", "tool", "_fh", "pos"])
                 pos += n
 
         def checker_batches():
@@ -662,8 +695,7 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
     # stays the FILE id so boundary ordering is (file, position in file)
     fid_of = {s[0]: s[1] for s in splits}
 
-    checker = _segment_checker(fid_of, _vocab_json(role_vocab),
-                               _vocab_json(tool_vocab))
+    checker = _segment_checker(role_vocab, tool_vocab, fid_of)
     state_cols = None
     if collect_states and splits:
         # census uniformity is a precondition of this path, so the first
@@ -673,7 +705,7 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
         state_cols = [c for c in _pq.ParquetFile(splits[0][2])
                       .schema_arrow.names if c != partition_col]
     out = _pack_tasks(spark, splits).mapInArrow(
-        _native_split_reader(checker, role_vocab, tool_vocab, batch_rows,
+        _native_split_reader(checker, batch_rows,
                              state_cols),
         _OUT_DDL).localCheckpoint(eager=False)
     # The UDF output is violation-sized except for the kind=3 extent rows

@@ -3,8 +3,8 @@
 
     plan:    manifest -> pending partitions = all - completed(audit)
     infer:   footer census + Arrow column states -> treeAggregate mgu merge
-    check:   uniqueness (salted), referential (broadcast anti),
-             ordering (window), drift (PSI/KS over KLL), schema compat
+    check:   uniqueness, referential, ordering (one Arrow kernel over
+             conv-ordered rows), drift (PSI/KS over KLL), schema compat
     verdict: per-partition pass/fail + stable-ordered violation rows
     audit:   per-partition lineage + metrics, resume-safe
 
@@ -63,9 +63,9 @@ class ValidationResult:
         # partitions whose scan/census failed -> error message; they got
         # verdict='error' rows (not completed: resume retries after repair)
         self.errors = errors or {}
-        # which row-level check engine actually ran: "clustered" (one
-        # fused native scan), "fused" (one scan + one shuffle), or
-        # "none" (nothing pending)
+        # which row source fed the row-level check kernel: "clustered"
+        # (the native split scan, no shuffle), "fused" (the read plan,
+        # one exchange on conv_id), or "none" (nothing pending)
         self.check_path = check_path
         self.stats_thunk = stats_thunk
 
@@ -138,12 +138,14 @@ def validate(
     disables it for whole-transcript comparison), and
     ``context_budget`` (running text-cost crossings).
 
-    Execution: a metadata census first selects the check path —
-    ``clustered`` (one fused native Arrow scan, zero shuffle, taken
-    when the manifest declares the Iceberg sort-order contract and the
-    snapshot has at least ``spark.schema_inference.clustered.minRows``
-    pending rows) or ``fused`` (one scan + one skew-blocked shuffle,
-    taken otherwise); ``clustered_checks`` forces either. The two are
+    Execution: a metadata census first selects the check path. Both
+    run the same Arrow check kernel (``clustered._segment_checker``)
+    over a different row source: ``clustered`` (one fused native Arrow
+    scan, zero shuffle, taken when the manifest declares the Iceberg
+    sort-order contract and the snapshot has at least
+    ``spark.schema_inference.clustered.minRows`` pending rows) or
+    ``fused`` (the read plan repartitioned by conv_id and sorted, taken
+    otherwise); ``clustered_checks`` forces either. The two are
     row-identical (tested) and the chosen path is reported as
     ``ValidationResult.check_path``. Drift compares KLL sketches of the
     ``baseline_sketches`` columns only, built inside the shuffle path's
@@ -160,8 +162,8 @@ def validate(
     persistence runs 3 jobs. The shuffle path's read plan takes its
     schema from the footer census (no schema-merge job), and the catalog
     reads and writes its stores on the driver (no job), so a persisting
-    shuffle-path drift call runs 7: the state + sketch aggregation (2)
-    and the fused check's collect (5).
+    shuffle-path drift call runs 4: the state + sketch aggregation (2)
+    and the check kernel's collect (2: the exchange, then the kernel).
     ``resume=True`` skips partitions whose latest audit verdict is pass
     or fail; a resubmit with nothing pending runs 0 jobs and returns the
     stored verdicts. ``partitions=[...]`` restricts to an explicit subset
@@ -221,7 +223,7 @@ def validate(
     # path selection: clustered (zero-shuffle, layout-aware) when the
     # manifest declares the write order — the Iceberg sort-order contract —
     # AND the snapshot is big enough to amortize the path's fixed cost;
-    # else fused (one scan + one skew-blocked shuffle). clustered_checks
+    # else fused (one scan + one exchange on conv_id). clustered_checks
     # forces it either way. Both paths are row-identical (tested).
     #
     # The row threshold was set when the clustered path paid ~3-5s of
@@ -251,7 +253,7 @@ def validate(
     # clustered path: ONE fused native scan computes the row-level checks
     # AND the inference column states (collect_states) — the snapshot is
     # read once, total. Shuffle path: JVM state aggregation (with the
-    # drift sketches) + fused shuffle checks over one read plan.
+    # drift sketches) + the check kernel over one read plan.
     inf = None
     violations = None
     path_used = "fused"
@@ -346,9 +348,9 @@ def validate(
                 _mark("drift sketches")
 
             if violations is None:
-                # one scan + one skew-blocked shuffle produces every
-                # row-level check's violations (row-identical to the
-                # per-check plans, which would scan the snapshot 4x;
+                # one scan + one exchange on conv_id feeds every
+                # row-level check to the Arrow kernel (row-identical to
+                # the per-check plans, which would scan the snapshot 4x;
                 # asserted in tests)
                 violations = C.check_rowlevel_fused(
                     df, snapshot_id, role_vocab, tool_vocab, partition_col)
@@ -357,11 +359,11 @@ def validate(
                 # opt-in conversation-structure checks: the protocol
                 # matrix (checks.check_role_protocol) and/or the
                 # snapshot-vs-baseline transition drift. Both need the
-                # per-conv (turn_idx, ts) ordering, which the clustered
-                # kernel does not compute — so when enabled they add
-                # windowed passes over the tolerant read plan (sharing
-                # the D12 Exchange on the fused path; extra scans on
-                # the clustered path, paid only by configured callers).
+                # per-conv (turn_idx, ts) ordering, which the check
+                # kernel does not compute — so when enabled each adds
+                # its own window or aggregation pass (an extra exchange)
+                # over the tolerant read plan, paid only by configured
+                # callers.
                 if role_protocol:
                     violations = violations.unionByName(
                         C.check_role_protocol(df, snapshot_id,

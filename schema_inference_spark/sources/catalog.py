@@ -28,9 +28,10 @@ earlier versions read back::
 Neither file holds ``snapshot_id``; a violation file has no
 ``partition_id`` either, it is the directory name.
 
-Atomicity. Every file is written as ``.<name>.tmp`` — a dot prefix,
-which Spark's and pyarrow's readers skip — and renamed into place with
-``os.replace``; the files it supersedes are deleted only after that. A
+Atomicity. Every file is written as a dot-prefixed ``.<name>...tmp`` —
+which Spark's and pyarrow's readers skip — and moved into place (renamed
+with ``os.replace``, or for the audit hard-linked); the files it
+supersedes are deleted only after that. A
 process killed at any point leaves no partial file that a reader sees:
 
 - violations: each partition directory is replaced on its own. A kill
@@ -39,9 +40,11 @@ process killed at any point leaves no partial file that a reader sees:
   violations first), so a resumed run validates and replaces it again.
 - audit: each write reads the snapshot's rows, merges the new ones in and
   writes one compacted ``run-<seq>`` file, ``seq`` one above the largest
-  present; then it deletes the older files. A kill before the rename
-  loses only this write (the store reads as it did before); a kill after
-  it leaves older files whose rows the new file supersedes.
+  present, published by a hard link that fails if the name exists (the
+  writer then re-reads and retries); then it deletes the older files. A
+  kill before the link loses only this write (the store reads as it did
+  before); a kill after it leaves older files whose rows the new file
+  supersedes.
 
 Latest wins. A partition's audit verdict is its latest row: rows of a
 ``run-*`` file are newer than those of a smaller ``seq``, and files of
@@ -52,6 +55,8 @@ makes the partition pending again: the stored ``pass`` describes data
 that no longer reads, so resume must validate it after repair.
 
 One writer per snapshot at a time: the audit merge is read-modify-write.
+Two writers that overlap anyway keep both verdicts (see ``append_audit``);
+a violation partition written by both keeps one writer's rows.
 """
 
 from __future__ import annotations
@@ -116,6 +121,32 @@ def _write_atomic(table: pa.Table, path: str) -> None:
     tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
     pq.write_table(table, tmp)
     os.replace(tmp, path)
+
+
+def _publish_new(table: pa.Table, path: str) -> bool:
+    """Write ``table`` to ``path`` unless a file of that name exists:
+    through a uniquely named dot-prefixed tmp file that is hard-linked to
+    ``path`` (atomic, and failing when the name is taken) and then
+    removed. False when the name was taken, or when another writer's
+    cleanup removed the tmp file first. As in ``_write_atomic``, a raised
+    write leaves on disk what a killed process would."""
+    tmp = os.path.join(os.path.dirname(path),
+                       f".{os.path.basename(path)}.{uuid.uuid4().hex}.tmp")
+    pq.write_table(table, tmp)
+    try:
+        os.link(tmp, path)
+    except (FileExistsError, FileNotFoundError):
+        _remove_if_present(tmp)
+        return False
+    _remove_if_present(tmp)
+    return True
+
+
+def _remove_if_present(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
 
 
 def _run_seq(name: str) -> Optional[int]:
@@ -218,23 +249,44 @@ class SnapshotCatalog:
         partition winning, and remove the rows of the partitions in
         ``drop`` (-1 for the snapshot-level verdict), as one compacted
         ``run-<seq>`` file; then delete the files it supersedes. Prod
-        uses Iceberg MERGE."""
+        uses Iceberg MERGE.
+
+        The new file is published with ``os.link``, which fails when the
+        name exists: a writer that another one beat to ``run-<seq>``
+        re-reads the store (now holding the other's rows) and retries.
+        A file linked under a name that a deletion had freed, while a
+        newer file already holds rows this writer never read, is merged
+        again the same way: a write ends only when its file has the
+        highest ``seq`` (the highest file is never deleted), so
+        overlapping writers lose no verdict. A superseded file that is
+        already gone, or vanishes while being read, was removed by such
+        a writer. Tmp files left by a killed writer are removed with the
+        superseded files."""
         new = _table(audit, AUDIT_SCHEMA).drop_columns(["snapshot_id"])
+        new_rows = list(zip(*(c.to_pylist() for c in new.columns)))
         d = self._audit_dir(snapshot_id)
         os.makedirs(d, exist_ok=True)
-        old = self._audit_files(d)
-        latest = self._latest_audit(old)
-        for row in zip(*(c.to_pylist() for c in new.columns)):
-            latest[row[0]] = row
-        for p in drop:
-            latest.pop(int(p), None)
-        seq = 1 + max((_run_seq(os.path.basename(f)) or 0 for f in old),
-                      default=0)
-        _write_atomic(arrow_table([latest[p] for p in sorted(latest)],
-                                  _AUDIT_FILE_SCHEMA),
-                      os.path.join(d, f"run-{seq:020d}.parquet"))
-        for f in old:
-            os.remove(f)
+        while True:
+            try:
+                old = self._audit_files(d)
+                latest = self._latest_audit(old)
+            except FileNotFoundError:
+                continue
+            for row in new_rows:
+                latest[row[0]] = row
+            for p in drop:
+                latest.pop(int(p), None)
+            seq = 1 + max((_run_seq(os.path.basename(f)) or 0 for f in old),
+                          default=0)
+            if (_publish_new(arrow_table([latest[p] for p in sorted(latest)],
+                                         _AUDIT_FILE_SCHEMA),
+                             os.path.join(d, f"run-{seq:020d}.parquet"))
+                    and seq == max(_run_seq(n) or 0 for n in os.listdir(d))):
+                break
+        # a writer in flight whose tmp file goes here retries
+        for f in old + [os.path.join(d, n) for n in os.listdir(d)
+                        if n.startswith(".run-") and n.endswith(".tmp")]:
+            _remove_if_present(f)
 
     # -- violation store (D2, second half) -------------------------------------
 

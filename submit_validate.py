@@ -3,8 +3,12 @@
 Cluster:
     zip -r engine.zip schema_inference_spark
     spark-submit --py-files engine.zip submit_validate.py \
-        --root s3://bucket/transcripts --snapshot s1 \
-        --audit s3://bucket/audit [--baseline s3://bucket/baseline.json]
+        --root /mnt/transcripts --snapshot s1 \
+        --audit /mnt/audit [--baseline /mnt/baseline.json]
+
+Roots are local or mounted POSIX paths (a shared filesystem every
+executor sees): the catalog reads manifests and writes its stores with
+``os`` and ``open()`` on the driver, so ``s3://`` URLs do not work.
 
 Local smoke:
     python submit_validate.py --root /tmp/snapshots --snapshot s1

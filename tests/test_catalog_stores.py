@@ -4,7 +4,8 @@ crash safety of validate()'s persist steps.
 
 A crash is injected at three points of a resumed run: before the
 violation write, between the violation and audit writes, and inside the
-audit write after its tmp file is written and before the rename. After
+audit write after its tmp file is written and before it is linked into
+place. After
 each, a resumed run must leave the same violation store and the same
 latest audit rows as a run that never crashed."""
 
@@ -117,6 +118,86 @@ def test_audit_reads_superseded_files_after_a_crash(spark, tmp_path):
         0: "fail", 1: "error"}
 
 
+def test_two_audit_writers_keep_both_verdicts(tmp_path, monkeypatch):
+    """Two writers that both read the store before either publishes pick
+    the same run-<seq>; the one that loses re-reads and retries, so both
+    verdicts land and neither writer raises."""
+    import threading
+
+    root = str(tmp_path)
+    _manifest(root, "s", [0, 1, 2])
+    cat = SnapshotCatalog(root)
+    cat.append_audit([_verdict("s", 0, "pass")], "s")
+
+    read = SnapshotCatalog._latest_audit
+    barrier = threading.Barrier(2, timeout=60)
+    first_read = {"w1", "w2"}
+
+    def read_then_wait(self, files):
+        latest = read(self, files)
+        name = threading.current_thread().name
+        if name in first_read:
+            first_read.discard(name)
+            barrier.wait()
+        return latest
+    monkeypatch.setattr(SnapshotCatalog, "_latest_audit", read_then_wait)
+
+    raised = []
+
+    def write(pid):
+        try:
+            cat.append_audit([_verdict("s", pid, "pass")], "s")
+        except Exception as exc:  # noqa: BLE001 — reported below
+            raised.append(exc)
+    threads = [threading.Thread(target=write, args=(p,), name=f"w{p}")
+               for p in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert raised == []
+    assert cat.completed_partitions(None, "s") == [0, 1, 2]
+    assert [n for n in os.listdir(cat._audit_dir("s"))
+            if not n.startswith("run-")] == []
+
+
+def test_many_audit_writers_keep_every_verdict(tmp_path):
+    """More writers than cores, each appending its own partition a few
+    times with frequent thread switches: every verdict lands and no
+    writer raises."""
+    import threading
+
+    root = str(tmp_path)
+    n = 2 * (os.cpu_count() or 4)
+    _manifest(root, "s", list(range(n)))
+    cat = SnapshotCatalog(root)
+    raised = []
+
+    def write(pid):
+        try:
+            for verdict in ("error", "fail", "pass"):
+                cat.append_audit([_verdict("s", pid, verdict)], "s")
+        except Exception as exc:  # noqa: BLE001 — reported below
+            raised.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=write, args=(p,))
+                   for p in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert raised == []
+    latest = cat._latest_audit(cat._audit_files(cat._audit_dir("s")))
+    assert {p: row[1] for p, row in latest.items()} == {
+        p: "pass" for p in range(n)}
+
+
 # --- stores written by the earlier Spark writer -------------------------------------
 
 def _spark_append_violations(violations_df, d):
@@ -212,19 +293,19 @@ def _crash_before_audit(monkeypatch):
     monkeypatch.setattr(SnapshotCatalog, "append_audit", crash)
 
 
-def _crash_before_audit_rename(monkeypatch):
-    real = os.replace
+def _crash_before_audit_link(monkeypatch):
+    real = os.link
 
-    def replace(src, dst, *args, **kwargs):
+    def link(src, dst, *args, **kwargs):
         if os.path.basename(dst).startswith("run-"):
-            raise Crash("audit tmp written, not renamed")
+            raise Crash("audit tmp written, not linked")
         return real(src, dst, *args, **kwargs)
-    monkeypatch.setattr(os, "replace", replace)
+    monkeypatch.setattr(os, "link", link)
 
 
 CRASH_POINTS = {"before_violations": _crash_before_violations,
                 "before_audit": _crash_before_audit,
-                "mid_audit": _crash_before_audit_rename}
+                "mid_audit": _crash_before_audit_link}
 
 
 @pytest.mark.parametrize("point", sorted(CRASH_POINTS))
@@ -252,17 +333,17 @@ import os, runpy, sys
 from schema_inference_spark.sources.catalog import SnapshotCatalog
 
 append_audit = SnapshotCatalog.append_audit
-replace = os.replace
+link = os.link
 
 
-def killed_before_rename(src, dst, *args, **kwargs):
+def killed_before_link(src, dst, *args, **kwargs):
     if os.path.basename(dst).startswith("run-"):
         os._exit(137)
-    return replace(src, dst, *args, **kwargs)
+    return link(src, dst, *args, **kwargs)
 
 
 def append_audit_killed(self, *args, **kwargs):
-    os.replace = killed_before_rename
+    os.link = killed_before_link
     return append_audit(self, *args, **kwargs)
 
 
@@ -274,8 +355,8 @@ runpy.run_path(sys.argv[0], run_name="__main__")
 
 def test_submit_killed_mid_audit_resumes_to_clean_stores(spark, tmp_path):
     """The deployed job killed (exit 137) after the audit tmp file is
-    written and before its rename; the resubmitted job leaves the stores
-    a clean run leaves."""
+    written and before it is linked into place; the resubmitted job
+    leaves the stores a clean run leaves."""
     from schema_inference_spark.sources.transcripts import (
         generate_turns,
         write_snapshot,

@@ -169,6 +169,8 @@ def test_fused_checks_match_separate_plans(spark, catalog):
     block size."""
     import datetime
 
+    from check_oracles import check_ordering_blocked
+
     from schema_inference_spark.operators import checks as C
 
     def separate(df, sid, bs=8192):
@@ -178,7 +180,7 @@ def test_fused_checks_match_separate_plans(spark, catalog):
         v = v.unionByName(C.check_referential(df, sid, "tool",
                                               TOOL_VOCAB_T, "ref_tool",
                                               nullable=True))
-        v = v.unionByName(C.check_ordering_blocked(df, sid, block_size=bs))
+        v = v.unionByName(check_ordering_blocked(df, sid, block_size=bs))
         return [r.asDict() for r in C.stable_order(v).collect()]
 
     from schema_inference_spark.pipeline import ROLE_VOCAB, TOOL_VOCAB
@@ -210,8 +212,7 @@ def test_fused_checks_match_separate_plans(spark, catalog):
         rows, "bucket int, conv_id string, turn_idx int, ts timestamp, "
               "role string, tool string")
     fused = [r.asDict() for r in C.stable_order(
-        C.check_rowlevel_fused(tiny, "t", ROLE_VOCAB_T, TOOL_VOCAB,
-                               block_size=4)).collect()]
+        C.check_rowlevel_fused(tiny, "t", ROLE_VOCAB_T, TOOL_VOCAB)).collect()]
     assert fused == separate(tiny, "t", bs=4)
     assert all(odd in json.loads(r["schema_2"])["values"]
                for r in fused if r["check_id"] == "ref_role")
@@ -230,6 +231,8 @@ def test_blocked_carrier_survives_negative_ts_and_turn_idx(spark):
     violations on such rows must match the plain window check, not be
     silently nulled by an unbiased pack (regression: ADVICE r2)."""
     import datetime
+
+    from check_oracles import check_ordering_blocked
 
     from schema_inference_spark.operators import checks as C
 
@@ -257,17 +260,16 @@ def test_blocked_carrier_survives_negative_ts_and_turn_idx(spark):
     plain = [r.asDict() for r in C.stable_order(
         C.check_ordering(df, "neg")).collect()]
     blocked = [r.asDict() for r in C.stable_order(
-        C.check_ordering_blocked(df, "neg", block_size=4)).collect()]
+        check_ordering_blocked(df, "neg", block_size=4)).collect()]
     assert blocked == plain
     kinds = sorted(r["check_id"] for r in plain)
     assert kinds == ["ts_order", "turn_dup", "turn_gap"]
 
     from schema_inference_spark.pipeline import ROLE_VOCAB, TOOL_VOCAB
     fused = [r.asDict() for r in C.stable_order(
-        C.check_rowlevel_fused(df, "neg", ROLE_VOCAB, TOOL_VOCAB,
-                               block_size=4)).collect()]
+        C.check_rowlevel_fused(df, "neg", ROLE_VOCAB, TOOL_VOCAB)).collect()]
     sep = C.check_unique_key(df, "neg").unionByName(
-        C.check_ordering_blocked(df, "neg", block_size=4))
+        check_ordering_blocked(df, "neg", block_size=4))
     sep = [r.asDict() for r in C.stable_order(sep).collect()]
     assert fused == sep
     assert sorted(r["check_id"] for r in fused) == \
@@ -403,9 +405,10 @@ def test_tree_merge_matches_driver_fold(spark, catalog):
 def test_blocked_ordering_matches_plain(spark, catalog):
     """The skew-bounded ordering check is row-identical to the plain
     window, including a gap that spans whole blocks (tiny block_size)."""
+    from check_oracles import check_ordering_blocked
+
     from schema_inference_spark.operators.checks import (
         check_ordering,
-        check_ordering_blocked,
         stable_order,
     )
     df = catalog.read_snapshot(spark, "s1")
@@ -531,9 +534,9 @@ def _jobs(spark, group, fn):
 
 def test_shuffle_call_job_guard(spark, fixture_root, r1):
     """A shuffle-path drift call that persists, plus reading its
-    violations and verdicts, runs at most 7 Spark jobs: the state +
-    drift-sketch aggregation (2) and the fused check's collect (5, one
-    per adaptive query stage). Its read plan's schema comes from the
+    violations and verdicts, runs at most 4 Spark jobs: the state +
+    drift-sketch aggregation (2) and the check kernel's collect (2: the
+    exchange, then the kernel). Its read plan's schema comes from the
     footer census and the stores are read and written on the driver, so
     none of those runs a job, and its resubmit, which resume skips, runs
     none, also to read its verdicts."""
@@ -550,8 +553,8 @@ def test_shuffle_call_job_guard(spark, fixture_root, r1):
     r, jobs = _jobs(spark, "shuffle-job-guard", call)
     assert r.check_path == "fused"
     assert "drift_psi" in {x.check_id for x in r.violations.collect()}
-    assert 0 < len(jobs) <= 7, jobs
-    # the fused check's input view is dropped when spark.sql returns
+    assert 0 < len(jobs) <= 4, jobs
+    # the call leaves no temp view behind
     assert not [t for t in spark.catalog.listTables() if t.isTemporary]
 
     def resubmit():

@@ -33,19 +33,20 @@ def test_explicit_master_always_wins():
 
 def test_session_sized_from_host_memory():
     from schema_inference_spark.functions.session import size_session
-    # default heap: a share of what the host has, pre-touched
-    assert size_session({}, 15000) == ("6000m", "-Xms6000m -XX:+AlwaysPreTouch")
+    # default heap: a share of what the host has, pre-sized, with a
+    # young generation fixed at a quarter of it
+    assert size_session({}, 15000) == ("6000m", "-Xms6000m -Xmn1500m")
     # capped at the old 32g default on a big host
     assert size_session({}, 1 << 20)[0] == "32768m"
-    # an explicit heap that fits gives the same flags as before sizing
+    # an explicit heap that fits is pre-sized to itself
     assert size_session({"SPARK_GRAFT_DRIVER_MEM": "3g"}, 15000) == (
-        "3g", "-Xms3g -XX:+AlwaysPreTouch")
-    # one the host cannot back keeps its -Xmx but is neither pre-sized
-    # past the budget nor pre-touched
+        "3g", "-Xms3g -Xmn768m")
+    # one the host cannot back keeps its -Xmx but is not pre-sized past
+    # the budget
     assert size_session({"SPARK_GRAFT_DRIVER_MEM": "32g"}, 15000) == (
-        "32g", "-Xms6000m")
+        "32g", "-Xms6000m -Xmn1500m")
     # unknown host memory: the explicit or old defaults, unclamped
-    assert size_session({}, None) == ("32g", "-Xms32g -XX:+AlwaysPreTouch")
+    assert size_session({}, None) == ("32g", "-Xms32g -Xmn8192m")
 
 
 def test_parallelism_defaults_to_the_cpus_this_process_may_use():
