@@ -6,10 +6,11 @@ Each check emits violation rows in the reference failure-object shape
     (snapshot_id, partition_id, check_id, mgu_failure, schema_1, schema_2,
      conv_id, turn_idx, payload)
 
-``validate()`` runs D10-D12 together through ``check_rowlevel_fused``:
-one exchange on conv_id feeding the clustered path's Arrow kernel. The
-per-check declarative plans below are its oracles in tests. Their scale
-design (SURVEY.md §4.3):
+``validate()``'s shuffle path runs D10-D12 together through
+``check_rowlevel_fused``: the native split reader's rows, one exchange on
+conv_id, the clustered path's Arrow kernel. The per-check declarative
+plans below are its oracles in tests. Their scale design (SURVEY.md
+§4.3):
 - uniqueness (D10): salted two-phase aggregation — partial counts on
   (key, salt) absorb hot keys before the global shuffle; a single hot
   conv_id (agent loop) cannot pin one reducer. AQE skew handling stays on
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.frames import local_frame
-from .clustered import _OUT_DDL, _segment_checker
+from .clustered import _OUT_DDL, _segment_checker, _with_meta
 
 VIOLATION_COLS = [
     "snapshot_id", "partition_id", "check_id", "mgu_failure",
@@ -502,16 +503,21 @@ def check_rowlevel_fused(df: DataFrame, snapshot_id: str,
     ``check_ordering``; null keys follow the turn-blocked window plan it
     replaced (both asserted in tests):
 
-      scan -> project the six check columns -> Exchange(conv_id) ->
+      rows -> project the six check columns -> Exchange(conv_id) ->
       Sort(conv_id, turn_idx, ts) -> mapInArrow(clustered kernel)
 
+    ``validate()`` feeds it the native split reader's rows
+    (``clustered.native_rows``); tests also feed it the JVM read plan.
     The kernel is the clustered path's ``_segment_checker`` in its
     sorted-input mode: each conversation is whole in one task, so the
     lag checks and duplicate runs need no carrier rows, seam stitch or
     second branch, and collecting the plan runs one scan and one
     exchange. AQE sizes the exchange. The kernel emits violation rows
     only, a duplicate key as one ``unique_key`` row (its copy count, the
-    min bucket of its copies).
+    min bucket of its copies). The reader's metadata rows (a ``meta``
+    column) ride the same exchange, pass the kernel by and come out as
+    ``clustered.META_CHECK`` rows: partition_id and the meta JSON in
+    ``payload``.
 
     Skew: a conversation's turns go to one task, unblocked. With a
     1M-turn conversation added to a 120k-turn unclustered snapshot, a
@@ -519,14 +525,17 @@ def check_rowlevel_fused(df: DataFrame, snapshot_id: str,
     window plan this replaced, at a 4.7 % higher peak RSS than that plan
     without heap pre-touch (4 cores, 3g driver heap).
     """
+    meta = (F.col("meta") if "meta" in df.columns
+            else F.lit(None).cast("string").alias("meta"))
     return (df.select(F.col(partition_col).cast("int").alias("bucket"),
                       F.col("conv_id").cast("string").alias("conv_id"),
                       F.col("turn_idx").cast("bigint").alias("turn_idx"),
                       "ts", F.col("role").cast("string").alias("role"),
-                      F.col("tool").cast("string").alias("tool"))
+                      F.col("tool").cast("string").alias("tool"), meta)
             .repartition("conv_id")
             .sortWithinPartitions("conv_id", "turn_idx", "ts")
-            .mapInArrow(_segment_checker(role_vocab, tool_vocab), _OUT_DDL)
+            .mapInArrow(_with_meta(_segment_checker(role_vocab, tool_vocab)),
+                        _OUT_DDL)
             .select(F.lit(snapshot_id).alias("snapshot_id"),
                     *VIOLATION_COLS[1:]))
 

@@ -1,22 +1,31 @@
 """Layout-aware row-level checks: ZERO-shuffle validation over clustered
-snapshots, and the Arrow check kernel both check paths run.
+snapshots, the Arrow check kernel both check paths run, and the native
+split reader that feeds it on both.
 
 The kernel (``_segment_checker``) evaluates every row-level check as a
 vectorized lag over rows in (conv_id, turn_idx, ts) order. The shuffle
-path (``checks.check_rowlevel_fused``) gets that order from one Exchange
-on conv_id plus a sort within each task. A transcripts table written the
-way an Iceberg pipeline would write it — bucket-partitioned by conv_id
-with a declared write sort order of (conv_id, turn_idx, ts) — already
-has every conversation's turns contiguous and sorted on disk, so this
-module's path needs NO shuffle at all: the kernel runs per input split,
-with conversations spanning split boundaries stitched by per-segment
-boundary rows (a few hundred rows, not 10^12).
+path (``checks.check_rowlevel_fused`` over ``native_rows``) gets that
+order from one Exchange on conv_id plus a sort within each task. A
+transcripts table written the way an Iceberg pipeline would write it —
+bucket-partitioned by conv_id with a declared write sort order of
+(conv_id, turn_idx, ts) — already has every conversation's turns
+contiguous and sorted on disk, so this module's clustered path needs NO
+shuffle at all: the kernel runs per input split, with conversations
+spanning split boundaries stitched by per-segment boundary rows (a few
+hundred rows, not 10^12).
 
-Plan shape (3 Spark jobs per call):
+On both paths the reader (``_native_split_reader``) reads each packed
+split natively once and also emits, per (task, partition), the inference
+column states and the exact drift counts at the baseline's bin edges
+(``reader_meta`` merges them on the driver): a call reads the snapshot
+once, for everything.
+
+Clustered plan shape (3 Spark jobs per call, drift included):
 
     manifest -> row-group-aligned splits, packed into at most
-                defaultParallelism tasks balanced by footer row counts
-                (an Arrow-built LocalRelation, one row per task)
+                defaultParallelism tasks (and one per TASK_MIN_ROWS)
+                balanced by footer row counts (an Arrow-built
+                LocalRelation, one row per task)
       -> mapInArrow: each task reads its parquet ranges NATIVELY with
          pyarrow (C++ decode — the JVM->Python Arrow feed was 14.5s for
          a trivial passthrough of 19.1M rows where a JVM-only count is
@@ -26,7 +35,7 @@ Plan shape (3 Spark jobs per call):
                   unique-key candidates     (sparse: dup runs + edges)
                   one boundary row per contiguous segment
                   one extent row per (conv, segment)  (contiguity proof)
-                  inference states / read errors (per task, partition)
+                  states, drift counts / read errors (per task, partition)
       -> localCheckpoint (job 1), released before returning
       -> ONE collect (jobs 2-3): every row but the extent rows, plus a
          groupBy(conv_id) returning the convs spanning >1 segment
@@ -475,15 +484,26 @@ def _plan_splits(catalog, snapshot_id: str, pending: List[int],
     return splits
 
 
+# At most one scan task per this many footer rows (and at most
+# defaultParallelism): each task is a Python worker of ~150 MB VmHWM, so a
+# small snapshot must not fork one per core. Measured with perfbench
+# unclustered_drift_resume (4 cores, 3g driver heap, seeds 701-704): its
+# 120k-row snapshot read in 4 tasks without the floor and in 2 with it,
+# peak RSS 2,099-2,156 MB against 1,788-1,804 MB, turns/s within noise.
+# The 239k-row clustered_snapshot scan keeps its 4 tasks.
+TASK_MIN_ROWS = 65_536
+
+
 def _pack_tasks(spark, splits: List[tuple]) -> DataFrame:
     """Splits -> one row per scan task, each holding a list of splits.
 
-    At most ``defaultParallelism`` tasks, balanced by footer row counts
-    (largest split first onto the least-loaded task): a Python task per
-    split paid worker setup per split, and round robin lets one task
-    collect the big files. The table is Arrow-built, so Spark holds it as
-    a LocalRelation and gives each row its own scan partition; a Python
-    list would become an RDD that costs a deserialisation job per call."""
+    At most ``defaultParallelism`` tasks and one per ``TASK_MIN_ROWS``
+    footer rows, balanced by footer row counts (largest split first onto
+    the least-loaded task): a Python task per split paid worker setup per
+    split, and round robin lets one task collect the big files. The table
+    is Arrow-built, so Spark holds it as a LocalRelation and gives each
+    row its own scan partition; a Python list would become an RDD that
+    costs a deserialisation job per call."""
     import heapq
 
     import pyarrow as pa
@@ -491,7 +511,9 @@ def _pack_tasks(spark, splits: List[tuple]) -> DataFrame:
         ("split_id", pa.int64()), ("fid", pa.int32()), ("path", pa.string()),
         ("partition_id", pa.int32()), ("rg_start", pa.int32()),
         ("rg_end", pa.int32()), ("pos0", pa.int64())])
-    n_tasks = max(1, min(len(splits), spark.sparkContext.defaultParallelism))
+    total_rows = sum(sp[7] for sp in splits)
+    n_tasks = max(1, min(len(splits), spark.sparkContext.defaultParallelism,
+                         -(-total_rows // TASK_MIN_ROWS)))
     load = [(0, t) for t in range(n_tasks)]
     tasks: List[list] = [[] for _ in range(n_tasks)]
     for sp in sorted(splits, key=lambda sp: -sp[7]):
@@ -504,15 +526,24 @@ def _pack_tasks(spark, splits: List[tuple]) -> DataFrame:
         pa.table({"splits": pa.array(cells, pa.list_(split_t))}))
 
 
-_SCAN_COLS = ["conv_id", "turn_idx", "role", "tool", "ts"]
+# the shuffle path's row source (``native_rows``): the kernel's six check
+# columns plus ``meta``, null on turn rows and the metadata JSON on the
+# reader's one row per (task, partition)
+_ROWS_DDL = ("bucket int, conv_id string, turn_idx bigint, ts timestamp, "
+             "role string, tool string, meta string")
+
+# check_id of the rows that carry the reader's metadata past the kernel
+# on the shuffle path (partition_id + meta JSON in payload); never a
+# violation
+META_CHECK = "_reader_meta"
 
 
 def _native_split_reader(checker, batch_rows: int,
-                         state_cols: List[str] | None = None):
+                         state_cols: List[str] | None = None,
+                         drift_bins: dict | None = None):
     """mapInArrow over packed task rows (``_pack_tasks``): each task
     reads its splits' parquet row-group ranges natively with pyarrow
-    (C++ decode, zero JVM row->Arrow conversion) and streams
-    checker-schema batches into ``_segment_checker``.
+    (C++ decode, zero JVM row->Arrow conversion).
 
     Why native: Spark's JVM->Python Arrow feed converts UnsafeRows
     column-by-column under a shared allocator lock — measured 14.5s for
@@ -526,20 +557,43 @@ def _native_split_reader(checker, batch_rows: int,
     s3://, hdfs://); a catalog that can't offer it keeps the JVM-scan
     shuffle path.
 
-    With ``state_cols`` the same decoded batches ALSO feed the inference
-    column-state monoid (infer._arrow_col_state — per-column null counts,
-    min/max, observed type): the one extra read is the columns the checks
-    prune (``text``), and it replaces the infer stage's ENTIRE second
-    corpus scan. States ride the same output schema as kind=4 rows
-    (partition_id + state JSON in ``payload``), one row per (task,
-    partition) — metadata-sized.
+    Each file is read with its own schema, and the check columns are cast
+    the way the JVM read plan casts them: ``conv_id``/``role``/``tool`` to
+    string, ``turn_idx`` to int64 (a float file truncates, as Spark's
+    cast does), ``ts`` to timestamp[us, UTC] (INT96 and nanosecond files
+    included); a column the file lacks reads as nulls.
+
+    With ``checker`` (the clustered path) the batches stream into
+    ``_segment_checker`` with their split id and position; without it
+    (the shuffle path) they leave as ``_ROWS_DDL`` rows for the exchange.
+
+    The same decoded batches ALSO feed, per (task, partition), one
+    metadata record (``meta`` JSON, see ``reader_meta``), so the snapshot
+    is read once for everything:
+    - ``states``: with ``state_cols``, the inference column-state monoid
+      (infer._arrow_col_state — per-column null counts, min/max, observed
+      type, ``phys`` from the footer); a column the file lacks gets an
+      all-null state of the file's length;
+    - ``drift``: for each column of ``drift_bins`` ({column: (edges,
+      baseline CDF)}), its non-null count and its count <= each edge,
+      exact. The values are what the baseline's KLL sketch was built
+      from: ``text_len`` is ``length(text)`` (code points), numerics are
+      float64, timestamps epoch seconds;
+    - ``error``: a split that fails to read errors its partition.
+    On the clustered path the records leave as kind=4 rows of ``_OUT_DDL``
+    (partition_id + JSON in payload); on the shuffle path as ``_ROWS_DDL``
+    rows with ``meta`` set.
     """
     import numpy as np
+
+    edges = {c: np.asarray(e, np.float64)
+             for c, (e, _) in (drift_bins or {}).items()}
 
     def fn(batches):
         import json as _json
 
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         from schema_inference_spark.operators.infer import (
@@ -552,10 +606,35 @@ def _native_split_reader(checker, batch_rows: int,
             pa.set_io_thread_count(1)
         except Exception:
             pass
-        read_cols = (_SCAN_COLS if state_cols is None else
-                     list(dict.fromkeys([*_SCAN_COLS, *state_cols])))
+        scan_types = {"conv_id": pa.string(), "turn_idx": pa.int64(),
+                      "ts": pa.timestamp("us", "UTC"), "role": pa.string(),
+                      "tool": pa.string()}
+        wanted = list(dict.fromkeys(
+            [*scan_types, *(state_cols or ()),
+             *(("text" if c == "text_len" else c) for c in edges)]))
         states: dict = {}  # pid -> PartState
+        drift: dict = {}   # pid -> {column: [n, counts <= each edge]}
         errors: dict = {}  # pid -> read-error message (by-value :throw)
+
+        def drift_values(col: dict, c: str):
+            """Non-null float64 values of drift column ``c``, or None when
+            the file cannot supply them."""
+            if c == "text_len" and "text" in col:
+                a = pc.utf8_length(col["text"])
+            elif c in col:
+                a = col[c]
+            else:
+                return None
+            t = a.type
+            if pa.types.is_timestamp(t):
+                us = a.cast(pa.timestamp("us", "UTC"), safe=False).cast(
+                    pa.int64()).drop_null().to_numpy()
+                return us.astype(np.float64) / 1e6
+            if not (pa.types.is_integer(t) or pa.types.is_floating(t)
+                    or pa.types.is_decimal(t)):
+                return None
+            v = a.cast(pa.float64(), safe=False).drop_null().to_numpy()
+            return v[~np.isnan(v)]
 
         def one_split(row):
             pf = pq.ParquetFile(row["path"])
@@ -563,49 +642,54 @@ def _native_split_reader(checker, batch_rows: int,
                 return
             pos = row["pos0"]
             pid = row["partition_id"]
-            if state_cols is not None:
-                # physical truth comes from the footer schema:
-                # pyarrow may decode e.g. string as large_string
-                # in memory, but `phys` records what the FILE
-                # stores (what the census and the Spark-feed
-                # engine report)
-                fsch = pf.schema_arrow
-                phys_of = {c: str(fsch.field(c).type)
-                           for c in state_cols}
+            # physical truth comes from the footer schema: pyarrow may
+            # decode e.g. string as large_string in memory, but `phys`
+            # records what the FILE stores (what the census reports)
+            fsch = pf.schema_arrow
+            read = [c for c in wanted if c in fsch.names]
             for full in pf.iter_batches(
                     batch_size=batch_rows,
                     row_groups=range(row["rg_start"], row["rg_end"]),
-                    columns=read_cols):
+                    columns=read):
+                n = full.num_rows
+                col = dict(zip(full.schema.names, full.columns))
                 if state_cols is not None:
                     st = {}
                     for c in state_cols:
                         cs = _arrow_col_state(
-                            full.column(
-                                full.schema.get_field_index(c)),
-                            pid)
+                            col[c] if c in col else pa.nulls(n), pid)
                         if cs["phys"]:
-                            cs["phys"] = [phys_of[c]]
+                            cs["phys"] = [str(fsch.field(c).type)]
                         st[c] = cs
                     states[pid] = (merge_part_states(states[pid], st)
                                    if pid in states else st)
-                b = full.select(_SCAN_COLS)
-                n = b.num_rows
-                ix = b.schema.get_field_index
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(np.full(n, row["partition_id"],
-                                     np.int32)),
-                    b.column(ix("conv_id")).cast(pa.string()),
-                    b.column(ix("turn_idx")).cast(pa.int64()),
-                    b.column(ix("ts")),
-                    b.column(ix("role")).cast(pa.string()),
-                    b.column(ix("tool")).cast(pa.string()),
-                    pa.array(np.full(n, row["split_id"], np.int64)),
-                    pa.array(np.arange(pos, pos + n, dtype=np.int64)),
-                ], names=["bucket", "conv_id", "turn_idx", "ts",
-                          "role", "tool", "_fh", "pos"])
+                acc = drift.setdefault(pid, {}) if edges else None
+                for c, e in edges.items():
+                    v = drift_values(col, c)
+                    if v is None:
+                        continue
+                    # bin j+1 holds the values in (e[j], e[j+1]]: its
+                    # running sum up to j is count(x <= e[j])
+                    le = np.cumsum(np.bincount(np.searchsorted(e, v),
+                                               minlength=len(e) + 1))[:-1]
+                    n0, le0 = acc.get(c, (0, 0))
+                    acc[c] = (n0 + len(v), le0 + le)
+                cols = [pa.array(np.full(n, pid, np.int32))] + [
+                    col[c].cast(t, safe=False) if c in col
+                    else pa.nulls(n, t) for c, t in scan_types.items()]
+                names = ["bucket", *scan_types]
+                if checker is None:
+                    yield pa.RecordBatch.from_arrays(
+                        cols + [pa.nulls(n, pa.string())],
+                        names=names + ["meta"])
+                else:
+                    yield pa.RecordBatch.from_arrays(cols + [
+                        pa.array(np.full(n, row["split_id"], np.int64)),
+                        pa.array(np.arange(pos, pos + n, dtype=np.int64)),
+                    ], names=names + ["_fh", "pos"])
                 pos += n
 
-        def checker_batches():
+        def row_batches():
             for sp in batches:
                 for row in (r for task in sp.column(0).to_pylist()
                             for r in task):
@@ -613,29 +697,127 @@ def _native_split_reader(checker, batch_rows: int,
                         yield from one_split(row)
                     except Exception as exc:  # noqa: BLE001 — by-value
                         # :throw at partition granularity: a corrupt data
-                        # page / unreadable file errors its PARTITION (a
-                        # kind=5 row), never the job. Rows this split (or
-                        # its partition's other splits) already emitted
-                        # are discarded by the pid filter downstream —
-                        # check_rowlevel_clustered drops every row of an
-                        # errored partition before any check consumes it.
+                        # page / unreadable file errors its PARTITION (an
+                        # error record), never the job. Rows this split
+                        # (or its partition's other splits) already
+                        # emitted never reach a result: the clustered
+                        # path drops every row of an errored partition,
+                        # and validate() re-runs the shuffle path's pass
+                        # without it.
                         errors[row["partition_id"]] = (
                             f"{row['path']}: rg[{row['rg_start']}:"
                             f"{row['rg_end']}]: "
                             f"{type(exc).__name__}: {exc}")
 
-        yield from checker(checker_batches())
-        # checker() fully drains checker_batches before returning, so the
-        # accumulators are complete here. One row per (task, partition):
-        # kind=5 read error / kind=4 state JSON, in payload.
-        meta = ([(5, p, errors[p]) for p in sorted(errors)]
-                + [(4, p, _json.dumps(states[p], default=_json_safe))
-                   for p in sorted(states)])
-        if meta:
-            yield _out_batch([(k, p) + (None,) * 6 + (m,) + (None,) * 10
-                              for k, p, m in meta])
+        yield from (row_batches() if checker is None
+                    else checker(row_batches()))
+        # the generators above are fully drained here, so the
+        # accumulators are complete: one record per (task, partition)
+        meta = [(p, _json.dumps({"error": errors[p]})) for p in sorted(errors)]
+        meta += [(p, _json.dumps(
+            {"states": states.get(p),
+             "drift": {c: [int(n), [int(x) for x in le]]
+                       for c, (n, le) in drift.get(p, {}).items()}},
+            default=_json_safe))
+            for p in sorted(set(states) | set(drift)) if p not in errors]
+        if not meta:
+            return
+        if checker is None:
+            k = len(meta)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([p for p, _ in meta], pa.int32())]
+                + [pa.nulls(k, t) for t in scan_types.values()]
+                + [pa.array([m for _, m in meta], pa.string())],
+                names=["bucket", *scan_types, "meta"])
+        else:
+            yield _out_batch([(4, p) + (None,) * 6 + (m,) + (None,) * 10
+                              for p, m in meta])
 
     return fn
+
+
+def reader_meta(payloads) -> tuple:
+    """The reader's metadata records [(partition_id, meta JSON)] ->
+    ``(pstates, drift_counts, read_errors)``: per-partition column states
+    merged with the associative monoid the state engines use, sorted by
+    partition; {column: (non-null values, [count <= each edge])} summed
+    over partitions; {partition_id: message}. A partition with a read
+    error contributes no state and no count."""
+    from .infer import merge_part_states
+    recs = [(pid, json.loads(m)) for pid, m in payloads]
+    errors = {pid: m["error"] for pid, m in recs if "error" in m}
+    states: dict = {}
+    drift: dict = {}
+    for pid, m in recs:
+        if pid in errors:
+            continue
+        st = m["states"]
+        if st is not None:
+            states[pid] = (merge_part_states(states[pid], st)
+                           if pid in states else st)
+        for c, (n, le) in m["drift"].items():
+            tot, cum = drift.get(c, (0, [0] * len(le)))
+            drift[c] = (tot + n, [a + b for a, b in zip(cum, le)])
+    return sorted(states.items()), drift, errors
+
+
+def _with_meta(checker):
+    """``_segment_checker`` over ``_ROWS_DDL`` rows (the shuffle path):
+    turn rows stream into the kernel, and the reader's metadata rows,
+    which the exchange sent along with them, leave untouched as
+    ``META_CHECK`` rows (kind 4, partition_id, meta JSON in payload)."""
+    def fn(batches):
+        import pyarrow.compute as pc
+        meta: list = []
+
+        def turns():
+            for b in batches:
+                m = b.column(b.schema.get_field_index("meta"))
+                if m.null_count < len(m):
+                    is_meta = m.is_valid()
+                    meta.extend(zip(b.column(0).filter(is_meta).to_pylist(),
+                                    m.filter(is_meta).to_pylist()))
+                    b = b.filter(pc.invert(is_meta))
+                yield b
+
+        yield from checker(turns())
+        if meta:
+            yield _out_batch([(4, p, META_CHECK) + (None,) * 5 + (m,)
+                              + (None,) * 10 for p, m in meta])
+
+    return fn
+
+
+def _scan_conf(spark) -> tuple:
+    """(split target rows, native-read batch rows) of a native scan."""
+    # native-read batch size is independent of the JVM<->Python Arrow
+    # transfer cap (arrow.maxRecordsPerBatch): these batches never cross
+    # the bridge, and per-batch Python/numpy setup amortizes with size —
+    # measured 9.8s -> 6.3s for the 19.1M-turn corpus pass going from
+    # 10k to 256k rows. 128k rows ~ 10-20 MB decoded per in-flight batch
+    # per core.
+    return (int(spark.conf.get(
+        "spark.schema_inference.clustered.splitTargetRows", "1000000")),
+        int(spark.conf.get(
+            "spark.schema_inference.clustered.readBatchRows", "131072")))
+
+
+def native_rows(spark: SparkSession, catalog, snapshot_id: str,
+                pending: List[int], state_cols: List[str],
+                drift_bins: dict | None = None) -> DataFrame:
+    """The shuffle path's row source, in place of the JVM read plan: the
+    packed manifest splits read natively (``_native_split_reader``), one
+    ``_ROWS_DDL`` row per turn plus one metadata row per (task,
+    partition) carrying the column states of ``state_cols``, the exact
+    drift counts at ``drift_bins``' edges and read errors. Building it
+    runs no Spark job; ``checks.check_rowlevel_fused`` exchanges it on
+    conv_id into the kernel, whose output passes the metadata rows on."""
+    target_rows, batch_rows = _scan_conf(spark)
+    splits = _plan_splits(catalog, snapshot_id, list(pending), target_rows,
+                          spark=spark)
+    return _pack_tasks(spark, splits).mapInArrow(
+        _native_split_reader(None, batch_rows, state_cols, drift_bins),
+        _ROWS_DDL)
 
 
 def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
@@ -644,7 +826,8 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
                              partition_col: str = "bucket",
                              split_target_rows: int | None = None,
                              collect_states: bool = False,
-                             with_errors: bool = False):
+                             with_errors: bool = False,
+                             drift_bins: dict | None = None):
     """All row-level checks (uniqueness, role/tool vocab, ordering) with
     zero shuffle over a snapshot whose manifest declares the clustered
     write order. Row-identical to ``check_rowlevel_fused``.
@@ -661,6 +844,11 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
     returns ``(violations, pstates)`` — the snapshot then needs ONE
     corpus read total instead of a stats pass plus a check pass.
 
+    ``drift_bins`` ({column: (edges, baseline CDF)}, from
+    ``drift.baseline_bins``) makes the same scan count each column's
+    values at the edges, exactly, and appends {column: (non-null values,
+    [count <= each edge])} to the return tuple, after the states.
+
     ``with_errors=True`` appends an ``{partition_id: message}`` dict of
     partitions whose native read failed (corrupt data page, unreadable
     file) to the return tuple — the reference's by-value ``:throw``
@@ -673,20 +861,11 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
     from ..functions.frames import local_frame
     from ..functions.prof import profile_marker
     from .checks import VIOLATION_DDL
-    from .infer import merge_part_states
     _tmark = profile_marker("clustered")
 
+    conf_target_rows, batch_rows = _scan_conf(spark)
     if split_target_rows is None:
-        split_target_rows = int(spark.conf.get(
-            "spark.schema_inference.clustered.splitTargetRows", "1000000"))
-    # native-read batch size is independent of the JVM<->Python Arrow
-    # transfer cap (arrow.maxRecordsPerBatch): these batches never cross
-    # the bridge, and per-batch Python/numpy setup amortizes with size —
-    # measured 9.8s -> 6.3s for the 19.1M-turn corpus pass going from
-    # 10k to 256k rows. 128k rows ~ 10-20 MB decoded per in-flight batch
-    # per core.
-    batch_rows = int(spark.conf.get(
-        "spark.schema_inference.clustered.readBatchRows", "131072"))
+        split_target_rows = conf_target_rows
     splits = _plan_splits(catalog, snapshot_id, list(pending),
                           split_target_rows, spark=spark)
     _tmark(f"plan-splits ({len(splits)} splits)")
@@ -705,8 +884,7 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
         state_cols = [c for c in _pq.ParquetFile(splits[0][2])
                       .schema_arrow.names if c != partition_col]
     out = _pack_tasks(spark, splits).mapInArrow(
-        _native_split_reader(checker, batch_rows,
-                             state_cols),
+        _native_split_reader(checker, batch_rows, state_cols, drift_bins),
         _OUT_DDL).localCheckpoint(eager=False)
     # The UDF output is violation-sized except for the kind=3 extent rows
     # (one per conversation), and two branches read it below, so it is
@@ -732,10 +910,11 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
         stored.unpersist(True)
     _tmark("collect")
 
-    by_kind: dict = {k: [] for k in range(6)}
+    by_kind: dict = {k: [] for k in range(5)}
     for r in rows:
         by_kind[r.kind].append(r)
-    read_errors = {r.partition_id: r.payload for r in by_kind[5]}
+    pstates, drift, read_errors = reader_meta(
+        (r.partition_id, r.payload) for r in by_kind[4])
     if read_errors and not with_errors:
         raise RuntimeError(
             "clustered scan read errors: "
@@ -749,7 +928,7 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
     # no partition_id but a file id, and a file is in one partition.
     bad_fids = {s[1] for s in splits if s[3] in read_errors}
     keep = {k: [r for r in by_kind[k] if r.partition_id not in read_errors]
-            for k in (0, 2, 4)}
+            for k in (0, 2)}
 
     # stitch: boundary rows in (file, position) order are global scan
     # order, so each pair of consecutive segments is one seam
@@ -815,21 +994,11 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
                          % (_ts_str(p.l_ts), _ts_str(f.f_ts))))
         out_rows += [(snapshot_id, f.f_bucket, c, None, None, None,
                       f.f_conv, f.f_turn, payload) for c, payload in hits]
-    violations = local_frame(spark, out_rows, VIOLATION_DDL)
-    if not collect_states:
-        return (violations, read_errors) if with_errors else violations
-
-    # fused states: one kind=4 row per (task, partition), merged with the
-    # same associative monoid the standalone engines use
-    by_pid: dict = {}
-    for r in keep[4]:
-        st = json.loads(r.payload)
-        by_pid[r.partition_id] = (
-            merge_part_states(by_pid[r.partition_id], st)
-            if r.partition_id in by_pid else st)
-    pstates = sorted(by_pid.items())
-    return ((violations, pstates, read_errors) if with_errors
-            else (violations, pstates))
+    out = ((local_frame(spark, out_rows, VIOLATION_DDL),)
+           + ((pstates,) if collect_states else ())
+           + ((drift,) if drift_bins is not None else ())
+           + ((read_errors,) if with_errors else ()))
+    return out if len(out) > 1 else out[0]
 
 
 def census_uniform(census: dict, pending: List[int]) -> bool:

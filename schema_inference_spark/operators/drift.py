@@ -1,20 +1,27 @@
-"""Distribution drift (D13): PSI / KS over merged KLL sketches.
+"""Distribution drift (D13): PSI / KS of the current snapshot against a
+baseline's KLL sketch, on the baseline's bin edges.
 
 The temporal analog of the reference's sub-schema compatibility gate
 (util.clj:257-278; README.md:260-353): "is today's data still compatible
-with the baseline snapshot" — answered from two merged KLL sketches, so the
-comparison costs O(sketch) regardless of table size. Bin edges come from
-the baseline sketch's quantiles; both sketches are rank-queried at those
-edges; PSI and KS are computed driver-side over the resulting tiny vectors
-(SURVEY.md §4.2: no Catalyst work, plain math).
+with the baseline snapshot". KLL is kept where it is needed, choosing the
+bins once: before the corpus pass, one driver-local projection reads each
+baseline sketch's interior deciles (the bin edges) and its ranks there
+(the baseline CDF). The current side is not sketched: the native split
+reader counts every compared column's non-null values and the values at
+or below each edge, exactly, inside the pass that also runs the checks.
+PSI and KS are then plain math over two small CDFs (SURVEY.md §4.2), and
+the same snapshot and baseline give the same payload in every run: no
+randomized rank error on the current side (KLL± VLDB 2021 and the EDBT
+2023 quantile-sketch study measure that error).
 """
 
 from __future__ import annotations
 
 import json
 import math
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from ..functions.frames import local_frame
@@ -23,75 +30,96 @@ DEFAULT_BINS = 10
 # conventional PSI thresholds: <0.1 stable, 0.1-0.25 moderate, >0.25 drifted
 PSI_THRESHOLD = 0.25
 
+# {column: (strictly increasing bin edges, baseline CDF)}; the CDF has
+# len(edges) + 2 points: 0.0, the baseline's rank at each edge, 1.0
+Bins = Dict[str, Tuple[List[float], List[float]]]
 
-def psi_ks_many(spark, pairs: Dict[str, Tuple[bytes, bytes]],
-                n_bins: int = DEFAULT_BINS) -> Dict[str, Dict[str, float]]:
-    """``psi_ks_from_sketches`` for every column of ``pairs`` ({column:
-    (baseline kll, current kll)}) in ONE projection, evaluated on the
-    driver without a job: the baseline's interior quantiles (the bin
-    edges) and both sketches' ranks there. The current sketches sit in a
-    one-row local frame, the baseline ones are literals (a rank query
-    takes only a constant quantile). Equal edges are deduped afterwards:
-    the rank at two equal edges is equal, so PSI and KS do not change."""
-    cols = sorted(pairs)
-    probs = F.array(*[F.lit(i / n_bins) for i in range(1, n_bins)])
+
+def _bins_projection(spark, sketches: Dict[str, bytes]) -> Bins:
+    """Edges and baseline ranks of every sketch in ONE projection over a
+    one-row local frame, which Spark evaluates on the driver without a
+    job (the sketches are literals: a rank query takes only a constant
+    quantile). Equal edges are deduped afterwards: the rank at two equal
+    edges is equal, so PSI and KS do not change."""
+    cols = sorted(sketches)
+    probs = F.array(*[F.lit(i / DEFAULT_BINS)
+                      for i in range(1, DEFAULT_BINS)])
     sel = []
-    for i, c in enumerate(cols):
-        base = F.lit(bytearray(pairs[c][0]))
+    for c in cols:
+        base = F.lit(bytearray(sketches[c]))
         edges = F.kll_sketch_get_quantile_double(base, probs)
-        sel.append(F.struct(edges, F.kll_sketch_get_rank_double(base, edges),
-                            F.kll_sketch_get_rank_double(f"c{i}", edges)))
-    row = local_frame(spark, [tuple(bytes(pairs[c][1]) for c in cols)],
-                      ", ".join(f"c{i} binary" for i in range(len(cols)))
-                      ).select(*sel).first() if cols else []
-    out = {}
-    for c, (edges, base_rank, cur_rank) in zip(cols, row):
-        keep = [j for j, e in enumerate(edges) if j == 0 or e > max(edges[:j])]
-        base_cdf = [0.0] + [base_rank[j] for j in keep] + [1.0]
-        cur_cdf = [0.0] + [cur_rank[j] for j in keep] + [1.0]
-        eps, psi, ks = 1e-6, 0.0, 0.0
-        for i in range(1, len(base_cdf)):
-            p = max(base_cdf[i] - base_cdf[i - 1], eps)   # baseline bin mass
-            q = max(cur_cdf[i] - cur_cdf[i - 1], eps)     # current bin mass
-            psi += (q - p) * math.log(q / p)
-            ks = max(ks, abs(base_cdf[i] - cur_cdf[i]))
-        out[c] = {"psi": psi, "ks": ks, "n_bins": len(keep) + 1}
+        sel.append(F.struct(edges, F.kll_sketch_get_rank_double(base, edges)))
+    row = local_frame(spark, [(0,)], "one int").select(*sel).first()
+    out: Bins = {}
+    for c, (edges, ranks) in zip(cols, row):
+        keep = [j for j, e in enumerate(edges)
+                if j == 0 or e > max(edges[:j])]
+        out[c] = ([float(edges[j]) for j in keep],
+                  [0.0] + [float(ranks[j]) for j in keep] + [1.0])
     return out
 
 
-def psi_ks_from_sketches(spark, baseline_kll: bytes, current_kll: bytes,
-                         n_bins: int = DEFAULT_BINS) -> Dict[str, float]:
-    """Population Stability Index + Kolmogorov-Smirnov statistic between two
-    KLL quantile sketches. Edges = baseline deciles (interior), so the
-    baseline bin mass is ~uniform and PSI is well-conditioned.
-    """
-    return psi_ks_many(spark, {"": (baseline_kll, current_kll)}, n_bins)[""]
-
-
-def drift_violations(spark, snapshot_id: str,
-                     baseline_stats: Dict[str, bytes],
-                     current_stats: Dict[str, bytes],
-                     threshold: float = PSI_THRESHOLD,
-                     n_bins: int = DEFAULT_BINS) -> List[Dict]:
-    """Compare every column present in both sketch registries; emit a
-    drift_psi violation row (F5 shape) where PSI exceeds the threshold."""
-    pairs = {c: (baseline_stats[c], current_stats[c])
-             for c in set(baseline_stats) & set(current_stats)
-             if None not in (baseline_stats[c], current_stats[c])}
+def baseline_bins(spark, baseline_sketches: Dict[str, Optional[bytes]]
+                  ) -> Tuple[Bins, Dict[str, str]]:
+    """The baseline side of drift, read before the corpus pass: ``(bins,
+    skipped)``. ``bins`` maps every compared column to its bin edges and
+    the baseline CDF there; columns without a sketch are not compared.
+    A sketch that cannot be read (the one failure expected here) fails
+    the shared projection, so the columns are then read one by one and
+    each unreadable one lands in ``skipped`` ({column: reason}) instead
+    of taking the others down."""
+    sketches = {c: b for c, b in baseline_sketches.items() if b is not None}
+    if not sketches:
+        return {}, {}
+    # a corrupt or empty sketch fails its quantile query with
+    # KLL_INVALID_INPUT_SKETCH_BUFFER, a PySparkException on the driver
     try:
-        metrics = psi_ks_many(spark, pairs, n_bins)
-    except Exception:
-        # an invalid/empty sketch fails the whole projection: compare
-        # column by column and skip the incomparable ones (not a drift)
-        metrics = {}
-        for col, pair in pairs.items():
-            try:
-                metrics.update(psi_ks_many(spark, {col: pair}, n_bins))
-            except Exception:
-                continue
+        return _bins_projection(spark, sketches), {}
+    except PySparkException:
+        pass
+    bins: Bins = {}
+    skipped: Dict[str, str] = {}
+    for col in sorted(sketches):
+        try:
+            bins.update(_bins_projection(spark, {col: sketches[col]}))
+        except PySparkException as exc:
+            skipped[col] = ("baseline sketch unreadable: "
+                            f"{type(exc).__name__}: {str(exc)[:200]}")
+    return bins, skipped
+
+
+def psi_ks(base_cdf: Sequence[float], cur_cdf: Sequence[float]
+           ) -> Tuple[float, float]:
+    """PSI and KS between two CDFs over the same bins (eps-clamped bin
+    masses, so an empty bin stays finite)."""
+    eps, psi, ks = 1e-6, 0.0, 0.0
+    for i in range(1, len(base_cdf)):
+        p = max(base_cdf[i] - base_cdf[i - 1], eps)   # baseline bin mass
+        q = max(cur_cdf[i] - cur_cdf[i - 1], eps)     # current bin mass
+        psi += (q - p) * math.log(q / p)
+        ks = max(ks, abs(base_cdf[i] - cur_cdf[i]))
+    return psi, ks
+
+
+def drift_violations(snapshot_id: str, bins: Bins,
+                     counts: Dict[str, Tuple[int, List[int]]],
+                     threshold: float = PSI_THRESHOLD
+                     ) -> Tuple[List[Dict], Dict[str, str]]:
+    """Compare every column of ``bins`` with its exact current counts
+    (``counts``: {column: (non-null values, values <= each edge)}), the
+    current CDF being the inclusive rank ``count(x <= edge) / n``. Returns
+    ``(rows, skipped)``: a drift_psi violation row (F5 shape) where PSI
+    exceeds the threshold, and {column: reason} for the columns whose
+    current side has no non-null value to compare."""
     out: List[Dict] = []
-    for col, m in sorted(metrics.items()):
-        if m["psi"] > threshold:
+    skipped: Dict[str, str] = {}
+    for col, (_, base_cdf) in sorted(bins.items()):
+        n, le = counts.get(col, (0, []))
+        if n == 0:
+            skipped[col] = "no non-null current values"
+            continue
+        psi, ks = psi_ks(base_cdf, [0.0] + [c / n for c in le] + [1.0])
+        if psi > threshold:
             out.append({
                 "snapshot_id": snapshot_id,
                 "partition_id": -1,      # snapshot-level check
@@ -100,11 +128,11 @@ def drift_violations(spark, snapshot_id: str,
                 "schema_1": None, "schema_2": None,
                 "conv_id": None, "turn_idx": None,
                 "payload": json.dumps(
-                    {"column": col, "psi": round(m["psi"], 6),
-                     "ks": round(m["ks"], 6), "threshold": threshold},
+                    {"column": col, "psi": round(psi, 6),
+                     "ks": round(ks, 6), "threshold": threshold},
                     sort_keys=True),
             })
-    return out
+    return out, skipped
 
 
 def schema_drift_violation(snapshot_id: str, column: str,
@@ -149,7 +177,7 @@ def transition_drift_violation(snapshot_id: str, baseline: Dict,
                                threshold: float = PSI_THRESHOLD
                                ) -> Optional[Dict]:
     """PSI between two transition matrices over the union of observed
-    cells (eps-clamped like psi_ks_from_sketches). Emits ONE
+    cells (eps-clamped like ``psi_ks``). Emits ONE
     snapshot-level violation row when the matrix as a whole drifts,
     naming the largest-term cell — a role-protocol regression
     (assistant turns that stop following user turns) moves this matrix

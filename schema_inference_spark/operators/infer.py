@@ -12,14 +12,18 @@ inference + substitution composition):
    coercion can widen it away (SURVEY.md §7.3-1). Cost at 100 TB: one
    footer read per file, no data scan.
 
-2. **Column-state pass** — data-level. ``mapInArrow`` over the (pruned)
-   snapshot scan computes per-split, per-bucket column states
-   (observed value type, null/row counts, min/max); states are merged
+2. **Column-state pass** — data-level. Per-split, per-bucket column
+   states (observed value type, null/row counts, min/max) are merged
    per-partition, then snapshot-wide via ``RDD.treeAggregate(depth=2)``
    (the reference's compose-substitutions as combOp; SURVEY.md §2.A).
    States are a few KB per partition — the shuffle is negligible at any
-   scale; the scan is the cost, and it is shared with the constraint
-   checks.
+   scale; the scan is the cost, and ``validate()`` shares it with the
+   constraint checks: on both check paths the native split reader
+   (``clustered._native_split_reader``) computes the states
+   (``_arrow_col_state``) in the one read that feeds the check kernel,
+   and ``finalize_infer`` finalizes them. ``infer_snapshot``'s two
+   engines over the JVM read plan (SQL aggregation, Arrow feed) are the
+   standalone form and the reader's oracle in tests.
 
 Failure semantics: merges never raise. A type conflict becomes an absorbed
 failure state that finalizes into a ``schema_merge`` violation row
@@ -31,8 +35,8 @@ from __future__ import annotations
 
 import datetime
 import json
-from dataclasses import dataclass, field, replace
-from typing import Any, Dict, Iterator, List, Optional, Sequence, Tuple
+from dataclasses import dataclass, field
+from typing import Any, Dict, Iterator, List, Optional, Tuple
 
 import pyarrow.parquet as pq
 
@@ -496,20 +500,8 @@ def partition_states(df, partition_col: str = "bucket") -> List[Tuple[int, PartS
 def sql_partition_states(df, census: Dict[int, Dict[str, Dict[str, Any]]],
                          partition_col: str = "bucket",
                          ) -> List[Tuple[int, PartState]]:
-    """``sql_states_and_sketches``' states, without sketches."""
-    return sql_states_and_sketches(df, census, partition_col)[0]
-
-
-def sql_states_and_sketches(df, census: Dict[int, Dict[str, Dict[str, Any]]],
-                            partition_col: str = "bucket",
-                            sketch_columns: Sequence[str] = (),
-                            ) -> Tuple[List[Tuple[int, PartState]],
-                                       Dict[str, bytes]]:
     """Per-partition column states via one JVM aggregation (the default
-    state engine), plus {column: snapshot KLL sketch} for each of
-    ``sketch_columns`` that can carry one: the drift sketches ride on this
-    aggregation, one per partition, and merge on the driver (KLL sketches
-    are mergeable).
+    engine of ``infer_snapshot``).
 
     Same monoid as ``partition_states`` — Spark's partial+final hash
     aggregation IS the associative per-partition combine — but entirely
@@ -522,16 +514,12 @@ def sql_states_and_sketches(df, census: Dict[int, Dict[str, Dict[str, Any]]],
     """
     from pyspark.sql import functions as F
 
-    from .stats import kll_aggs, merge_kll
-
     data_cols = [c for c in df.columns if c != partition_col]
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in data_cols:
         aggs.append(F.count(c).alias(f"{c}__cnt"))
         aggs.append(F.min(c).alias(f"{c}__min"))
         aggs.append(F.max(c).alias(f"{c}__max"))
-    sketch_aggs = kll_aggs(df, sketch_columns)
-    aggs += sketch_aggs.values()
     rows = df.groupBy(F.col(partition_col).alias("_pid")).agg(*aggs).collect()
 
     out: List[Tuple[int, PartState]] = []
@@ -552,7 +540,7 @@ def sql_states_and_sketches(df, census: Dict[int, Dict[str, Dict[str, Any]]],
                 st["max"] = _json_safe(r[f"{c}__max"])
             state[c] = st
         out.append((pid, state))
-    return sorted(out), merge_kll(df.sparkSession, rows, list(sketch_aggs))
+    return sorted(out)
 
 
 def tree_merge_states(spark, part_states: List[Tuple[int, PartState]]) -> PartState:
@@ -586,8 +574,6 @@ class InferResult:
     partition_states: Dict[int, PartState]
     census: Dict[int, Dict[str, Any]]
     violations: List[Dict[str, Any]] = field(default_factory=list)
-    # column -> snapshot KLL sketch of infer_snapshot's sketch_columns
-    sketches: Dict[str, bytes] = field(default_factory=dict)
 
 
 def finalize_schema(col: str, st: ColState) -> Dict[str, Any]:
@@ -635,20 +621,20 @@ def probe_partitions(spark, catalog, snapshot_id: str,
     partition with a file that fails a FULL decode (footer fine, a data
     page not — the failure class the footer census cannot see).
 
-    Used by validate()'s shuffle-path retry: a JVM scan abort names no
-    partition, so after a scan-time failure the probe re-finds it
-    by-value at partition granularity, the partition gets
-    verdict='error', and the scan re-runs over the healthy rest —
-    completing the reference's :throw analog (algo_w.clj:286-289) on
-    BOTH check paths (the clustered native reader emits per-split error
-    rows inline; see _native_split_reader).
+    Used by validate()'s retry: a JVM scan abort names no partition, so
+    after a scan-time failure the probe re-finds it by-value at
+    partition granularity, the partition gets verdict='error', and the
+    scan re-runs over the healthy rest — completing the reference's
+    :throw analog (algo_w.clj:286-289) for the JVM read plan (the native
+    reader emits per-split error records inline; see
+    _native_split_reader).
 
     pyarrow decode stands proxy for the JVM vectorized reader: both
     decode the same pages, so the corruption classes this guards (bad
     page header, wrong offsets, garbled values) break either. Cost is
-    one extra corpus read, paid ONLY on the rare failure path — and the
-    shuffle path serves sub-`clustered.minRows` snapshots, so the probe
-    is small by construction.
+    one extra corpus read, paid ONLY on the rare failure path: the
+    native split reader reports its own read errors by partition, so
+    only a JVM scan of the opt-in checks' read plan lands here.
     """
     man = catalog.manifest(snapshot_id)
     keep = set(partitions)
@@ -684,18 +670,18 @@ def infer_snapshot(spark, catalog, snapshot_id: str,
                    partitions: Optional[List[int]] = None,
                    engine: str = "sql",
                    census: Optional[Dict[int, Dict[str, Any]]] = None,
-                   df=None, sketch_columns: Sequence[str] = (),
-                   ) -> InferResult:
+                   df=None) -> InferResult:
     """Full inference for one snapshot (optionally a partition subset).
 
     engine="sql" (default): JVM aggregation computes the per-partition
     states (scales with cores). engine="arrow": mapInArrow computes them
     executor-side in pyarrow — semantically identical (asserted in tests),
     the escape hatch for state shapes SQL can't express. A precomputed
-    ``census`` skips the footer re-read (the pipeline does the census
-    first to select its check path), and a given ``df`` (their tolerant
-    read plan) skips building it again. ``sketch_columns`` (sql engine)
-    fills ``InferResult.sketches``.
+    ``census`` skips the footer read, and a given ``df`` (a tolerant
+    read plan) skips building it. ``validate()`` does not call it: both
+    of its check paths take the states from the native split reader's
+    one read (``clustered._native_split_reader``), whose oracle in tests
+    this is.
     """
     if partitions is None:
         partitions = catalog.partition_ids(snapshot_id)
@@ -707,10 +693,8 @@ def infer_snapshot(spark, catalog, snapshot_id: str,
     if engine == "arrow":
         return finalize_infer(spark, snapshot_id, census,
                               partition_states(df))
-    pstates, sketches = sql_states_and_sketches(
-        df, census, sketch_columns=sketch_columns)
-    return replace(finalize_infer(spark, snapshot_id, census, pstates),
-                   sketches=sketches)
+    return finalize_infer(spark, snapshot_id, census,
+                          sql_partition_states(df, census))
 
 
 def finalize_infer(spark, snapshot_id: str,
@@ -718,8 +702,8 @@ def finalize_infer(spark, snapshot_id: str,
                    pstates: List[Tuple[int, PartState]]) -> InferResult:
     """Per-partition states + census -> InferResult (snapshot schema,
     column stats, schema_merge violations). Shared by both state engines
-    and by the fused clustered pass, which computes the states inside the
-    same native scan that runs the row-level checks."""
+    and by validate(), whose native split reader computes the states
+    inside the same read that feeds the row-level checks."""
     snap_state = tree_merge_states(spark, pstates)
 
     # overlay census conflicts: if physical types across partitions disagree,

@@ -158,37 +158,10 @@ def profile_snapshot(df: DataFrame, snapshot_id: str,
 
 def text_len() -> Column:
     """Derived ``text_len``: length(text) as double, the planted drift
-    signal (FIXTURES.md F3), for the full profile and the drift sketches."""
+    signal (FIXTURES.md F3), for the full profile (whose KLL sketches
+    become drift baselines; the native split reader counts the current
+    side as ``pc.utf8_length``)."""
     return F.length("text").cast("double")
-
-
-def kll_aggs(df: DataFrame, columns: Sequence[str]) -> Dict[str, Column]:
-    """{column: its KLL sketch aggregate, aliased ``<column>__kll``} for
-    the ``columns`` that can carry one (numeric, temporal, ``text_len``)."""
-    out = {}
-    for c in columns:
-        inp = (text_len() if c == "text_len" and "text" in df.columns
-               else _num_key(df, c) if c in df.columns else None)
-        if inp is not None:
-            out[c] = F.kll_sketch_agg_double(inp).alias(f"{c}__kll")
-    return out
-
-
-def merge_kll(spark, rows: Sequence, columns: Sequence[str]
-              ) -> Dict[str, bytes]:
-    """Merge the per-partition sketches in ``rows`` into one per column:
-    one projection (a fold of ``kll_sketch_merge_double``) over a one-row
-    local frame, which Spark evaluates on the driver without a job."""
-    if not rows or not columns:
-        return {}
-    frame = local_frame(
-        spark, [tuple([bytes(r[f"{c}__kll"]) for r in rows] for c in columns)],
-        ", ".join(f"s{i} array<binary>" for i in range(len(columns))))
-    merged = frame.select(*[
-        F.aggregate(F.slice(f"s{i}", 2, F.size(f"s{i}")), F.col(f"s{i}")[0],
-                    F.kll_sketch_merge_double)
-        for i in range(len(columns))]).first()
-    return {c: bytes(m) for c, m in zip(columns, merged)}
 
 
 def kll_quantiles(spark, kll_bytes: bytes, probs: List[float]) -> List[float]:

@@ -1,10 +1,15 @@
 """Validation pipeline: the engine's `validate(snapshot)` lifecycle
 (SURVEY.md §3.4).
 
-    plan:    manifest -> pending partitions = all - completed(audit)
-    infer:   footer census + Arrow column states -> treeAggregate mgu merge
-    check:   uniqueness, referential, ordering (one Arrow kernel over
-             conv-ordered rows), drift (PSI/KS over KLL), schema compat
+    plan:    manifest -> pending partitions = all - completed(audit);
+             footer census -> check path; baseline sketches -> drift bins
+    read:    ONE native read of the snapshot: the row-level checks
+             (uniqueness, referential, ordering: one Arrow kernel over
+             conv-ordered rows), the Arrow column states and the exact
+             drift counts at the baseline's bin edges
+    infer:   column states -> treeAggregate mgu merge
+    check:   drift (PSI/KS, baseline CDF vs exact current CDF), schema
+             compat
     verdict: per-partition pass/fail + stable-ordered violation rows
     audit:   per-partition lineage + metrics, resume-safe
 
@@ -27,7 +32,10 @@ from .functions.frames import local_frame
 from .functions.prof import profile_marker
 from .operators import checks as C
 from .operators import stats as S
-from .operators.drift import drift_violations, schema_drift_violation
+from .operators.drift import (baseline_bins, drift_violations,
+                              schema_drift_violation)
+# infer_snapshot is no longer called here (both paths take the states
+# from the native read); perfbench's tracer still patches it by this name
 from .operators.infer import InferResult, infer_snapshot, read_snapshot_tolerant
 from .sources.catalog import SnapshotCatalog
 
@@ -44,8 +52,7 @@ class ValidationResult:
     ``snapshot_stats`` is LAZY: the full per-column profile is built from
     ``stats_thunk`` on first access (a fresh read plan and ~1s of
     Catalyst analysis over 50+ agg expressions, which pass/fail callers
-    never pay; ``validate()`` builds only drift's sketches) and memoized,
-    with nothing cached in Spark.
+    never pay) and memoized, with nothing cached in Spark.
     """
 
     def __init__(self, snapshot_id: str, partitions: List[int],
@@ -53,7 +60,8 @@ class ValidationResult:
                  verdicts: DataFrame, infer: InferResult,
                  stats_thunk: Optional[Callable[[], DataFrame]] = None,
                  errors: Optional[Dict[int, str]] = None,
-                 check_path: str = "fused"):
+                 check_path: str = "fused",
+                 skipped: Optional[Dict[str, str]] = None):
         self.snapshot_id = snapshot_id
         self.partitions = partitions
         self.table_schema = table_schema
@@ -63,10 +71,13 @@ class ValidationResult:
         # partitions whose scan/census failed -> error message; they got
         # verdict='error' rows (not completed: resume retries after repair)
         self.errors = errors or {}
-        # which row source fed the row-level check kernel: "clustered"
-        # (the native split scan, no shuffle), "fused" (the read plan,
-        # one exchange on conv_id), or "none" (nothing pending)
+        # how the native split reader's rows reached the row-level check
+        # kernel: "clustered" (per split, no shuffle), "fused" (one
+        # exchange on conv_id), or "none" (nothing pending)
         self.check_path = check_path
+        # checks this run could not evaluate -> why, e.g.
+        # {"drift_psi:<column>": "baseline sketch unreadable: ..."}
+        self.skipped = skipped or {}
         self.stats_thunk = stats_thunk
 
     @property
@@ -139,19 +150,23 @@ def validate(
     ``context_budget`` (running text-cost crossings).
 
     Execution: a metadata census first selects the check path. Both
-    run the same Arrow check kernel (``clustered._segment_checker``)
-    over a different row source: ``clustered`` (one fused native Arrow
-    scan, zero shuffle, taken when the manifest declares the Iceberg
-    sort-order contract and the snapshot has at least
+    read the snapshot once, with the native split reader, and run the
+    same Arrow check kernel (``clustered._segment_checker``) over its
+    rows: ``clustered`` (zero shuffle, taken when the manifest declares
+    the Iceberg sort-order contract and the snapshot has at least
     ``spark.schema_inference.clustered.minRows`` pending rows) or
-    ``fused`` (the read plan repartitioned by conv_id and sorted, taken
-    otherwise); ``clustered_checks`` forces either. The two are
+    ``fused`` (the reader's rows repartitioned by conv_id and sorted,
+    taken otherwise); ``clustered_checks`` forces either. The two are
     row-identical (tested) and the chosen path is reported as
-    ``ValidationResult.check_path``. Drift compares KLL sketches of the
-    ``baseline_sketches`` columns only, built inside the shuffle path's
-    state aggregation (the clustered path runs that narrow aggregation
-    alone); the full profile, ``result.snapshot_stats``, is built only
-    when read.
+    ``ValidationResult.check_path``. The same read yields the inference
+    column states and, for each ``baseline_sketches`` column, exact
+    counts at the baseline's bin edges: drift compares the baseline's
+    CDF, read from its KLL sketch at the sketch's interior deciles, with
+    the current rows' exact CDF there, so one snapshot and baseline give
+    one drift payload in every run. An unreadable baseline sketch, or a
+    compared column without current values, is skipped and named in
+    ``ValidationResult.skipped``. The full profile,
+    ``result.snapshot_stats``, is built only when read.
 
     Memory contract: on every path a call's violation rows are
     materialized once, ON THE DRIVER (one collect, plus the driver-side
@@ -159,11 +174,11 @@ def validate(
     must stay violation-sized (one row per anomaly, not per turn).
     Violations and verdicts return as Arrow local frames that read
     without a Spark job; a clustered call without opt-in checks or
-    persistence runs 3 jobs. The shuffle path's read plan takes its
-    schema from the footer census (no schema-merge job), and the catalog
-    reads and writes its stores on the driver (no job), so a persisting
-    shuffle-path drift call runs 4: the state + sketch aggregation (2)
-    and the check kernel's collect (2: the exchange, then the kernel).
+    persistence runs 3 jobs, with drift too. The baseline's bin edges are
+    read on the driver and the catalog reads and writes its stores there
+    (no job), so a persisting shuffle-path drift call runs 2: the check
+    kernel's collect (the native read into the exchange, then the
+    kernel). The JVM read plan is built only for the opt-in checks.
     ``resume=True`` skips partitions whose latest audit verdict is pass
     or fail; a resubmit with nothing pending runs 0 jobs and returns the
     stored verdicts. ``partitions=[...]`` restricts to an explicit subset
@@ -203,9 +218,10 @@ def validate(
             check_path="none")
 
     # -- census first (metadata-only): selects the check path ---------------
-    from .operators.clustered import (census_uniform,
+    from .operators.clustered import (META_CHECK, census_uniform,
                                       check_rowlevel_clustered,
-                                      manifest_declares_order)
+                                      manifest_declares_order, native_rows,
+                                      reader_meta)
     from .operators.infer import census_errors, finalize_infer, snapshot_census
     census = snapshot_census(spark, catalog, snapshot_id, pending)
     _mark("census")
@@ -215,10 +231,15 @@ def validate(
     # verdict='error' row instead of aborting the run; it is excluded
     # from every downstream pass and NOT marked completed, so resume
     # re-validates exactly the errored partitions after repair.
-    errors: Dict[int, str] = census_errors(census)
-    if errors:
-        census = {p: c for p, c in census.items() if p not in errors}
-        pending = [p for p in pending if p not in errors]
+    errors: Dict[int, str] = {}
+
+    def exclude(bad: Dict[int, str]) -> None:
+        nonlocal census, pending
+        errors.update(bad)
+        census = {p: c for p, c in census.items() if p not in bad}
+        pending = [p for p in pending if p not in bad]
+
+    exclude(census_errors(census))
 
     # path selection: clustered (zero-shuffle, layout-aware) when the
     # manifest declares the write order — the Iceberg sort-order contract —
@@ -249,20 +270,27 @@ def validate(
     # those snapshots take the shuffle path regardless
     use_clustered = use_clustered and census_uniform(census, pending)
 
-    # -- the corpus pass(es): checks + inference states ---------------------
-    # clustered path: ONE fused native scan computes the row-level checks
-    # AND the inference column states (collect_states) — the snapshot is
-    # read once, total. Shuffle path: JVM state aggregation (with the
-    # drift sketches) + the check kernel over one read plan.
+    # -- drift's baseline side, before the pass: the bin edges and the
+    # baseline CDF there, read from the baseline sketches in one
+    # driver-local projection (no job); the pass counts the current rows
+    # at those edges exactly
+    bins, unreadable = baseline_bins(spark, baseline_sketches or {})
+    skipped = {f"drift_psi:{c}": why for c, why in unreadable.items()}
+
+    # -- the corpus pass: checks + inference states + drift counts ----------
+    # Both paths read the snapshot ONCE, with the native split reader,
+    # which computes the column states (collect_states) and the drift
+    # counts next to the row-level checks: in the clustered path's own
+    # zero-shuffle kernel, or (shuffle path) as rows exchanged on conv_id
+    # into the same kernel. The JVM read plan is built only for the
+    # opt-in checks.
     inf = None
     violations = None
+    drift_counts: Dict[str, tuple] = {}
     path_used = "fused"
     opt_in = (role_protocol or baseline_transitions or rules or completeness
               or stuck_loops or conv_dedup or conv_near_dedup is not None
               or context_budget is not None)
-    # drift's columns: their KLL sketches are all the profile a call builds
-    sketch_cols = sorted(c for c, b in (baseline_sketches or {}).items()
-                         if b is not None)
     if not pending:
         # every pending partition errored at census: nothing left to
         # scan — emit only the error verdicts below
@@ -276,17 +304,14 @@ def validate(
             # surfaces now — fall back to the shuffle path instead of
             # failing the job. The declared order is metadata we verify,
             # not trust.
-            violations, pstates, scan_errors = check_rowlevel_clustered(
-                spark, catalog, snapshot_id, pending, role_vocab,
-                tool_vocab, partition_col, collect_states=True,
-                with_errors=True)
-            if scan_errors:
-                # same by-value isolation as the census probe, one level
-                # deeper: the footer was fine but a data page wasn't
-                errors.update(scan_errors)
-                census = {p: c for p, c in census.items()
-                          if p not in scan_errors}
-                pending = [p for p in pending if p not in scan_errors]
+            violations, pstates, drift_counts, scan_errors = \
+                check_rowlevel_clustered(
+                    spark, catalog, snapshot_id, pending, role_vocab,
+                    tool_vocab, partition_col, collect_states=True,
+                    with_errors=True, drift_bins=bins)
+            # same by-value isolation as the census probe, one level
+            # deeper: the footer was fine but a data page wasn't
+            exclude(scan_errors)
             inf = finalize_infer(spark, snapshot_id, census, pstates)
             path_used = "clustered"
             _mark("checks+infer (one fused scan)")
@@ -310,50 +335,39 @@ def validate(
             d, snapshot_id, partition_col=partition_col)["snapshot"]
 
     df = None
-    # The scan section runs under a probe-gated retry: a JVM scan abort
-    # (data page corrupt under an intact footer — invisible to the
-    # census) names no partition, so on the first failure a page-depth
-    # decode probe (infer.probe_partitions) re-finds it by-value; the
-    # bad partitions get verdict='error' and the section re-runs over
-    # the healthy rest — the clustered path's per-split error isolation,
-    # now on the shuffle path too. The probe gates the retry: a failure
-    # it cannot attribute to a partition re-raises unchanged.
+    # The scan section runs at most twice. The shuffle path's reader
+    # reports a split that fails to read as an error record of its
+    # partition, found after the collect: the section re-runs without
+    # that partition, so none of its rows reach a check. An opt-in
+    # check's JVM scan abort (data page corrupt under an intact footer —
+    # invisible to the census) names no partition, so on that failure a
+    # page-depth decode probe (infer.probe_partitions) re-finds it
+    # by-value; the probe gates the retry: a failure it cannot attribute
+    # to a partition re-raises unchanged.
     for _attempt in (1, 2):
         try:
             if not pending and violations is None:
                 violations = C.empty_violations(spark)
                 inf = InferResult(snapshot_id, {}, {}, {}, {}, [])
                 path_used = "none"
-            # ONE tolerant read plan per call (building one runs a
-            # schema-merge job), shared by every pass below
-            if pending and df is None and (violations is None or opt_in
-                                           or sketch_cols):
+            # the JVM read plan (building one from the census runs no
+            # job), shared by the opt-in checks below
+            if pending and df is None and opt_in:
                 df = read_snapshot_tolerant(spark, catalog, snapshot_id,
                                             pending, census)
                 _mark("read-plan")
-            sketches: Dict[str, bytes] = {}
-            if inf is None:
-                # -- infer: column states + strict merge (D5/D6/D14), with
-                # the drift sketches in the same aggregation ----------------
-                inf = infer_snapshot(spark, catalog, snapshot_id, pending,
-                                     census=census, df=df,
-                                     sketch_columns=sketch_cols)
-                sketches = inf.sketches
-                _mark("infer")
-            elif sketch_cols and df is not None:
-                # clustered path: the same narrow sketch aggregation, alone
-                aggs = S.kll_aggs(df, sketch_cols)
-                sketches = S.merge_kll(spark, df.groupBy(partition_col).agg(
-                    *aggs.values()).collect() if aggs else [], list(aggs))
-                _mark("drift sketches")
-
             if violations is None:
-                # one scan + one exchange on conv_id feeds every
-                # row-level check to the Arrow kernel (row-identical to
-                # the per-check plans, which would scan the snapshot 4x;
-                # asserted in tests)
+                # the shuffle path: the native reader's rows, one exchange
+                # on conv_id, the Arrow check kernel; the reader's
+                # metadata rows (column states, drift counts, read
+                # errors) ride along and come out of the same collect
+                state_cols = list(dict.fromkeys(
+                    c for p in pending for c in census[p]
+                    if c != partition_col))
                 violations = C.check_rowlevel_fused(
-                    df, snapshot_id, role_vocab, tool_vocab, partition_col)
+                    native_rows(spark, catalog, snapshot_id, pending,
+                                state_cols, bins),
+                    snapshot_id, role_vocab, tool_vocab)
 
             if opt_in:
                 # opt-in conversation-structure checks: the protocol
@@ -452,6 +466,26 @@ def validate(
                     if rv is not None:
                         violations = violations.unionByName(rv)
 
+            # -- materialize ONCE, on the driver: one collect runs the
+            # check plan; the shuffle path's metadata rows come out of it
+            collected = [tuple(r) for r in violations.collect()]
+            if inf is None:
+                pstates, drift_counts, bad = reader_meta(
+                    (r[1], r[8]) for r in collected if r[2] == META_CHECK)
+                if bad:
+                    exclude(bad)
+                    if _attempt == 1:
+                        violations = None
+                        df = None
+                        _mark(f"unreadable splits -> {sorted(bad)} errored")
+                        continue
+                    # a split that read on the first attempt and failed
+                    # on the second: its partition's rows are dropped, as
+                    # on the clustered path
+                    collected = [r for r in collected if r[1] not in bad]
+                inf = finalize_infer(spark, snapshot_id, census, pstates)
+                _mark("checks+infer (one native read, one exchange)")
+
             # -- driver-side violations: schema merge, drift, compat --------
             driver_rows: List[Dict] = list(inf.violations)
             if baseline_transitions:
@@ -474,9 +508,12 @@ def validate(
                 from .plans.registry import CheckRegistry
                 driver_rows += CheckRegistry().conforms(
                     inf.table_schema, contract, snapshot_id)
-            if baseline_sketches:
-                driver_rows += drift_violations(spark, snapshot_id,
-                                                baseline_sketches, sketches)
+            if bins:
+                drift_rows, no_values = drift_violations(snapshot_id, bins,
+                                                         drift_counts)
+                driver_rows += drift_rows
+                skipped.update({f"drift_psi:{c}": why
+                                for c, why in no_values.items()})
             if baseline_schema:
                 for col, base in sorted(baseline_schema.items()):
                     snap = inf.table_schema.get(col)
@@ -487,11 +524,10 @@ def validate(
                     if row:
                         driver_rows.append(row)
 
-            # -- materialize violations ONCE, on the driver: one collect
-            # runs the check plan, then the rows are ordered (Python str
-            # order is Spark's UTF-8 binary order) and counted here and
-            # return as a LocalRelation that reads without a Spark job.
-            rows = sorted([tuple(r) for r in violations.collect()]
+            # the rows are ordered (Python str order is Spark's UTF-8
+            # binary order) and counted here and return as a
+            # LocalRelation that reads without a Spark job
+            rows = sorted([r for r in collected if r[2] != META_CHECK]
                           + [tuple(r[c] for c in C.VIOLATION_COLS)
                              for r in driver_rows], key=C.stable_key)
             counts = Counter(r[1] for r in rows)
@@ -505,9 +541,7 @@ def validate(
             bad = probe_partitions(spark, catalog, snapshot_id, pending)
             if not bad:
                 raise
-            errors.update(bad)
-            census = {p: c for p, c in census.items() if p not in bad}
-            pending = [p for p in pending if p not in bad]
+            exclude(bad)
             inf = None
             violations = None
             df = None
@@ -584,6 +618,7 @@ def validate(
         stats_thunk=_build_stats,
         errors=errors,
         check_path=path_used,
+        skipped=skipped,
     )
 
 

@@ -374,10 +374,11 @@ def test_fused_states_many_partitions(spark, tmp_path):
     assert fused.table_schema == sql.table_schema
 
 
-def test_packed_tasks_stitch_seam_anomalies(spark, tmp_path):
+def test_packed_tasks_stitch_seam_anomalies(spark, tmp_path, monkeypatch):
     """Splits outnumber scan tasks, so several splits share one packed
     task, and every anomaly sits exactly on a split seam: the driver-side
     stitch must stay row-identical to the fused path."""
+    from schema_inference_spark.operators import clustered
     from schema_inference_spark.operators.clustered import (
         _pack_tasks, _plan_splits)
 
@@ -393,6 +394,8 @@ def test_packed_tasks_stitch_seam_anomalies(spark, tmp_path):
                    row_group_size=16, declare_write_order=True)
     cat = SnapshotCatalog(root)
     splits = _plan_splits(cat, "pk", [0], 16)
+    # a task per 16 footer rows: more splits than cores, not one task
+    monkeypatch.setattr(clustered, "TASK_MIN_ROWS", 16)
     tasks = [t.splits for t in _pack_tasks(spark, splits).collect()]
     assert len(splits) > spark.sparkContext.defaultParallelism
     assert len(tasks) == spark.sparkContext.defaultParallelism
@@ -440,6 +443,27 @@ def test_clustered_call_runs_at_most_five_jobs(spark, catalog):
     assert r.check_path == "clustered"
     jobs = sc.statusTracker().getJobIdsForGroup("clustered-job-guard")
     assert 0 < len(jobs) <= 5, jobs
+
+
+def test_clustered_drift_call_runs_at_most_three_jobs(spark, catalog):
+    """A clustered drift call runs the clustered call's jobs and no
+    more: its scan counts the current rows at the baseline's edges, so
+    no sketch aggregation of its own follows it."""
+    from schema_inference_spark.pipeline import baseline_from_result
+    base = baseline_from_result(validate(
+        spark, catalog, "s1", resume=False, write_audit=False))["sketches"]
+    sc = spark.sparkContext
+    sc.setJobGroup("clustered-drift-guard", "jobs of one clustered drift call")
+    try:
+        r = validate(spark, catalog, "s4", baseline_sketches=base,
+                     resume=False, write_audit=False)
+        r.violations.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r.check_path == "clustered"
+    assert "drift_psi" in {x.check_id for x in r.violations.collect()}
+    jobs = sc.statusTracker().getJobIdsForGroup("clustered-drift-guard")
+    assert 0 < len(jobs) <= 3, jobs
 
 
 def test_clustered_calls_release_what_they_persist(spark, catalog):

@@ -7,6 +7,7 @@ sketch merge (N vs 4N partitions; SURVEY.md §5.2-6).
 """
 
 import datetime
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -145,23 +146,32 @@ def test_grouped_quantiles_even_group_lower_method(spark):
 
 
 def test_sketch_comparison_runs_no_spark_job(spark):
-    """Drift's KLL quantile and rank queries project over an Arrow local
-    frame, which Spark evaluates on the driver without a job."""
-    from schema_inference_spark.operators.drift import psi_ks_from_sketches
+    """Drift's baseline side (the KLL quantiles that become the bin edges
+    and the baseline's ranks there) is one projection over literals,
+    which Spark evaluates on the driver without a job."""
+    from schema_inference_spark.operators.drift import (
+        baseline_bins,
+        drift_violations,
+    )
 
     def kll(lo):
         return bytes(spark.range(lo, lo + 1000).select(
             F.kll_sketch_agg_double(F.col("id").cast("double"))).first()[0])
 
-    base, cur = kll(0), kll(500)
+    sketches = {"a": kll(0), "b": kll(500)}
     sc = spark.sparkContext
     sc.setJobGroup("kll-local", "sketch comparison")
     try:
-        m = psi_ks_from_sketches(spark, base, cur)
+        bins, skipped = baseline_bins(spark, sketches)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert m["psi"] > 0.25
+    assert sorted(bins) == ["a", "b"] and skipped == {}
     assert list(sc.statusTracker().getJobIdsForGroup("kll-local")) == []
+    # 1000 current values 500..1499 against a's bins (0..999): drifted
+    edges = bins["a"][0]
+    le = [sum(1 for v in range(500, 1500) if v <= e) for e in edges]
+    rows, _ = drift_violations("s", {"a": bins["a"]}, {"a": (1000, le)})
+    assert json.loads(rows[0]["payload"])["psi"] > 0.25
 
 
 def _psi_ks_per_column_queries(spark, base, cur, n_bins=10):
@@ -199,11 +209,13 @@ def _psi_ks_per_column_queries(spark, base, cur, n_bins=10):
 
 
 def test_one_projection_drift_equals_per_column_queries(spark, catalog):
-    """Every compared column's PSI/KS from ONE projection equals the
-    per-column query oracle exactly: rank and quantile queries are
+    """Every compared column's baseline bins from ONE projection, with
+    the current sketch ranked at those edges, give exactly the PSI/KS of
+    the per-column query oracle: rank and quantile queries are
     deterministic over fixed sketch bytes, and deduping equal edges
     afterwards leaves the ranks at the kept edges unchanged."""
-    from schema_inference_spark.operators.drift import psi_ks_many
+    from schema_inference_spark.functions.frames import local_frame
+    from schema_inference_spark.operators.drift import baseline_bins, psi_ks
     from schema_inference_spark.pipeline import baseline_from_result, validate
 
     sk = {s: baseline_from_result(validate(spark, catalog, s,
@@ -212,10 +224,17 @@ def test_one_projection_drift_equals_per_column_queries(spark, catalog):
     cols = sorted(c for c, v in sk["s1"].items() if v is not None)
     assert "text_len" in cols and "turn_idx" in cols
     for a, b in (("s1", "s4"), ("s4", "s1"), ("s1", "s1")):
-        got = psi_ks_many(spark, {c: (sk[a][c], sk[b][c]) for c in cols})
+        bins, skipped = baseline_bins(spark, {c: sk[a][c] for c in cols})
+        assert not skipped
         for c in cols:
-            assert got[c] == _psi_ks_per_column_queries(
-                spark, sk[a][c], sk[b][c]), (a, b, c)
+            edges, base_cdf = bins[c]
+            cur = local_frame(spark, [(bytes(sk[b][c]),)], "k binary").select(
+                F.kll_sketch_get_rank_double(
+                    "k", F.array(*[F.lit(e) for e in edges]))).first()[0]
+            psi, ks = psi_ks(base_cdf, [0.0] + list(cur) + [1.0])
+            assert {"psi": psi, "ks": ks, "n_bins": len(edges) + 1} == \
+                _psi_ks_per_column_queries(spark, sk[a][c], sk[b][c]), \
+                (a, b, c)
 
 
 def test_reading_snapshot_stats_persists_nothing(spark, catalog):
