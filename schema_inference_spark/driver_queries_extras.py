@@ -1,8 +1,8 @@
 """Driver-contract queries: training-data pipeline operators
-(deduplication, text analysis, PII, contamination, curation) over the
-documents table, with DuckDB oracles where the computation is
-SQL-expressible (hash-seeded MinHash/SimHash/LSH are rows-only by
-design — DuckDB has no xxhash64).
+(deduplication, text analysis, curation) over the documents table,
+with DuckDB oracles where the computation is SQL-expressible
+(hash-seeded MinHash/LSH and winnowing are rows-only by design — DuckDB
+has no xxhash64).
 """
 
 from __future__ import annotations
@@ -96,99 +96,11 @@ ORDER BY content_hash
 """
 
 
-SEG_WORDS = 10  # segment width for the line-level dedup pass
-
-
-def q_dedup_segments(spark, sf_dir):
-    """Sub-document (segment/line-level) exact dedup: first corpus-wide
-    occurrence of each 10-word segment wins; cleaned text gated
-    byte-for-byte against the oracle's reconstruction."""
-    return D.segment_dedup(_t(spark, sf_dir, "documents"),
-                           seg_words=SEG_WORDS)
-
-
-SQL_DEDUP_SEGMENTS = f"""
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS w,
-         CAST(ceil(array_length(string_split(text, ' ')) / {SEG_WORDS}.0)
-              AS BIGINT) AS n_segs
-  FROM documents),
-ex AS (SELECT doc_id, w, unnest(range(0, n_segs)) AS i FROM base),
-segs AS (
-  SELECT doc_id, i AS seg_idx,
-         array_to_string(w[(i*{SEG_WORDS}+1):(i*{SEG_WORDS}+{SEG_WORDS})],
-                         ' ') AS seg
-  FROM ex),
-ranked AS (
-  SELECT doc_id, seg_idx, seg,
-         row_number() OVER (PARTITION BY seg
-                            ORDER BY doc_id, seg_idx) AS rn
-  FROM segs),
-recon AS (
-  SELECT doc_id, count(*) AS n_kept,
-         string_agg(seg, ' ' ORDER BY seg_idx) AS clean_text
-  FROM ranked WHERE rn = 1 GROUP BY doc_id)
-SELECT b.doc_id, b.n_segs,
-       coalesce(r.n_kept, 0) AS n_kept,
-       coalesce(r.clean_text, '') AS clean_text
-FROM base b LEFT JOIN recon r USING (doc_id)
-ORDER BY b.doc_id
-"""
-
-
-def q_segment_dedup_incremental(spark, sf_dir):
-    """Incremental segment-level dedup (operators/dedup.py
-    build_segment_index + segment_dedup_against_index): the even-id
-    half of the corpus is the indexed history; the odd-id batch keeps
-    only segments neither indexed nor already seen earlier in the
-    batch. O(new segments) per ingest; gated byte-for-byte on the
-    cleaned text."""
-    docs = _t(spark, sf_dir, "documents")
-    index = D.build_segment_index(docs.filter("doc_id % 2 = 0"),
-                                  seg_words=SEG_WORDS)
-    return D.segment_dedup_against_index(docs.filter("doc_id % 2 = 1"),
-                                         index, seg_words=SEG_WORDS)
-
-
-SQL_SEGMENT_DEDUP_INCREMENTAL = f"""
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS w,
-         CAST(ceil(array_length(string_split(text, ' ')) / {SEG_WORDS}.0)
-              AS BIGINT) AS n_segs
-  FROM documents),
-ex AS (SELECT doc_id, w, unnest(range(0, n_segs)) AS i FROM base),
-segs AS (
-  SELECT doc_id, i AS seg_idx,
-         array_to_string(w[(i*{SEG_WORDS}+1):(i*{SEG_WORDS}+{SEG_WORDS})],
-                         ' ') AS seg
-  FROM ex),
-idx AS (SELECT DISTINCT md5(seg) AS seg_hash FROM segs
-        WHERE doc_id % 2 = 0),
-ranked AS (
-  SELECT doc_id, seg_idx, seg, md5(seg) AS h,
-         row_number() OVER (PARTITION BY seg
-                            ORDER BY doc_id, seg_idx) AS rn
-  FROM segs WHERE doc_id % 2 = 1),
-recon AS (
-  SELECT doc_id, count(*) AS n_kept,
-         string_agg(seg, ' ' ORDER BY seg_idx) AS clean_text
-  FROM ranked
-  WHERE rn = 1 AND h NOT IN (SELECT seg_hash FROM idx)
-  GROUP BY doc_id)
-SELECT b.doc_id, b.n_segs,
-       coalesce(r.n_kept, 0) AS n_kept,
-       coalesce(r.clean_text, '') AS clean_text
-FROM base b LEFT JOIN recon r USING (doc_id)
-WHERE b.doc_id % 2 = 1
-ORDER BY b.doc_id
-"""
-
-
 def _dup_aug(cast: str) -> str:
     """Deterministic duplicate planting for the incremental-dedup gate
-    (same pattern as _pii_aug: the synthetic documents corpus has no
-    exact dups, so the operator needs planted signal, written once in
-    the dialect subset both engines parse identically). The doc_id % 7
+    (the synthetic documents corpus has no exact dups, so the operator
+    needs planted signal, written once in the dialect subset both
+    engines parse identically). The doc_id % 7
     templates cross the even/odd corpus split with indexed members in
     every class (-> source='index'); the %10==1 clause plants ids that
     are ALL odd, so those groups exist only in the new batch
@@ -234,78 +146,6 @@ LEFT JOIN idx i ON n.content_hash = i.content_hash
 WHERE (i.canonical_id IS NOT NULL AND n.doc_id != i.canonical_id)
    OR (i.canonical_id IS NULL AND n.doc_id != g.min_new)
 ORDER BY n.content_hash, n.doc_id
-"""
-
-
-NEAR_DUP_CAND_EXPORT = f"{_SEAM_NS}_near_dup_cand.parquet"
-MINHASH_INDEX_EXPORT = f"{_SEAM_NS}_minhash_index.parquet"
-MINHASH_SIGS_EXPORT = f"{_SEAM_NS}_minhash_sigs.parquet"
-
-# the MinHash index is a PERSISTENT ingest-time artifact (the operator's
-# whole point is that an ingest probes O(new) against it, not that it is
-# rebuilt per ingest) — so the query builds and exports it once per
-# (session, sf) via the ownership cache, and the timed probe path reads
-# the seams. bench.py materializes these seams in its setup step
-# (reported separately) so the per-query number measures the ingest
-# probe the operator exists for.
-
-def _build_minhash_index_seams(spark, sf_dir):
-    docs = (_t(spark, sf_dir, "documents")
-            .withColumn("text", F.expr(_dup_aug("STRING"))))
-    history = docs.filter("doc_id % 2 = 0")
-    # ONE signature pass feeds both index tables (persisted across the
-    # two eager writes, released immediately after)
-    from .operators.dedup import minhash_signature
-    sig = minhash_signature(history).persist()
-    try:
-        D.build_minhash_index(history, sig=sig).write.mode("overwrite") \
-            .parquet(MINHASH_INDEX_EXPORT)
-        D.build_minhash_sigs(history, sig=sig).write.mode("overwrite") \
-            .parquet(MINHASH_SIGS_EXPORT)
-    finally:
-        sig.unpersist()
-    return (spark.read.parquet(MINHASH_INDEX_EXPORT),
-            spark.read.parquet(MINHASH_SIGS_EXPORT))
-
-
-def minhash_index_exported(spark, sf_dir):
-    """The even-id half of the (duplicate-augmented) corpus as the
-    two-table MinHash index artifact — capped band rows + one signature
-    row per doc — exported to parquet seams, built once per (session,
-    sf). Returns (index, index_sigs) lazy reads of the seams."""
-    return _cached_export(spark, sf_dir, MINHASH_INDEX_EXPORT,
-                          _build_minhash_index_seams)
-
-
-def q_near_dup_incremental(spark, sf_dir):
-    """Incremental NEAR-dup detection (operators/dedup.py
-    build_minhash_index + near_dup_against_index): new odd-id docs that
-    LSH-collide with the even-id indexed history, verified by signature
-    agreement — two-stage gated check: the banded candidates (with the
-    per-pair signature-agreement count) export to a parquet seam and
-    BOTH engines run the estimate+threshold stage; the MinHash banding
-    and the agreement count stay engine-side (hash-seeded). The
-    two-table index artifact is read from its per-(session, sf) seams,
-    so the query measures the O(new) ingest probe, not an index
-    rebuild."""
-    docs = (_t(spark, sf_dir, "documents")
-            .withColumn("text", F.expr(_dup_aug("STRING"))))
-    index, index_sigs = minhash_index_exported(spark, sf_dir)
-    cand = D.near_dup_candidates(docs.filter("doc_id % 2 = 1"),
-                                 index, index_sigs)
-    cand.write.mode("overwrite").parquet(NEAR_DUP_CAND_EXPORT)
-    return D.near_dup_verify(spark.read.parquet(NEAR_DUP_CAND_EXPORT))
-
-
-SQL_NEAR_DUP_INCREMENTAL = f"""
-WITH cand AS (SELECT doc_id, index_id, n_agree
-              FROM '{NEAR_DUP_CAND_EXPORT}/*.parquet'),
-est AS (SELECT doc_id, index_id,
-               round(n_agree / 64.0, 4) AS est_jaccard
-        FROM cand)
-SELECT doc_id, index_id, est_jaccard FROM est
-WHERE est_jaccard >= 0.5
-ORDER BY doc_id, index_id
 """
 
 
@@ -522,66 +362,6 @@ ORDER BY canonical_id
 """
 
 
-def q_dedup_simhash(spark, sf_dir):
-    """SimHash fingerprints per doc. Rows-only (engine hash)."""
-    return D.simhash(_t(spark, sf_dir, "documents"))
-
-
-# fingerprint export seam for the two-stage simhash oracle: the
-# fingerprint table is a stored artifact rewritten only when the
-# (session, sf) owner changes (the ownership cache below) — the oracle
-# SQL is a static string over the same per-process path, and both the
-# driver and tests/test_driver_queries run each query BEFORE its
-# oracle, so the seam the oracle reads is the one the query owns.
-SIMHASH_FP_EXPORT = f"{_SEAM_NS}_simhash_fp.parquet"
-
-
-def _build_simhash_fp_seam(spark, sf_dir):
-    # partitioned write — no coalesce(1): the oracle globs /*.parquet,
-    # so funneling the export through one task would serialize for
-    # nothing
-    fp = D.simhash(_t(spark, sf_dir, "documents"), sort=False)
-    fp.write.mode("overwrite").parquet(SIMHASH_FP_EXPORT)
-    return spark.read.parquet(SIMHASH_FP_EXPORT)
-
-
-def simhash_fp_exported(spark, sf_dir):
-    """The corpus's simhash fingerprint table, exported once per
-    (session, sf) — a stored artifact the pair query probes (the
-    GENERATION stage stays measured by q_dedup_simhash, which computes
-    fingerprints fresh each call)."""
-    return _cached_export(spark, sf_dir, SIMHASH_FP_EXPORT,
-                          _build_simhash_fp_seam)
-
-
-def q_simhash_near_pairs(spark, sf_dir):
-    """SimHash banded near-pairs within Hamming distance 3 — two-stage
-    gated check (VERDICT r2 #8): the FINGERPRINTS are engine-hash-seeded
-    (xxhash64, no DuckDB twin), but the banding + Hamming verification is
-    pure integer arithmetic. The fingerprint table is exported to a
-    parquet seam and BOTH engines compute the pair/distance stage from
-    that identical input, upgrading the stage from rows-only to a full
-    rows+schema+hash gate."""
-    return D.simhash_pairs_from_fp(simhash_fp_exported(spark, sf_dir))
-
-
-SQL_SIMHASH_NEAR_PAIRS = f"""
-WITH fp AS (SELECT doc, simhash FROM '{SIMHASH_FP_EXPORT}/*.parquet'),
-bands AS (SELECT unnest(range(4)) AS band),
-b AS (SELECT doc, simhash, band,
-             (simhash >> (band * 8)) & 255 AS key
-      FROM fp CROSS JOIN bands),
-cand AS (SELECT DISTINCT l.doc AS d1, l.simhash AS f1,
-                         r.doc AS d2, r.simhash AS f2
-         FROM b l JOIN b r ON l.band = r.band AND l.key = r.key
-                          AND l.doc < r.doc)
-SELECT d1, d2, CAST(bit_count(xor(f1, f2)) AS BIGINT) AS hamming
-FROM cand
-WHERE bit_count(xor(f1, f2)) <= 3
-ORDER BY d1, d2
-"""
-
-
 # ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------
@@ -761,8 +541,7 @@ ORDER BY doc_id
 """
 
 
-# winnowing fingerprint export seam (same pattern as SIMHASH_FP_EXPORT):
-# the fingerprints are engine-hash-seeded, but the pair-counting stage is
+# winnowing fingerprint export seam: the fingerprints are engine-hash-seeded, but the pair-counting stage is
 # plain relational algebra, so both engines consume the identical
 # exported table and the stage is fully rows+schema+hash gated. The
 # export ALSO fixes the round-3 regression: the fingerprint frame is
@@ -808,126 +587,6 @@ SELECT a.doc AS d1, b.doc AS d2, count(*) AS n_shared
 FROM cold a JOIN cold b ON a.fp = b.fp AND a.doc < b.doc
 GROUP BY 1, 2 HAVING count(*) >= 3
 ORDER BY d1, d2
-"""
-
-
-# ---------------------------------------------------------------------------
-# PII + contamination
-# ---------------------------------------------------------------------------
-
-def _pii_aug(cast: str) -> str:
-    """Deterministic PII planting, written once in the SQL dialect subset
-    both engines parse identically (the synthetic documents corpus is
-    PII-free word salad, so the operator needs planted signal to gate
-    against; cast: STRING for Spark, VARCHAR for DuckDB)."""
-    return (
-        "concat(text,"
-        " CASE WHEN doc_id % 7 = 0 THEN concat(' contact user',"
-        f" CAST(doc_id AS {cast}), '@example.com now') ELSE '' END,"
-        " CASE WHEN doc_id % 11 = 0 THEN ' or call 555-123-4567'"
-        " ELSE '' END,"
-        " CASE WHEN doc_id % 13 = 0 THEN ' ssn 123-45-6789 on file'"
-        " ELSE '' END,"
-        " CASE WHEN doc_id % 17 = 0 THEN concat(' from 10.0.',"
-        f" CAST(doc_id % 256 AS {cast}), '.1') ELSE '' END)")
-
-
-def _pii_docs(spark, sf_dir):
-    return (_t(spark, sf_dir, "documents")
-            .withColumn("text", F.expr(_pii_aug("STRING"))))
-
-
-def q_pii_flags(spark, sf_dir):
-    """Per-doc PII match counts (email/ssn/phone/ipv4) — pure JVM regex,
-    one scan, no shuffle; patterns restricted to the Java-regex/RE2
-    common subset so the oracle gates the exact counts."""
-    from .operators import pii as P
-    return P.pii_flags(_pii_docs(spark, sf_dir))
-
-
-def q_pii_redact(spark, sf_dir):
-    """Typed-token PII redaction; gated on the redacted text's sha256 so
-    both engines must produce byte-identical redactions."""
-    from .operators import pii as P
-    return P.pii_redact(_pii_docs(spark, sf_dir))
-
-
-def _sql_pii_parts():
-    from .operators.pii import PII_PATTERNS
-    cols = ",\n       ".join(
-        f"len(regexp_extract_all(text, '{pat}')) AS n_{name}"
-        for name, pat in PII_PATTERNS)
-    total = " + ".join(f"n_{name}" for name, _ in PII_PATTERNS)
-    # tokens ACTUALLY substituted (mirrors operators.pii.pii_redact):
-    # typed-token occurrences in the redacted output minus any already
-    # present in the input — a later-class match consumed by an earlier
-    # substitution is never counted
-    sub_total = " + ".join(
-        f"(len(regexp_extract_all(redacted, '<{name.upper()}>'))"
-        f" - len(regexp_extract_all(text, '<{name.upper()}>')))"
-        for name, _ in PII_PATTERNS)
-    red = "text"
-    for name, pat in PII_PATTERNS:
-        red = f"regexp_replace({red}, '{pat}', '<{name.upper()}>', 'g')"
-    return cols, total, sub_total, red
-
-
-_PII_COLS, _PII_TOTAL, _PII_SUB_TOTAL, _PII_RED = _sql_pii_parts()
-
-SQL_PII_FLAGS = f"""
-WITH aug AS (SELECT doc_id, {_pii_aug('VARCHAR')} AS text FROM documents),
-c AS (SELECT doc_id,
-       {_PII_COLS}
-      FROM aug)
-SELECT doc_id, n_email, n_ssn, n_phone, n_ipv4,
-       {_PII_TOTAL} AS n_pii
-FROM c
-ORDER BY doc_id
-"""
-
-
-SQL_PII_REDACT = f"""
-WITH aug AS (SELECT doc_id, {_pii_aug('VARCHAR')} AS text FROM documents),
-r AS (SELECT doc_id, text, {_PII_RED} AS redacted FROM aug)
-SELECT doc_id, redacted, sha256(redacted) AS redacted_sha,
-       {_PII_SUB_TOTAL} AS n_redactions
-FROM r
-ORDER BY doc_id
-"""
-
-
-BENCH_MOD = 50  # bench set = documents with doc_id % BENCH_MOD = 0
-
-
-def q_contamination(spark, sf_dir):
-    """Benchmark-contamination containment: which corpus docs contain
-    >= 30% of a bench item's distinct 3-shingles. The bench set derives
-    deterministically from the corpus (doc_id % BENCH_MOD = 0) so both
-    engines see identical eval items; self-pairs excluded."""
-    from .operators.contamination import contamination_pairs
-    # the shared shingle seam: contamination_pairs shingles via
-    # with_shingles, which passes an attested pre-shingled frame through,
-    # so corpus AND bench reuse the session's one materialization
-    docs = _shingled_docs(spark, sf_dir)
-    bench = (docs.filter(F.col("doc_id") % BENCH_MOD == 0)
-             .withColumnRenamed("doc_id", "bench_id"))
-    out = contamination_pairs(docs, bench, threshold=0.3)
-    return out.filter(F.col("doc_id") != F.col("bench_id"))
-
-
-SQL_CONTAMINATION = f"""
-WITH {_SHINGLE_CTES},
-bs AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id % {BENCH_MOD} = 0),
-bn AS (SELECT doc_id AS bench_id, n AS bench_n FROM cnt
-       WHERE doc_id % {BENCH_MOD} = 0),
-m AS (SELECT a.doc_id, b.bench_id, count(*) AS n_matched
-      FROM sh a JOIN bs b ON a.s = b.s AND a.doc_id <> b.bench_id
-      GROUP BY 1, 2)
-SELECT m.doc_id, m.bench_id, m.n_matched, bn.bench_n,
-       (10000 * m.n_matched) // bn.bench_n AS containment_bp
-FROM m JOIN bn ON m.bench_id = bn.bench_id
-WHERE (10000 * m.n_matched) // bn.bench_n >= 3000
-ORDER BY m.doc_id, m.bench_id
 """
 
 
@@ -1126,16 +785,11 @@ ORDER BY doc_id
 
 EXTRA_QUERIES: Dict[str, Callable] = {
     "dedup_exact": q_dedup_exact,
-    "dedup_segments": q_dedup_segments,
-    "segment_dedup_incremental": q_segment_dedup_incremental,
     "dedup_incremental": q_dedup_incremental,
-    "near_dup_incremental": q_near_dup_incremental,
     "dedup_jaccard": q_dedup_jaccard,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
     "dedup_groups": q_dedup_groups,
     "dedup_keep_best": q_dedup_keep_best,
-    "dedup_simhash": q_dedup_simhash,
-    "simhash_near_pairs": q_simhash_near_pairs,
     "token_counts": q_token_counts,
     "text_validity": q_text_validity,
     "quality_score": q_quality_score,
@@ -1146,9 +800,6 @@ EXTRA_QUERIES: Dict[str, Callable] = {
     "repetition": q_repetition,
     "winnow_fingerprints": q_winnow_fingerprints,
     "winnow_similar_pairs": q_winnow_similar_pairs,
-    "pii_flags": q_pii_flags,
-    "pii_redact": q_pii_redact,
-    "contamination": q_contamination,
     "curation_pipeline": q_curation_pipeline,
     "mixture_sample": q_mixture_sample,
     "packing_plan": q_packing_plan,
@@ -1156,10 +807,7 @@ EXTRA_QUERIES: Dict[str, Callable] = {
 
 EXTRA_ORACLES: Dict[str, str] = {
     "dedup_exact": SQL_DEDUP_EXACT,
-    "dedup_segments": SQL_DEDUP_SEGMENTS,
-    "segment_dedup_incremental": SQL_SEGMENT_DEDUP_INCREMENTAL,
     "dedup_incremental": SQL_DEDUP_INCREMENTAL,
-    "near_dup_incremental": SQL_NEAR_DUP_INCREMENTAL,
     "dedup_jaccard": SQL_DEDUP_JACCARD,
     "dedup_groups": SQL_DEDUP_GROUPS,
     "dedup_keep_best": SQL_DEDUP_KEEP_BEST,
@@ -1171,18 +819,14 @@ EXTRA_ORACLES: Dict[str, str] = {
     "top_ngrams": SQL_TOP_NGRAMS,
     "top_terms": SQL_TOP_TERMS,
     "repetition": SQL_REPETITION,
-    "pii_flags": SQL_PII_FLAGS,
-    "pii_redact": SQL_PII_REDACT,
-    "contamination": SQL_CONTAMINATION,
     "curation_pipeline": SQL_CURATION_PIPELINE,
     "mixture_sample": SQL_MIXTURE_SAMPLE,
     "packing_plan": SQL_PACKING_PLAN,
     # two-stage: the engine-hashed artifact (fingerprints, candidate
     # pairs) is exported to a parquet seam; the downstream stage itself
     # is fully rows+schema+hash gated
-    "simhash_near_pairs": SQL_SIMHASH_NEAR_PAIRS,
     "winnow_similar_pairs": SQL_WINNOW_SIMILAR_PAIRS,
     "dedup_minhash_lsh": SQL_DEDUP_MINHASH_LSH,
-    # rows-only: fingerprint GENERATION itself (dedup_simhash,
-    # winnow_fingerprints) is engine-hash-seeded by design
+    # rows-only: fingerprint GENERATION itself (winnow_fingerprints)
+    # is engine-hash-seeded by design
 }

@@ -264,10 +264,7 @@ def check_conv_near_dup(df: DataFrame, snapshot_id: str,
     dependent, so no digest trick applies. Downstream is the standard
     capped machinery (dedup.lsh_candidate_pairs banding with
     bucket_cap, exact-Jaccard verify on the candidate pairs only). At
-    the warehouse this runs as the scheduled corpus near-dedup pass;
-    the per-ingest form (conv_dup_against_index's MinHash analog via
-    near_dup_candidates_from_sigs) exists so this full-corpus pass is
-    NOT on any ingest path.
+    the warehouse this runs as the scheduled corpus near-dedup pass.
 
     MEMORY CONTRACT (measured, not guessed): what gets persisted for
     the three shingle consumers (banding + both verify sides) is the

@@ -484,6 +484,19 @@ def _plan_splits(catalog, snapshot_id: str, pending: List[int],
     return splits
 
 
+# A file with more footer rows than this is cut into several scan splits
+# at row-group boundaries (``_plan_splits``): the escape hatch for a giant
+# file or a hot conversation, which then spreads over tasks and is
+# stitched at the seams like any other split boundary.
+SPLIT_TARGET_ROWS = 1_000_000
+
+# Rows per native-read batch. Independent of the JVM<->Python Arrow
+# transfer cap (arrow.maxRecordsPerBatch): these batches never cross the
+# bridge, and per-batch Python/numpy setup amortizes with size — measured
+# 9.8s -> 6.3s for the 19.1M-turn corpus pass going from 10k to 256k
+# rows. 128k rows ~ 10-20 MB decoded per in-flight batch per core.
+READ_BATCH_ROWS = 131_072
+
 # At most one scan task per this many footer rows (and at most
 # defaultParallelism): each task is a Python worker of ~150 MB VmHWM, so a
 # small snapshot must not fork one per core. Measured with perfbench
@@ -788,20 +801,6 @@ def _with_meta(checker):
     return fn
 
 
-def _scan_conf(spark) -> tuple:
-    """(split target rows, native-read batch rows) of a native scan."""
-    # native-read batch size is independent of the JVM<->Python Arrow
-    # transfer cap (arrow.maxRecordsPerBatch): these batches never cross
-    # the bridge, and per-batch Python/numpy setup amortizes with size —
-    # measured 9.8s -> 6.3s for the 19.1M-turn corpus pass going from
-    # 10k to 256k rows. 128k rows ~ 10-20 MB decoded per in-flight batch
-    # per core.
-    return (int(spark.conf.get(
-        "spark.schema_inference.clustered.splitTargetRows", "1000000")),
-        int(spark.conf.get(
-            "spark.schema_inference.clustered.readBatchRows", "131072")))
-
-
 def native_rows(spark: SparkSession, catalog, snapshot_id: str,
                 pending: List[int], state_cols: List[str],
                 drift_bins: dict | None = None) -> DataFrame:
@@ -812,11 +811,10 @@ def native_rows(spark: SparkSession, catalog, snapshot_id: str,
     drift counts at ``drift_bins``' edges and read errors. Building it
     runs no Spark job; ``checks.check_rowlevel_fused`` exchanges it on
     conv_id into the kernel, whose output passes the metadata rows on."""
-    target_rows, batch_rows = _scan_conf(spark)
-    splits = _plan_splits(catalog, snapshot_id, list(pending), target_rows,
-                          spark=spark)
+    splits = _plan_splits(catalog, snapshot_id, list(pending),
+                          SPLIT_TARGET_ROWS, spark=spark)
     return _pack_tasks(spark, splits).mapInArrow(
-        _native_split_reader(None, batch_rows, state_cols, drift_bins),
+        _native_split_reader(None, READ_BATCH_ROWS, state_cols, drift_bins),
         _ROWS_DDL)
 
 
@@ -824,7 +822,6 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
                              pending: List[int], role_vocab: List[str],
                              tool_vocab: List[str],
                              partition_col: str = "bucket",
-                             split_target_rows: int | None = None,
                              collect_states: bool = False,
                              with_errors: bool = False,
                              drift_bins: dict | None = None):
@@ -863,11 +860,8 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
     from .checks import VIOLATION_DDL
     _tmark = profile_marker("clustered")
 
-    conf_target_rows, batch_rows = _scan_conf(spark)
-    if split_target_rows is None:
-        split_target_rows = conf_target_rows
     splits = _plan_splits(catalog, snapshot_id, list(pending),
-                          split_target_rows, spark=spark)
+                          SPLIT_TARGET_ROWS, spark=spark)
     _tmark(f"plan-splits ({len(splits)} splits)")
     # _fh is the split id (unique per split: two splits of one file must
     # open separate segments even if a task sees them back to back); fid
@@ -884,7 +878,8 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
         state_cols = [c for c in _pq.ParquetFile(splits[0][2])
                       .schema_arrow.names if c != partition_col]
     out = _pack_tasks(spark, splits).mapInArrow(
-        _native_split_reader(checker, batch_rows, state_cols, drift_bins),
+        _native_split_reader(checker, READ_BATCH_ROWS, state_cols,
+                             drift_bins),
         _OUT_DDL).localCheckpoint(eager=False)
     # The UDF output is violation-sized except for the kind=3 extent rows
     # (one per conversation), and two branches read it below, so it is

@@ -1,10 +1,10 @@
 """Connected components over near-duplicate pair graphs.
 
-The dedup operators emit PAIRS (jaccard_pairs, minhash_lsh_dedup,
-simhash_near_pairs, cosine near-dup); a pipeline that drops duplicates
-needs GROUPS — one canonical survivor per component of the pair graph
-(pairs are not transitive-closed: LSH chained pairing deliberately emits
-a path, not a clique, for oversized buckets; see dedup.py bucket_cap).
+The dedup operators emit PAIRS (jaccard_pairs, minhash_lsh_dedup); a
+pipeline that drops duplicates needs GROUPS — one canonical survivor per
+component of the pair graph (pairs are not transitive-closed: LSH
+chained pairing deliberately emits a path, not a clique, for oversized
+buckets; see dedup.py bucket_cap).
 
 Algorithm (distributed path): the large-star / small-star alternation
 (Kiveris et al., "Connected Components in MapReduce and Beyond",

@@ -152,12 +152,12 @@ def validate(
     Execution: a metadata census first selects the check path. Both
     read the snapshot once, with the native split reader, and run the
     same Arrow check kernel (``clustered._segment_checker``) over its
-    rows: ``clustered`` (zero shuffle, taken when the manifest declares
-    the Iceberg sort-order contract and the snapshot has at least
-    ``spark.schema_inference.clustered.minRows`` pending rows) or
-    ``fused`` (the reader's rows repartitioned by conv_id and sorted,
-    taken otherwise); ``clustered_checks`` forces either. The two are
-    row-identical (tested) and the chosen path is reported as
+    rows: ``clustered`` (zero shuffle, taken at any size when the
+    manifest declares the Iceberg sort-order contract and the footer
+    census finds one physical type per column) or ``fused`` (the
+    reader's rows repartitioned by conv_id and sorted, taken otherwise);
+    ``clustered_checks`` forces either. The two are row-identical
+    (tested) and the chosen path is reported as
     ``ValidationResult.check_path``. The same read yields the inference
     column states and, for each ``baseline_sketches`` column, exact
     counts at the baseline's bin edges: drift compares the baseline's
@@ -200,7 +200,8 @@ def validate(
     if partitions is not None:
         # explicit subset: validate just these partitions (on-demand
         # re-check, bench warm-up); resume filtering still applies on top
-        pending = [p for p in partitions if p in set(all_parts)]
+        known = set(all_parts)
+        pending = [p for p in partitions if p in known]
         if resume:
             done = set(catalog.completed_partitions(spark, snapshot_id))
             pending = [p for p in pending if p not in done]
@@ -242,29 +243,18 @@ def validate(
     exclude(census_errors(census))
 
     # path selection: clustered (zero-shuffle, layout-aware) when the
-    # manifest declares the write order — the Iceberg sort-order contract —
-    # AND the snapshot is big enough to amortize the path's fixed cost;
+    # manifest declares the write order — the Iceberg sort-order contract;
     # else fused (one scan + one exchange on conv_id). clustered_checks
     # forces it either way. Both paths are row-identical (tested).
     #
-    # The row threshold was set when the clustered path paid ~3-5s of
-    # fixed cost per call (26 Spark jobs, a Python task per split); at
-    # local[32] the shuffle path then won up to 1M rows and lost 6x at
-    # 5M, so the default sits at 2M. The path now runs 3 jobs over packed
-    # tasks, and re-measured on 4 cores (warm JVM, median of 3 calls,
-    # clustered vs fused) it wins at every size tried: 1.7s vs 2.9s at
-    # 239k turns, 2.1s vs 2.8s at 1M, 2.9s vs 5.9s at 2.87M. The default
-    # is left at 2M until a cluster measurement backs a lower one; a
-    # deployment that wants the clustered path throughout sets 0.
+    # There is no size threshold: the clustered path runs 3 jobs over
+    # packed tasks and ties or wins at every size measured (4 cores, 3g
+    # heap, perfbench snapshots, median of 5 warm calls, clustered vs
+    # fused): 1.14-1.32s vs 1.13-1.24s at ~24k turns, 1.26-1.45s vs
+    # 1.44-1.62s at 239k, 1.47-1.57s vs 2.38-2.83s at ~0.95M.
     man_full = catalog.manifest(snapshot_id)
-    min_rows = int(spark.conf.get(
-        "spark.schema_inference.clustered.minRows", "2000000"))
-    pend_set = set(pending)
-    total_rows = sum(int(p["n_rows"]) for p in man_full["partitions"]
-                     if p["partition_id"] in pend_set)
     use_clustered = (clustered_checks if clustered_checks is not None
-                     else (manifest_declares_order(man_full)
-                           and total_rows >= min_rows))
+                     else manifest_declares_order(man_full))
     # a cross-partition physical-type conflict forces the widening scan
     # (read_snapshot_tolerant), which the layout fast path cannot use —
     # those snapshots take the shuffle path regardless

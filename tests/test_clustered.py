@@ -15,18 +15,6 @@ from schema_inference_spark.sources.catalog import SnapshotCatalog
 from schema_inference_spark.sources.transcripts import write_snapshot
 
 
-@pytest.fixture(scope="module", autouse=True)
-def _clustered_at_any_size(spark):
-    """This module's fixtures are tiny; validate()'s auto-selection would
-    route them to the shuffle path under the production minRows amortization
-    threshold. Pin it to 0 so the module exercises the clustered path and
-    its self-heal fallbacks through the same auto-selection a big snapshot
-    takes."""
-    spark.conf.set("spark.schema_inference.clustered.minRows", "0")
-    yield
-    spark.conf.unset("spark.schema_inference.clustered.minRows")
-
-
 def rows_of(df):
     return [r.asDict() for r in C.stable_order(df).collect()]
 
@@ -89,26 +77,23 @@ def boundary_root(spark, tmp_path_factory):
     return root
 
 
-def test_boundary_spanning_anomalies(spark, boundary_root):
+def test_boundary_spanning_anomalies(spark, boundary_root, monkeypatch):
+    from schema_inference_spark.operators import clustered
     cat = SnapshotCatalog(boundary_root)
     old_arb = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    # force many scan splits (row-group-aligned, 64-row row groups in the
+    # fixture) AND many small Arrow batches so runs and lag pairs cross
+    # both kinds of boundary
+    monkeypatch.setattr(clustered, "SPLIT_TARGET_ROWS", 64)
+    # READ_BATCH_ROWS governs the native reader's batches (NOT
+    # maxRecordsPerBatch — those batches never cross the bridge); keep
+    # both small so lag pairs and dup runs cross batch boundaries inside
+    # a split too
+    monkeypatch.setattr(clustered, "READ_BATCH_ROWS", 50)
     try:
-        # force many scan splits (row-group-aligned, 64-row row groups in
-        # the fixture) AND many small Arrow batches so runs and lag pairs
-        # cross both kinds of boundary
-        spark.conf.set("spark.schema_inference.clustered.splitTargetRows",
-                       "64")
-        # readBatchRows governs the native reader's batches (NOT
-        # maxRecordsPerBatch — those batches never cross the bridge);
-        # keep both small so lag pairs and dup runs cross batch
-        # boundaries inside a split too
-        spark.conf.set("spark.schema_inference.clustered.readBatchRows",
-                       "50")
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "50")
         clu = _clustered(spark, cat, "b1")
     finally:
-        spark.conf.unset("spark.schema_inference.clustered.splitTargetRows")
-        spark.conf.unset("spark.schema_inference.clustered.readBatchRows")
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        old_arb)
     fus = _fused(spark, cat, "b1")
@@ -401,11 +386,8 @@ def test_packed_tasks_stitch_seam_anomalies(spark, tmp_path, monkeypatch):
     assert len(tasks) == spark.sparkContext.defaultParallelism
     assert sorted(s.split_id for t in tasks for s in t) == list(
         range(len(splits)))
-    spark.conf.set("spark.schema_inference.clustered.splitTargetRows", "16")
-    try:
-        clu = _clustered(spark, cat, "pk")
-    finally:
-        spark.conf.unset("spark.schema_inference.clustered.splitTargetRows")
+    monkeypatch.setattr(clustered, "SPLIT_TARGET_ROWS", 16)
+    clu = _clustered(spark, cat, "pk")
     assert clu == _fused(spark, cat, "pk")
     assert {r["check_id"] for r in clu} == {
         "turn_gap", "turn_dup", "unique_key", "ts_order", "ref_role",

@@ -238,39 +238,3 @@ def test_conv_dup_against_index_sources_and_idempotence(spark):
     # index reports nothing (canonicals never self-report)
     again = conv_dup_against_index(conv_sigs(hist, **args), index)
     assert again.count() == 0
-
-
-def test_conv_near_dup_incremental_composition(spark):
-    """The conversation fold composed with the incremental MinHash
-    machinery: a NEW conversation sharing a long turn stream with an
-    INDEXED one (divergent tail) is detected against the index; a
-    disjoint-vocabulary newcomer is not; re-ingesting an indexed
-    conversation never self-reports."""
-    from schema_inference_spark.operators import dedup as D
-    t0 = _ts("2026-01-01T00:00:00")
-    rows = []
-    # conv 2 (history) and conv 5 (new) share 30 turns; 5 has a 3-turn tail
-    for k, n_extra in ((2, 0), (5, 3)):
-        for i in range(30):
-            rows.append((k, t0 + dt.timedelta(seconds=i), i, f"tok{i}"))
-        for i in range(30, 30 + n_extra):
-            rows.append((k, t0 + dt.timedelta(seconds=i), i, f"tail{k}_{i}"))
-    for i in range(30):                    # conv 7 (new): disjoint vocab
-        rows.append((7, t0 + dt.timedelta(seconds=i), i, f"other{i}"))
-    ev = spark.createDataFrame(rows, "k int, ts timestamp, tb int, txt string")
-    assembled = (ev.groupBy(F.col("k").alias("doc_id"))
-                 .agg(F.array_join(F.transform(F.array_sort(
-                     F.collect_list(F.struct("tb", F.col("txt").alias("v")))),
-                     lambda x: x["v"]), " ").alias("text")))
-    history = assembled.filter("doc_id = 2")
-    idx = D.build_minhash_index(history)
-    sigs = D.build_minhash_sigs(history)
-    hits = D.near_dup_against_index(assembled.filter("doc_id != 2"),
-                                    idx, sigs).collect()
-    assert [(r["doc_id"], r["index_id"]) for r in hits] == [(5, 2)]
-    assert hits[0]["est_jaccard"] >= 0.5
-    # idempotent re-ingest: the indexed conversation itself never
-    # self-reports (same id on both sides is filtered at the candidate
-    # stage)
-    again = D.near_dup_against_index(history, idx, sigs).collect()
-    assert again == []

@@ -11,6 +11,7 @@ Two failure depths x both check paths:
   clustered native reader's per-split by-value error rows.
 """
 
+import contextlib
 import glob
 import os
 
@@ -190,19 +191,13 @@ def _two_bucket_convs():
     return x, y, h
 
 
-def _split64(spark):
-    import contextlib
-
-    @contextlib.contextmanager
-    def ctx():
-        spark.conf.set(
-            "spark.schema_inference.clustered.splitTargetRows", "64")
-        try:
-            yield
-        finally:
-            spark.conf.unset(
-                "spark.schema_inference.clustered.splitTargetRows")
-    return ctx()
+@contextlib.contextmanager
+def _split64():
+    """64-row scan splits: with 64-row row groups, one split per group."""
+    from schema_inference_spark.operators import clustered
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(clustered, "SPLIT_TARGET_ROWS", 64)
+        yield
 
 
 def test_cross_split_checks_survive_read_error(spark, tmp_path):
@@ -228,7 +223,7 @@ def test_cross_split_checks_survive_read_error(spark, tmp_path):
     cat = SnapshotCatalog(str(tmp_path))
     _corrupt_cut(glob.glob(f"{tmp_path}/xsnap/bucket=1/*.parquet")[0])
 
-    with _split64(spark):
+    with _split64():
         viols, errors = check_rowlevel_clustered(
             spark, cat, "xsnap", cat.partition_ids("xsnap"),
             ROLE_VOCAB, TOOL_VOCAB, with_errors=True)
@@ -258,7 +253,7 @@ def test_layout_lie_still_refuses_despite_read_error(spark, tmp_path):
     cat = SnapshotCatalog(str(tmp_path))
     _corrupt_cut(glob.glob(f"{tmp_path}/lsnap/bucket=1/*.parquet")[0])
 
-    with _split64(spark):
+    with _split64():
         with pytest.raises(ValueError, match="non-adjacent segments"):
             check_rowlevel_clustered(
                 spark, cat, "lsnap", cat.partition_ids("lsnap"),
@@ -313,7 +308,7 @@ def test_extent_lie_next_to_dropped_partition(spark, tmp_path):
         _corrupt_cut(glob.glob(f"{tmp_path}/{snap}/bucket=0/*.parquet")[0])
     cat = SnapshotCatalog(str(tmp_path))
 
-    with _split64(spark):
+    with _split64():
         with pytest.raises(ValueError, match="non-adjacent segments"):
             check_rowlevel_clustered(
                 spark, cat, "lie", cat.partition_ids("lie"),

@@ -352,7 +352,8 @@ def test_output_invariant_under_repartition(spark, catalog, r1):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        r = validate(spark, catalog, "s1", write_audit=False)
+        r = validate(spark, catalog, "s1", write_audit=False,
+                     clustered_checks=False)
         a = [x.asDict() for x in r.violations.collect()]
         b = [x.asDict() for x in r1.violations.collect()]
         assert a == b
@@ -484,34 +485,33 @@ def test_multi_file_partitions(spark, tmp_path):
     assert inf.partition_states[0]["conv_id"]["count"] == 2 * third
 
 
-def test_check_path_auto_selection_by_size(spark, catalog):
-    """Auto-selection routes small clustered snapshots to the shuffle path
-    (the clustered path's fixed cost — Python-worker fan-out + layout
-    verification actions — doesn't amortize below minRows) and big ones to
-    the clustered path; explicit clustered_checks overrides both ways."""
+def test_check_path_auto_selection_by_size(spark, catalog, tmp_path):
+    """Auto-selection takes the clustered path whenever the manifest
+    declares the write order, at any size (fixture s1 is far below the
+    2M rows the path once needed), and the shuffle path when it does
+    not; explicit clustered_checks overrides both ways."""
     from schema_inference_spark.operators.clustered import (
         manifest_declares_order)
+    from schema_inference_spark.sources.transcripts import (
+        generate_turns, write_snapshot)
+    kw = dict(resume=False, write_audit=False)
     assert manifest_declares_order(catalog.manifest("s1"))
-
-    # fixture s1 is far below the production 2M-row threshold
-    small = validate(spark, catalog, "s1", resume=False, write_audit=False)
-    assert small.check_path == "fused"
-
-    # pinning the threshold to 0 flips auto-selection to clustered
-    spark.conf.set("spark.schema_inference.clustered.minRows", "0")
-    try:
-        big = validate(spark, catalog, "s1", resume=False,
-                       write_audit=False)
-        assert big.check_path == "clustered"
-    finally:
-        spark.conf.unset("spark.schema_inference.clustered.minRows")
-
-    forced = validate(spark, catalog, "s1", resume=False, write_audit=False,
-                      clustered_checks=True)
-    assert forced.check_path == "clustered"
+    declared = validate(spark, catalog, "s1", **kw)
+    assert declared.check_path == "clustered"
+    forced = validate(spark, catalog, "s1", clustered_checks=False, **kw)
+    assert forced.check_path == "fused"
     # identical violations either way (row-identity is asserted in depth
     # in test_clustered; here just the selection contract)
-    assert small.violations.count() == forced.violations.count()
+    assert (sorted(map(tuple, declared.violations.collect()))
+            == sorted(map(tuple, forced.violations.collect())))
+
+    write_snapshot(str(tmp_path), "u", generate_turns(n_conv=20, seed=3),
+                   n_buckets=2, declare_write_order=False)
+    cat = SnapshotCatalog(str(tmp_path))
+    assert not manifest_declares_order(cat.manifest("u"))
+    assert validate(spark, cat, "u", **kw).check_path == "fused"
+    assert validate(spark, cat, "u", clustered_checks=True,
+                    **kw).check_path == "clustered"
 
 
 # --- one call shape on the shuffle path --------------------------------------
@@ -546,7 +546,7 @@ def test_shuffle_call_job_guard(spark, fixture_root, r1):
 
     def call():
         r = validate(spark, cat, "s4", baseline_sketches=base,
-                     write_audit=True)
+                     write_audit=True, clustered_checks=False)
         r.violations.collect()
         r.verdicts.collect()
         return r

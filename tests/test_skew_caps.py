@@ -143,58 +143,6 @@ def test_winnow_fp_cap(spark):
     assert (100, 101) in got
 
 
-def test_near_dup_probe_plan_ships_no_signature_arrays(spark):
-    """The incremental near-dup probe's 100-TB shape (`git show 3abe443:BENCH/PLANS.md`):
-    no exchange may carry a `minhash` array — the bucket join ships
-    3-column band rows, pairs dedupe as scalars, and the signatures
-    join in via broadcast only. Regression-guards the two-table index
-    design against a future edit quietly reintroducing the
-    denormalized (16x) shuffle."""
-    from schema_inference_spark.operators.dedup import (
-        build_minhash_index,
-        build_minhash_sigs,
-        near_dup_candidates,
-    )
-
-    corpus = spark.createDataFrame(
-        [(i, f"{BOILER} doc number {i} with words {i}") for i in range(8)],
-        "doc_id bigint, text string")
-    new = spark.createDataFrame(
-        [(100 + i, f"{BOILER} doc number {i} with words changed")
-         for i in range(4)],
-        "doc_id bigint, text string")
-    cand = near_dup_candidates(new, build_minhash_index(corpus),
-                               build_minhash_sigs(corpus),
-                               persist_sig=False)
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    bad = [ln for ln in plan.splitlines()
-           if ln.strip().startswith(("Exchange", "+- Exchange",
-                                     ":- Exchange"))
-           and "minhash" in ln]
-    assert bad == [], f"signature array rides an exchange:\n" + "\n".join(bad)
-    # and the candidate output is the scalar contract
-    assert cand.columns == ["doc_id", "index_id", "n_agree"]
-
-
-def test_segment_dedup_plan_has_no_window(spark):
-    """segment_dedup's skew guard (dedup.py docstring): the corpus-wide
-    winner must be a groupBy-min(struct) whose PARTIAL aggregation
-    absorbs hot boilerplate segments map-side — a window/row_number
-    formulation would funnel a 10^6-occurrence segment into one task.
-    Regression-guards against a future edit quietly swapping the
-    aggregate for a window."""
-    from schema_inference_spark.operators.dedup import segment_dedup
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i} " * 25) for i in range(6)],
-        "doc_id bigint, text string")
-    plan = (segment_dedup(docs)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Window" not in plan, plan
-    # and the winner aggregate really is two-phase (partial + final)
-    assert plan.count("partial_min") >= 1, plan
-
-
 def test_curation_summary_plan_shape(spark):
     """curation_summary's 100-TB shape: every per-document signal is a
     column expression (no Window, no UDF markers in the plan) and the
